@@ -23,6 +23,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ml_data_wrangler_spark.session import local_frame
+
 
 def validate_lda_params(num_topics: int, iterations: int, passes: int) -> None:
     """F3 — same bounds as the reference (LDA_logic.py:145-168)."""
@@ -90,35 +92,69 @@ def topic_term_distribution(model) -> list[list[float]]:
     return out
 
 
+def umass_counts(
+    tokens: DataFrame, terms: list[str]
+) -> tuple[dict[str, int], dict[tuple[str, str], int]]:
+    """Document frequencies D(w) and co-document frequencies D(w1, w2)
+    (keyed w1 < w2) of ``terms`` over ``tokens`` (doc_id, tokens).
+
+    ONE aggregation collected once: per ``doc_id``, the sorted distinct
+    terms it holds (``terms`` is a tiny literal set) explode into
+    singles (w, null) and ordered pairs (w1 < w2), counted by
+    ``groupBy(w1, w2)``. Rows sharing a ``doc_id`` are one document; a
+    null ``doc_id`` counts toward D(w) but, as in an equi-join on
+    doc_id, forms no pairs.
+    """
+    doc_terms = (
+        tokens.select(
+            "doc_id",
+            F.array_intersect(
+                "tokens", F.array(*[F.lit(w) for w in terms])
+            ).alias("ts"),
+        )
+        .groupBy("doc_id")
+        .agg(
+            F.array_sort(
+                F.array_distinct(F.flatten(F.collect_list("ts")))
+            ).alias("ts")
+        )
+    )
+    # each (doc, w1) row emits w2 = null (the single) plus every later
+    # term of the doc (the pairs)
+    later = F.when(
+        F.col("doc_id").isNotNull(),
+        F.slice("ts", F.col("i") + 2, F.size("ts") - F.col("i") - 1),
+    ).otherwise(F.array().cast("array<string>"))
+    counts = (
+        doc_terms.select("doc_id", "ts", F.posexplode("ts").alias("i", "w1"))
+        .select(
+            "w1",
+            F.explode(
+                F.concat(F.array(F.lit(None).cast("string")), later)
+            ).alias("w2"),
+        )
+        .groupBy("w1", "w2")
+        .agg(F.count("*").alias("df"))
+        .collect()
+    )
+    single = {r["w1"]: r["df"] for r in counts if r["w2"] is None}
+    pair = {(r["w1"], r["w2"]): r["df"] for r in counts if r["w2"] is not None}
+    return single, pair
+
+
 def umass_coherence(tokens: DataFrame, topic_terms: list[list[str]], eps: float = 1.0) -> list[float]:
     """UMass coherence per topic, exact from corpus counts.
 
     C(t) = Σ_{m=2..M} Σ_{l=1..m-1} log((D(w_m, w_l) + eps) / D(w_l))
 
-    D(·) document frequencies come from ONE distributed job over the
-    distinct (doc, token) pairs restricted to the union of topic terms
-    (a tiny broadcast set); pair counts via a self-join blocked on
-    doc_id. Only the final O(topics × M²) arithmetic is driver-side.
+    D(·) come from one aggregation over the union of topic terms
+    (``umass_counts``); only the final O(topics × M²) arithmetic is
+    driver-side.
     """
     all_terms = sorted({w for terms in topic_terms for w in terms})
     if not all_terms:
         return [0.0 for _ in topic_terms]
-    dt = (
-        tokens.select("doc_id", F.explode("tokens").alias("token"))
-        .where(F.col("token").isin(all_terms))
-        .distinct()
-    )
-    dt.cache()
-    single = {r["token"]: r["df"] for r in dt.groupBy("token").agg(F.count("*").alias("df")).collect()}
-    a, b = dt.alias("a"), dt.alias("b")
-    pair_rows = (
-        a.join(b, (F.col("a.doc_id") == F.col("b.doc_id")) & (F.col("a.token") < F.col("b.token")))
-        .groupBy(F.col("a.token").alias("w1"), F.col("b.token").alias("w2"))
-        .agg(F.count("*").alias("df"))
-        .collect()
-    )
-    dt.unpersist()
-    pair = {(r["w1"], r["w2"]): r["df"] for r in pair_rows}
+    single, pair = umass_counts(tokens, all_terms)
 
     def d2(x: str, y: str) -> int:
         return pair.get((x, y) if x < y else (y, x), 0)
@@ -281,8 +317,8 @@ def lda_sweep(
 
     if coherence == "umass":
         # ONE co-occurrence pass over the union of every k's topic
-        # terms, then each k scores from the shared count maps —
-        # 2 distributed jobs total instead of 2 per k.
+        # terms, then each k scores from the shared count maps — one
+        # aggregation total instead of one per k.
         all_terms = [terms for _, topic_terms in fitted for terms in topic_terms]
         scores = umass_coherence(tokens, all_terms)
         rows = []
@@ -296,7 +332,7 @@ def lda_sweep(
         for k, topic_terms in fitted:
             coh = cv_coherence(tokens, topic_terms)
             rows.append((k, round(sum(coh) / len(coh) if coh else 0.0, 6)))
-    return spark.createDataFrame(rows, schema="k bigint, coherence double")
+    return local_frame(spark, rows, "k bigint, coherence double")
 
 
 def top_5_topics(model, vocabulary: list[str], n_terms: int = 5) -> DataFrame:

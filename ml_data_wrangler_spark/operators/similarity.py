@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ml_data_wrangler_spark.functions.vectors import cosine_similarity
+from ml_data_wrangler_spark.session import local_frame
 
 
 
@@ -149,9 +150,10 @@ def ivf_index(
         .repartition(n_clusters * n_splits, "cluster_id", "_shard")
         .drop("_shard")
     )
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        schema="cluster_id int, centroid array<double>",
+        "cluster_id int, centroid array<double>",
     )
     return assigned, centroids
 
@@ -1034,7 +1036,7 @@ def brute_force_topk_fold(
     ).first()
     n_q_total, dim = probe["n"], probe["d"] or 0
     if n_q_total == 0:
-        return spark.createDataFrame([], out_schema + ", rank long")
+        return local_frame(spark, [], out_schema + ", rank long")
     if n_q_total * dim <= max_broadcast_cells:
         scored = scored_branch(qsel.toPandas())
     elif n_q_total * dim > max_executor_cells:
@@ -1419,7 +1421,7 @@ def allpairs_cosine_topk_dense(
 
     id_rows = vecs.select("id").orderBy("id").collect()
     if not id_rows:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     n = len(id_rows)
 
     if n * dim <= max_broadcast_cells:
@@ -1448,6 +1450,6 @@ def allpairs_cosine_topk_dense(
         )
         bc.destroy()
     if not winner_rows:
-        return spark.createDataFrame([], out_schema)
-    winners = spark.createDataFrame(winner_rows, out_schema)
+        return local_frame(spark, [], out_schema)
+    winners = local_frame(spark, winner_rows, out_schema)
     return winners.orderBy(F.desc("cosine"), "doc_a", "doc_b").limit(k)

@@ -19,6 +19,7 @@ from ml_data_wrangler_spark.functions.driver_exact import (
 )
 from ml_data_wrangler_spark.plans._util import money, t
 from ml_data_wrangler_spark.plans.registry import query
+from ml_data_wrangler_spark.session import local_frame
 
 # qe33 driver-loop dispatch bounds (round 12): the PageRank loop runs
 # on the driver when the transition graph is model-sized — probed with
@@ -40,7 +41,7 @@ def _qe33_driver_loop(spark, node_rows, p_rows):
     nodes = [r["node"] for r in node_rows]
     n = len(nodes)
     if n == 0:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     edges = [(r["src"], r["dst"], r["pij"]) for r in p_rows]
     srcs = {src for src, _, _ in edges}
     rank = {nd: round_half_up(1.0 / n, 9) + 0.0 for nd in nodes}
@@ -61,8 +62,13 @@ def _qe33_driver_loop(spark, node_rows, p_rows):
             + 0.0
             for nd in nodes
         }
-    rows = [(nd, round_half_up(rank[nd], 6) + 0.0) for nd in nodes]
-    return spark.createDataFrame(rows, out_schema).orderBy("event_type")
+    # sorted here, not by an orderBy over the local rows (a Sort plans
+    # three jobs); str order is UTF-8 byte order, nulls first as in Spark
+    rows = sorted(
+        ((nd, round_half_up(rank[nd], 6) + 0.0) for nd in nodes),
+        key=lambda r: (r[0] is not None, r[0]),
+    )
+    return local_frame(spark, rows, out_schema)
 
 
 def _qe33_sql_step(k: int) -> str:

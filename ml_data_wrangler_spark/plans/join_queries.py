@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ml_data_wrangler_spark.operators.asof import asof_join_backward
 from ml_data_wrangler_spark.plans._util import t
 from ml_data_wrangler_spark.plans.registry import query
+from ml_data_wrangler_spark.session import local_frame
 
 
 @query(
@@ -340,7 +341,8 @@ def qj06(spark, sf_dir):
     discipline)."""
     from ml_data_wrangler_spark.plans._util import dbl, money
 
-    tiers = spark.createDataFrame(
+    tiers = local_frame(
+        spark,
         [("bronze", 0.0, 50.0), ("silver", 50.0, 200.0), ("gold", 200.0, 1e18)],
         "tier string, lo double, hi double",
     )

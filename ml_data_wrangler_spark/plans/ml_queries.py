@@ -18,6 +18,7 @@ from ml_data_wrangler_spark.operators.vectorize import (
 from ml_data_wrangler_spark.plans._util import t
 from ml_data_wrangler_spark.plans.registry import query
 from ml_data_wrangler_spark.plans.text_queries import SQL_TOKS
+from ml_data_wrangler_spark.session import local_frame
 
 _SQL_VOCAB = f"""
 WITH dt AS (
@@ -617,8 +618,10 @@ def qm09(spark, sf_dir):
             .collect()
         ]
         idx_df = F.broadcast(
-            spark.createDataFrame(
-                [(tkn, i) for i, tkn in enumerate(vocab)], "token string, idx int"
+            local_frame(
+                spark,
+                [(tkn, i) for i, tkn in enumerate(vocab)],
+                "token string, idx int",
             )
         )
         norms = w.groupBy("doc_id").agg(

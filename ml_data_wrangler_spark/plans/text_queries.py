@@ -35,6 +35,7 @@ from ml_data_wrangler_spark.functions.textstats import (
 from ml_data_wrangler_spark.operators._partition import ensure_parallelism
 from ml_data_wrangler_spark.plans._util import t
 from ml_data_wrangler_spark.plans.registry import query
+from ml_data_wrangler_spark.session import local_frame
 
 # DuckDB fragment mirroring functions.text.tokenize().
 SQL_TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z]+'), x -> x <> '')"
@@ -1296,9 +1297,7 @@ def bm25_rankings(
         dense_ok = len(tok_u) * len(qid_u) <= max_query_cells
     if len(q_pdf) == 0:
         # no query docs: identical to the old join-with-empty result
-        scored = spark.createDataFrame(
-            [], "query_id long, cand_id long, s long"
-        )
+        scored = local_frame(spark, [], "query_id long, cand_id long, s long")
     elif dense_ok:
         import numpy as np
 
@@ -1665,7 +1664,7 @@ def _qt20_impl(spark, sf_dir, checkpoint_per_step: bool):
             )
         )
     if not steps:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     out = steps[0]
     for s in steps[1:]:
         out = out.unionByName(s)

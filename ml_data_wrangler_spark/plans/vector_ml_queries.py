@@ -31,6 +31,7 @@ from ml_data_wrangler_spark.plans._util import t
 from ml_data_wrangler_spark.plans.registry import query
 from ml_data_wrangler_spark.plans.text_queries import bm25_rankings, bm25_sql_cte
 from ml_data_wrangler_spark.plans.vector_queries import _SQL_COS
+from ml_data_wrangler_spark.session import local_frame
 
 
 @query(
@@ -134,8 +135,10 @@ def qv14(spark, sf_dir):
         (nprobe, n_queries, monotone, recalls[3] >= 0.5)
         for nprobe in (1, 2, 3, 4)
     ]
-    return spark.createDataFrame(
-        rows, schema="nprobe bigint, n_queries bigint, monotone_ok boolean, floor_ok boolean"
+    return local_frame(
+        spark,
+        rows,
+        "nprobe bigint, n_queries bigint, monotone_ok boolean, floor_ok boolean",
     )
 
 
@@ -589,7 +592,7 @@ def qv18(spark, sf_dir):
     if len(mu_rows) == 0:
         # empty input: the old plan's inner matvec join over an empty
         # cov produced zero rows
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     if len(mu_rows) != 64:
         raise ValueError(
             f"qv18: expected 64 dimension means, got {len(mu_rows)}"
@@ -656,7 +659,7 @@ def qv18(spark, sf_dir):
         for r in st_rows
     }
     if not cmat:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     # identical trajectory to the retired DataFrame loop / the SQL
     # oracle: v0 = e1; per round w_i = Σ_j round(cij·val_j·1e9)::long
     # / 1e9 (inner-join semantics on j), then val_i = round(w_i /
@@ -676,8 +679,9 @@ def qv18(spark, sf_dir):
         }
     lam_t = sum(round_long(v[i] * w[i] * 1e9) for i in v)
     eigenvalue = round_half_up(lam_t / 1e9, 6) + 0.0
+    # already in dim order: no Sort over the local rows
     rows = [(i, v[i], eigenvalue) for i in sorted(v)]
-    return spark.createDataFrame(rows, out_schema).orderBy("dim")
+    return local_frame(spark, rows, out_schema)
 
 
 def _qv19_topk_sql(d: int) -> str:

@@ -90,3 +90,33 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """DataFrame over rows the driver already holds, as a local relation.
+
+    ``spark.createDataFrame(<python list>)`` plans a ``LogicalRDD``: every
+    action on it runs a job (three once a Sort sits on top) just to ship
+    back rows that never left the driver. An Arrow table instead becomes
+    a ``LocalRelation`` — collected with zero jobs — below
+    ``spark.sql.execution.arrow.localRelationThreshold``; above it Spark
+    itself falls back to a distributed relation. This path does not read
+    ``spark.sql.execution.arrow.pyspark.enabled``, so it works under a
+    vanilla session too.
+
+    ``rows`` is a list of tuples (or Rows) in ``schema`` field order;
+    ``schema`` is a DDL string or a StructType. Timestamps are taken as
+    UTC.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

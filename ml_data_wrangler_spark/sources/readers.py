@@ -4,7 +4,7 @@ S1 (ticket file scan) and S2 (comments directory scan) re-expressed as
 declarative Spark reads with explicit schemas. The reference's S2 was a
 per-ticket directory rescan (O(tickets × files²), wrangler.py:358-374);
 here it is ONE scan of the directory — at 100 TB that is the difference
-between a single distributed listing+read and an unrunnable loop.
+between a single listing + distributed read and an unrunnable loop.
 """
 
 from __future__ import annotations
@@ -93,9 +93,19 @@ def read_comment_files(spark: SparkSession, comments_dir: str) -> DataFrame:
     the filename-prefix join key — the declarative analog of the
     reference's ``file.startswith(str(ticket.id))``.
     """
+    # The directory is ONE root path filtered by pathGlobFilter, not the
+    # glob ``dir/*.json``: Spark expands a glob to one root per file and,
+    # past spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    # roots, lists them again with a distributed job of one task per
+    # file on every read, after the driver's own listing to expand the
+    # glob. A single root is listed once, on the driver. Both read only the
+    # top-level *.json files (nested plain directories are skipped);
+    # unlike the glob, a nested ``key=value`` directory would be taken
+    # for a partition.
     raw = (
         spark.read.option("wholetext", "true")
-        .text(f"{comments_dir}/*.json")
+        .option("pathGlobFilter", "*.json")
+        .text(comments_dir)
         .withColumn("_file", F.input_file_name())
     )
     return (

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ml_data_wrangler_spark.session import local_frame
+
 ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss"
 
 
@@ -184,4 +186,4 @@ def write_corpus_shards_with_manifest(
     finally:
         routed.unpersist()
     spark = df.sparkSession
-    return spark.createDataFrame(manifest_rows, schema=manifest.schema)
+    return local_frame(spark, manifest_rows, manifest.schema)

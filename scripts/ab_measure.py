@@ -102,8 +102,9 @@ def main() -> None:
     else:
         sys.exit(f"unknown experiment {exp!r}")
 
-    rows_a = [tuple(r) for r in build_a().collect()]
-    rows_b = [tuple(r) for r in build_b().collect()]
+    # row order is plan-specific (bm25_rankings has no final orderBy)
+    rows_a = sorted(tuple(r) for r in build_a().collect())
+    rows_b = sorted(tuple(r) for r in build_b().collect())
     assert rows_a == rows_b, "A/B variants disagree — not a pure perf question"
 
     def probe() -> float:

@@ -23,3 +23,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ["SPARK_GRAFT_SF_DIR"]
+
+
+@pytest.fixture
+def jobs_in(spark):
+    """``jobs_in(fn)`` runs ``fn`` under a fresh Spark job group and
+    returns ``(fn(), number of jobs it ran)``, read back through the
+    status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-in-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

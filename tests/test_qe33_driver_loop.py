@@ -23,6 +23,10 @@ def _ranks(df):
     return [(r["event_type"], r["pagerank"]) for r in df.collect()]
 
 
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_driver_and_distributed_paths_bit_equal(
     spark, sf_dir, queries, monkeypatch
 ):
@@ -38,15 +42,24 @@ def test_driver_and_distributed_paths_bit_equal(
 def test_edge_cap_also_dispatches_to_fallback(
     spark, sf_dir, queries, monkeypatch
 ):
-    fast = _ranks(queries["qe33_event_type_pagerank"](spark, sf_dir))
+    fast_df = queries["qe33_event_type_pagerank"](spark, sf_dir)
     monkeypatch.setattr(ea, "QE33_DRIVER_EDGE_CAP", 0)
     slow_df = queries["qe33_event_type_pagerank"](spark, sf_dir)
-    # the fallback's final iterate is a checkpointed RDD leaf; the
-    # driver path returns a local relation (createDataFrame)
-    assert "LogicalRDD" in (
-        slow_df._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert fast == _ranks(slow_df)
+    # the driver path returns a local relation (session.local_frame);
+    # the fallback's final iterate is a checkpointed RDD leaf
+    fast_plan = _optimized(fast_df)
+    assert "LocalRelation" in fast_plan and "LogicalRDD" not in fast_plan
+    assert "LogicalRDD" in _optimized(slow_df)
+    assert _ranks(fast_df) == _ranks(slow_df)
+
+
+def test_driver_path_collects_without_jobs(spark, sf_dir, queries, jobs_in):
+    df = queries["qe33_event_type_pagerank"](spark, sf_dir)
+    rows, n_jobs = jobs_in(df.collect)
+    assert rows and n_jobs == 0
+    # sorted on the driver exactly as the old orderBy("event_type")
+    keys = [r["event_type"] for r in rows]
+    assert keys == sorted(keys, key=lambda k: (k is not None, k))
 
 
 def test_dispatch_probe_is_bounded(spark, sf_dir, queries, monkeypatch):
@@ -71,6 +84,4 @@ def test_dispatch_probe_is_bounded(spark, sf_dir, queries, monkeypatch):
     # exactly cap+1 rows and the loop must fall back distributed
     assert seen, "no construction-time collect observed"
     assert max(seen) <= max(ea.QE33_DRIVER_NODE_CAP, ea.QE33_DRIVER_EDGE_CAP) + 1
-    assert "LogicalRDD" in (
-        df._jdf.queryExecution().optimizedPlan().toString()
-    )
+    assert "LogicalRDD" in _optimized(df)

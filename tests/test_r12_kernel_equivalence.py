@@ -140,3 +140,17 @@ def test_bm25_carried_dl_equals_rederived(spark, tmp_path):
     # end-to-end: the rankings run and every score is finite
     out = bm25_rankings(spark, sf_dir, 3).collect()
     assert all(r["s"] is not None for r in out)
+
+
+def test_qv18_driver_path_is_local_relation(spark, sf_dir, jobs_in):
+    """qv18's power iteration runs on the driver and returns its 64
+    rows as a local relation in dim order — no Sort, and no job to
+    collect them."""
+    from ml_data_wrangler_spark.plans import registry
+
+    df = registry.queries()["qv18_pca_power_iteration"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    rows, n_jobs = jobs_in(df.collect)
+    assert n_jobs == 0
+    assert [r["dim"] for r in rows] == list(range(1, 65))

@@ -16,6 +16,7 @@ from ml_data_wrangler_spark.operators.lda import (
     topic_term_distribution,
     topics_df,
     umass_coherence,
+    umass_counts,
     validate_lda_params,
 )
 from ml_data_wrangler_spark.operators.vectorize import (
@@ -97,6 +98,52 @@ def test_umass_coherence_hand_computed(spark):
     [c2] = umass_coherence(toks, [["b", "x"]])
     # pairs: (x,b): D=0 → log(1/D(b)=2→0.5); D(b)=2
     assert abs(c2 - math.log((0 + 1) / 2)) < 1e-9
+
+
+def _umass_counts_reference(rows, terms):
+    """Pure-Python D(w) / D(w1, w2): rows sharing a doc_id are one
+    document, the null doc_id is one document for D(w) and pairs with
+    nothing (the old equi-join on doc_id)."""
+    docs: dict = {}
+    for doc_id, tokens in rows:
+        docs.setdefault(doc_id, set()).update(
+            t for t in tokens or [] if t in terms
+        )
+    single: dict = {}
+    pair: dict = {}
+    for doc_id, present in docs.items():
+        for w in present:
+            single[w] = single.get(w, 0) + 1
+        if doc_id is None:
+            continue
+        ordered = sorted(present)
+        for i, w1 in enumerate(ordered):
+            for w2 in ordered[i + 1 :]:
+                pair[(w1, w2)] = pair.get((w1, w2), 0) + 1
+    return single, pair
+
+
+def test_umass_counts_match_reference(spark):
+    rows = [
+        (1, ["a", "b", "a", "c", "b"]),  # repeated tokens
+        (1, ["d", "a"]),  # duplicated doc_id: same document
+        (2, ["b", "c", "c"]),
+        (None, ["a", "b", "d"]),  # null doc_id
+        (None, ["c"]),
+        (3, []),  # empty token array
+        (4, None),
+        (5, ["d", None, "zz"]),
+        (6, ["é", "a"]),
+    ]
+    toks = spark.createDataFrame(rows, "doc_id long, tokens array<string>")
+    terms = sorted(["a", "b", "c", "d", "é", "absent"])  # "absent" is in no doc
+    single, pair = umass_counts(toks, terms)
+    assert (single, pair) == _umass_counts_reference(rows, set(terms))
+    assert "absent" not in single
+    assert single["a"] == 3 and pair[("a", "b")] == 1  # null doc_id: no pair
+    # empty topic lists short-circuit without a job
+    assert umass_coherence(toks, []) == []
+    assert umass_coherence(toks, [[]]) == [0.0]
 
 
 def test_cv_coherence_hand_computed(spark):
