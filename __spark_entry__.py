@@ -9,6 +9,10 @@ SQL-expressible).
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,115 +41,72 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Queries the driver's correctness gate already recorded, grouped by
-# the round whose CORRECTNESS_r{N}.json LAST verified them (the driver
-# snapshots ~50 queries per round in queries() order). As of r06 the
-# union covers the full 213-query registry with zero value mismatches
-# ever recorded, so the steady-state gate order is a re-verification
-# rotation: stalest-verified names order FIRST so each round's
-# snapshot re-checks the queries whose last driver verification is
-# oldest, and each round's fold MOVES the re-verified names to the
-# end of this list (r08 re-gated the r03 block + qd03/qd04/qm05, so
-# that block now holds the newest rank and the r04 remainder fronts
-# the r09 snapshot). tests/test_quality_contract.py asserts the
-# newest CORRECTNESS file's names hold the newest rank, so a stalled
-# rotation is a red test. Any future never-gated query would still
-# jump the whole rotation.
-#
-# Rotation-policy amendment (round 13, r12 verdict item 2/5): an
-# IMPLEMENTATION change resets a name's staleness. The rotation was
-# keyed to name-verification age only, so the queries rewritten in
-# the r12 optimization round (qe33 driver PageRank, qv17 argmin fold,
-# qv18 gram kernel, qv20/qt19 bm25+fold, qt20 literalized argmax,
-# qd17 one-pass edge build, qm09 bounded probe) would have waited a
-# full rotation cycle before the driver oracle ever saw the new code.
-# They now jump to rank 0 (the never-gated slot) until a CORRECTNESS
-# snapshot hash-passes them on the new implementation. qt01's rewrite
-# WAS driver-gated in r12 (hash-PASS on the repartitioned plan), so
-# it folds to the newest rank with the rest of the r12 snapshot.
-_GATED_ROUNDS: list[list[str]] = [
-    # r13 front: implementation changed in round 12, never
-    # driver-gated on the new code (see the policy amendment above).
-    ["qe33", "qv17", "qv18", "qv20", "qt19", "qt20", "qd17", "qm09"],
-    # r08-block remainder (the r12 snapshot re-verified 37 of the 50
-    # r08-rank names; these 13 are the stalest NAME-verified queries).
-    ["qc05", "qc06", "qd04", "qd08", "qe06", "qe07", "qg06",
-     "qm05", "qs05", "qs06", "qt06", "qt07", "qv05"],
-    # r09 re-verification (CORRECTNESS_r09.json: 49 hash-PASS + qv07
-    # rows-only by design — the old r04 remainder block plus
-    # qj05/qj06/qx06 from r05; qc11 dropped, never a live name;
-    # qm09 moved to the r13 front on its r12 rewrite).
-    ["q33", "qw09"]
-    + [f"qc{i:02d}" for i in range(7, 15) if i != 11]
-    + ["qd05", "qd09", "qd10", "qd11"]
-    + [f"qe{i:02d}" for i in range(8, 21)]
-    + ["qj05", "qj06"]
-    + [f"qm{i:02d}" for i in range(6, 13) if i not in (7, 9)]
-    + ["qs07"]
-    + [f"qt{i:02d}" for i in range(8, 16)]
-    + ["qv06", "qv07", "qv09", "qv10", "qv11", "qv12"]
-    + ["qx06"],
-    # r10 re-verification (CORRECTNESS_r10.json: 50/50 hash-PASS,
-    # zero rows-only, zero errors — the first all-oracle-bearing
-    # snapshot. The old r05-remainder block plus qd15/qd17/qm16 from
-    # the r06 rank; qv18/qd17 moved to the r13 front on their r12
-    # rewrites.)
-    ["qc15", "qc16", "qc17", "qc18", "qc20"]
-    + ["qd12", "qd13", "qd14", "qd15", "qd16", "qd18"]
-    + ["qe21", "qe24", "qe25", "qe27", "qe28", "qe29", "qe30", "qe31",
-       "qe32", "qe34", "qe35", "qe36", "qe38"]
-    + ["qg07", "qg08"]
-    + ["qm13", "qm14", "qm16", "qm17", "qm18", "qm19", "qm21"]
-    + ["qs08", "qs09", "qs10", "qs11"]
-    + ["qt16", "qt17", "qt18"]
-    + ["qv13", "qv14", "qv15", "qv16", "qv19", "qv21"]
-    + ["qw11", "qx07"],
-    # r11 re-verification (CORRECTNESS_r11.json: 50/50 hash-PASS,
-    # zero rows-only, zero errors — the full r06-remainder block
-    # plus the head of the r07 rank: q01-q10, q13-q19, q22-q23,
-    # qe01/qe02, qg01-qg05, qj01-qj03, qw01-qw08; qe33/qt19/qt20/
-    # qv17/qv20 moved to the r13 front on their r12 rewrites.)
-    ["q34", "qc19", "qc21", "qe22", "qe37", "qe39", "qm20", "qv22"]
-    + [f"q{i:02d}" for i in range(1, 11)]
-    + ["q13", "q14", "q15", "q16", "q17", "q18", "q19", "q22", "q23"]
-    + ["qe01", "qe02", "qg01", "qg02", "qg03", "qg04", "qg05"]
-    + ["qj01", "qj02", "qj03"]
-    + [f"qw{i:02d}" for i in range(1, 9)],
-    # r12 re-verification (CORRECTNESS_r12.json: 46 hash-PASS + 4
-    # rows-only by design — qm03/qm04/qm07 LDA+coherence, qv08 tiered
-    # GEMM. The r07-remainder block plus the head of the r08 rank;
-    # qt01 hash-PASSED here on its r12-rewritten plan.)
-    ["q11", "q12", "q20", "q21"] + [f"q{i:02d}" for i in range(24, 33)]
-    + ["qc01", "qc02", "qc03", "qc04"]
-    + ["qd01", "qd02", "qd03", "qd06", "qd07"]
-    + ["qe03", "qe04", "qe05", "qj04"]
-    + ["qm01", "qm02", "qm03", "qm04", "qm07"]
-    + ["qs01", "qs02", "qs03", "qs04"]
-    + [f"qt{i:02d}" for i in range(1, 6)]
-    + ["qv01", "qv02", "qv03", "qv04", "qv08"]
-    + [f"qx{i:02d}" for i in range(1, 6)],
-]
-
-_GATED_PASS = frozenset(n for rnd in _GATED_ROUNDS for n in rnd)
+# Gate order. The correctness gate checks a ~50-query prefix of
+# queries() each round; its results are committed as
+# CORRECTNESS_r{N}.json next to this file. The order is a
+# re-verification rotation derived from those snapshots: a query ranks
+# by the newest round whose snapshot greens it (_green), so the queries
+# verified longest ago front the next snapshot. Never-green queries rank
+# first. An implementation change makes older green results stale:
+# _RESET maps a short name to the first round whose green result counts
+# again, and the name ranks first until such a snapshot greens it.
+_RESET: dict[str, int] = {
+    # round 14: qv07 runs the fold kernel instead of the deleted Arrow
+    # top-k kernel; qv11 asserts exact fold/relational identity
+    "qv07": 14,
+    "qv11": 14,
+    # round 13: bytes-gated repartition before the tokenize map
+    "qt01": 13,
+}
 
 
 def _short(name: str) -> str:
     return name.split("_", 1)[0]
 
 
-def _gate_order(names: list[str]) -> list[str]:
-    """Never-driver-gated queries first (family-interleaved by the
-    registry); gated queries follow in re-verification rotation —
-    oldest gate round first, registry order within a round."""
-    rank = {
-        short: i for i, rnd in enumerate(_GATED_ROUNDS) for short in rnd
-    }
-    fresh = [n for n in names if _short(n) not in rank]
-    seen = sorted(
-        (n for n in names if _short(n) in rank),
-        key=lambda n: (rank[_short(n)], names.index(n)),
+def _green(res: dict) -> bool:
+    """The gate's recorded pass. An oracle-bearing query must match
+    rows, schema AND hash (rows alone would let a value mismatch
+    count); a rows-only query (err == 'no_oracle') passes when it ran
+    and produced rows."""
+    if res.get("err") == "no_oracle":
+        return (res.get("spark_rows") or 0) > 0
+    return bool(
+        res.get("err") is None
+        and res.get("rows_match")
+        and res.get("schema_match")
+        and res.get("hash_match")
     )
-    return fresh + seen
+
+
+def _snapshots() -> dict[int, dict[str, dict]]:
+    """{round: {query name: result}} of the committed gate snapshots."""
+    root = os.path.dirname(os.path.abspath(__file__))
+    out = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m:
+            with open(path) as fh:
+                out[int(m.group(1))] = json.load(fh)
+    return out
+
+
+def _gate_order(
+    names: list[str],
+    snapshots: dict[int, dict[str, dict]],
+    reset: dict[str, int] = _RESET,
+) -> list[str]:
+    """``names`` ordered oldest-verified first: rank 0 for never-green
+    and reset names, else the newest round that greened the short name
+    (ignoring rounds before its reset round). Ties keep the given
+    (registry) order."""
+    rank: dict[str, int] = {}
+    for rnd, results in snapshots.items():
+        for name, res in results.items():
+            short = _short(name)
+            if rnd >= reset.get(short, 0) and _green(res):
+                rank[short] = max(rank.get(short, 0), rnd)
+    return sorted(names, key=lambda n: rank.get(_short(n), 0))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -153,7 +114,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     north-star extensions). Computed columns are aliased identically
     in the Spark plan and the oracle SQL."""
     q = registry.queries()
-    return {n: q[n] for n in _gate_order(list(q))}
+    return {n: q[n] for n in _gate_order(list(q), _snapshots())}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -161,6 +122,7 @@ def oracle_sql() -> dict[str, str]:
     coherence sweeps, raw 64-bit SimHash pairs, raw IVF/GEMM result
     streams) are model-based/non-SQL ops → rows-only check by design;
     the approximate families additionally gate through oracle-pinned
-    bounded-error duals (qd03/qd04/qv06/qv11/qv12, qe07/qe16/qs07)."""
+    bounded-error duals (qd03/qd04/qv06/qv12, qe07/qe16/qs07)."""
     o = registry.oracle_sql()
-    return {n: o[n] for n in _gate_order(list(registry.queries())) if n in o}
+    order = _gate_order(list(registry.queries()), _snapshots())
+    return {n: o[n] for n in order if n in o}

@@ -11,18 +11,22 @@ Three tiers:
     L2-normalized vectors (cosine ≈ monotone in euclidean distance on
     the unit sphere), constant-size bucket keys.
 
-Scoring kernels: top-k paths score JVM-side (functions/vectors.py);
-the all-pairs/verify paths (block_allpairs_cosine)
-use Arrow-batched numpy GEMM with a per-dimension ascending float64
-fold — measured round 8: the per-pair JVM expression kernel costs
-~12 µs/pair (higher-order fold and 64-term unrolled alike), so on
-pair-dense inputs the GEMM is the difference between the join
-machinery mattering and not. The fold order keeps rounded sims
-bit-identical to the relational kernel and the DuckDB oracles.
+Scoring kernels: the relational top-k paths score JVM-side
+(functions/vectors.py). Every numpy path — the all-pairs/verify GEMM
+(block_allpairs_cosine) and the exact top-k (brute_force_topk_fold) —
+scores through the ONE fold tile scorer, :func:`_fold_cosine`: an
+ascending per-dimension float64 fold from a 0.0 accumulator, divided
+by the same-fold norms, rounded half away from zero to 6 decimals.
+That fold order keeps rounded sims bit-identical to the relational
+kernel and the DuckDB oracles. Measured round 8: the per-pair JVM
+expression kernel costs ~12 µs/pair (higher-order fold and 64-term
+unrolled alike), so on pair-dense inputs the GEMM is the difference
+between the join machinery mattering and not.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -30,6 +34,67 @@ from pyspark.sql import Window as W
 from ml_data_wrangler_spark.functions.vectors import cosine_similarity
 from ml_data_wrangler_spark.session import local_frame
 
+# no score tile of the fold scorer holds more cells than this
+_TILE_CELLS = 4_000_000
+
+
+def _round6(sims: np.ndarray) -> np.ndarray:
+    """Half-away-from-zero rounding to 6 decimals (Spark's and
+    DuckDB's ROUND). floor(x·1e6+0.5) re-rounds at the multiply and
+    the add, so a sim whose scaled fraction sits within 1 ulp of .5
+    could in principle land 1e-6 off a decimal-path ROUND — an
+    ulp-edge risk that has never fired across the sf0.01/sf0.1/16×
+    gates, documented rather than claimed away."""
+    scaled = sims * 1e6
+    return (
+        np.where(scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5))
+        / 1e6
+    )
+
+
+def _fold_norms(v: np.ndarray) -> np.ndarray:
+    """Row L2 norms by the ascending per-dimension fold — bit-identical
+    to l2_norm() and to DuckDB's sqrt(list_dot_product(v, v))."""
+    sq = np.zeros(v.shape[0])
+    for i in range(v.shape[1]):
+        sq += v[:, i] * v[:, i]
+    return np.sqrt(sq)
+
+
+def _tile_rows(row_chunk: int, n_cols: int) -> int:
+    """Rows per score tile against ``n_cols`` columns: at most
+    ``row_chunk`` and at most _TILE_CELLS cells. The floor is one row
+    — any larger floor breaks the cell bound once n_cols exceeds
+    _TILE_CELLS / floor."""
+    return max(1, min(row_chunk, _TILE_CELLS // max(n_cols, 1)))
+
+
+def _fold_cosine(
+    a: np.ndarray, b: np.ndarray, nrm_a: np.ndarray, nrm_b: np.ndarray
+) -> np.ndarray:
+    """The one exact cosine tile: rounded sims of every (row of a,
+    row of b) pair as an (len(a), len(b)) array. Dots accumulate per
+    dimension in ascending order — the ((0+t₀)+t₁)+… float64 fold the
+    relational kernel and DuckDB's list_dot_product run per pair — so
+    a pair's sim is bit-identical whichever tile or chunk scores it."""
+    dots = np.zeros((a.shape[0], b.shape[0]))
+    for i in range(a.shape[1]):
+        dots += np.outer(a[:, i], b[:, i])
+    return _round6(dots / np.outer(nrm_a, nrm_b))
+
+
+def _require_integral_id(df: DataFrame, col: str, caller: str) -> None:
+    """The numpy kernels emit (long, long, double): reject a
+    non-integral id up front — a string id would crash inside the
+    pandas UDF at runtime and a float id would truncate silently."""
+    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
+    id_type = df.schema[col].dataType
+    if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
+        raise TypeError(
+            f"{caller} requires an integral id column; "
+            f"{col!r} is {id_type.simpleString()}"
+        )
 
 
 def brute_force_topk(
@@ -395,8 +460,8 @@ def lsh_ann_pairs(
 
 
 # tile side length for hot-block decomposition: 2048² ≈ 4.2M score
-# cells per task — the same ceiling the in-scorer chunk loop uses, so
-# one (ci, cj) tile pair is roughly one chunk iteration of work
+# cells per task — about _TILE_CELLS, the fold scorer's own tile
+# bound, so one (ci, cj) tile pair is roughly one chunk of work
 _TILE_ROWS = 2048
 
 
@@ -420,16 +485,9 @@ def block_allpairs_cosine(
     is balanced. The per-block GEMM moves each vector ONCE (no
     per-pair vector traffic) and scores a pair in ~ns.
 
-    Float discipline (the qm09/bm25_topk_py rule): dots and squared
-    norms accumulate PER-DIMENSION in ascending order — the same
-    ((0+t₀)+t₁)+… float64 fold the relational kernel and DuckDB's
-    list_dot_product run per pair — and rounding is half-away-from-
-    zero, matching the SQL oracle at every gated tier. (The rounding
-    emulation floor(x·1e6+0.5) re-rounds at the multiply and the add,
-    so a sim whose scaled fraction sits within 1 ulp of .5 could in
-    principle land 1e-6 off a decimal-path ROUND — an ulp-edge risk
-    that has never fired across sf0.01/sf0.1/16× gates, documented
-    rather than claimed away.)
+    Float discipline (the qm09/bm25_topk_py rule): every sim comes
+    from the shared fold tile scorer :func:`_fold_cosine`, matching the
+    SQL oracle at every gated tier.
 
     Parallelism vs block size — two regimes, chosen by ``tile_rows``:
 
@@ -454,33 +512,15 @@ def block_allpairs_cosine(
       only cost in the cool regime is the window's linear count pass.
 
     Memory: groups are additionally processed in row-chunks bounding
-    any score tile at ~4M cells, so even a hash-skewed chunk degrades
-    to more iterations, never a bigger allocation. Every emitted sim
-    is the identical per-dimension fold on the identical (a, b)
-    inputs whichever tile or chunk scores it, so callers that
-    ``distinct()`` duplicate candidates (tiered_cosine_pairs' band
-    copies) collapse them unchanged."""
-    import numpy as np
+    any score tile at _TILE_CELLS cells (:func:`_tile_rows`), so even a
+    hash-skewed chunk degrades to more iterations, never a bigger
+    allocation. Every emitted sim is the identical per-dimension fold
+    on the identical (a, b) inputs whichever tile or chunk scores it,
+    so callers that ``distinct()`` duplicate candidates
+    (tiered_cosine_pairs' band copies) collapse them unchanged."""
     import pandas as pd
 
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
     thr = float(sim_threshold)
-
-    def _round6(sims: "np.ndarray") -> "np.ndarray":
-        scaled = sims * 1e6
-        return (
-            np.where(scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5))
-            / 1e6
-        )
-
-    def _fold_norms(v: "np.ndarray") -> "np.ndarray":
-        # ascending per-dimension fold (bit-identical to the
-        # relational kernel): Σ over dims of elementwise products
-        sq = np.zeros(v.shape[0])
-        for i in range(v.shape[1]):
-            sq += v[:, i] * v[:, i]
-        return np.sqrt(sq)
 
     def _empty() -> pd.DataFrame:
         return pd.DataFrame(
@@ -491,69 +531,28 @@ def block_allpairs_cosine(
             }
         )
 
-    def _score_triangle(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        ids = pdf[id_col].to_numpy()
-        v = np.stack(pdf["_v"].to_numpy()).astype(np.float64)  # (n, d)
-        n, d = v.shape
-        # bound the score tile at ~4M cells whatever the group size
-        chunk = max(128, min(row_chunk, 4_000_000 // max(n, 1)))
-        nrm = _fold_norms(v)
-        out_a, out_b, out_s = [], [], []
-        for lo in range(0, n, chunk):
-            hi = min(lo + chunk, n)
-            dots = np.zeros((hi - lo, n))
-            for i in range(d):
-                dots += np.outer(v[lo:hi, i], v[:, i])
-            sims = _round6(dots / np.outer(nrm[lo:hi], nrm))
-            # pairs (row r, col c) with global_row < c (strict upper)
-            rows, cols = np.nonzero(sims >= thr)
-            keep = (rows + lo) < cols
-            rows, cols = rows[keep], cols[keep]
-            out_a.append(ids[rows + lo])
-            out_b.append(ids[cols])
-            out_s.append(sims[rows, cols])
-        if not out_a:
-            return _empty()
-        return pd.DataFrame(
-            {
-                "vec_a": np.concatenate(out_a).astype("int64"),
-                "vec_b": np.concatenate(out_b).astype("int64"),
-                "sim": np.concatenate(out_s),
-            }
-        )
+    def _vectors(pdf: pd.DataFrame) -> np.ndarray:
+        return np.stack(pdf["_v"].to_numpy()).astype(np.float64)  # (n, d)
 
-    def _score_cross(pdf: pd.DataFrame, ti: int) -> pd.DataFrame:
-        # cross-chunk tile: every (a ∈ chunk ti, b ∈ chunk tj) pair,
-        # ordered by id at emission (chunks are hash residues, not id
-        # ranges). Same per-dimension fold per pair as the triangle
-        # path — a pair's sim is bit-identical wherever it is scored.
-        a_side = pdf["_c"].to_numpy() == ti
-        pa, pb = pdf[a_side], pdf[~a_side]
-        if not len(pa) or not len(pb):
-            return _empty()
-        ids_a = pa[id_col].to_numpy()
-        ids_b = pb[id_col].to_numpy()
-        va = np.stack(pa["_v"].to_numpy()).astype(np.float64)
-        vb = np.stack(pb["_v"].to_numpy()).astype(np.float64)
-        d = va.shape[1]
-        nb = len(ids_b)
-        nrm_a, nrm_b = _fold_norms(va), _fold_norms(vb)
-        chunk = max(128, min(row_chunk, 4_000_000 // max(nb, 1)))
+    def _pairs(ids_a, va, ids_b, vb, triangle: bool) -> pd.DataFrame:
+        # every (a, b) pair with sim ≥ thr as (lower id, higher id);
+        # a triangle tile is one id-sorted side scored against itself,
+        # keeping the strict upper triangle (global row < col)
+        nrm_a = _fold_norms(va)
+        nrm_b = nrm_a if triangle else _fold_norms(vb)
+        chunk = _tile_rows(row_chunk, len(ids_b))
         out_a, out_b, out_s = [], [], []
         for lo in range(0, len(ids_a), chunk):
             hi = min(lo + chunk, len(ids_a))
-            dots = np.zeros((hi - lo, nb))
-            for i in range(d):
-                dots += np.outer(va[lo:hi, i], vb[:, i])
-            sims = _round6(dots / np.outer(nrm_a[lo:hi], nrm_b))
+            sims = _fold_cosine(va[lo:hi], vb, nrm_a[lo:hi], nrm_b)
             rows, cols = np.nonzero(sims >= thr)
+            if triangle:
+                keep = (rows + lo) < cols
+                rows, cols = rows[keep], cols[keep]
             ia, ib = ids_a[rows + lo], ids_b[cols]
             out_a.append(np.minimum(ia, ib))
             out_b.append(np.maximum(ia, ib))
             out_s.append(sims[rows, cols])
-        if not out_a:
-            return _empty()
         return pd.DataFrame(
             {
                 "vec_a": np.concatenate(out_a).astype("int64"),
@@ -566,8 +565,19 @@ def block_allpairs_cosine(
         if not len(pdf):
             return _empty()
         if "_ti" in pdf.columns and pdf["_ti"].iat[0] != pdf["_tj"].iat[0]:
-            return _score_cross(pdf, pdf["_ti"].iat[0])
-        return _score_triangle(pdf)
+            # cross-chunk tile: every (a ∈ chunk ti, b ∈ chunk tj)
+            # pair — chunks are hash residues, not id ranges
+            a_side = pdf["_c"].to_numpy() == pdf["_ti"].iat[0]
+            pa, pb = pdf[a_side], pdf[~a_side]
+            if not len(pa) or not len(pb):
+                return _empty()
+            return _pairs(
+                pa[id_col].to_numpy(), _vectors(pa),
+                pb[id_col].to_numpy(), _vectors(pb), triangle=False,
+            )
+        pdf = pdf.sort_values(id_col)
+        ids, v = pdf[id_col].to_numpy(), _vectors(pdf)
+        return _pairs(ids, v, ids, v, triangle=True)
 
     from ml_data_wrangler_spark.operators._partition import pin_join_width
 
@@ -577,15 +587,7 @@ def block_allpairs_cosine(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("_v"),
     )
-    # the emitted schema is (long, long, double): require an integral
-    # id up front — a string id would crash inside the pandas UDF at
-    # runtime and a float id would truncate silently
-    id_type = prepped.schema[id_col].dataType
-    if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
-        raise TypeError(
-            f"block_allpairs_cosine requires an integral id column; "
-            f"{id_col!r} is {id_type.simpleString()}"
-        )
+    _require_integral_id(prepped, id_col, "block_allpairs_cosine")
     group_cols = list(block_cols)
     if tile_rows is not None:
         from pyspark.sql import Window as W
@@ -745,77 +747,6 @@ def tiered_cosine_pairs(
     ).distinct()
 
 
-def brute_force_topk_vectorized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k via Arrow-batched numpy matrix products —
-    the vectorized dual of brute_force_topk for when the expression-
-    per-element cost dominates (high dims / many queries).
-
-    Shape: the (small) query matrix is broadcast to every executor;
-    each corpus partition computes one (batch × queries) GEMM and
-    emits only its partition-local top-k per query; a final window
-    merges partition winners. Data moved after scoring:
-    O(partitions × queries × k), never the full score matrix.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window as W2
-
-    spark = corpus.sparkSession
-    q_rows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("v")
-    ).collect()
-    q_ids = np.array([r["qid"] for r in q_rows])
-    q_mat = np.array([r["v"] for r in q_rows])  # (Q, D)
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bq = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def score(batches):
-        ids, qm = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf["nid"].to_numpy()
-            c = np.stack(pdf["v"].to_numpy())  # (B, D)
-            c = c / np.linalg.norm(c, axis=1, keepdims=True)
-            sims = c @ qm.T  # (B, Q)
-            # partition-local top-k per query (argpartition: O(B))
-            kk = min(k + 1, sims.shape[0])
-            idx = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (kk, Q)
-            out = {
-                "query_id": np.repeat(ids, kk),
-                "neighbor_id": c_ids[idx].T.ravel(),
-                "sim": np.take_along_axis(sims, idx, axis=0).T.ravel(),
-            }
-            yield pd.DataFrame(out)
-
-    from ml_data_wrangler_spark.operators._partition import ensure_parallelism
-
-    scored = (
-        # parallelize the scoring map (trap #10): a 1-split scan
-        # would otherwise run the whole |C|×|Q| GEMM as one task
-        ensure_parallelism(
-            corpus.select(
-                F.col(id_col).alias("nid"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-        )
-        .mapInPandas(score, schema="query_id long, neighbor_id long, sim double")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round("sim", 6))
-    )
-    w = W2.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-    )
-
-
 def brute_force_topk_fold(
     corpus: DataFrame,
     queries: DataFrame,
@@ -839,8 +770,8 @@ def brute_force_topk_fold(
     per-pair JVM fold, measured 346.8 s = 10.05× over 16× on 4.1×
     pair growth (SCALE_SWEEP_r09_32x_batch2.log; the stage audit says
     parallel-ok — it is pure work growth, not imbalance). Here each
-    corpus chunk scores a (B, Q) tile with the same numpy
-    per-dimension accumulation ``block_allpairs_cosine`` uses and
+    corpus chunk scores a (B, Q) tile with the shared fold tile scorer
+    (:func:`_fold_cosine`, also ``block_allpairs_cosine``'s) and
     emits only its chunk-local top-k per query; the window then
     merges O(chunks × Q × k) rows, never the score matrix.
 
@@ -879,40 +810,15 @@ def brute_force_topk_fold(
     sides — a zero-norm or NaN vector raises instead of silently
     diverging from the relational kernel's NaN-ranks-first ordering.
     Per-slice query broadcasts live for the session (bounded by Q×D
-    cells total — the accepted brute_force_topk_vectorized pattern).
+    cells total).
     """
-    import numpy as np
     import pandas as pd
 
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+    for df_ in (corpus, queries):
+        _require_integral_id(df_, id_col, "brute_force_topk_fold")
 
-    # same id contract as block_allpairs_cosine: the emitted schema is
-    # (long, long, double) — reject non-integral ids up front
-    for df_, col_ in ((corpus, id_col), (queries, id_col)):
-        id_type = df_.schema[col_].dataType
-        if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
-            raise TypeError(
-                f"brute_force_topk_fold requires an integral id column; "
-                f"{col_!r} is {id_type.simpleString()}"
-            )
-
-    def _round6(sims: "np.ndarray") -> "np.ndarray":
-        # half-away-from-zero — block_allpairs_cosine's rounding (same
-        # documented 1e-6 ulp-edge caveat)
-        scaled = sims * 1e6
-        return (
-            np.where(scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5))
-            / 1e6
-        )
-
-    def _fold_norms(v: "np.ndarray") -> "np.ndarray":
-        # ascending per-dimension fold — bit-identical to l2_norm()
-        sq = np.zeros(v.shape[0])
-        for i in range(v.shape[1]):
-            sq += v[:, i] * v[:, i]
-        return np.sqrt(sq)
-
-    def _stack_checked(vals: "np.ndarray", side: str) -> "np.ndarray":
+    def _stack_checked(vals: np.ndarray, side: str):
+        """(matrix, fold norms) of one side's embeddings."""
         if any(v is None for v in vals):
             raise ValueError(
                 f"brute_force_topk_fold: null {side} embedding — the fold "
@@ -932,7 +838,21 @@ def brute_force_topk_fold(
                 "embedding — would silently diverge from the relational "
                 "kernel's NaN ordering (clean or drop it upstream)"
             )
-        return m
+        return m, n
+
+    def _query_side(q_pdf: pd.DataFrame):
+        """(ids, matrix, norms) of one in-memory query slice."""
+        qm, qn = _stack_checked(q_pdf["v"].to_numpy(), "query")  # (Q, D)
+        if qm.size > 4 * max_broadcast_cells:
+            # quarter-budget slicing leaves 16× headroom before this
+            # trips — only pathological qid-hash skew reaches it, and
+            # it must fail loudly, not materialize an oversized slice
+            raise ValueError(
+                f"brute_force_topk_fold slice over budget ({qm.shape[0]}×"
+                f"{qm.shape[1]} cells > 4×{max_broadcast_cells}) — "
+                "pathological id-hash skew"
+            )
+        return q_pdf["qid"].to_numpy().astype("int64"), qm, qn
 
     spark = corpus.sparkSession
     sc = spark.sparkContext
@@ -948,15 +868,11 @@ def brute_force_topk_fold(
         order — the single scoring kernel every dispatch path
         (broadcast, sliced, grid cogroup) runs, so values can never
         diverge between physical strategies."""
-        n_q = len(ids_b)
-        # bound each score tile at ~4M cells whatever Arrow hands us;
-        # no floor — a 128-row floor at n_q > 31,250 would break the
-        # bound (r09 ADVICE)
-        chunk = max(1, min(row_chunk, 4_000_000 // max(n_q, 1)))
+        chunk = _tile_rows(row_chunk, len(ids_b))
         for lo in range(0, len(nids_all), chunk):
             hi = min(lo + chunk, len(nids_all))
             nids = nids_all[lo:hi]
-            c = _stack_checked(vs_all[lo:hi], "corpus")  # (B, D)
+            c, cn = _stack_checked(vs_all[lo:hi], "corpus")  # (B, D)
             if c.shape[1] != qm_b.shape[1]:
                 # a locally-rectangular chunk can still be ragged vs
                 # the query side (rows split across partitions) — same
@@ -969,12 +885,8 @@ def brute_force_topk_fold(
             # pre-sort by neighbor id: the stable sim sort below
             # then inherits the ASC id tie-break of the total order
             o = np.argsort(nids, kind="stable")
-            nids, c = nids[o], c[o]
-            cn = _fold_norms(c)
-            dots = np.zeros((c.shape[0], qm_b.shape[0]))
-            for i in range(c.shape[1]):
-                dots += np.outer(c[:, i], qm_b[:, i])
-            sims = _round6(dots / np.outer(cn, qn_b))
+            nids, c, cn = nids[o], c[o], cn[o]
+            sims = _fold_cosine(c, qm_b, cn, qn_b)
             # self-matches can never be neighbors
             sims[nids[:, None] == ids_b[None, :]] = -np.inf
             kk = min(k, sims.shape[0])
@@ -992,19 +904,8 @@ def brute_force_topk_fold(
                 }
             )
 
-    def scored_branch(q_pdf: "pd.DataFrame") -> DataFrame:
-        q_ids = q_pdf["qid"].to_numpy().astype("int64")
-        qm = _stack_checked(q_pdf["v"].to_numpy(), "query")  # (Q, D)
-        if qm.size > 4 * max_broadcast_cells:
-            # quarter-budget slicing leaves 16× headroom before this
-            # trips — only pathological id-hash skew reaches it
-            raise ValueError(
-                f"brute_force_topk_fold slice over budget ({qm.shape[0]}×"
-                f"{qm.shape[1]} cells > 4×{max_broadcast_cells}) — "
-                "pathological id-hash skew"
-            )
-        qn = _fold_norms(qm)
-        bq = sc.broadcast((q_ids, qm, qn))
+    def scored_branch(q_pdf: pd.DataFrame) -> DataFrame:
+        bq = sc.broadcast(_query_side(q_pdf))
 
         def score(batches):
             ids_b, qm_b, qn_b = bq.value
@@ -1091,36 +992,16 @@ def brute_force_topk_fold(
             )
         )
 
-        def cell_topk(cpdf: "pd.DataFrame", qpdf: "pd.DataFrame"):
-            if cpdf.empty or qpdf.empty:
-                return pd.DataFrame(
-                    {"query_id": pd.Series(dtype="int64"),
-                     "neighbor_id": pd.Series(dtype="int64"),
-                     "sim": pd.Series(dtype="float64")}
+        def cell_topk(cpdf: pd.DataFrame, qpdf: pd.DataFrame):
+            parts = []
+            if not cpdf.empty and not qpdf.empty:
+                parts = list(
+                    _tile_topk(
+                        cpdf["nid"].to_numpy().astype("int64"),
+                        cpdf["v"].to_numpy(),
+                        *_query_side(qpdf),
+                    )
                 )
-            q_ids = qpdf["qid"].to_numpy().astype("int64")
-            qm = _stack_checked(qpdf["v"].to_numpy(), "query")
-            if qm.size > 4 * max_broadcast_cells:
-                # same loud skew guard as scored_branch (r11 ADVICE):
-                # slices target quarter-budget, so 16× headroom —
-                # only pathological qid-hash skew reaches this, and it
-                # must fail loudly, not materialize an oversized query
-                # slice inside every grid cell
-                raise ValueError(
-                    f"grid-cogroup query slice over budget ({qm.shape[0]}×"
-                    f"{qm.shape[1]} cells > 4×{max_broadcast_cells}) — "
-                    "pathological qid-hash skew"
-                )
-            qn = _fold_norms(qm)
-            parts = list(
-                _tile_topk(
-                    cpdf["nid"].to_numpy().astype("int64"),
-                    cpdf["v"].to_numpy(),
-                    q_ids,
-                    qm,
-                    qn,
-                )
-            )
             if not parts:
                 return pd.DataFrame(
                     {"query_id": pd.Series(dtype="int64"),

@@ -522,8 +522,8 @@ def qm09(spark, sf_dir):
       algorithm, not the constant: a dense blocked GEMM
       (operators/similarity.py:allpairs_cosine_topk_dense) that
       streams chunk × matrix BLAS products and moves only chunk-local
-      top-k winners — the same vectorized dual already proven against
-      the relational plan by qv07/qv11.
+      top-k winners — the chunk-local top-k shape qv11 pins against
+      the relational plan for the fold kernel.
 
     The dispatch is decided by ONE model-sized scalar (pruned-vocab
     width ≤ 1024); the cell cap n·V ≤ 2e8 is the operator's PER-BLOCK

@@ -1538,22 +1538,12 @@ def qt20(spark, sf_dir):
 
     Shape at scale: the 100-TB pass is the ONE word-frequency
     aggregation — everything after operates on the bounded word-TYPE
-    table (the classic BPE trick), checkpointed per round per the
-    iterative-lineage rule; each merge is a map-side REPLACE plus a
-    pair-count aggregation over types, with the 1-row argmax
-    broadcast."""
-    return _qt20_impl(spark, sf_dir, checkpoint_per_step=False)
-
-
-def _qt20_impl(spark, sf_dir, checkpoint_per_step: bool):
-    """qt20 body, parameterized for the round-13 recompute-vs-
-    materialize A/B (r12 verdict item 3): ``checkpoint_per_step=True``
-    re-materializes the word-type relation after each merge (step k's
-    argmax and stats then each read a 1-step lineage instead of
-    recomputing the k-step replace chain from the single checkpointed
-    leaf, at +1 checkpoint job per step). Values identical either way
-    — the flag only moves materialization. scripts/ab_qt20.py times
-    both forms interleaved; the query above pins the measured winner."""
+    table (the classic BPE trick), checkpointed ONCE; each merge is a
+    map-side REPLACE plus a pair-count aggregation over types, with
+    the 1-row argmax collected and folded in as literals. Step k
+    recomputes the k-step replace chain from that one leaf: an
+    interleaved A/B of re-checkpointing after every merge measured
+    1.554 s against 1.444 s for this form (OPTIMIZATION_r13.md)."""
     from ml_data_wrangler_spark.operators._partition import (
         TOKENIZE_REPARTITION_MIN_BYTES,
     )
@@ -1646,8 +1636,6 @@ def _qt20_impl(spark, sf_dir, checkpoint_per_step: bool):
                 F.lit(" "),
             ).alias("sym"),
         )
-        if checkpoint_per_step:
-            wt = wt.localCheckpoint()
         sym_col = F.explode(F.split(F.trim(F.col("sym")), " ")).alias("s")
         stats = wt.select("f", sym_col).agg(
             F.count_distinct("s").alias("vocab"),

@@ -553,8 +553,8 @@ def qv18(spark, sf_dir):
     Shape at scale: covariance = ONE self-join on vec_id exploding to
     (dim × dim) terms per vector then a 64×64-bounded aggregation —
     the relational outer-product accumulation (the GEMM dual would be
-    a qv07-style mapInPandas partial-gram per partition; same
-    communication shape: only 64×64 partials move). The power
+    a mapInPandas partial-gram per partition; same communication
+    shape: only 64×64 partials move). The power
     iteration itself runs on the DRIVER over the collected covariance
     (round 12, guide §5): the matrix is MODEL-sized by construction —
     dim² = 4096 rows for any input cardinality, the schema fixes dim —

@@ -39,10 +39,10 @@ _QV01_ORACLE_CHUNK = 4096
 
 
 def _qv01_scale_oracle(con):
-    """Scale-tier oracle for qv01: the SQL oracle MATERIALIZES the
-    |Q|×|C| scored stream before its rank window — at the 64× tier
-    (6.4k queries × 128k vectors) DuckDB's temp spill for that
-    ~819M-row materialization filled the box's disk (measured,
+    """Scale-tier oracle for qv01 and qv07: the SQL oracle
+    MATERIALIZES the |Q|×|C| scored stream before its rank window — at
+    the 64× tier (6.4k queries × 128k vectors) DuckDB's temp spill for
+    that ~819M-row materialization filled the box's disk (measured,
     SCALE_SWEEP_r11_64x_vectors.log). Same value definition, feasible
     algorithm (the qm09/qd17 oracle-py pattern): numpy scores corpus
     chunks against the query block with the engine kernels' exact
@@ -119,8 +119,9 @@ def _qv01_scale_oracle(con):
     return cols, rows
 
 
-@query(
-    "qv01_knn_bruteforce",
+# Oracle of every exact cosine top-5 over the 5% query sample (qv01,
+# qv07): the SQL, the numpy scale oracle above, and its bound.
+_KNN_TOP5_ORACLE = dict(
     # the |Q|x|C| scoring is MATERIALIZED to scalars before the window:
     # letting the window's ORDER BY recompute the cosine keeps both
     # 64-dim arrays alive in the (unspillable) window pin — at the 16x
@@ -129,7 +130,7 @@ def _qv01_scale_oracle(con):
     # qv19/qv21, ROUND_NOTES r07). Norms hoisted per vector: identical
     # float ops (sqrt, then multiply, then divide), so values are
     # bit-identical to the inline form the gate tiers hashed.
-    oracle=f"""
+    oracle="""
 WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
                   sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
                                         CAST(embedding AS DOUBLE[]))) AS n
@@ -157,6 +158,9 @@ WHERE rank <= 5
     # vectors, filled the disk)
     oracle_scale_bound=("embeddings", 100_000),
 )
+
+
+@query("qv01_knn_bruteforce", **_KNN_TOP5_ORACLE)
 def qv01(spark, sf_dir):
     """Exact brute-force cosine top-5 for a 5% query sample — the ANN
     ground-truth baseline. Query side broadcast; scoring fully
@@ -421,20 +425,16 @@ def qv06(spark, sf_dir):
     )
 
 
-@query("qv07_knn_vectorized")  # numpy FP fold order → rows-only oracle
+@query("qv07_knn_vectorized", **_KNN_TOP5_ORACLE)
 def qv07(spark, sf_dir):
-    """Exact brute-force top-5 via the Arrow/numpy GEMM path
-    (mapInPandas, partition-local top-k, window merge) — same answer
-    as qv01 up to FP fold order (recall vs qv01 asserted ≥99% in
-    tests); the formulation that wins when dims × queries make
-    per-element JVM expressions the bottleneck."""
-    from ml_data_wrangler_spark.operators.similarity import (
-        brute_force_topk_vectorized,
-    )
-
+    """Exact brute-force top-5 over qv01's query sample through the
+    fold kernel (brute_force_topk_fold) — the registry slot of the
+    deleted Arrow top-k kernel, which summed in a different float
+    order and could only be checked rows-only. It now runs the one
+    exact cosine kernel and shares qv01's oracle hash."""
     emb = t(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") % 20 == 0)
-    return brute_force_topk_vectorized(emb, queries_df, k=5).select(
+    return brute_force_topk_fold(emb, queries_df, k=5).select(
         "query_id", "neighbor_id", "sim", "rank"
     )
 
@@ -656,46 +656,34 @@ def qv10(spark, sf_dir):
     "qv11_gemm_agreement",
     oracle="""
 SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-       TRUE AS recall_ge_099
+       TRUE AS topk_identical
 FROM embeddings WHERE vec_id % 20 = 0
 """,
 )
 def qv11(spark, sf_dir):
-    """The Arrow/numpy GEMM KNN path, gate-pinned: run BOTH exact
-    formulations (qv01's per-element JVM fold and qv07's mapInPandas
-    GEMM) over the same query sample inside one job, measure top-5
-    neighbor agreement per query, and emit the qe07-style bounded
-    boolean — mean recall ≥ 0.99 — that the oracle pins TRUE (the two
-    paths differ only in float fold order on near-ties). This promotes
-    the unit-test assertion into the driver's correctness gate, so a
-    regression in the Pandas-UDF plumbing (batch shape, partition-
-    local top-k, merge window) fails the gate, not just CI."""
-    from ml_data_wrangler_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_vectorized,
-    )
-
+    """The fold-GEMM top-k kernel, gate-pinned against the relational
+    kernel: run brute_force_topk (per-element JVM fold) and
+    brute_force_topk_fold (Arrow/numpy fold GEMM) over the same query
+    sample inside one job and emit whether they return IDENTICAL
+    (query_id, neighbor_id, sim, rank) rows — the oracle pins TRUE.
+    Both kernels fold in the same order and round the same way, so
+    any difference is a bug; a regression in the Pandas-UDF plumbing
+    (batch shape, chunk-local top-k, merge window) fails the oracle
+    gate, not just CI."""
     emb = t(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") % 20 == 0)
-    exact = brute_force_topk(emb, queries_df, k=5).select(
-        "query_id", F.col("neighbor_id").alias("n_exact")
-    )
-    gemm = brute_force_topk_vectorized(emb, queries_df, k=5).select(
-        "query_id", F.col("neighbor_id").alias("n_gemm")
-    )
-    per_query = (
-        exact.join(
-            gemm,
-            (exact["query_id"] == gemm["query_id"])
-            & (exact["n_exact"] == gemm["n_gemm"]),
-            "left",
-        )
-        .groupBy(exact["query_id"].alias("qid"))
-        .agg((F.count(gemm["n_gemm"]) / F.lit(5.0)).alias("recall"))
-    )
-    return per_query.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= 0.99).alias("recall_ge_099"),
+    cols = ["query_id", "neighbor_id", "sim", "rank"]
+    exact = brute_force_topk(emb, queries_df, k=5).select(*cols).alias("e")
+    fold = brute_force_topk_fold(emb, queries_df, k=5).select(*cols).alias("f")
+    # rank is unique per query on both sides, so a full outer join on
+    # (query_id, rank) pairs the rows one-to-one; a row missing on
+    # either side leaves NULLs that the null-safe equality rejects
+    same = F.col("e.neighbor_id").eqNullSafe(F.col("f.neighbor_id")) & F.col(
+        "e.sim"
+    ).eqNullSafe(F.col("f.sim"))
+    return exact.join(fold, ["query_id", "rank"], "full").agg(
+        F.count_distinct("query_id").alias("n_queries"),
+        F.coalesce(F.min(same), F.lit(True)).alias("topk_identical"),
     )
 
 

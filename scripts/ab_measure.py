@@ -1,5 +1,5 @@
-"""Interleaved A/B timing for the round-13 recompute-vs-materialize
-and repartition questions (r12 verdict items 3 and 6).
+"""Interleaved A/B timing for the round-13 repartition and BM25
+scoring-kernel questions (r12 verdict item 6).
 
 The box is bimodal (probe_regime.py), so A and B run INTERLEAVED
 (A,B,A,B,...) — regime drift hits both arms — with probe brackets
@@ -7,7 +7,6 @@ before/after and a per-pair probe so each pair can be regime-tagged.
 Row-level equality of A and B is asserted once up front.
 
 Usage:
-    PYTHONPATH=/root/repo python scripts/ab_measure.py qt20 [reps]
     PYTHONPATH=/root/repo python scripts/ab_measure.py qt01 [reps]
 """
 
@@ -38,16 +37,7 @@ def main() -> None:
     # warm-up identical to bench.py
     queries["q01_pricing_summary"](spark, sf_dir).count()
 
-    if exp == "qt20":
-        from ml_data_wrangler_spark.plans.text_queries import _qt20_impl
-
-        def build_a():  # current production form: no per-step ckpt
-            return _qt20_impl(spark, sf_dir, checkpoint_per_step=False)
-
-        def build_b():  # re-materialized per step
-            return _qt20_impl(spark, sf_dir, checkpoint_per_step=True)
-
-    elif exp == "qt01":
+    if exp == "qt01":
 
         def build_a():  # current production form: ensure_parallelism
             return queries["qt01_top_tokens"](spark, sf_dir)

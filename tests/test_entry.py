@@ -23,15 +23,14 @@ def test_contract_consistency():
     # qe07/qe08 graduated to oracle-checked in round 2; qd03/qd04/qv06
     # graduated in round 4 (oracle-pinned bounded-error forms). What
     # remains: model-output streams (LDA/coherence — inherently
-    # non-SQL) and raw approximate/FP-fold pair streams whose
-    # MECHANISMS are gate-checked by oracle duals (qv05→qv12,
-    # qv07→qv11, qv08/qd08→qv06/qd04 respectively).
+    # non-SQL) and raw approximate pair streams whose MECHANISMS are
+    # gate-checked by oracle duals (qv05→qv12, qv08/qd08→qv06/qd04
+    # respectively).
     assert rows_only == {
         "qd08_simhash_pairs",
         "qm03_lda_topics",
         "qm04_lda_coherence_sweep",
         "qm07_cv_coherence_sweep",
         "qv05_ivf_ann",
-        "qv07_knn_vectorized",
         "qv08_tiered_cosine_pairs",
     }

@@ -85,7 +85,9 @@ def test_registry_has_no_undeclared_duplicate_queries():
     ALLOWED_GROUPS = [
         # count-based vs PPJoin prefix-filter candidate generation
         {"qd02_ngram_jaccard_pairs", "qd06_prefix_jaccard_pairs"},
-        # JVM fold vs Arrow GEMM physical strategy (qv11 pins agreement)
+        # one query, two names: qv07 keeps the registry slot of the
+        # deleted Arrow top-k kernel and now runs qv01's fold kernel
+        # against qv01's oracle — nothing else separates them
         {"qv01_knn_bruteforce", "qv07_knn_vectorized"},
         # batch aggregate vs its Structured Streaming duals (tumbling
         # window job / late-data watermark job) — the streaming runs
@@ -174,125 +176,102 @@ def test_bench_tiers_resolve_in_registry():
 
 
 def test_gate_lists_have_no_stale_names():
-    """__spark_entry__'s _GATED_ROUNDS short names drive the
-    driver-gate ordering; a stale or misspelled entry silently
-    re-gates green queries (wasting ~1 of the ~50 snapshot slots per
-    bad name) or buries a fresh one. Every listed short name must
-    match exactly one registry query, and no name may appear in two
-    rounds (the rotation rank would be ambiguous)."""
+    """__spark_entry__._RESET's short names steer the gate rotation; a
+    stale or misspelled entry silently fails to re-front a changed
+    query. Every reset name must match exactly one registry query
+    (short names are unique keys) and name a committed or upcoming
+    round."""
     import __spark_entry__ as e
 
     from ml_data_wrangler_spark.plans import registry
 
-    shorts = {e._short(n): n for n in registry.queries()}
-    assert len(shorts) == len(registry.queries())  # short names unique
-    # qc11 was removed as a near-duplicate during round 4 but stays in
-    # _GATED_PASS harmlessly (documented inline); no other exceptions.
-    known_removed = {"qc11"}
-    stale = sorted(e._GATED_PASS - set(shorts) - known_removed)
-    assert not stale, f"gate-list names with no registry query: {stale}"
-    all_round_names = [n for rnd in e._GATED_ROUNDS for n in rnd]
-    assert len(all_round_names) == len(set(all_round_names)), (
-        "a short name appears in more than one _GATED_ROUNDS entry"
-    )
-    # the gate ordering must be a permutation of the registry
-    ordered = list(e.queries())
-    assert sorted(ordered) == sorted(registry.queries())
-    # steady-state rotation: with full coverage, the stalest-verified
-    # names (rank 0 — the r03 block since the r07 fold) must front the
-    # next snapshot
-    rank = {s: i for i, rnd in enumerate(e._GATED_ROUNDS) for s in rnd}
-    head_ranks = [rank[e._short(n)] for n in ordered[:30]]
-    assert head_ranks == sorted(head_ranks) and head_ranks[0] == 0
-
-
-def test_gate_rotation_advances():
-    """The steady-state re-verification rotation must actually rotate
-    (round-7 verdict item 1): _gate_order ranks by the static
-    _GATED_ROUNDS index, so if a round's re-verified names are not
-    MOVED to the newest rank, the next snapshot re-checks the same ~50
-    queries forever and the other blocks go stale. Tripwire: the
-    newest CORRECTNESS_r*.json's green names must hold exactly the
-    newest rotation rank (red test = fold pending, same discipline as
-    test_gate_fold_is_complete)."""
-    import glob
-    import json
-    import os
-    import re
-
-    import __spark_entry__ as e
-
-    root = os.path.dirname(os.path.abspath(e.__file__))
-    gate_files = glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-    newest = max(
-        gate_files,
-        key=lambda p: int(re.search(r"_r(\d+)", os.path.basename(p)).group(1)),
-    )
-    with open(newest) as fh:
-        results = json.load(fh)
-    # Green = re-verified for rotation purposes (round-8 verdict items
-    # 1+ADVICE): an oracle-bearing query must hash-match (rows_match
-    # alone would let a value-mismatched query advance the rotation),
-    # while a rows-only query (err == 'no_oracle' — the model-based /
-    # non-SQL ops: LDA topics + coherence sweeps, IVF, tiered GEMM,
-    # raw SimHash) counts as green when it ran and produced rows,
-    # since rows-only IS the driver's recorded pass for those. Policy
-    # mirrored in __spark_entry__._GATED_ROUNDS' r08 comment.
-    green = {
-        e._short(n)
-        for n, res in results.items()
-        if (
-            res.get("err") is None
-            and res.get("rows_match")
-            and res.get("schema_match")
-            and res.get("hash_match")
-        )
-        or (res.get("err") == "no_oracle" and (res.get("spark_rows") or 0) > 0)
-    }
-    assert green == set(e._GATED_ROUNDS[-1]), (
-        f"rotation stalled: {os.path.basename(newest)}'s green names must "
-        "be the newest _GATED_ROUNDS entry — move the re-verified names "
-        "to the end of the list in __spark_entry__.py"
-    )
+    shorts = [e._short(n) for n in registry.queries()]
+    assert len(set(shorts)) == len(shorts)  # short names are unique keys
+    stale = sorted(set(e._RESET) - set(shorts))
+    assert not stale, f"reset names with no registry query: {stale}"
+    assert all(
+        isinstance(r, int) and r > 0 for r in e._RESET.values()
+    ), "reset rounds must be positive round numbers"
 
 
 def test_gate_fold_is_complete():
-    """Every green name in every CORRECTNESS_r*.json at the repo root
-    must be folded into _GATED_PASS. Three rounds of manual start-of-
-    round folding is two too many (round-5 verdict item 2): a missed
-    fold wastes ~50 driver gate slots re-verifying green queries
-    instead of gating fresh ones. Green uses the SAME predicate as the
-    rotation test (round-9 verdict item 3 — rows_match alone would
-    silently fold a value-mismatched query into _GATED_PASS and never
-    re-front it): oracle-bearing queries need hash+schema+rows,
-    rows-only (err == 'no_oracle') queries count when they produced
-    rows, since rows-only IS the driver's recorded pass for those."""
-    import glob
-    import json
-    import os
-
+    """Every green result in every committed CORRECTNESS_r*.json is
+    folded into the rotation without hand edits: the names that front
+    queries() are exactly the never-green and still-reset ones, and
+    the rest follow in ascending order of their newest counted green
+    round (same green predicate as the gate: hash+schema+rows for an
+    oracle-bearing query, produced rows for a rows-only one)."""
     import __spark_entry__ as e
 
-    root = os.path.dirname(os.path.abspath(e.__file__))
-    gate_files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    assert gate_files, "driver correctness files must exist at repo root"
-    unfolded = set()
-    for path in gate_files:
-        with open(path) as fh:
-            results = json.load(fh)
+    from ml_data_wrangler_spark.plans import registry
+
+    snaps = e._snapshots()
+    assert snaps, "committed correctness snapshots must exist"
+    rank: dict[str, int] = {}
+    for rnd, results in snaps.items():
         for name, res in results.items():
-            green = (
-                res.get("err") is None
-                and res.get("rows_match")
-                and res.get("schema_match")
-                and res.get("hash_match")
-            ) or (
-                res.get("err") == "no_oracle"
-                and (res.get("spark_rows") or 0) > 0
-            )
-            if green and e._short(name) not in e._GATED_PASS:
-                unfolded.add((os.path.basename(path), e._short(name)))
-    assert not unfolded, f"green driver-gated queries missing from _GATED_PASS: {sorted(unfolded)}"
+            short = e._short(name)
+            if e._green(res) and rnd >= e._RESET.get(short, 0):
+                rank[short] = max(rank.get(short, 0), rnd)
+    ordered = [e._short(n) for n in e.queries()]
+    front = {s for s in map(e._short, registry.queries()) if s not in rank}
+    assert set(ordered[: len(front)]) == front, (
+        "green names left in the front block, or unverified names buried"
+    )
+    ranks = [rank.get(s, 0) for s in ordered]
+    assert ranks == sorted(ranks), "rotation is not ordered by green round"
+
+
+def test_gate_rotation_is_derived_from_snapshots():
+    """queries() order is a re-verification rotation derived from the
+    committed CORRECTNESS_r*.json snapshots: the newest snapshot's
+    green names hold the newest rank, a value mismatch is not green,
+    a reset name fronts until a snapshot of its reset round greens it,
+    and the order is a permutation of the registry."""
+    import __spark_entry__ as e
+
+    from ml_data_wrangler_spark.plans import registry
+
+    reg = list(registry.queries())
+    ordered = list(e.queries())
+    assert sorted(ordered) == sorted(reg)
+    assert list(e.oracle_sql()) == [
+        n for n in ordered if n in registry.oracle_sql()
+    ]
+
+    # committed snapshots: the newest round's green names (less those
+    # its round still resets) are exactly the tail of the order
+    snaps = e._snapshots()
+    newest = max(snaps)
+    green = {
+        e._short(n)
+        for n, res in snaps[newest].items()
+        if e._green(res) and e._RESET.get(e._short(n), 0) <= newest
+    }
+    assert green and {e._short(n) for n in ordered[-len(green):]} == green
+
+    # synthetic snapshots
+    ok = {"err": None, "rows_match": True, "schema_match": True,
+          "hash_match": True, "spark_rows": 5}
+    bad_hash = dict(ok, hash_match=False)
+    rows_only = {"err": "no_oracle", "spark_rows": 3}
+    names = ["qa01_x", "qa02_y", "qa03_z", "qb01_w", "qb02_v"]
+    snaps = {
+        1: {"qa01_x": ok, "qa02_y": ok, "qb01_w": ok, "qa03_z": rows_only},
+        2: {"qa02_y": bad_hash, "qa03_z": ok, "qa01_x": ok},
+    }
+    # qb02 never green, qa01 reset to round 3: both front (registry
+    # order); qa02's round-2 mismatch leaves it at round 1
+    assert e._gate_order(names, snaps, {"qa01": 3}) == [
+        "qa01_x", "qb02_v", "qa02_y", "qb01_w", "qa03_z"
+    ]
+    assert e._gate_order(names, snaps, {}) == [
+        "qb02_v", "qa02_y", "qb01_w", "qa01_x", "qa03_z"
+    ]
+    snaps[3] = {"qa01_x": ok, "qb02_v": dict(rows_only, spark_rows=0)}
+    assert e._gate_order(names, snaps, {"qa01": 3}) == [
+        "qb02_v", "qa02_y", "qb01_w", "qa03_z", "qa01_x"
+    ]
 
 
 def test_sig_rounding_absorbs_ulp_but_keeps_exact_default():
