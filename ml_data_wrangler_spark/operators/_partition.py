@@ -33,7 +33,7 @@ def ensure_parallelism(
     repartition's shuffle can exceed the serial work it parallelizes
     when the under-split input is also SMALL — measured at sf0.1:
     qt01 with the repartition 0.755 s median vs 0.478 s without
-    (interleaved A/B, scripts/ab_measure.py), i.e. the whole serial
+    (interleaved A/B, OPTIMIZATION_r13.md), i.e. the whole serial
     tokenize is ~0.3 s. Passing ``min_bytes`` skips the repartition
     when the planner's size estimate for ``df`` is below it, so the
     trap-#1 fix still fires for a big unsplittable input (one gzip'd

@@ -1,9 +1,12 @@
 """Similarity search over embedding columns (north-star extension).
 
-Three tiers:
-  * brute-force cosine top-k — the exact baseline; query side broadcast,
-    score+rank distributed over the corpus partitions. Exact answer,
-    cost O(|queries| × |corpus|) — fine when the query set is small.
+Three search methods:
+  * brute-force cosine top-k — the exact baseline, cost
+    O(|queries| × |corpus|). The fold kernel (brute_force_topk_fold)
+    has two dispatch tiers: up to max_broadcast_cells the whole query
+    side is broadcast and scored against the corpus partitions; above
+    it a (query-slice × corpus-chunk) grid cogroup shuffles both
+    sides instead. Both tiers score with the same tile kernel.
   * IVF (inverted-file) ANN — KMeans-partition the corpus, search only
     the nprobe closest centroids per query. The 100 TB path: corpus is
     hash-partitioned by cluster id, each query probes a few partitions.
@@ -755,7 +758,6 @@ def brute_force_topk_fold(
     vec_col: str = "embedding",
     row_chunk: int = 4096,
     max_broadcast_cells: int = 32_000_000,
-    max_executor_cells: int = 512_000_000,
 ) -> DataFrame:
     """Exact cosine top-k, ORACLE-GRADE: chunk-local fold-GEMM
     scoring with values bit-identical to ``brute_force_topk``'s
@@ -781,36 +783,21 @@ def brute_force_topk_fold(
     argsort on the rounded sims inherits the id tie-break; any global
     top-k row is within its chunk's top-k by the same order.
 
-    Auto-dispatch by query-side size (round 10, closing the r09
-    verdict's item 3): up to ``max_broadcast_cells`` float64 cells
+    Two dispatch tiers by query-side size, both running the same
+    ``_tile_topk``: up to ``max_broadcast_cells`` float64 cells
     (default 256 MB) the query side is collected and broadcast whole
     (it is the ANN ground-truth SAMPLE — 5% at every tier). Above the
-    cap the query side is hash-sliced on xxhash64(id) into
-    broadcastable slices and each slice runs the SAME fold kernel as
-    its own union branch — slices partition query ids disjointly, so
-    every query's rows come from exactly one branch and the single
-    global rank window is exact under the unchanged total order. The
-    corpus is re-scanned once per slice (by construction the query
-    side no longer fits one executor's memory; at cluster scale the
-    branches schedule concurrently within the one job).
-
-    Above ``max_executor_cells`` (round 11) even the sliced path is
-    wrong — its per-slice broadcasts total Q×D cells resident on
-    every executor, and the slices collect sequentially through the
-    driver. The third tier shuffles instead of broadcasting: a
-    (query-slice × corpus-chunk) grid cogroup ships O(Q·Nc + C·Nq)
-    rows through one exchange with nothing pinned in executor
-    storage, runs the same tile kernel per cell, and feeds the same
-    global rank window — exact by the same chunk-local-top-k
-    argument, bit-identical values because all three tiers share
-    ``_tile_topk``.
+    cap a (query-slice × corpus-chunk) grid cogroup (round 11) shuffles
+    O(Q·Nc + C·Nq) rows through one exchange with nothing pinned in
+    executor storage and nothing collected through the driver, and
+    feeds the same global rank window — exact by the same
+    chunk-local-top-k argument, bit-identical values because both
+    tiers share the kernel.
 
     Input contract (fails LOUDLY, r09 ADVICE): embeddings must be
     non-null, rectangular, and finite with nonzero norm on BOTH
     sides — a zero-norm or NaN vector raises instead of silently
     diverging from the relational kernel's NaN-ranks-first ordering.
-    Per-slice query broadcasts live for the session (bounded by Q×D
-    cells total).
     """
     import pandas as pd
 
@@ -841,10 +828,11 @@ def brute_force_topk_fold(
         return m, n
 
     def _query_side(q_pdf: pd.DataFrame):
-        """(ids, matrix, norms) of one in-memory query slice."""
+        """(ids, matrix, norms) of the in-memory query side or one
+        grid slice of it."""
         qm, qn = _stack_checked(q_pdf["v"].to_numpy(), "query")  # (Q, D)
         if qm.size > 4 * max_broadcast_cells:
-            # quarter-budget slicing leaves 16× headroom before this
+            # quarter-budget grid slices leave 16× headroom before this
             # trips — only pathological qid-hash skew reaches it, and
             # it must fail loudly, not materialize an oversized slice
             raise ValueError(
@@ -865,9 +853,9 @@ def brute_force_topk_fold(
     def _tile_topk(nids_all, vs_all, ids_b, qm_b, qn_b):
         """Score one corpus-row block against one in-memory query
         matrix, yielding chunk-local top-k rows under the FINAL total
-        order — the single scoring kernel every dispatch path
-        (broadcast, sliced, grid cogroup) runs, so values can never
-        diverge between physical strategies."""
+        order — the single scoring kernel both dispatch tiers
+        (broadcast, grid cogroup) run, so values can never diverge
+        between physical strategies."""
         chunk = _tile_rows(row_chunk, len(ids_b))
         for lo in range(0, len(nids_all), chunk):
             hi = min(lo + chunk, len(nids_all))
@@ -904,24 +892,6 @@ def brute_force_topk_fold(
                 }
             )
 
-    def scored_branch(q_pdf: pd.DataFrame) -> DataFrame:
-        bq = sc.broadcast(_query_side(q_pdf))
-
-        def score(batches):
-            ids_b, qm_b, qn_b = bq.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                yield from _tile_topk(
-                    pdf["nid"].to_numpy().astype("int64"),
-                    pdf["v"].to_numpy(),
-                    ids_b,
-                    qm_b,
-                    qn_b,
-                )
-
-        return prepped.mapInPandas(score, schema=out_schema)
-
     from ml_data_wrangler_spark.operators._partition import ensure_parallelism
 
     prepped = ensure_parallelism(
@@ -939,23 +909,40 @@ def brute_force_topk_fold(
     if n_q_total == 0:
         return local_frame(spark, [], out_schema + ", rank long")
     if n_q_total * dim <= max_broadcast_cells:
-        scored = scored_branch(qsel.toPandas())
-    elif n_q_total * dim > max_executor_cells:
-        # GRID COGROUP (round 11, closing the r10 verdict's "missing"
-        # item 5): above max_executor_cells the sliced path's total
-        # broadcast footprint (Q×D cells resident on every executor)
-        # no longer fits executor storage, and collecting slices
-        # sequentially through the driver is itself the bottleneck.
-        # Shuffle instead of broadcasting: queries hash into Nq slices
-        # (each ≤ the quarter-budget a slice broadcast would have
-        # used), the corpus into Nc chunks sized to the scan's own
-        # parallelism, both sides replicate to the (slice, chunk) grid
-        # cells that need them — O(Q·Nc + C·Nq) shuffled rows, nothing
-        # resident — and each cell cogroup runs the SAME _tile_topk
-        # kernel, so chunk-local top-k rows feed the unchanged global
-        # rank window and the result is bit-identical to the broadcast
-        # path (pinned by tests/test_fold_knn_grid.py).
-        qsel = qsel.localCheckpoint()  # same determinism pin as below
+        bq = sc.broadcast(_query_side(qsel.toPandas()))
+
+        def score(batches):
+            ids_b, qm_b, qn_b = bq.value
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                yield from _tile_topk(
+                    pdf["nid"].to_numpy().astype("int64"),
+                    pdf["v"].to_numpy(),
+                    ids_b,
+                    qm_b,
+                    qn_b,
+                )
+
+        scored = prepped.mapInPandas(score, schema=out_schema)
+    else:
+        # GRID COGROUP (round 11): shuffle instead of broadcasting.
+        # Queries hash into Nq slices of at most a quarter of the
+        # broadcast budget (absorbing hash imbalance), the corpus into
+        # Nc chunks sized to the scan's own parallelism, and both
+        # sides replicate to the (slice, chunk) grid cells that need
+        # them — O(Q·Nc + C·Nq) shuffled rows, nothing resident. Each
+        # cell cogroup runs the SAME _tile_topk kernel, so chunk-local
+        # top-k rows feed the unchanged global rank window and the
+        # result is bit-identical to the broadcast tier (pinned by
+        # tests/test_dispatch_branches.py).
+        # Pin the query relation first: the probe above already read
+        # it, and a retried map task of the replication would read it
+        # again — a non-deterministic source (e.g. a rand() sample)
+        # could then hand different query sets to different grid
+        # cells, and a query would miss some corpus chunks or meet
+        # one twice.
+        qsel = qsel.localCheckpoint()
         budget = max(max_broadcast_cells // 4, dim)
         n_slices = min(max(-(-(n_q_total * dim) // budget), 2), n_q_total)
         n_chunks = max(prepped.rdd.getNumPartitions(), 1)
@@ -1015,28 +1002,6 @@ def brute_force_topk_fold(
             .cogroup(q_rep.groupBy("cell"))
             .applyInPandas(cell_topk, schema=out_schema)
         )
-    else:
-        # quarter-budget slices absorb hash imbalance (floored at one
-        # row per slice for very wide vectors); ids are disjoint
-        # across slices so the union needs no cross-branch merge.
-        # Pin the query relation first: each slice re-scans it, and a
-        # non-deterministic source (e.g. a rand() sample) would break
-        # the disjoint/complete slice invariant across those scans.
-        qsel = qsel.localCheckpoint()
-        budget = max(max_broadcast_cells // 4, dim)
-        n_slices = min(
-            max(-(-(n_q_total * dim) // budget), 2), n_q_total
-        )
-        branches = []
-        for s in range(n_slices):
-            pdf = qsel.where(
-                F.pmod(F.xxhash64("qid"), F.lit(n_slices)) == s
-            ).toPandas()
-            if not pdf.empty:
-                branches.append(scored_branch(pdf))
-        scored = branches[0]
-        for b in branches[1:]:
-            scored = scored.unionByName(b)
     w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))

@@ -19,30 +19,29 @@ from ml_data_wrangler_spark.functions.driver_exact import (
 )
 from ml_data_wrangler_spark.plans._util import money, t
 from ml_data_wrangler_spark.plans.registry import query
-from ml_data_wrangler_spark.session import local_frame
+from ml_data_wrangler_spark.session import bounded_collect, local_frame
 
 # qe33 driver-loop dispatch bounds (round 12): the PageRank loop runs
 # on the driver when the transition graph is model-sized — probed with
-# limit(cap+1) so the probe itself transfers a bounded row count for
-# ANY keyspace (the qm09 dispatch discipline). Above either cap the
-# pre-round-12 distributed loop runs unchanged.
+# session.bounded_collect, so the probe itself transfers at most cap+1
+# rows for ANY keyspace. Above either cap the pre-round-12 distributed
+# loop runs unchanged.
 QE33_DRIVER_NODE_CAP = 4096
 QE33_DRIVER_EDGE_CAP = 65536
 
 
-def _qe33_driver_loop(spark, node_rows, p_rows):
+def _qe33_driver_loop(spark, nodes, edges):
     """Driver-side replica of qe33's 3-round damped PageRank over the
-    model-sized transition matrix — bit-exact vs the DataFrame loop:
-    pico-quantized terms are summed as Python ints (order-free), the
-    damping expression keeps the Column expression's operation order,
-    and Spark's ROUND is replicated in the decimal domain
-    (functions/driver_exact.py)."""
+    model-sized transition matrix (``nodes`` a list of node names,
+    ``edges`` a list of (src, dst, pij) tuples) — bit-exact vs the
+    DataFrame loop: pico-quantized terms are summed as Python ints
+    (order-free), the damping expression keeps the Column expression's
+    operation order, and Spark's ROUND is replicated in the decimal
+    domain (functions/driver_exact.py)."""
     out_schema = "event_type string, pagerank double"
-    nodes = [r["node"] for r in node_rows]
     n = len(nodes)
     if n == 0:
         return local_frame(spark, [], out_schema)
-    edges = [(r["src"], r["dst"], r["pij"]) for r in p_rows]
     srcs = {src for src, _, _ in edges}
     rank = {nd: round_half_up(1.0 / n, 9) + 0.0 for nd in nodes}
     for _ in range(3):
@@ -150,13 +149,13 @@ def qe33(spark, sf_dir):
     the collected transition matrix (round 12, guide §5): the old
     DataFrame loop paid ~12 broadcast-build + localCheckpoint jobs
     per query for arithmetic on ≤|types|² rows, a pure barrier tax at
-    every scale. The dispatch is probe-bounded (limit(cap+1), the
-    qm09 discipline — the probe transfers ≤ cap+1 rows for ANY
-    keyspace); above the caps the pre-round-12 distributed loop runs
-    unchanged, which is also the path a billion-node user-user graph
-    would take (shuffling on dst instead of broadcasting). Both
-    paths quantize sums to exact integers, so they are bit-equal by
-    construction (pinned by tests/test_qe33_driver_loop.py)."""
+    every scale. The dispatch is probe-bounded (session.bounded_collect
+    — the probe transfers ≤ cap+1 rows for ANY keyspace); above the
+    caps the pre-round-12 distributed loop runs unchanged, which is
+    also the path a billion-node user-user graph would take (shuffling
+    on dst instead of broadcasting). Both paths quantize sums to exact
+    integers, so they are bit-equal by construction (pinned by
+    tests/test_dispatch_branches.py)."""
     ev = t(spark, sf_dir, "events")
     nodes_df = ev.select(F.col("event_type").alias("node")).distinct()
     seq = ev.select(
@@ -179,14 +178,18 @@ def qe33(spark, sf_dir):
             + F.lit(0.0)
         ).alias("pij"),
     )
-    node_rows = nodes_df.limit(QE33_DRIVER_NODE_CAP + 1).collect()
-    p_rows = None
-    if len(node_rows) <= QE33_DRIVER_NODE_CAP:
-        p_rows = p_df.limit(QE33_DRIVER_EDGE_CAP + 1).collect()
-        if len(p_rows) > QE33_DRIVER_EDGE_CAP:
-            p_rows = None
-    if p_rows is not None:
-        return _qe33_driver_loop(spark, node_rows, p_rows)
+    node_pdf = bounded_collect(nodes_df, QE33_DRIVER_NODE_CAP)
+    p_pdf = None
+    if node_pdf is not None:
+        p_pdf = bounded_collect(p_df, QE33_DRIVER_EDGE_CAP)
+    if p_pdf is not None:
+        # Python scalars, not numpy ones: driver_exact rounds through
+        # Decimal(repr(x))
+        return _qe33_driver_loop(
+            spark,
+            node_pdf["node"].tolist(),
+            list(zip(*(p_pdf[c].tolist() for c in ("src", "dst", "pij")))),
+        )
     # distributed fallback: the pre-round-12 loop, unchanged
     nodes = nodes_df.localCheckpoint()
     nn = nodes.agg(F.count("*").alias("n"))

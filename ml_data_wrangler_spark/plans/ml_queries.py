@@ -18,7 +18,7 @@ from ml_data_wrangler_spark.operators.vectorize import (
 from ml_data_wrangler_spark.plans._util import t
 from ml_data_wrangler_spark.plans.registry import query
 from ml_data_wrangler_spark.plans.text_queries import SQL_TOKS
-from ml_data_wrangler_spark.session import local_frame
+from ml_data_wrangler_spark.session import bounded_collect, local_frame
 
 _SQL_VOCAB = f"""
 WITH dt AS (
@@ -533,8 +533,8 @@ def qm09(spark, sf_dir):
     scale. The fixture resolves to the single-broadcast GEMM at every
     SF, so the sf0.01 driver gate hash-verifies exactly the code that
     runs at the scale tier, and the blocked rounds are pinned
-    value-identical by test (tests/test_qm09_dense.py). qm12 (max-df
-    capped) and qm16 (stopword-pruned) remain the registry's
+    value-identical by test (tests/test_dispatch_branches.py). qm12
+    (max-df capped) and qm16 (stopword-pruned) remain the registry's
     candidate-tier variants for corpora where approximate pair
     generation is the right trade.
 
@@ -597,26 +597,17 @@ def qm09(spark, sf_dir):
     # item 1): on a 100 TB corpus the df≥2 vocab is 10^8-10^9 tokens,
     # so collecting it just to COUNT it would OOM the driver before
     # the sparse fallback — the correct plan for that regime — ever
-    # engages. LIMIT cap+1 bounds the transfer to ≤ cap+1 rows for
-    # ANY vocab size (order is irrelevant to the ≤cap decision); the
-    # ordered full collect happens only inside the ≤cap branch, where
-    # it is ≤ cap rows by the probe's own verdict.
-    import ml_data_wrangler_spark.plans.ml_queries as _self
-
-    probe = (
-        dfc.where(F.col("df") >= 2)
-        .select("token")
-        .limit(_self.QM09_DENSE_VOCAB_CAP + 1)
-        .collect()
+    # engages. session.bounded_collect pulls ≤ cap+1 rows for ANY
+    # vocab size; within the cap the probe IS the whole vocabulary,
+    # sorted here on the driver (UTF-8 order, nulls first, as
+    # orderBy("token") sorts), so it is pulled only once.
+    probe = bounded_collect(
+        dfc.where(F.col("df") >= 2).select("token"), QM09_DENSE_VOCAB_CAP
     )
-    if 0 < len(probe) <= _self.QM09_DENSE_VOCAB_CAP:
-        vocab = [
-            r["token"]
-            for r in dfc.where(F.col("df") >= 2)
-            .select("token")
-            .orderBy("token")
-            .collect()
-        ]
+    if probe is not None and len(probe) > 0:
+        vocab = sorted(
+            probe["token"].tolist(), key=lambda tkn: (tkn is not None, tkn)
+        )
         idx_df = F.broadcast(
             local_frame(
                 spark,
@@ -647,7 +638,7 @@ def qm09(spark, sf_dir):
             entries,
             dim=len(vocab),
             k=20,
-            max_broadcast_cells=_self.QM09_DENSE_CELL_CAP,
+            max_broadcast_cells=QM09_DENSE_CELL_CAP,
         )
     # sparse/Zipfian regime: inverted-index pair join. Norm attached
     # to every posting row via a doc-keyed window, so the pair

@@ -35,7 +35,7 @@ from ml_data_wrangler_spark.functions.textstats import (
 from ml_data_wrangler_spark.operators._partition import ensure_parallelism
 from ml_data_wrangler_spark.plans._util import t
 from ml_data_wrangler_spark.plans.registry import query
-from ml_data_wrangler_spark.session import local_frame
+from ml_data_wrangler_spark.session import bounded_collect, local_frame
 
 # DuckDB fragment mirroring functions.text.tokenize().
 SQL_TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z]+'), x -> x <> '')"
@@ -1118,14 +1118,16 @@ def _qt19_scale_oracle(con):
     return cols, out
 
 
-def bm25_rankings(
-    spark,
-    sf_dir,
-    top: int,
-    max_query_rows: int = 2_000_000,
-    max_query_cells: int = 32_000_000,
-    chunk_cells: int = 4_000_000,
-):
+# bm25_rankings' scoring-kernel bounds (round 13): the Arrow GEMM
+# kernel runs while the query side fits ROW_CAP (query, token) rows
+# and CELL_CAP tokens×queries presence cells; above either the
+# broadcast-join path runs. CHUNK_CELLS bounds each dense score tile.
+BM25_KERNEL_ROW_CAP = 2_000_000
+BM25_KERNEL_CELL_CAP = 32_000_000
+BM25_KERNEL_CHUNK_CELLS = 4_000_000
+
+
+def bm25_rankings(spark, sf_dir, top: int):
     """Spark dual of :func:`bm25_sql_cte` — DataFrame
     (query_id, cand_id, rnk, s) of the BM25 top-``top`` per query doc.
 
@@ -1274,16 +1276,16 @@ def bm25_rankings(
     # top-k under the final order makes the global merge exact (any
     # global top-k row is within its chunk's top-k).
     #
-    # Dispatch (the qm09/fold-kernel discipline): the query term set
-    # is collected via a limit(cap+1)-BOUNDED toPandas — never more
-    # than max_query_rows+1 rows cross the driver for ANY corpus. If
-    # the query side outgrows the broadcast budget (rows, or
-    # tokens×queries presence cells), the old broadcast-join path
-    # below runs unchanged (same values — pinned bit-identical by
-    # tests/test_bm25_kernel_equivalence.py); at that tier a df-pruned
-    # vocabulary equi-join is the right next shape, as before.
-    q_pdf = bq.limit(max_query_rows + 1).toPandas()
-    dense_ok = len(q_pdf) <= max_query_rows
+    # Dispatch: the query term set is collected by
+    # session.bounded_collect — never more than BM25_KERNEL_ROW_CAP+1
+    # rows cross the driver for ANY corpus. If the query side
+    # outgrows the broadcast budget (rows, or tokens×queries presence
+    # cells), the old broadcast-join path below runs unchanged (same
+    # values — pinned bit-identical by tests/test_dispatch_branches.py);
+    # at that tier a df-pruned vocabulary equi-join is the right next
+    # shape, as before.
+    q_pdf = bounded_collect(bq, BM25_KERNEL_ROW_CAP)
+    dense_ok = q_pdf is not None
     if dense_ok and len(q_pdf) > 0:
         import numpy as np
 
@@ -1294,8 +1296,8 @@ def bm25_rankings(
             q_pdf["query_id"].to_numpy().astype("int64"),
             return_inverse=True,
         )
-        dense_ok = len(tok_u) * len(qid_u) <= max_query_cells
-    if len(q_pdf) == 0:
+        dense_ok = len(tok_u) * len(qid_u) <= BM25_KERNEL_CELL_CAP
+    if dense_ok and len(q_pdf) == 0:
         # no query docs: identical to the old join-with-empty result
         scored = local_frame(spark, [], "query_id long, cand_id long, s long")
     elif dense_ok:
@@ -1305,6 +1307,7 @@ def bm25_rankings(
         qp[q_tok_idx, q_qid_idx] = 1.0
         tok2row = {t: i for i, t in enumerate(tok_u.tolist())}
         bqb = spark.sparkContext.broadcast((tok2row, qid_u, qp))
+        chunk_cells = BM25_KERNEL_CHUNK_CELLS
 
         def _score(batches):
             import numpy as np

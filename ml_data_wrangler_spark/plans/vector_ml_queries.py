@@ -31,7 +31,7 @@ from ml_data_wrangler_spark.plans._util import t
 from ml_data_wrangler_spark.plans.registry import query
 from ml_data_wrangler_spark.plans.text_queries import bm25_rankings, bm25_sql_cte
 from ml_data_wrangler_spark.plans.vector_queries import _SQL_COS
-from ml_data_wrangler_spark.session import local_frame
+from ml_data_wrangler_spark.session import bounded_collect, local_frame
 
 
 @query(
@@ -491,6 +491,14 @@ _SQL_PI_MATVEC = """
 """
 
 
+# qv18's driver collects are model-sized by schema (64 dims): the
+# means are 64 rows and the covariance 64×64. bounded_collect stops at
+# cap+1 rows, so a broken invariant raises without first pulling an
+# unbounded result to the driver.
+QV18_MU_CAP = 64
+QV18_COV_CAP = 64 * 64
+
+
 @query(
     "qv18_pca_power_iteration",
     oracle=f"""
@@ -588,16 +596,15 @@ def qv18(spark, sf_dir):
     # partials that cross the one exchange aggregate to bit-identical
     # totals on any partitioning). mu is collected first: 64 rows,
     # model-sized by schema, exactly like the covariance itself.
-    mu_rows = mu.collect()
-    if len(mu_rows) == 0:
+    mu_pdf = bounded_collect(mu, QV18_MU_CAP)
+    if mu_pdf is not None and len(mu_pdf) == 0:
         # empty input: the old plan's inner matvec join over an empty
         # cov produced zero rows
         return local_frame(spark, [], out_schema)
-    if len(mu_rows) != 64:
-        raise ValueError(
-            f"qv18: expected 64 dimension means, got {len(mu_rows)}"
-        )
-    mu_arr = [m["m"] for m in sorted(mu_rows, key=lambda r: r["i"])]
+    if mu_pdf is None or len(mu_pdf) != 64:
+        got = f"more than {QV18_MU_CAP}" if mu_pdf is None else len(mu_pdf)
+        raise ValueError(f"qv18: expected 64 dimension means, got {got}")
+    mu_arr = mu_pdf.sort_values("i")["m"].tolist()
     n = emb.agg(F.count("*").alias("n_vecs")).collect()[0]["n_vecs"]
 
     def _gram(batches):
@@ -637,26 +644,26 @@ def qv18(spark, sf_dir):
                 }
             )
 
-    st_rows = (
+    st_pdf = bounded_collect(
         # trap #1: the 1-split parquet scan would otherwise run the
         # gram kernel as ONE task; the int64 partials are order-free,
         # so the repartition is value-neutral by construction
         ensure_parallelism(emb.select("v"))
         .mapInPandas(_gram, "i int, j int, st long")
         .groupBy("i", "j")
-        .agg(F.sum("st").alias("st"))
-        .collect()
+        .agg(F.sum("st").alias("st")),
+        QV18_COV_CAP,
     )
-    if len(st_rows) > 64 * 64:
+    if st_pdf is None:
         raise ValueError(
-            f"qv18: covariance collect returned {len(st_rows)} rows "
-            "(> dim² = 4096) — model-size invariant broken"
+            f"qv18: covariance collect returned more than {QV18_COV_CAP} "
+            "rows (> dim² = 4096) — model-size invariant broken"
         )
     # cij = round(double(st)/n/1e6, 6) + 0.0, exactly the Column
     # expression the relational form used
     cmat = {
-        (r["i"], r["j"]): round_half_up(float(r["st"]) / n / 1e6, 6) + 0.0
-        for r in st_rows
+        (i, j): round_half_up(float(st) / n / 1e6, 6) + 0.0
+        for i, j, st in zip(*(st_pdf[c].tolist() for c in ("i", "j", "st")))
     }
     if not cmat:
         return local_frame(spark, [], out_schema)

@@ -92,6 +92,20 @@ def get_spark(
     return spark
 
 
+def bounded_collect(df, cap: int):
+    """``df`` as a pandas frame if it has at most ``cap`` rows, else
+    None.
+
+    The one plan-time probe behind every fast-path/scale-path dispatch:
+    it pulls at most ``cap + 1`` rows to the driver whatever ``df``'s
+    size, so the probe can never be the driver OOM its cap guards
+    against. The row order is Spark's; callers that need one sort the
+    frame themselves.
+    """
+    pdf = df.limit(cap + 1).toPandas()
+    return pdf if len(pdf) <= cap else None
+
+
 def local_frame(spark: SparkSession, rows, schema):
     """DataFrame over rows the driver already holds, as a local relation.
 

@@ -1,16 +1,14 @@
-"""Scale-tier exercise of brute_force_topk_fold's grid-cogroup tier
-(round 12, r11 verdict item 4): the grid path is the designated
->executor-storage dispatch — above ``max_executor_cells`` the sliced
-path's per-slice broadcasts (Q×D cells resident on EVERY executor,
-slices collected sequentially through the driver) stop being a scale
-design — but until this runner it had only the sf0.001 fixture pin
-(tests/test_fold_knn_grid.py). Here it runs on a real tier's
-embeddings (e.g. .scale/docs64x: 128k vectors × 64 dims, 6,400
-queries) by lowering the dispatch knobs exactly as the verdict
-prescribes, and must return BIT-IDENTICAL rows to the default-dispatch
-qv01 result on the same tier — the result the r11 driver evidence
-hash-PASSed against the py-oracle (SCALE_SWEEP_r11_64x_qv01_qm09.log),
-so grid == default transitively re-verifies grid against the oracle.
+"""Scale-tier exercise of brute_force_topk_fold's grid-cogroup tier:
+above ``max_broadcast_cells`` the query side no longer broadcasts
+whole, and a (query-slice × corpus-chunk) grid cogroup scores it
+instead. The fixture pin (tests/test_dispatch_branches.py) runs it on
+sf0.001; here it runs on a real tier's embeddings (e.g.
+.scale/docs64x: 128k vectors × 64 dims, 6,400 queries) by lowering
+``max_broadcast_cells`` below the tier's Q·D, and must return
+BIT-IDENTICAL rows to the default-dispatch qv01 result on the same
+tier — the result the 64× driver evidence hash-PASSed against the
+py-oracle (SCALE_SWEEP_r11_64x_qv01_qm09.log), so grid == default
+transitively re-verifies grid against the oracle.
 
 Usage:
     SPARK_GRAFT_CPUS=16 SPARK_DRIVER_MEMORY=24g PYTHONPATH=/root/repo \
@@ -77,20 +75,13 @@ def main() -> int:
     print(f"ok   fold_default ({walls['fold_default']:.1f}s, "
           f"{len(base)} rows, hash {h_base})", flush=True)
 
-    # branch B: grid cogroup, forced by lowering BOTH dispatch knobs so
-    # Q·D exceeds max_executor_cells (the >executor-storage regime this
-    # tier stands in for). Knobs scale off the measured Q·D so the
-    # forcing holds on any tier: broadcast cap Q·D/2 (rules out the
-    # single-broadcast branch), executor budget Q·D/4 (rules out the
-    # sliced branch) → quarter-budget slices of Q·D/8 cells, ~8 slices.
+    # branch B: grid cogroup, forced by a broadcast cap of Q·D/2 (scaled
+    # off the measured Q·D so the forcing holds on any tier) →
+    # quarter-budget slices of Q·D/8 cells, ~8 slices.
     spark.sparkContext.setJobGroup("fold_grid", "fold_grid")
     t0 = time.time()
     grid_df = brute_force_topk_fold(
-        emb,
-        queries,
-        k=5,
-        max_broadcast_cells=max(cells // 2, 4),
-        max_executor_cells=max(cells // 4, 1),
+        emb, queries, k=5, max_broadcast_cells=max(cells // 2, 4)
     ).select(*sel)
     plan = grid_df._jdf.queryExecution().toString()
     if "FlatMapCoGroupsInPandas" not in plan:

@@ -1,18 +1,14 @@
-"""Pin bm25_rankings' round-13 GEMM scoring kernel bit-identical to
-the broadcast-join path it replaced (kept verbatim as the over-budget
-fallback), on real fixture data AND on tie/edge fixtures.
+"""Edge cases of bm25_rankings' GEMM scoring kernel: score ties
+across candidate-chunk boundaries and an empty query side.
 
 The kernel computes S = W_postings @ Q_presence in float64 — exact for
 integer micro-quantized weights under 2^53 — and emits chunk-local
-top-k under the final (s DESC, cand_id ASC) total order. The fallback
-is forced through the max_query_rows / max_query_cells caps, so both
-physical strategies run the same query over the same data and must
-agree row-for-row.
+top-k under the final (s DESC, cand_id ASC) total order. The
+kernel-vs-join comparison on the fixture, forced through the row and
+cell caps, lives in tests/test_dispatch_branches.py.
 """
 
 from __future__ import annotations
-
-import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -21,29 +17,8 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.mark.parametrize("top", [3, 20])
-def test_bm25_kernel_matches_join_path_on_fixture(spark, top):
-    from ml_data_wrangler_spark.plans.text_queries import bm25_rankings
-
-    kernel = _rows(bm25_rankings(spark, SF_DIR, top))
-    joined = _rows(bm25_rankings(spark, SF_DIR, top, max_query_rows=0))
-    assert kernel == joined
-    assert len(kernel) > 0  # the fixture genuinely exercises both
-
-
-def test_bm25_kernel_cell_cap_falls_back(spark):
-    """The tokens×queries presence-cell budget independently forces
-    the fallback (a tall-but-narrow query set can pass the row cap and
-    still blow the dense matrix)."""
-    from ml_data_wrangler_spark.plans.text_queries import bm25_rankings
-
-    kernel = _rows(bm25_rankings(spark, SF_DIR, 3))
-    celled = _rows(bm25_rankings(spark, SF_DIR, 3, max_query_cells=1))
-    assert kernel == celled
-
-
-def test_bm25_kernel_chunking_is_boundary_exact(spark, tmp_path):
-    """Tie-heavy micro-corpus, scored with chunk_cells=1 so every
+def test_bm25_kernel_chunking_is_boundary_exact(spark, tmp_path, monkeypatch):
+    """Tie-heavy micro-corpus, scored with a chunk of one cell so every
     candidate chunk holds ONE candidate — chunk-local top-k must still
     merge to the identical global ranking (score ties broken by
     cand_id ASC across chunk boundaries).
@@ -54,7 +29,7 @@ def test_bm25_kernel_chunking_is_boundary_exact(spark, tmp_path):
     """
     import pandas as pd
 
-    from ml_data_wrangler_spark.plans.text_queries import bm25_rankings
+    from ml_data_wrangler_spark.plans import text_queries as tq
 
     docs = pd.DataFrame(
         {
@@ -74,16 +49,20 @@ def test_bm25_kernel_chunking_is_boundary_exact(spark, tmp_path):
     sf.mkdir()
     spark.createDataFrame(docs).write.parquet(str(sf / "documents.parquet"))
 
-    joined = _rows(bm25_rankings(spark, str(sf), 3, max_query_rows=0))
+    with monkeypatch.context() as m:
+        m.setattr(tq, "BM25_KERNEL_ROW_CAP", 0)
+        joined = _rows(tq.bm25_rankings(spark, str(sf), 3))
+    default = _rows(tq.bm25_rankings(spark, SF_DIR, 3))
     for cc in (1, 4_000_000):  # one-candidate chunks and one big chunk
-        kernel = _rows(bm25_rankings(spark, str(sf), 3, chunk_cells=cc))
+        monkeypatch.setattr(tq, "BM25_KERNEL_CHUNK_CELLS", cc)
+        kernel = _rows(tq.bm25_rankings(spark, str(sf), 3))
         assert kernel == joined
     # sanity: the query doc ranks tied candidates by cand_id ASC
     by_query = [r for r in joined if r[0] == 0]
     assert [r[1] for r in sorted(by_query, key=lambda r: r[2])][:2] == [1, 2]
     # also pin the fixture-scale chunked form
-    full = _rows(bm25_rankings(spark, SF_DIR, 3, chunk_cells=64))
-    assert full == _rows(bm25_rankings(spark, SF_DIR, 3))
+    monkeypatch.setattr(tq, "BM25_KERNEL_CHUNK_CELLS", 64)
+    assert _rows(tq.bm25_rankings(spark, SF_DIR, 3)) == default
 
 
 def test_bm25_kernel_empty_query_side(spark, tmp_path):

@@ -470,25 +470,20 @@ def test_fold_knn_duplicate_ties_break_by_id(spark):
 
 def test_fold_knn_distributed_slices_match_broadcast(spark, sf_dir):
     """Above max_broadcast_cells the kernel must auto-dispatch to the
-    hash-sliced distributed path (round-10 verdict item 3) and return
-    EXACTLY the broadcast path's rows — slices partition query ids
-    disjointly under the unchanged total order. Forcing a tiny cap
-    (queries = 125 ids × 64 dims = 8000 cells > 2000-cell cap → 16
-    slices per the quarter-budget sizing) exercises the real slice
-    machinery on the real corpus."""
+    grid cogroup and return EXACTLY the broadcast path's rows — query
+    slices partition query ids disjointly under the unchanged total
+    order. The 1024-cell cap (queries = 25 ids × 64 dims = 1600 cells
+    → 7 slices per the quarter-budget sizing) gives slices of several
+    queries each, where the dispatch harness's 64-cell cap gives one
+    query per slice."""
     from ml_data_wrangler_spark.operators.similarity import brute_force_topk_fold
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.where(F.col("vec_id") % 20 == 0)
     base = sorted(map(tuple, brute_force_topk_fold(emb, queries, k=5).collect()))
-    sliced = sorted(
-        map(
-            tuple,
-            brute_force_topk_fold(
-                emb, queries, k=5, max_broadcast_cells=2000
-            ).collect(),
-        )
-    )
+    sliced_df = brute_force_topk_fold(emb, queries, k=5, max_broadcast_cells=1024)
+    assert "FlatMapCoGroupsInPandas" in sliced_df._jdf.queryExecution().toString()
+    sliced = sorted(map(tuple, sliced_df.collect()))
     assert sliced == base and len(base) > 0
 
 

@@ -1,34 +1,27 @@
-"""brute_force_topk_fold's grid-cogroup tier (round 11, closing the
-r10 verdict's "missing" item 5): above max_executor_cells the sliced
-path's broadcasts (Q×D cells resident on every executor, collected
-sequentially through the driver) stop being a scale design — the grid
-tier shuffles (query-slice × corpus-chunk) cells through one cogroup
-instead, runs the same _tile_topk kernel per cell, and must therefore
-return EXACTLY the broadcast path's rows."""
+"""brute_force_topk_fold's grid-cogroup tier: above max_broadcast_cells
+the query side is no longer broadcast — (query-slice × corpus-chunk)
+cells shuffle through one cogroup instead, run the same _tile_topk
+kernel per cell, and must therefore return EXACTLY the broadcast
+tier's rows."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from ml_data_wrangler_spark.operators.similarity import brute_force_topk_fold
 
 
 def test_fold_knn_grid_matches_broadcast(spark, sf_dir):
-    """Q×D (125 ids × 64 dims = 8000 cells) exceeds the forced slice
-    budget ×4 (2000-cell broadcast cap → 500-cell slices) AND the
-    forced executor budget (4000 cells), so the dispatch lands on the
-    grid-cogroup tier; rows must equal the default broadcast path's
+    """Q×D (25 ids × 64 dims = 1600 cells) exceeds the forced
+    64-cell cap, so the dispatch lands on the grid-cogroup tier with
+    one query per slice; rows must equal the default broadcast path's
     exactly."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.where(F.col("vec_id") % 20 == 0)
     base = sorted(map(tuple, brute_force_topk_fold(emb, queries, k=5).collect()))
-    grid_df = brute_force_topk_fold(
-        emb,
-        queries,
-        k=5,
-        max_broadcast_cells=64,
-        max_executor_cells=64,
-    )
+    grid_df = brute_force_topk_fold(emb, queries, k=5, max_broadcast_cells=64)
     # prove the dispatch actually landed on the cogroup tier (a small
     # fixture must not silently fall back to the broadcast path and
     # pass vacuously)
@@ -38,25 +31,20 @@ def test_fold_knn_grid_matches_broadcast(spark, sf_dir):
 
 
 def test_fold_knn_grid_single_slice_and_chunk_degenerate(spark):
-    """A grid forced down to its smallest shape (tiny corpus, one
-    Arrow-visible chunk, two slices) must still merge exactly — pins
-    the empty-cell and short-side paths of the cogroup kernel."""
-    from pyspark.sql import Row
-
+    """A grid forced onto a tiny corpus (12 vectors hashed into 12
+    query slices, so many cells are empty or one-sided) must still
+    merge exactly — pins the empty-cell and short-side paths of the
+    cogroup kernel."""
     rows = [
         Row(vec_id=i, embedding=[float(i % 3 + 1), float(i % 5), 1.0])
         for i in range(12)
     ]
     emb = spark.createDataFrame(rows)
-    base = sorted(
-        map(tuple, brute_force_topk_fold(emb, emb, k=3).collect())
-    )
+    base = sorted(map(tuple, brute_force_topk_fold(emb, emb, k=3).collect()))
     grid = sorted(
         map(
             tuple,
-            brute_force_topk_fold(
-                emb, emb, k=3, max_broadcast_cells=6, max_executor_cells=6
-            ).collect(),
+            brute_force_topk_fold(emb, emb, k=3, max_broadcast_cells=6).collect(),
         )
     )
     assert grid == base and len(base) > 0
@@ -65,9 +53,6 @@ def test_fold_knn_grid_single_slice_and_chunk_degenerate(spark):
 def test_fold_knn_grid_rejects_degenerate_vectors(spark):
     """The loud-failure input contract must hold on the grid tier too
     (the checks run inside the cogroup kernel)."""
-    import pytest
-    from pyspark.sql import Row
-
     zero = spark.createDataFrame(
         [
             Row(vec_id=1, embedding=[0.0, 0.0]),
@@ -76,6 +61,4 @@ def test_fold_knn_grid_rejects_degenerate_vectors(spark):
         ]
     )
     with pytest.raises(Exception, match="zero-norm or non-finite"):
-        brute_force_topk_fold(
-            zero, zero, k=1, max_broadcast_cells=2, max_executor_cells=2
-        ).collect()
+        brute_force_topk_fold(zero, zero, k=1, max_broadcast_cells=2).collect()

@@ -1,10 +1,12 @@
 """qm09's adaptive physical strategy: the dense-GEMM path and the
 sparse postings path are two PHYSICAL plans for one logical query, and
 the Python scale-oracle is a third independent implementation of the
-same value definition. These tests pin all three to byte-identical
-results on the real fixture, so the 6× scale tier (where only
-GEMM + scale-oracle are feasible) is verified by transitivity against
-the SQL oracle that the driver gate runs at sf0.01."""
+same value definition. These tests pin the scale-oracle to the SQL
+oracle and the GEMM path to the fixture; the dense-vs-sparse and
+single-vs-blocked comparisons live in tests/test_dispatch_branches.py.
+Together they verify the 6× scale tier (where only GEMM + scale-oracle
+are feasible) by transitivity against the SQL oracle that the driver
+gate runs at sf0.01."""
 
 from __future__ import annotations
 
@@ -24,11 +26,6 @@ def qname():
     return "qm09_tfidf_doc_pairs"
 
 
-def _run(spark, sf_dir, qname):
-    qs = registry.queries()
-    return run_spark_query(spark, qs[qname], sf_dir)
-
-
 def test_gemm_path_is_active_on_fixture(spark, sf_dir, qname):
     """The fixture's vocab (~31 tokens) must resolve to the dense
     path — otherwise the driver gate verifies a plan that never runs
@@ -46,58 +43,14 @@ def test_gemm_path_is_active_on_fixture(spark, sf_dir, qname):
     assert mq.QM09_DENSE_VOCAB_CAP >= 31
 
 
-def test_dispatch_probe_is_bounded(spark, sf_dir, qname, monkeypatch):
-    """Round-11 verdict item 1: the dense-dispatch probe must never
-    collect the full df>=2 vocabulary to the driver — on a 100 TB
-    corpus that vocab is 10^8-10^9 tokens and the probe itself would
-    OOM before the sparse fallback (the correct plan there) engages.
-    With the cap shrunk below the fixture vocab (~31 tokens), plan
-    construction must (a) fall back to the sparse postings plan and
-    (b) transfer at most cap+1 rows in ANY driver collect: the probe
-    is `.limit(cap+1)`, and the ordered full collect is only reached
-    inside the <=cap branch, where it is <=cap rows by the probe's
-    own verdict."""
-    try:  # pyspark>=4: the concrete class overrides the abstract base
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:  # pyspark 3.x
-        from pyspark.sql import DataFrame
-
-    import ml_data_wrangler_spark.plans.ml_queries as mq
-
-    cap = 4
-    monkeypatch.setattr(mq, "QM09_DENSE_VOCAB_CAP", cap)
-    sizes: list[int] = []
-    real_collect = DataFrame.collect
-
-    def counted(self):
-        rows = real_collect(self)
-        sizes.append(len(rows))
-        return rows
-
-    monkeypatch.setattr(DataFrame, "collect", counted)
-    qs = registry.queries()
-    df = qs[qname](spark, sf_dir)
-    assert sizes, "the dispatch probe must run at plan-construction time"
-    assert max(sizes) <= cap + 1, (
-        f"a plan-time collect transferred {max(sizes)} rows > cap+1="
-        f"{cap + 1} — the dispatch probe is unbounded again"
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan, (
-        "vocab above the cap must dispatch to the sparse postings plan"
-    )
-
-
-def test_gemm_equals_postings_path(spark, sf_dir, qname, monkeypatch):
-    """Force the sparse postings plan by shrinking the dense caps and
-    assert the two physical strategies return identical rows."""
-    import ml_data_wrangler_spark.plans.ml_queries as mq
-
-    cols_g, rows_g = _run(spark, sf_dir, qname)
-    monkeypatch.setattr(mq, "QM09_DENSE_VOCAB_CAP", 0)
-    cols_p, rows_p = _run(spark, sf_dir, qname)
-    assert cols_g == cols_p
-    assert compare(qname, cols_g, rows_g, cols_p, rows_p) == []
+def test_plan_build_pulls_the_vocabulary_once(spark, sf_dir, qname, jobs_in):
+    """Within the cap the bounded vocabulary probe IS the vocabulary and
+    is sorted on the driver, so plan build runs no second, ordered
+    collect of it: 22 jobs on this fixture, where that collect made
+    27."""
+    build = registry.queries()[qname]
+    _, n_jobs = jobs_in(lambda: build(spark, sf_dir))
+    assert n_jobs == 22
 
 
 def test_scale_oracle_equals_sql_oracle(sf_dir, qname):
@@ -170,27 +123,6 @@ def test_universal_token_creates_pairs(spark, tmp_path, qname):
     assert by_pair[(3, 4)] == 1  # every ONLY
     assert compare(qname, s_cols, s_rows, o_cols, o_rows) == []
     assert compare(qname, p_cols, p_rows, o_cols, o_rows) == []
-
-
-def test_blocked_gemm_equals_single_broadcast(spark, sf_dir, qname, monkeypatch):
-    """Above the broadcast cell cap the operator must run blocked
-    id-range rounds (round-6 verdict item 5: the docstring promised
-    the variant but the code fell back to the postings plan — exactly
-    the plan that dies on dense vocabularies at scale). Shrink the cap
-    so the fixture needs many blocks and assert the blocked rounds are
-    value-identical to the single-broadcast run AND the SQL oracle."""
-    import ml_data_wrangler_spark.plans.ml_queries as mq
-
-    cols_fast, rows_fast = _run(spark, sf_dir, qname)
-    # sf0.001 = 100 docs × 31-token vocab = 3100 cells; cap 500 → 16
-    # docs per block → 7 rounds (and uneven final block)
-    monkeypatch.setattr(mq, "QM09_DENSE_CELL_CAP", 500)
-    cols_blk, rows_blk = _run(spark, sf_dir, qname)
-    assert cols_fast == cols_blk
-    assert compare(qname, cols_blk, rows_blk, cols_fast, rows_fast) == []
-    con = duckdb_connection(sf_dir)
-    o_cols, o_rows = run_oracle(con, registry.oracle_sql()[qname])
-    assert compare(qname, cols_blk, rows_blk, o_cols, o_rows) == []
 
 
 def test_microunit_exactness_bound(sf_dir):
