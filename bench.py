@@ -100,6 +100,15 @@ def _warm_mllib(spark) -> None:
     model.describeTopics(2).collect()
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """Exercise the parquet reader, shuffle and codegen paths once, then
+    MLlib, so no query is charged the session's one-time costs."""
+    from ml_data_wrangler_spark.plans import registry
+
+    registry.queries()["q01_pricing_summary"](spark, sf_dir).count()
+    _warm_mllib(spark)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -109,11 +118,7 @@ def main() -> None:
 
     spark = get_spark(app_name="mdw-bench")
     queries = registry.queries()
-
-    # warm-up: exercise parquet reader, shuffle, codegen paths once
-    warm = queries["q01_pricing_summary"]
-    warm(spark, sf_dir).count()
-    _warm_mllib(spark)
+    warm_up(spark, sf_dir)
 
     timings: dict[str, float] = {}
     for name in HEADLINE + HEAVY:

@@ -292,6 +292,8 @@ def lda_sweep(
         raise ValueError(f"coherence must be 'umass' or 'c_v', got {coherence!r}")
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     from ml_data_wrangler_spark.operators.fitting import widen_for_fit
 
     spark = bow_df.sparkSession
@@ -305,14 +307,16 @@ def lda_sweep(
     # Spark schedules jobs from multiple driver threads fine; each fit
     # is a small distributed job whose scheduling latency (not compute)
     # dominates a serial sweep. Same per-k seeds → identical results to
-    # the sequential loop.
+    # the sequential loop. The worker threads inherit the caller's local
+    # properties and job tags, so the fits' jobs are attributed to the
+    # calling query.
     def fit_one(k: int) -> tuple[int, list[list[str]]]:
         model = fit_lda(bow_df, k=k, max_iter=max_iter, seed=seed)
         desc = model.describeTopics(n_terms).collect()
         return k, [[vocabulary[i] for i in r["termIndices"]] for r in desc]
 
     with ThreadPoolExecutor(max_workers=min(4, max(1, len(ks)))) as pool:
-        fitted = list(pool.map(fit_one, ks))
+        fitted = list(pool.map(inheritable_thread_target(spark)(fit_one), ks))
     bow_df.unpersist()
 
     if coherence == "umass":

@@ -1,100 +1,53 @@
-"""Stage-level parallelism audit for registry queries.
-
-Round-6 lesson: a 6×-tier Spark line that is "explained" by duplicate
-density can still hide a near-serial stage (qd09 read as explained and
-was an 8.7× parallelism defect). This script executes queries with the
-Spark event log on and prints, per query, every stage's task count and
-total executor run time, so heavy lines are pinned with MEASURED task
-histograms instead of narrative.
-
-Since round 8 the event-log parsing lives in tests/stage_audit.py and
-the parity sweep itself (tests/run_parity.py) prints a per-query
-parallelism verdict for heavy lines; this script remains the
-full-histogram drill-down for investigating a flagged query.
+"""Per-stage drill-down for registry queries: runs each query under the
+Spark event log and prints every stage's task count and executor run
+time, so a heavy line is pinned with measured task histograms rather
+than narrative. Stages of at least 1 executor-second at fewer than half
+the session's cores are flagged SERIAL. The parity sweep
+(tests/run_parity.py) prints only the per-query verdict; this is the
+full histogram for investigating a flagged query.
 
 Usage:
-    PYTHONPATH=/root/repo python scripts/audit_stage_parallelism.py \
-        SF_DIR --only q1,q2 [--min-task-sec 1.0]
-
-Output per query: wall seconds, then one line per stage
-    stage <id> tasks=<n> run=<executor-seconds> max_task=<s> <name head>
-sorted by executor run time; stages whose total run time exceeds
---min-task-sec and whose task count is below half the session
-parallelism are flagged SERIAL.
+    PYTHONPATH=. python scripts/audit_stage_parallelism.py \\
+        SF_DIR --only q1,q2
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import time
 
 
 def main() -> int:
-    argv = list(sys.argv[1:])
-
-    def _flag_arg(flag: str) -> str | None:
-        if flag not in argv:
-            return None
-        i = argv.index(flag)
-        if i + 1 >= len(argv) or argv[i + 1].startswith("--"):
-            sys.exit(f"usage: {flag} requires an argument")
-        value = argv[i + 1]
-        del argv[i : i + 2]
-        return value
-
-    only_arg = _flag_arg("--only")
-    only = set(only_arg.split(",")) if only_arg else None
-    min_task_sec = float(_flag_arg("--min-task-sec") or "1.0")
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-
+    from ml_data_wrangler_spark.observe import (
+        audited_session,
+        measured,
+        only_names,
+        query_parser,
+        serial_stages,
+    )
     from ml_data_wrangler_spark.plans import registry
-    from tests.stage_audit import event_log_conf, serial_stages, stages_by_group
 
+    args = query_parser(__doc__).parse_args()
     queries = registry.queries()
-    if only:
-        unknown = sorted(only - set(queries))
-        if unknown:
-            sys.exit(f"unknown --only names: {', '.join(unknown)}")
-
-    event_dir = "/tmp/spark-events-audit"
-    shutil.rmtree(event_dir, ignore_errors=True)
-
-    from ml_data_wrangler_spark.session import get_spark
+    names = only_names(args.only, queries) or sorted(queries)
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 8))
-    spark = get_spark(
-        app_name="stage-audit",
-        cpus=cpus,
-        shuffle_partitions=max(cpus, 8),
-        driver_memory=os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
-        extra_conf=event_log_conf(event_dir),
-    )
-    sc = spark.sparkContext
-
-    # run each query under its own job group so the event log's jobs
-    # (which carry spark.jobGroup.id) can be attributed back
     walls: dict[str, float] = {}
-    for name in sorted(queries):
-        if only is not None and name not in only:
-            continue
-        sc.setJobGroup(name, name)
-        t0 = time.time()
-        n = queries[name](spark, sf_dir).count()
-        walls[name] = time.time() - t0
-        print(f"ran {name}: {walls[name]:.1f}s wall, {n} rows", flush=True)
-    sc.setJobGroup("", "")
-    app_id = sc.applicationId
-    spark.stop()
+    with audited_session(
+        "stage-audit", cpus=cpus, shuffle_partitions=max(cpus, 8),
+        driver_memory=os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+    ) as (spark, log):
+        for name in names:
+            run = measured(spark, name, queries[name], args.sf_dir)
+            walls[name] = run["wall_s"]
+            print(f"ran {name}: {run['wall_s']:.1f}s wall, {run['rows']} rows",
+                  flush=True)
 
-    by_group = stages_by_group(event_dir, app_id)
-    for group in sorted(by_group):
-        if only is not None and group not in only:
-            continue
-        print(f"\n=== {group} (wall {walls.get(group, float('nan')):.1f}s) ===")
-        flagged = {s.stage_id for s in serial_stages(by_group[group], cpus, min_task_sec)}
-        for s in by_group[group]:
+    for name in names:
+        print(f"\n=== {name} (wall {walls[name]:.1f}s) ===")
+        stages = log.query_stages(name)
+        flagged = {s.stage_id for s in serial_stages(stages, cpus, 1.0)}
+        for s in stages:
             if s.run_sec < 0.05:
                 continue
             flag = "  <-- SERIAL" if s.stage_id in flagged else ""

@@ -24,22 +24,6 @@ from __future__ import annotations
 import os
 import sys
 
-BENCH_SET = [
-    "q01_pricing_summary", "q02_revenue_by_month", "q03_shipping_priority",
-    "q05_region_revenue", "q09_profit_by_nation_year",
-    "q13_customer_order_histogram", "q18_large_orders",
-    "qw01_top3_orders_per_customer", "qw06_nation_revenue_share",
-    "qg01_rollup_returns", "qe01_hourly_by_type", "qe04_sessionize",
-    "qj01_asof_purchase_click", "qj03_session_overlap_pairs",
-    "qc01_dataset_splits", "qt01_top_tokens", "qt04_quality_scores",
-    "qd01_exact_dedup", "qd02_ngram_jaccard_pairs", "qv01_knn_bruteforce",
-    "qv05_ivf_ann", "qm01_vocabulary", "qm04_lda_coherence_sweep",
-    "qs01_stream_tumbling_hourly",
-    "qe33_event_type_pagerank", "qv17_lloyd_kmeans",
-    "qv18_pca_power_iteration", "qd17_similarity_triangles",
-    "qt19_bm25_retrieval", "qt20_bpe_merges", "qv20_hybrid_rrf_fusion",
-]
-
 
 def _component_builders():
     """Pseudo-name → builder(spark, sf_dir) for pre-checkpoint
@@ -69,7 +53,9 @@ def main() -> None:
     queries = registry.queries()
     components = _component_builders()
     if names is None:
-        names = BENCH_SET + sorted(components)
+        import bench
+
+        names = bench.HEADLINE + bench.HEAVY + sorted(components)
     for name in names:
         fn = components.get(name) or queries[name]
         try:

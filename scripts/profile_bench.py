@@ -1,87 +1,82 @@
-"""Per-query job/stage/task profile of the bench set (guide §1).
+"""Per-query cost of the bench set, one row per query.
 
-Runs each bench query once (same methodology as bench.py: build + count)
-with the UI enabled, then pulls the REST API to attribute jobs, stages,
-tasks, and executor-cpu seconds to each query via job groups. Output is
-one line per query:
+Runs the 31 bench.py queries (tier 1 + tier 2, or --only a subset)
+after bench.py's warm-up, each the way bench.py times it: plan build,
+then count. Build and execute run under their own job groups
+(``observe.measured``), so each row splits the wall into build and
+execute time and counts the jobs run while the plan was built
+(build_jobs). The other columns total both groups from the event log;
+cpu_s is the process tree's CPU, Python workers included. Many jobs
+with little cpu_s mean fixed per-job latency (probes, checkpoints,
+iterative loops); much cpu_s means real compute. A regime probe runs
+at the start and at the end, and the warm-up and probes run under
+named groups, so the "" group should show 0 jobs. Then come the SERIAL
+verdict lines and one JSON line.
 
-    name  wall_s  n_jobs  n_stages  n_tasks  task_time_s
-
-High n_jobs with low task_time ⇒ the query is paying fixed per-job
-scheduling latency (checkpoints, .first() probes, iterative loops), the
-dominant overhead regime on this box (~0.1-0.2 s per job measured);
-high task_time ⇒ real compute.
-
-Usage: PYTHONPATH=/root/repo python scripts/profile_bench.py [names...]
+Usage: PYTHONPATH=. python scripts/profile_bench.py [SF_DIR] [--only a,b]
 """
 
 from __future__ import annotations
 
 import json
-import sys
-import time
-import urllib.request
 
-from scripts.capture_plans import BENCH_SET
+_COLS = ["wall_s", "build_s", "execute_s", "build_jobs", "jobs", "stages",
+         "tasks", "cpu_s", "shuffle_read_bytes", "shuffle_write_bytes",
+         "spill_bytes", "peak_memory_bytes"]
 
 
 def main() -> None:
-    names = sys.argv[1:] or BENCH_SET
-    sf_dir = "/root/testdata/sf0.1"
-
-    from ml_data_wrangler_spark.plans import registry
-    from ml_data_wrangler_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="mdw-profile",
-        extra_conf={"spark.ui.enabled": "true",
-                    "spark.ui.showConsoleProgress": "false"},
+    import bench
+    from ml_data_wrangler_spark.observe import (
+        GroupTotals,
+        audited_session,
+        measured,
+        only_names,
+        query_parser,
+        regime_probe,
+        tag,
+        verdict_lines,
     )
-    sc = spark.sparkContext
+    from ml_data_wrangler_spark.plans import registry
+
+    args = query_parser(__doc__).parse_args()
     queries = registry.queries()
+    names = only_names(args.only, queries) or bench.HEADLINE + bench.HEAVY
 
-    # warm-up identical to bench.py
-    queries["q01_pricing_summary"](spark, sf_dir).count()
-    from bench import _warm_mllib
+    with audited_session("mdw-profile") as (spark, log):
+        sc = spark.sparkContext
+        cpus = sc.defaultParallelism
+        tag(sc, "warm-up")
+        bench.warm_up(spark, args.sf_dir)
+        tag(sc, "regime:start")
+        regime = {"start": regime_probe(sc)}
+        runs = {n: measured(spark, n, queries[n], args.sf_dir) for n in names}
+        tag(sc, "regime:end")
+        regime["end"] = regime_probe(sc)
 
-    _warm_mllib(spark)
+    groups = dict(log.groups)
+    for name, run in runs.items():
+        build, execute = (vars(groups.pop(g, GroupTotals()))
+                          for g in (f"{name}:build", name))
+        run.update({k: v + execute[k] for k, v in build.items()},
+                   build_jobs=build["jobs"],
+                   peak_memory_bytes=max(build["peak_memory_bytes"],
+                                         execute["peak_memory_bytes"]))
+    groups.setdefault("", GroupTotals())
 
-    base = "http://127.0.0.1:4040/api/v1/applications"
-    app_id = sc.applicationId
-
-    def jobs() -> list[dict]:
-        with urllib.request.urlopen(f"{base}/{app_id}/jobs?status=succeeded") as r:
-            return json.loads(r.read())
-
-    results = {}
-    for name in names:
-        fn = queries[name]
-        sc.setJobGroup(name, name)
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        n = df.count()
-        wall = time.time() - t0
-        sc.setJobGroup(None, None)
-        results[name] = {"wall": round(wall, 2), "rows": n}
-
-    time.sleep(2)
-    agg: dict[str, dict] = {}
-    for j in jobs():
-        g = j.get("jobGroup")
-        if g not in results:
-            continue
-        a = agg.setdefault(g, {"jobs": 0, "stages": 0, "tasks": 0})
-        a["jobs"] += 1
-        a["stages"] += len(j.get("stageIds", []))
-        a["tasks"] += j.get("numCompletedTasks", 0)
-
-    print(f"{'query':36s}{'wall_s':>8s}{'jobs':>6s}{'stages':>8s}{'tasks':>7s}")
-    for name in names:
-        r = results[name]
-        a = agg.get(name, {"jobs": 0, "stages": 0, "tasks": 0})
-        print(f"{name:36s}{r['wall']:8.2f}{a['jobs']:6d}{a['stages']:8d}"
-              f"{a['tasks']:7d}")
-    print(json.dumps({n: {**results[n], **agg.get(n, {})} for n in names}))
+    print(f"# regime start {regime['start']}")
+    print("query".ljust(34) + "".join(f"{c:>{len(c) + 1}}" for c in _COLS))
+    for name, run in runs.items():
+        print(name.ljust(34) + "".join(f"{run[c]:>{len(c) + 1}}" for c in _COLS))
+    for group, totals in sorted(groups.items()):
+        print(f"# group {group!r}: {vars(totals)}")
+    print(f"# regime end {regime['end']}")
+    for line in verdict_lines(log, {n: r["wall_s"] for n, r in runs.items()},
+                              cpus):
+        print(line)
+    print(json.dumps({"sf_dir": args.sf_dir, "cpus": cpus, "regime": regime,
+                      "queries": runs,
+                      "groups": {g: vars(t) for g, t in groups.items()}}))
 
 
 if __name__ == "__main__":

@@ -23,7 +23,6 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
-import tempfile
 import time
 
 
@@ -39,79 +38,60 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
+    from ml_data_wrangler_spark.observe import audited_session, tag, verdict_lines
     from ml_data_wrangler_spark.operators.similarity import brute_force_topk_fold
     from ml_data_wrangler_spark.plans._util import t
-    from ml_data_wrangler_spark.session import get_spark
-    from tests.stage_audit import event_log_conf, stages_by_group, verdict_lines
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 8))
-    event_dir = tempfile.mkdtemp(prefix="grid-events-")
-    spark = get_spark(
-        app_name="fold-grid-scale",
-        cpus=cpus,
-        shuffle_partitions=max(cpus, 8),
-        driver_memory=os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
-        extra_conf=event_log_conf(event_dir),
-    )
-
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 20 == 0)
-    n_q = queries.count()
-    dim = emb.select(F.max(F.size("embedding"))).first()[0]
-    cells = n_q * dim
-    print(f"tier {sf_dir}: {n_q} queries × {dim} dims = {cells} Q·D cells",
-          flush=True)
-
     sel = ["query_id", "neighbor_id", "sim", "rank"]
     walls: dict[str, float] = {}
-
-    # branch A: default dispatch — the exact qv01 plan the r11 64×
-    # evidence hash-PASSed against the py-oracle
-    spark.sparkContext.setJobGroup("fold_default", "fold_default")
-    t0 = time.time()
-    base = brute_force_topk_fold(emb, queries, k=5).select(*sel).collect()
-    walls["fold_default"] = time.time() - t0
-    h_base = _value_hash(base)
-    print(f"ok   fold_default ({walls['fold_default']:.1f}s, "
-          f"{len(base)} rows, hash {h_base})", flush=True)
-
-    # branch B: grid cogroup, forced by a broadcast cap of Q·D/2 (scaled
-    # off the measured Q·D so the forcing holds on any tier) →
-    # quarter-budget slices of Q·D/8 cells, ~8 slices.
-    spark.sparkContext.setJobGroup("fold_grid", "fold_grid")
-    t0 = time.time()
-    grid_df = brute_force_topk_fold(
-        emb, queries, k=5, max_broadcast_cells=max(cells // 2, 4)
-    ).select(*sel)
-    plan = grid_df._jdf.queryExecution().toString()
-    if "FlatMapCoGroupsInPandas" not in plan:
-        print("FAIL fold_grid: dispatch did NOT land on the grid-cogroup "
-              "tier (no FlatMapCoGroupsInPandas in the executed plan)",
+    with audited_session(
+        "fold-grid-scale", cpus=cpus, shuffle_partitions=max(cpus, 8),
+        driver_memory=os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+    ) as (spark, log):
+        emb = t(spark, sf_dir, "embeddings")
+        queries = emb.where(F.col("vec_id") % 20 == 0)
+        n_q = queries.count()
+        dim = emb.select(F.max(F.size("embedding"))).first()[0]
+        cells = n_q * dim
+        print(f"tier {sf_dir}: {n_q} queries × {dim} dims = {cells} Q·D cells",
               flush=True)
-        spark.stop()
-        return 1
-    grid = grid_df.collect()
-    walls["fold_grid"] = time.time() - t0
-    h_grid = _value_hash(grid)
-    status = "ok  " if h_grid == h_base and len(grid) == len(base) else "FAIL"
-    print(f"{status} fold_grid ({walls['fold_grid']:.1f}s, {len(grid)} rows, "
-          f"hash {h_grid}, grid-branch-confirmed, "
-          f"{'BIT-IDENTICAL to default' if status == 'ok  ' else 'MISMATCH'})",
-          flush=True)
 
-    app_id = spark.sparkContext.applicationId
-    spark.stop()
-    try:
-        lines = verdict_lines(
-            stages_by_group(event_dir, app_id), walls, cpus,
-            min_wall_sec=10.0, min_stage_sec=5.0,
-        )
-        for ln in lines:
-            print(ln, flush=True)
-    finally:
-        import shutil
+        # branch A: default dispatch — the exact qv01 plan the r11 64×
+        # evidence hash-PASSed against the py-oracle
+        tag(spark.sparkContext, "fold_default")
+        t0 = time.time()
+        base = brute_force_topk_fold(emb, queries, k=5).select(*sel).collect()
+        walls["fold_default"] = time.time() - t0
+        h_base = _value_hash(base)
+        print(f"ok   fold_default ({walls['fold_default']:.1f}s, "
+              f"{len(base)} rows, hash {h_base})", flush=True)
 
-        shutil.rmtree(event_dir, ignore_errors=True)
+        # branch B: grid cogroup, forced by a broadcast cap of Q·D/2
+        # (scaled off the measured Q·D so the forcing holds on any
+        # tier) → quarter-budget slices of Q·D/8 cells, ~8 slices.
+        tag(spark.sparkContext, "fold_grid")
+        t0 = time.time()
+        grid_df = brute_force_topk_fold(
+            emb, queries, k=5, max_broadcast_cells=max(cells // 2, 4)
+        ).select(*sel)
+        plan = grid_df._jdf.queryExecution().toString()
+        if "FlatMapCoGroupsInPandas" not in plan:
+            print("FAIL fold_grid: dispatch did NOT land on the grid-cogroup "
+                  "tier (no FlatMapCoGroupsInPandas in the executed plan)",
+                  flush=True)
+            return 1
+        grid = grid_df.collect()
+        walls["fold_grid"] = time.time() - t0
+        h_grid = _value_hash(grid)
+        status = "ok  " if h_grid == h_base and len(grid) == len(base) else "FAIL"
+        print(f"{status} fold_grid ({walls['fold_grid']:.1f}s, {len(grid)} rows, "
+              f"hash {h_grid}, grid-branch-confirmed, "
+              f"{'BIT-IDENTICAL to default' if status == 'ok  ' else 'MISMATCH'})",
+              flush=True)
+
+    for ln in verdict_lines(log, walls, cpus, min_wall_sec=10.0, min_stage_sec=5.0):
+        print(ln, flush=True)
     return 0 if status == "ok  " else 1
 
 

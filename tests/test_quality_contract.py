@@ -307,7 +307,8 @@ def test_run_parity_rejects_unknown_only_names():
     """A misspelled --only name must be a startup ERROR, not a clean
     '0 failures / 0' that reads as green while verifying nothing
     (round-6 verdict item 2 — the judge hit exactly this). The check
-    runs before the SparkSession is built, so this is fast."""
+    runs before the SparkSession is built, so this is fast. The
+    profiler shares the same check."""
     import os
     import subprocess
     import sys
@@ -315,22 +316,24 @@ def test_run_parity_rejects_unknown_only_names():
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, PYTHONPATH=root)
 
-    def run(*extra):
+    def run(script, *extra):
         return subprocess.run(
-            [sys.executable, os.path.join(root, "tests", "run_parity.py"),
+            [sys.executable, os.path.join(root, script),
              "/root/testdata/sf0.001", *extra],
             capture_output=True, text=True, env=env, timeout=120,
         )
 
-    bad = run("--only", "qm09_tfidf_doc_pairz")
-    assert bad.returncode != 0
-    assert "qm09_tfidf_doc_pairz" in bad.stdout + bad.stderr
-    # one valid + one misspelled must ALSO error (the dangerous case:
-    # partial typos previously ran the valid subset and printed green)
-    mixed = run("--only", "qm09_tfidf_doc_pairs,qm09_tfidf_doc_pairz")
-    assert mixed.returncode != 0
-    assert "qm09_tfidf_doc_pairz" in mixed.stdout + mixed.stderr
-    assert "failures /" not in mixed.stdout
+    for script in ("tests/run_parity.py", "scripts/profile_bench.py"):
+        bad = run(script, "--only", "qm09_tfidf_doc_pairz")
+        assert bad.returncode != 0
+        assert "qm09_tfidf_doc_pairz" in bad.stdout + bad.stderr
+        # one valid + one misspelled must ALSO error (the dangerous case:
+        # partial typos previously ran the valid subset and printed green)
+        mixed = run(script, "--only", "qm09_tfidf_doc_pairs,qm09_tfidf_doc_pairz")
+        assert mixed.returncode != 0
+        assert "qm09_tfidf_doc_pairz" in mixed.stdout + mixed.stderr
+        assert "failures /" not in mixed.stdout
+        assert "regime" not in mixed.stdout
     # --sig still validates (round-6 ADVICE fix, kept pinned)
-    sig = run("--sig", "zero")
+    sig = run("tests/run_parity.py", "--sig", "zero")
     assert sig.returncode != 0 and "--sig" in sig.stdout + sig.stderr

@@ -227,6 +227,20 @@ def test_lda_sweep_rows(documents):
     assert all(isinstance(r["coherence"], float) for r in rows)
 
 
+def test_lda_sweep_jobs_keep_caller_job_group(spark, documents, jobs_in):
+    """The sweep's concurrent fits run on worker threads; each of their
+    jobs must carry the caller's job group, or per-query profiles lose
+    them."""
+    model, bow = vectorize(documents)
+    toks = tokens_df(documents)
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    _, jobs = jobs_in(lambda: lda_sweep(bow, toks, model.vocabulary, range(2, 5),
+                                        max_iter=3, seed=1))
+    assert jobs > 0
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
 def test_validate_lda_params_bounds():
     validate_lda_params(5, 100, 10)
     with pytest.raises(ValueError):
