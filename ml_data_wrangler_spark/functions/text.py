@@ -60,7 +60,7 @@ def nfkc_unescape(s: pd.Series) -> pd.Series:
     )
 
 
-def cleanse_lines(text: Column, normalize: bool = True) -> Column:
+def cleanse_lines(text: Column) -> Column:
     """F1 — line cleanse (wrangler.py:314-341), returns array<string>.
 
     Per line: NFKC+unescape, collapse CR/LF and runs of whitespace to a
@@ -69,8 +69,7 @@ def cleanse_lines(text: Column, normalize: bool = True) -> Column:
     deleted every natural-language line); drop lines that are purely a
     PII token (email/URL/UUID/MD5/IPv4 validators, wrangler.py:327-339).
     """
-    src = nfkc_unescape(text) if normalize else text
-    lines = F.split(src, r"\n")
+    lines = F.split(nfkc_unescape(text), r"\n")
     cleaned = F.transform(
         lines, lambda ln: F.trim(F.regexp_replace(ln, r"[\r\n\s]+", " "))
     )
@@ -81,10 +80,10 @@ def cleanse_lines(text: Column, normalize: bool = True) -> Column:
     return kept
 
 
-def cleanse_text(text: Column, normalize: bool = True) -> Column:
+def cleanse_text(text: Column) -> Column:
     """F1 collapsed back to a single cleansed string (newline-joined),
     the shape downstream corpus construction consumes."""
-    return F.array_join(cleanse_lines(text, normalize=normalize), "\n")
+    return F.array_join(cleanse_lines(text), "\n")
 
 
 def pii_scrub(text: Column) -> Column:

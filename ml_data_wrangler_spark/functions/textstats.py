@@ -42,11 +42,11 @@ def subword_count(text: Column) -> Column:
     )
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are function words for ``lang``."""
+def stopword_ratio(text: Column) -> Column:
+    """Fraction of tokens that are English function words."""
     toks = tokenize(text)
     hits = F.size(
-        F.filter(toks, lambda t: t.isin(*LANG_STOPWORDS[lang]))
+        F.filter(toks, lambda t: t.isin(*LANG_STOPWORDS["en"]))
     )
     return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
 
@@ -58,13 +58,13 @@ def alpha_ratio(text: Column) -> Column:
     return F.when(total > 0, alpha / total).otherwise(F.lit(0.0))
 
 
-def quality_score(text: Column, lang: str = "en") -> Column:
+def quality_score(text: Column) -> Column:
     """Heuristic document quality ∈ [0,1]: length sufficiency +
     alphabetic purity + function-word plausibility (Gopher/C4-style
     filters expressed as one scalar). Deterministic, shuffle-free."""
     length_score = F.least(token_count(text) / F.lit(50.0), F.lit(1.0))
     return F.round(
-        0.4 * length_score + 0.4 * alpha_ratio(text) + 0.2 * stopword_ratio(text, lang),
+        0.4 * length_score + 0.4 * alpha_ratio(text) + 0.2 * stopword_ratio(text),
         6,
     )
 
@@ -103,17 +103,6 @@ def doc_fingerprint(text: Column) -> Column:
     pipelines xxhash64 is cheaper."""
     normalized = F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
     return F.md5(normalized)
-
-
-def rolling_hash_shingles(text: Column, k: int = 5) -> Column:
-    """Array of hashed k-word shingles (rolling document fingerprint) —
-    the input to MinHash/Jaccard dedup. xxhash64 per shingle, JVM-side."""
-    toks = tokenize(text)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.when(n >= k, F.transform(
-        idx, lambda i: F.xxhash64(F.array_join(F.slice(toks, i + 1, k), " "))
-    )).otherwise(F.array(F.xxhash64(F.array_join(toks, " "))))
 
 
 def max_multiplicity(arr: Column) -> Column:

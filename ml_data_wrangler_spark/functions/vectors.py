@@ -9,10 +9,10 @@ shuffle. Two families:
   interpreted expression evaluator. Fine outside hot loops.
 * ``unrolled_*`` — the same folds unrolled into a flat ``getItem``
   expression for a KNOWN dimension, which whole-stage codegen
-  compiles. Measured at the 16× tier (round 8): the LSH verify join's
-  per-pair HOF cosine burned 9,816 executor-seconds where MLlib's
-  compiled sqdist did the same pairs in 943 — switching the pair-join
-  inner loops to the unrolled forms is a ~10× kernel win. The fold
+  compiles. Measured at the 16× tier (round 8): a pair join's
+  per-pair HOF distance burned 9,816 executor-seconds where MLlib's
+  compiled sqdist did the same pairs in 943 — the unrolled forms are
+  a ~10× kernel win in pair-join inner loops. The fold
   starts from the same 0.0 accumulator in the same ascending index
   order, so the doubles — and the 6-decimal rounded values the
   oracles hash — are bit-identical to the HOF forms.
@@ -83,22 +83,6 @@ def unrolled_sq_norm(a: Column, dim: int) -> Column:
     return _unrolled_fold(
         [a.getItem(i).cast("double") * a.getItem(i).cast("double") for i in range(dim)]
     )
-
-
-def unrolled_cosine(a: Column, b: Column, dim: int) -> Column:
-    return unrolled_dot(a, b, dim) / (
-        F.sqrt(unrolled_sq_norm(a, dim)) * F.sqrt(unrolled_sq_norm(b, dim))
-    )
-
-
-def unrolled_sqdist(a: Column, b: Column, dim: int) -> Column:
-    """Σ (a[i]−b[i])² — Euclidean², the LSH keyDistance kernel."""
-
-    def term(i: int) -> Column:
-        d = a.getItem(i).cast("double") - b.getItem(i).cast("double")
-        return d * d
-
-    return _unrolled_fold([term(i) for i in range(dim)])
 
 
 def _jl_sign(k: int):

@@ -72,36 +72,6 @@ def ensure_parallelism(
 TOKENIZE_REPARTITION_MIN_BYTES = 8 << 20
 
 
-# Hash balance needs slack: n keys hashed into n partitions leave
-# ~1/e of them empty and stack 2+ keys (each QUADRATIC here) on
-# others — measured at the 16× tier: qv06's 16 sub-blocks at salt 1
-# occupied 5-9 of 16 partitions, max task 3.2× the balanced mean.
-# 3 key-salts per core keeps the expected max load within ~35% of
-# the mean; the salt still collapses to 1 (and the b-side
-# replication vanishes) once NATURAL keys oversubscribe cores 3×.
-_SALT_OVERSUB = 3
-
-
-def adaptive_salt(parallelism: int, n_keys: int) -> int:
-    """Salt factor for a shuffle join on a low-cardinality key:
-    ``ceil(3 · parallelism / n_keys)``, floored at 1.
-
-    A bare equi-join on a key with fewer distinct values than cores
-    caps its reduce side at that many tasks (trap #10's corollary —
-    measured round 7: qv06's 6-value sub-block key ran the quadratic
-    ground truth as two 5-task stages of 214 s max). Salting side a
-    with one deterministic value in [0, salt) and exploding side b to
-    all salt values restores parallelism; making the factor INVERSELY
-    proportional to key cardinality means it collapses to exactly 1 —
-    and the b-side replication vanishes — once natural keys
-    oversubscribe the cluster ``_SALT_OVERSUB``-fold, which is
-    precisely the regime where hashing balances naturally and
-    replication would be quadratic waste. Both directions are pinned
-    by unit test and asserted on real multi-split scale data
-    (tests/test_scale_deactivation.py)."""
-    return max(1, -(-_SALT_OVERSUB * parallelism // max(1, n_keys)))
-
-
 def pin_join_width(df: DataFrame, *keys: str) -> DataFrame:
     """Hash-partition ``df`` by ``keys`` at the session's configured
     shuffle width — exactly the exchange the planner would insert for

@@ -63,12 +63,15 @@ def hash_split(
     return df.withColumn(split_col, expr)
 
 
+# stratified_hash_sample's fraction grain: 1/4096 ≈ ±0.02% per stratum.
+_SAMPLE_BUCKETS = 1 << 12
+
+
 def stratified_hash_sample(
     df: DataFrame,
     id_col: str,
     fractions_by_stratum: dict[str, float],
     stratum_col: str,
-    n_buckets: int = 1 << 12,
 ) -> DataFrame:
     """Per-stratum downsampling with CONTENT-ADDRESSED membership:
     keep a row iff its id's hash bucket falls below its stratum's
@@ -82,17 +85,17 @@ def stratified_hash_sample(
     the corpus and break caching/dedup downstream.
 
     Strata absent from ``fractions_by_stratum`` are DROPPED (explicit
-    mixture definition). Fractions are quantized to 1/``n_buckets``
-    (default 4096 → ±0.02%% granularity). Pure map-side expression —
+    mixture definition). Fractions are quantized to 1/``_SAMPLE_BUCKETS``
+    (4096 → ±0.02%% granularity). Pure map-side expression —
     no shuffle, no sort, no state.
     """
     for name, frac in fractions_by_stratum.items():
         if not 0.0 <= frac <= 1.0:
             raise ValueError(f"fraction for {name!r} out of [0,1]: {frac}")
-    bucket = hash_bucket(F.col(id_col), n_buckets=n_buckets)
+    bucket = hash_bucket(F.col(id_col), n_buckets=_SAMPLE_BUCKETS)
     keep: Column | None = None
     for name, frac in fractions_by_stratum.items():
-        cond = (F.col(stratum_col) == name) & (bucket < round(frac * n_buckets))
+        cond = (F.col(stratum_col) == name) & (bucket < round(frac * _SAMPLE_BUCKETS))
         keep = cond if keep is None else keep | cond
     if keep is None:
         raise ValueError("fractions_by_stratum must not be empty")

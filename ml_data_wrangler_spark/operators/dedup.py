@@ -12,8 +12,9 @@ each tier only sees what the previous one couldn't resolve:
   4. exact Jaccard — inverted shingle index self-join; exact but the
                     most expensive; used to verify candidates from 2/3.
 
-All token/shingle work is JVM-side array expressions; MinHash uses
-MLlib's MinHashLSH (seeded, deterministic).
+All token/shingle work is JVM-side array expressions; MinHash
+signatures are seeded xxhash64 minima (deterministic on any
+partitioning).
 """
 
 from __future__ import annotations
@@ -37,7 +38,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.6,
     strategy: str = "count",
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs over an inverted shingle
     index, with two physical strategies that return IDENTICAL results
@@ -96,12 +96,6 @@ def ngram_jaccard_pairs(
     """
     if strategy not in ("count", "prefix"):
         raise ValueError(f"unknown strategy: {strategy!r}")
-    spark = documents.sparkSession
-    if parallelism is None:
-        # cores, not shuffle.partitions: this sizes a CPU-bound narrow
-        # stage (tokenize+shingle), and a vanilla session's 200 shuffle
-        # partitions would just mean 200 tiny tasks of overhead
-        parallelism = spark.sparkContext.defaultParallelism
     toks = tokenize(F.col("text"))
     # Guard instead of a WHERE filter: Catalyst pushes filters through
     # Repartition, and a filter referencing toks would drag the whole
@@ -132,8 +126,7 @@ def ngram_jaccard_pairs(
     raw = ensure_parallelism(
         documents.select(
             "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text")
-        ),
-        parallelism,
+        )
     )
 
     # explode_outer + post-filter instead of plain explode: explode's
@@ -258,85 +251,16 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_near_dup_pairs(
-    documents: DataFrame,
-    k: int = 3,
-    jaccard_threshold: float = 0.5,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash+LSH near-dup pairs: shingles → binary feature vectors
-    (HashingTF) → MinHashLSH.approxSimilarityJoin.
-
-    Distance column is Jaccard DISTANCE (1 - similarity); we emit
-    (doc_a, doc_b, est_jaccard). Deterministic for a fixed seed.
-    At scale the banded join keys bound candidate generation — this is
-    the structure that replaces qd02's exact index when the corpus no
-    longer fits a full self-join.
-
-    The input is repartitioned to session parallelism first (trap #10
-    corollary, same as minhash_raw_signatures): the upstream is
-    typically a 1-split parquet scan, and MLlib's approxSimilarityJoin
-    BROADCASTS the small exploded hash side — so without the
-    repartition the entire explode→join→distance pipeline runs as ONE
-    task on the scan partitioning (measured at the 6× tier: a single
-    103 s task inside qd03; stage-level evidence in ROUND_NOTES r07).
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    parallelism = documents.sparkSession.sparkContext.defaultParallelism
-    toks = tokenize(F.col("text"))
-    # WHEN-guard + localCheckpoint, not WHERE filters: a filter on a
-    # derived column is pushed through the Repartition into the scan
-    # (trap #2), dragging tokenize+shingle+HashingTF+MinHash UDF
-    # evaluation into the 1-split scan task — and the self-join's two
-    # plan branches each carry a copy (measured at 6×: two concurrent
-    # single tasks of 29.9 s each). The guard leaves nothing to push;
-    # the checkpoint runs the shingling once, post-exchange, in
-    # `parallelism` tasks, and is a hard barrier for MLlib's own
-    # isnotnull(hashes) filter.
-    prepped = (
-        ensure_parallelism(documents, parallelism)
-        .select("doc_id", toks.alias("toks"))
-        .select(
-            "doc_id",
-            F.when(
-                F.size("toks") >= k, _shingles_from_tokens(F.col("toks"), k)
-            )
-            .otherwise(F.array().cast("array<string>"))
-            .alias("shingles"),
-        )
-        .localCheckpoint()
-    )
-    docs = prepped.where(F.size("shingles") > 0)
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=num_features, binary=True
-    )
-    feat = tf.transform(docs)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
-    )
-    model = lsh.fit(feat)
-    joined = model.approxSimilarityJoin(
-        feat, feat, 1.0 - jaccard_threshold, distCol="dist"
-    )
-    return (
-        joined.where(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            F.round(1.0 - F.col("dist"), 6).alias("est_jaccard"),
-        )
-    )
+# The banded MinHash net: 32 bands of 4 signature components (128
+# hashes). Its S-curve crosses ~0.99 catch probability at j = 0.6,
+# qd15's measured operating point.
+_BANDS, _ROWS_PER_BAND = 32, 4
 
 
 def minhash_banded_near_dup_pairs(
     documents: DataFrame,
     k: int = 3,
     jaccard_threshold: float = 0.5,
-    bands: int = 32,
-    rows_per_band: int = 4,
 ) -> DataFrame:
     """Hand-rolled banded MinHash-LSH near-dup pairs — the scale path
     that replaces the MLlib ``approxSimilarityJoin`` kernel (whose
@@ -345,8 +269,8 @@ def minhash_banded_near_dup_pairs(
 
       1. raw 128-hash signatures (``minhash_raw_signatures`` — pure
          JVM array expressions, deterministic on any partitioning);
-      2. band each signature into ``bands`` buckets of
-         ``rows_per_band`` components, bucket key =
+      2. band each signature into ``_BANDS`` buckets of
+         ``_ROWS_PER_BAND`` components, bucket key =
          xxhash64(band slice) — one explode of (band, bucket, doc_id)
          triples, 8 bytes of key per band;
       3. self-join on (band, bucket): candidates are exactly the
@@ -357,38 +281,36 @@ def minhash_banded_near_dup_pairs(
          estimate (matching components / n_hashes — qd10's pinned
          estimator), keep est ≥ ``jaccard_threshold``.
 
-    Shuffle ledger at scale: one exchange of band triples (bands ×
+    Shuffle ledger at scale: one exchange of band triples (_BANDS ×
     |docs| rows, constant width), one pair-key exchange bounded by
     true collision pairs, two doc_id-key joins against the
     checkpointed signature relation for the verify stage. Every stage
     is pair-linear — bucket fan-out is bounded by dup-group size, and
     the verify never touches shingle sets.
 
-    Differences vs ``minhash_near_dup_pairs`` (MLlib), both
-    deliberate and gate-pinned by
-    tests/test_dedup_similarity.py::test_banded_pairs_agree_with_mllib:
+    Differences from MLlib's MinHashLSH, both deliberate:
       * ``est_jaccard`` is the signature-agreement ESTIMATE, not
         MLlib's exact Jaccard on hashed feature sets — callers that
-        need exact similarity verify against ``ngram_jaccard_pairs``;
-      * the candidate net is (bands × rows_per_band) banding, not
-        ``numHashTables`` single-hash tables — at the (32, 4) default
-        the S-curve crosses ~0.99 catch probability at j = 0.6
-        (qd15's measured operating point).
+        need exact similarity verify against ``ngram_jaccard_pairs``
+        (tests/test_dedup_similarity.py::test_banded_pairs_agree_with_mllib
+        asserts every exact pair is caught at qd03's operating point);
+      * the candidate net is (bands × rows) banding, not
+        ``numHashTables`` single-hash tables.
     """
-    n_hashes = bands * rows_per_band
+    n_hashes = _BANDS * _ROWS_PER_BAND
     sigs = minhash_raw_signatures(documents, k=k, n_hashes=n_hashes)
     # Signatures feed three consumers (band explode + both verify
     # sides); localCheckpoint computes the n_hashes × |shingles|
     # hash-min work once and truncates the lineage so Catalyst cannot
-    # re-derive it per consumer (the minhash_near_dup_pairs trap).
+    # re-derive it per consumer.
     sigs = sigs.localCheckpoint(eager=False)
     triples = sigs.select(
         "doc_id",
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(_BANDS - 1)),
                 lambda i: F.xxhash64(
-                    F.slice("sig", i * rows_per_band + 1, rows_per_band)
+                    F.slice("sig", i * _ROWS_PER_BAND + 1, _ROWS_PER_BAND)
                 ),
             )
         ).alias("band", "bucket"),
@@ -558,11 +480,15 @@ def simhash_near_dup_pairs(
     )
 
 
+# Round cap for connected_components; O(log² n) rounds means 25 covers
+# any realistic graph, and hitting it raises rather than truncating.
+_CC_MAX_ROUNDS = 25
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 25,
 ) -> DataFrame:
     """Connected components over an undirected edge list via
     alternating large-star / small-star (Kiveris et al., "Connected
@@ -634,7 +560,7 @@ def connected_components(
         return row["n"], int(row["chk"])
 
     sig = signature(cur)
-    for _ in range(max_iterations):
+    for _ in range(_CC_MAX_ROUNDS):
         if sig[0] == 0:
             break
         nxt = small_star(large_star(cur)).localCheckpoint()
@@ -645,7 +571,7 @@ def connected_components(
         sig = nsig
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} rounds"
+            f"connected_components did not converge in {_CC_MAX_ROUNDS} rounds"
         )
 
     # At the fixed point each component is a star rooted at its min:
@@ -691,20 +617,10 @@ def near_dup_clusters(
     )
 
 
-def dedup_keep_min(documents: DataFrame, fingerprint_col) -> DataFrame:
-    """Generic exact-dedup: keep the lowest doc_id per fingerprint."""
-    return (
-        documents.select("doc_id", fingerprint_col.alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("keeper_doc_id"), F.count("*").alias("n_copies"))
-    )
-
-
 def dedup_pipeline(
     documents: DataFrame,
     k: int = 3,
     jaccard_threshold: float = 0.6,
-    strategy: str = "count",
 ) -> DataFrame:
     """The tiered 100 TB dedup flow end-to-end: decide, per document,
     keep or drop.
@@ -730,9 +646,7 @@ def dedup_pipeline(
     survivors = documents.join(
         exact.where(F.col("exact_kept")).select("doc_id"), "doc_id", "left_semi"
     )
-    pairs = ngram_jaccard_pairs(
-        survivors, k=k, threshold=jaccard_threshold, strategy=strategy
-    )
+    pairs = ngram_jaccard_pairs(survivors, k=k, threshold=jaccard_threshold)
     # one resolution pass: doc_b loses to the (always lower) doc_a.
     # (Min-id policy makes chains converge in one pass: the smallest
     # member of any near-dup cluster keeps, because it never appears
@@ -755,7 +669,6 @@ def containment_pairs(
     documents: DataFrame,
     k: int = 3,
     threshold: float = 0.8,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Directed shingle-containment pairs: |shingles(src) ∩
     shingles(dst)| / |shingles(src)| ≥ threshold, src ≠ dst.
@@ -777,9 +690,6 @@ def containment_pairs(
 
     Returns (src, dst, containment) with containment rounded to 6.
     """
-    spark = documents.sparkSession
-    if parallelism is None:
-        parallelism = spark.sparkContext.defaultParallelism
     toks = tokenize(F.col("text"))
     shingles = F.when(
         F.size("toks") >= k,
@@ -788,8 +698,7 @@ def containment_pairs(
     raw = ensure_parallelism(
         documents.select(
             "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text")
-        ),
-        parallelism,
+        )
     )
     pre = (
         raw.select("doc_id", toks.alias("toks"))
@@ -826,7 +735,6 @@ def duplicate_spans(
     documents: DataFrame,
     k: int = 5,
     min_docs: int = 2,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Cross-document duplicated SPAN extraction: the contiguous token
     ranges of each document whose every k-gram also occurs in at least
@@ -864,9 +772,6 @@ def duplicate_spans(
     """
     from pyspark.sql import Window as W
 
-    spark = documents.sparkSession
-    if parallelism is None:
-        parallelism = spark.sparkContext.defaultParallelism
     toks = tokenize(F.col("text"))
     # Positional shingles (guard-not-filter + explode_outer: the same
     # Catalyst traps as ngram_jaccard_pairs — see that docstring).
@@ -876,8 +781,7 @@ def duplicate_spans(
     raw = ensure_parallelism(
         documents.select(
             "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text")
-        ),
-        parallelism,
+        )
     )
     pos = (
         raw.select("doc_id", toks.alias("toks"))

@@ -142,10 +142,10 @@ def umass_counts(
     return single, pair
 
 
-def umass_coherence(tokens: DataFrame, topic_terms: list[list[str]], eps: float = 1.0) -> list[float]:
+def umass_coherence(tokens: DataFrame, topic_terms: list[list[str]]) -> list[float]:
     """UMass coherence per topic, exact from corpus counts.
 
-    C(t) = Σ_{m=2..M} Σ_{l=1..m-1} log((D(w_m, w_l) + eps) / D(w_l))
+    C(t) = Σ_{m=2..M} Σ_{l=1..m-1} log((D(w_m, w_l) + 1) / D(w_l))
 
     D(·) come from one aggregation over the union of topic terms
     (``umass_counts``); only the final O(topics × M²) arithmetic is
@@ -166,7 +166,7 @@ def umass_coherence(tokens: DataFrame, topic_terms: list[list[str]], eps: float 
             for l in range(m):
                 wl, wm = terms[l], terms[m]
                 if single.get(wl, 0) > 0:
-                    s += math.log((d2(wm, wl) + eps) / single[wl])
+                    s += math.log((d2(wm, wl) + 1.0) / single[wl])
         scores.append(s)
     return scores
 
@@ -175,7 +175,6 @@ def cv_coherence(
     tokens: DataFrame,
     topic_terms: list[list[str]],
     window_size: int = 110,
-    eps: float = 1e-12,
 ) -> list[float]:
     """C_v coherence (Röder/Both/Hinneburg 2015) per topic, computed
     as a DataFrame job.
@@ -254,7 +253,7 @@ def cv_coherence(
         pi, pj = p(x), p(y)
         if pij <= 0 or pi <= 0 or pj <= 0:
             return 0.0
-        return math.log(pij / (pi * pj) + eps) / -math.log(pij + eps)
+        return math.log(pij / (pi * pj) + 1e-12) / -math.log(pij + 1e-12)
 
     def cosine(u: list[float], v: list[float]) -> float:
         dot = sum(a_ * b_ for a_, b_ in zip(u, v))
@@ -278,11 +277,10 @@ def lda_sweep(
     k_values: range,
     max_iter: int = 10,
     seed: int = 42,
-    n_terms: int = 10,
     coherence: str = "umass",
 ) -> DataFrame:
     """M3 — the coherence sweep: train LDA per k (driver loop, each fit
-    a distributed job), score coherence of the top-``n_terms`` terms,
+    a distributed job), score coherence of each topic's top-10 terms,
     return DataFrame[k, coherence]. The reference swept k=1..19 with
     gensim c_v and a fresh random seed per run (LDA_logic.py:338-349,
     59-67); here the seed is pinned, the k range is explicit, and
@@ -312,7 +310,7 @@ def lda_sweep(
     # calling query.
     def fit_one(k: int) -> tuple[int, list[list[str]]]:
         model = fit_lda(bow_df, k=k, max_iter=max_iter, seed=seed)
-        desc = model.describeTopics(n_terms).collect()
+        desc = model.describeTopics(10).collect()
         return k, [[vocabulary[i] for i in r["termIndices"]] for r in desc]
 
     with ThreadPoolExecutor(max_workers=min(4, max(1, len(ks)))) as pool:

@@ -51,7 +51,7 @@ FEATURE_SCHEMA = (
 )
 
 
-def _decode_stub(content: bytes, kind: str) -> np.ndarray:
+def _decode_stub(content: bytes) -> np.ndarray:
     """STUB decoder — deterministic fake in place of PIL/ffmpeg.
 
     Real deployments replace this one function (e.g.
@@ -66,17 +66,14 @@ def _decode_stub(content: bytes, kind: str) -> np.ndarray:
     return np.array([c.mean() if len(c) else 0.0 for c in chunks], dtype=np.float32)
 
 
-def extract_features(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Decode + featurize via mapInPandas: per-partition Arrow batch
     iterator, one decode call per row, no shuffle, no driver transit."""
     import hashlib
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [
-                _decode_stub(c, k).tolist()
-                for c, k in zip(pdf["content"], pdf["kind"])
-            ]
+            feats = [_decode_stub(c).tolist() for c in pdf["content"]]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -286,57 +283,13 @@ def image_ahash(media: DataFrame) -> DataFrame:
     )
 
 
-def ahash_hamming_pairs(hashes: DataFrame, max_distance: int = 3) -> DataFrame:
-    """Near-dup image pairs by Hamming distance over aHash signatures,
-    via pigeonhole banding: distance ≤ 3 over 4 bands forces at least
-    one band to match exactly, so candidates come from equi-joins on
-    (band index, band value) — never an all-pairs scan — and only
-    candidates pay the popcount verification (qd04's blocking scheme
-    on the media axis)."""
-    bands = hashes.select(
-        "media_id",
-        "hash_hi",
-        "hash_lo",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(k).alias("k"), F.col(f"band{k}").alias("v")
-                )
-                for k in range(4)
-            ])
-        ).alias("b"),
-    ).select("media_id", "hash_hi", "hash_lo", "b.k", "b.v")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.k") == F.col("b.k"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-            F.col("a.hash_hi").alias("ha_hi"),
-            F.col("a.hash_lo").alias("ha_lo"),
-            F.col("b.hash_hi").alias("hb_hi"),
-            F.col("b.hash_lo").alias("hb_lo"),
-        )
-        .distinct()
-    )
-    dist = F.bit_count(
-        F.col("ha_hi").bitwiseXOR(F.col("hb_hi"))
-    ) + F.bit_count(F.col("ha_lo").bitwiseXOR(F.col("hb_lo")))
-    return (
-        cand.select("id_a", "id_b", dist.alias("hamming"))
-        .where(F.col("hamming") <= max_distance)
-        .orderBy("id_a", "id_b")
-    )
+# video_frame_stats' sampling step: qx02's 1000 ms frame grid.
+_FRAME_EVERY_MS = 1000
 
 
-def video_frame_stats(media: DataFrame, every_ms: int = 1000) -> DataFrame:
+def video_frame_stats(media: DataFrame) -> DataFrame:
     """Per-frame luma statistics for scene-cut detection: sample each
-    video on the ``every_ms`` grid, map each sampled timestamp to its
+    video on the ``_FRAME_EVERY_MS`` grid, map each sampled timestamp to its
     proportional byte window of the blob (chunk_audio's uncompressed
     mapping), and emit the window's EXACT integer byte sum + length —
     the sufficient statistics for frame-difference scene-change
@@ -368,11 +321,11 @@ def video_frame_stats(media: DataFrame, every_ms: int = 1000) -> DataFrame:
                 n = len(data)
                 dur = int(dur) if dur is not None else 0
                 arr = np.frombuffer(data, dtype=np.uint8).astype(np.int64)
-                # inclusive sequence(0, max(dur-1,0), every_ms) — qx02's grid
-                for idx, ts in enumerate(range(0, max(dur - 1, 0) + 1, every_ms)):
+                # inclusive sequence(0, max(dur-1,0), _FRAME_EVERY_MS): qx02's grid
+                for idx, ts in enumerate(range(0, max(dur - 1, 0) + 1, _FRAME_EVERY_MS)):
                     if dur > 0:
                         s = ts * n // dur
-                        e = min((ts + every_ms) * n // dur, n)
+                        e = min((ts + _FRAME_EVERY_MS) * n // dur, n)
                     else:
                         s = e = 0
                     rows["media_id"].append(mid)

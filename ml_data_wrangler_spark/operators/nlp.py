@@ -18,7 +18,7 @@ the tests pin down.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -122,10 +122,3 @@ def lemmatized_tokens(documents: DataFrame, text_col: str = "text",
     a pandas UDF (SURVEY.md §4)."""
     return documents.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")) \
                     .select("doc_id", lemmatize(F.col("_t")).alias("tokens"))
-
-
-def remove_stopwords(tokens_col: Column) -> Column:
-    """N3 as a standalone JVM-side filter (for the cheap path)."""
-    return F.filter(
-        tokens_col, lambda t: ~t.isin(*sorted(ENGLISH_STOPWORDS))
-    )

@@ -30,7 +30,7 @@ between the join machinery mattering and not.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
@@ -169,7 +169,6 @@ def ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    max_iter: int = 5,
 ):
     """Fit the IVF structure: (assigned corpus, centroid DataFrame).
 
@@ -189,7 +188,7 @@ def ivf_index(
     Index-build cost knobs: IVF needs centroids good enough to BUCKET,
     not an optimal clustering — nprobe cushions centroid error — so
     the KMeans runs random init (kmeans|| costs several extra
-    distributed passes) and ``max_iter`` defaults to 5: each KMeans
+    distributed passes) and stops after 5 iterations: each KMeans
     iteration is a full pass over the corpus, and measured recall at
     sf0.1 is identical at 5 vs 10 iterations (recall is governed by
     nprobe/n_clusters, not centroid polish — asserted on a clustered
@@ -204,7 +203,7 @@ def ivf_index(
         featuresCol="_features",
         predictionCol="cluster_id",
         initMode="random",
-        maxIter=max_iter,
+        maxIter=5,
     )
     model = km.fit(feat)
     spark = corpus.sparkSession
@@ -356,112 +355,6 @@ def _lsh_candidate_ids(
     return pairs.distinct() if deduplicate else pairs
 
 
-# broadcast ceiling for the candidate-verify vector map: below this,
-# the per-pair vector fetch is two map-side hash probes pipelined into
-# the candidate stage (NO per-pair vector shuffle); above, fall back
-# to width-pinned shuffle-hash joins. The duplicate-heavy tiers make
-# LSH candidates ~dense (94% of all pairs at the 16× fixture — near-
-# identical replicas co-bucket), so shuffling two 512-byte vectors per
-# candidate pair was the dominant cost of the verify.
-_VEC_BROADCAST_BYTES = 128 << 20
-
-# per-row bytes beyond the raw vector payload in a broadcast hash
-# relation: 8-byte id, optional 8-byte hoisted norm, array offsets,
-# UnsafeRow/object headers and the hash-map entry itself. dim·8 alone
-# undercounts the real broadcast severalfold on small dims (round-8
-# ADVICE), flipping the gate exactly where broadcast hurts most.
-_VEC_ROW_OVERHEAD_BYTES = 96
-
-
-def _verify_vectors(
-    cand: DataFrame, vecs: DataFrame, id_col: str, n_vec: int, dim: int
-) -> DataFrame:
-    """Attach both endpoint vector columns (_va, _vb) of ``vecs``
-    (schema: id, _nv[, _n]) to the candidate id pairs — broadcast
-    map-side when the whole vector table (payload + per-row overhead)
-    fits _VEC_BROADCAST_BYTES, else width-pinned shuffle-hash joins
-    (the 100 TB regime). A hoisted per-vector norm column ``_n``,
-    when present, rides along as _na/_nb so the pair kernel never
-    recomputes norms."""
-    from ml_data_wrangler_spark.operators._partition import pin_join_width
-
-    extra_a = [F.col("_n").alias("_na")] if "_n" in vecs.columns else []
-    extra_b = [F.col("_n").alias("_nb")] if "_n" in vecs.columns else []
-    a = vecs.select(
-        F.col(id_col).alias("vec_a"), F.col("_nv").alias("_va"), *extra_a
-    )
-    b = vecs.select(
-        F.col(id_col).alias("vec_b"), F.col("_nv").alias("_vb"), *extra_b
-    )
-    if n_vec * (dim * 8 + _VEC_ROW_OVERHEAD_BYTES) <= _VEC_BROADCAST_BYTES:
-        return cand.join(F.broadcast(a), "vec_a").join(F.broadcast(b), "vec_b")
-    j1 = pin_join_width(cand, "vec_a").join(
-        pin_join_width(a, "vec_a").hint("shuffle_hash"), "vec_a"
-    )
-    return pin_join_width(j1, "vec_b").join(
-        pin_join_width(b, "vec_b").hint("shuffle_hash"), "vec_b"
-    )
-
-
-def lsh_ann_pairs(
-    corpus: DataFrame,
-    distance_threshold: float = 1.0,
-    num_hash_tables: int = 4,
-    bucket_length: float = 2.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    n_vec: int | None = None,
-) -> DataFrame:
-    """Approximate near-neighbor PAIRS on L2-normalized vectors via
-    BucketedRandomProjectionLSH (random hyperplane projections).
-    Euclidean distance d on unit vectors ↔ cosine = 1 - d²/2.
-
-    Same candidates and same exact-distance filter as MLlib's
-    approxSimilarityJoin (the hash model IS MLlib's, seeded), but the
-    candidate join is the compact pinned-width id-pair join of
-    :func:`_lsh_candidate_ids` and the distance evaluates in one
-    pinned vector join — the composition that survived the 16×-tier
-    stage audit (approxSimilarityJoin's internal exchange AQE-folded
-    to 5 tasks; see ROUND_NOTES r08).
-
-    ``n_vec`` sizes the verify join's broadcast gate; pass it when
-    the caller already knows the corpus size to skip the one eager
-    count() job this otherwise pays per call."""
-    from pyspark.ml.functions import vector_to_array
-
-    from ml_data_wrangler_spark.functions.vectors import (
-        infer_dim,
-        unrolled_sqdist,
-    )
-
-    hashed = _lsh_normalized(
-        corpus, num_hash_tables, bucket_length, id_col, vec_col, seed
-    )
-    cand = _lsh_candidate_ids(hashed, id_col)
-    vecs = hashed.select(
-        F.col(id_col), vector_to_array(F.col("_features")).alias("_nv")
-    )
-    # keyDistance = Euclidean² on the normalized features, unrolled to
-    # a compiled expression (the HOF fold burned ~10× the executor
-    # time of MLlib's compiled sqdist on the same pairs; same
-    # ascending fold → identical doubles)
-    dim = infer_dim(corpus, vec_col) or 0
-    sqdist = unrolled_sqdist(F.col("_va"), F.col("_vb"), dim)
-    return (
-        _verify_vectors(
-            cand, vecs, id_col, corpus.count() if n_vec is None else n_vec, dim
-        )
-        .withColumn("_d2", sqdist)
-        .where(F.sqrt(F.col("_d2")) <= distance_threshold)
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(1.0 - F.col("_d2") / 2.0, 6).alias("est_cosine"),
-        )
-    )
-
-
 # tile side length for hot-block decomposition: 2048² ≈ 4.2M score
 # cells per task — about _TILE_CELLS, the fold scorer's own tile
 # bound, so one (ci, cj) tile pair is roughly one chunk of work
@@ -474,7 +367,6 @@ def block_allpairs_cosine(
     sim_threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    row_chunk: int = 4096,
     tile_rows: int | None = None,
 ) -> DataFrame:
     """Exact all-pairs cosine WITHIN each block as one Arrow/numpy
@@ -543,7 +435,7 @@ def block_allpairs_cosine(
         # keeping the strict upper triangle (global row < col)
         nrm_a = _fold_norms(va)
         nrm_b = nrm_a if triangle else _fold_norms(vb)
-        chunk = _tile_rows(row_chunk, len(ids_b))
+        chunk = _tile_rows(4096, len(ids_b))
         out_a, out_b, out_s = [], [], []
         for lo in range(0, len(ids_a), chunk):
             hi = min(lo + chunk, len(ids_a))
@@ -676,8 +568,6 @@ def blocked_cosine_pairs(
 def tiered_cosine_pairs(
     corpus: DataFrame,
     sim_threshold: float = 0.35,
-    num_hash_tables: int = 4,
-    bucket_length: float = 2.0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
@@ -727,9 +617,7 @@ def tiered_cosine_pairs(
     # sharing k buckets is scored k times to the same rounded sim
     # (identical per-dimension fold on identical inputs, tile-
     # invariant), so the distinct below collapses the copies.
-    hashed = _lsh_normalized(
-        corpus, num_hash_tables, bucket_length, id_col, vec_col, seed
-    )
+    hashed = _lsh_normalized(corpus, 4, 2.0, id_col, vec_col, seed)
     bands = hashed.select(
         F.col(id_col),
         F.col(vec_col).alias("_rawv"),
@@ -1109,12 +997,15 @@ def pq_reconstruction_report(
     )
 
 
+# Rows per BLAS product in allpairs_cosine_topk_dense's scan.
+_DENSE_ROW_CHUNK = 128
+
+
 def allpairs_cosine_topk_dense(
     entries: DataFrame,
     dim: int,
     k: int = 20,
     id_col: str = "doc_id",
-    chunk: int = 128,
     max_broadcast_cells: int = 200_000_000,
 ) -> DataFrame:
     """Exact global top-k most-similar pairs over a SMALL dense
@@ -1217,8 +1108,8 @@ def allpairs_cosine_topk_dense(
             for pdf in batches:
                 if pdf.empty:
                     continue
-                for lo in range(0, len(pdf), chunk):
-                    part = pdf.iloc[lo : lo + chunk]
+                for lo in range(0, len(pdf), _DENSE_ROW_CHUNK):
+                    part = pdf.iloc[lo : lo + _DENSE_ROW_CHUNK]
                     c = len(part)
                     a_ids = part["id"].to_numpy()
                     a_nrm = part["nrm"].to_numpy()

@@ -1,21 +1,15 @@
-"""Skew-handling utilities for hot keys at scale.
+"""Skew handling for hot-key aggregation at scale.
 
 AQE's skew-join splitting (on in session.py) handles most skew
 automatically by splitting oversized partitions AFTER a shuffle
-materializes. These utilities are for the cases AQE can't fix:
+materializes. ``salted_aggregate`` is for the case AQE can't fix:
+hot-key aggregation. It pre-aggregates on (key, salt) so the
+map-side combine spreads the hot key over ``n_salts`` reducers, then
+finishes on key. Only valid for decomposable aggregates
+(sum/count/min/max — anything with a merge step).
 
-  * ``salted_join`` — a single key so hot that even a split partition
-    overwhelms one task's build side: salt the big side, replicate the
-    small side per salt, join on (key, salt). Replication factor =
-    ``n_salts`` × |right|, so this is for dimension-sized right sides.
-  * ``salted_aggregate`` — hot-key aggregation: pre-aggregate on
-    (key, salt) so the map-side combine spreads the hot key over
-    ``n_salts`` reducers, then finish on key. Only valid for
-    decomposable aggregates (sum/count/min/max — anything with a
-    merge step).
-
-Both produce results identical to their unsalted duals — the salt only
-changes the physical distribution, never the answer (asserted in
+The result is identical to the unsalted dual — the salt only changes
+the physical distribution, never the answer (asserted in
 tests/test_skew.py).
 """
 
@@ -25,44 +19,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    how: str = "inner",
-    n_salts: int | None = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Equi-join with the LEFT (big, skewed) side salted and the RIGHT
-    (small) side replicated once per salt. Result is identical to
-    ``left.join(right, on, how)``; only the shuffle distribution
-    changes — the hot key's rows land on ``n_salts`` reducers instead
-    of one.
-
-    ``n_salts=None`` sizes the salt adaptively from the join-key
-    cardinality (one distinct-count job):
-    ``adaptive_salt(parallelism, n_keys)`` = ceil(3P/keys), collapsing
-    to 1 — replication off — once natural keys oversubscribe the
-    cores 3× (operators/_partition.py; the hash-balance margin is
-    measured in its docstring).
-
-    ``how`` supports inner/left (the salted-side-preserving joins).
-    """
-    if how not in ("inner", "left", "left_outer"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    spark = left.sparkSession
-    if n_salts is None:
-        from ml_data_wrangler_spark.operators._partition import adaptive_salt
-
-        n_keys = max(1, left.select(*on).distinct().count())
-        n_salts = adaptive_salt(spark.sparkContext.defaultParallelism, n_keys)
-    salt = F.floor(F.rand(seed) * n_salts).cast("int").alias("_salt")
-    l_salted = left.withColumn("_salt", salt)
-    salts = spark.range(n_salts).select(F.col("id").cast("int").alias("_salt"))
-    r_replicated = right.crossJoin(F.broadcast(salts))
-    return l_salted.join(r_replicated, [*on, "_salt"], how).drop("_salt")
 
 
 _MERGE_FNS = {"sum": F.sum, "min": F.min, "max": F.max}

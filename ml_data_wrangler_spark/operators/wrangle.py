@@ -112,14 +112,6 @@ def bind_comments(tickets: DataFrame, comments: DataFrame) -> DataFrame:
     )
 
 
-def tickets_without_comments(tickets: DataFrame, comments: DataFrame) -> DataFrame:
-    """J2 — the reference's per-ticket "no comments found" warning
-    (wrangler.py:385-389) as a left-anti join; callers count/log it."""
-    return tickets.join(
-        comments, tickets["id"] == comments["ticket_id"], "left_anti"
-    ).select("id", "subject")
-
-
 def data_quality_summary(raw_tickets: DataFrame, comments: DataFrame) -> DataFrame:
     """The reference LOGGED its wrangle failures (wrangler.py:448-449:
     invalid statuses, unparseable tickets) and WARNED per ticket with

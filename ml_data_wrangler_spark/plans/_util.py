@@ -156,9 +156,7 @@ def global_row_number(
     return ranked.drop("_gr_pid", "_gr_local", "_gr_cnt", "_gr_offset", "_gr_n")
 
 
-# The same expressions for the DuckDB side, as SQL fragments.
-SQL_MONEY = "CAST({c} AS DECIMAL(12,2))"
+# disc_price for the DuckDB side, as a SQL fragment.
 SQL_DISC_PRICE = (
     "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))"
 )
-SQL_CHARGE = SQL_DISC_PRICE + " * (1 + CAST(l_tax AS DECIMAL(4,2)))"

@@ -293,9 +293,10 @@ def qx06(spark, sf_dir):
     signature pipeline (visual near-dups survive re-encodes that
     break byte-level hashes; qd04 is this mechanism on text, qx06
     puts it on the binary column through the Arrow UDF). The
-    collision count is the candidate-generation fan-in of the banded
-    LSH join (`operators.multimodal.ahash_hamming_pairs`), surfaced
-    per image so the gate pins the blocking arithmetic, not just the
+    collision count is the candidate-generation fan-in a banded
+    Hamming join over the four 16-bit bands would see (pigeonhole:
+    distance ≤ 3 forces one band to match exactly), surfaced per
+    image so the gate pins the blocking arithmetic, not just the
     signature.
 
     ORACLE-CHECKED end to end: the bit rule cell_sum·n > total·len is

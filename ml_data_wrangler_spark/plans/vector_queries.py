@@ -348,8 +348,9 @@ def qv06(spark, sf_dir):
     (cos ≥ 0.28 on the unit sphere — strictly wider than the 0.35
     gate). Measured recall here: 0.974 over 271 true pairs at sf0.01;
     0.7 leaves regeneration margin while a broken hash family (~0
-    recall) always trips. The raw LSH pair stream stays available via
-    operators.similarity.lsh_ann_pairs.
+    recall) always trips. The candidate pairs come from the hashing
+    front operators.similarity.tiered_cosine_pairs also uses
+    (_lsh_normalized → _lsh_candidate_ids).
 
     The exact ground-truth side is NOT an unbounded all-pairs θ-join:
     rows carry an id-block key floor(vec_id/2000) and all-pairs

@@ -46,15 +46,6 @@ COMMENT_SCHEMA = T.StructType(
 )
 COMMENT_FILE_SCHEMA = T.MapType(T.StringType(), T.ArrayType(COMMENT_SCHEMA))
 
-# Reshaped comment struct carried inside a ticket row (wrangler.py:68-89).
-COMMENT_STRUCT = T.StructType(
-    [
-        T.StructField("id", T.LongType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-        T.StructField("body", T.StringType(), True),
-    ]
-)
-
 # Driver-generated testdata tables (FIXTURES.md §2) — parquet carries its
 # own schema; these are the authoritative expected shapes for validation.
 TESTDATA_SCHEMAS: dict[str, T.StructType] = {

@@ -124,86 +124,3 @@ def read_comment_files(spark: SparkSession, comments_dir: str) -> DataFrame:
             F.col("c.plain_body").alias("plain_body"),
         )
     )
-
-
-def _with_corrupt_record(schema: T.StructType) -> T.StructType:
-    # copy — StructType.add mutates in place (see read_tickets)
-    return T.StructType(list(schema.fields)).add("_corrupt_record", "string")
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Generic NDJSON (one object per line) scan with an EXPLICIT
-    schema and corrupt-record capture.
-
-    Explicit schema is non-negotiable at scale: schema inference is a
-    full extra pass over the data before the real read. PERMISSIVE +
-    ``_corrupt_record`` generalizes the ticket reader's discipline to
-    any line-delimited feed — malformed lines become countable rows
-    (`WHERE _corrupt_record IS NOT NULL`), never job aborts.
-
-    NB (Spark restriction): a query whose referenced columns are ONLY
-    ``_corrupt_record`` is rejected on raw JSON/CSV scans
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) — cache or
-    write the parsed frame first when auditing bad rows in isolation.
-    """
-    return (
-        spark.read.schema(_with_corrupt_record(schema))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-    delimiter: str = ",",
-) -> DataFrame:
-    """Generic CSV scan: explicit schema, PERMISSIVE corrupt-record
-    capture, header/delimiter knobs. Same contract as ``read_jsonl``
-    (bad rows land in ``_corrupt_record``)."""
-    return (
-        spark.read.schema(_with_corrupt_record(schema))
-        .option("header", str(header).lower())
-        .option("sep", delimiter)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(path)
-    )
-
-
-def read_text_lines(spark: SparkSession, path: str, line_sep: str | None = None) -> DataFrame:
-    """Raw text corpus scan: one row per line (``value`` string) plus
-    the originating file path — the entry format for web-crawl /
-    log-file corpora before any parsing. Splittable for uncompressed
-    files; a custom ``line_sep`` handles record-separated dumps
-    (e.g. ``\\x1e``-delimited WARC-ish extracts)."""
-    reader = spark.read
-    if line_sep is not None:
-        reader = reader.option("lineSep", line_sep)
-    return reader.text(path).withColumn("file", F.input_file_name())
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same vectorized-read + pushdown discipline as
-    parquet (ORC is the other columnar at-rest format Spark reads
-    natively; some lakehouses standardize on it)."""
-    return spark.read.orc(path)
-
-
-def read_parquet_evolving(spark: SparkSession, *paths: str) -> DataFrame:
-    """Scan parquet written across SCHEMA GENERATIONS (columns added
-    over time) as one DataFrame: ``mergeSchema`` unions the footers'
-    schemas and rows from older files surface NULL for columns they
-    predate — the standard contract for a long-lived corpus directory
-    that gained columns (e.g. a quality score added in month 3).
-
-    mergeSchema costs a footer read per file at planning time (not a
-    data pass), so it's fine at 100 TB file counts; pin a literal
-    schema once the layout stabilizes to skip even that. Column
-    RENAMES or type changes are NOT reconciled — that's a rewrite,
-    not evolution, and the reader will surface both columns.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(*paths)

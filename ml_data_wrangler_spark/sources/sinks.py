@@ -44,84 +44,21 @@ def processed_ticket_projection(wrangled: DataFrame) -> DataFrame:
     )
 
 
-def write_processed_tickets_json(
-    wrangled: DataFrame, out_dir: str, run_date: str, mode: str = "overwrite"
-) -> str:
+def write_processed_tickets_json(wrangled: DataFrame, out_dir: str, run_date: str) -> str:
     """K1 — processed tickets (wrangler.py:226-270). Distributed JSON
     write (one file per partition; at scale you never want the
     reference's single driver-side json.dump)."""
     path = f"{out_dir}/processed_tickets{run_date}.json"
-    processed_ticket_projection(wrangled).write.mode(mode).json(path)
+    processed_ticket_projection(wrangled).write.mode("overwrite").json(path)
     return path
 
 
-def write_corpus_json(corpus: DataFrame, out_dir: str, run_date: str, mode: str = "overwrite") -> str:
+def write_corpus_json(corpus: DataFrame, out_dir: str, run_date: str) -> str:
     """K2 — corpus sink (wrangler.py:272-278), one row per document
     (SURVEY.md §7.4.6: never a single driver-side string)."""
     path = f"{out_dir}/corpus_{run_date}.json"
-    corpus.write.mode(mode).json(path)
+    corpus.write.mode("overwrite").json(path)
     return path
-
-
-def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    files_per_partition: int = 1,
-    mode: str = "overwrite",
-) -> str:
-    """Hive-partitioned parquet sink with SMALL-FILE control.
-
-    A plain ``df.write.partitionBy(cols)`` emits one file per
-    (task, partition-value) combination: with P tasks and V partition
-    values that is up to P×V files — at 100 TB the classic
-    "millions of tiny parquet files" failure that makes every
-    downstream listing and scan crawl. Repartitioning by the partition
-    columns FIRST routes each value's rows to ``files_per_partition``
-    tasks (a salt spreads one value over several writers when its
-    volume warrants more than one file), so the layout is exactly
-    V × files_per_partition files regardless of upstream parallelism.
-
-    Partition values become directory keys (``col=value/``), so
-    partition PRUNING — the scan-time dual of this sink — works for
-    every reader (Spark, DuckDB, Hive, Trino).
-    """
-    if files_per_partition < 1:
-        raise ValueError(f"files_per_partition must be >= 1: {files_per_partition}")
-    keys = [F.col(c) for c in partition_cols]
-    if files_per_partition == 1:
-        routed = df.repartition(*keys)
-    else:
-        salt = (F.rand(seed=42) * files_per_partition).cast("int")
-        # explicit partition count: AQE would otherwise coalesce the
-        # salted groups right back into one task. Each partition-value
-        # contributes at most files_per_partition distinct (value,
-        # salt) keys, so its file count stays bounded no matter how
-        # many shuffle partitions exist; the ×97 multiplier just makes
-        # same-partition hash collisions between salts rare.
-        routed = (
-            df.withColumn("_salt", salt)
-            .repartition(files_per_partition * 97, *keys, F.col("_salt"))
-            .drop("_salt")
-        )
-    routed.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-    return path
-
-
-def write_orc(
-    df: DataFrame,
-    out_dir: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> str:
-    """ORC sink with optional hive-style partitioning — the columnar
-    alternative when the downstream stack (Hive/Trino/Presto) prefers
-    ORC over parquet. Same pushdown/pruning behavior on re-read."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(out_dir)
-    return out_dir
 
 
 def write_corpus_shards_with_manifest(
@@ -129,7 +66,6 @@ def write_corpus_shards_with_manifest(
     out_dir: str,
     id_col: str,
     n_shards: int,
-    mode: str = "overwrite",
 ) -> DataFrame:
     """Training-corpus delivery sink: deal rows into ``n_shards``
     content-addressed shards (md5 of the id — identical assignment on
@@ -166,7 +102,7 @@ def write_corpus_shards_with_manifest(
     routed.persist()
     try:
         (
-            routed.write.mode(mode)
+            routed.write.mode("overwrite")
             .partitionBy("shard")
             .option("compression", "gzip")
             .json(out_dir)

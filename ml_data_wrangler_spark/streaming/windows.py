@@ -1,7 +1,7 @@
 """Structured Streaming operators over event streams.
 
 The reference has no streams (SURVEY.md §1.2) — this is north-star
-surface: tumbling/sliding/session windows with event-time watermarks,
+surface: tumbling/session windows with event-time watermarks,
 built so the BATCH queries in plans/events_queries.py are the exact
 duals (same window semantics, same aggregates). tests/test_streaming.py
 asserts streaming-over-the-parquet-fixture == the batch query.
@@ -75,24 +75,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    size: str = "2 hours",
-    slide: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding event-time window (each event in size/slide windows)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", size, slide).alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("total_value"),
-        )
-        .select(F.col("w.start").alias("win_start"), "n_events", "total_value")
-    )
-
-
 def session_counts(
     events: DataFrame,
     gap: str = "30 minutes",
@@ -118,8 +100,6 @@ def enrich_with_dimension(
     dim: DataFrame,
     stream_key: str,
     dim_key: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
     segment_col: str = "c_mktsegment",
 ) -> DataFrame:
     """Stream–static enrichment: join the event stream against a
@@ -139,8 +119,8 @@ def enrich_with_dimension(
         "inner",
     )
     return (
-        joined.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col(segment_col).alias("segment"))
+        joined.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), F.col(segment_col).alias("segment"))
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("total_value"),
@@ -189,68 +169,60 @@ def dedup_events(
     return wm.dropDuplicatesWithinWatermark(key_cols)
 
 
-def stream_stream_interval_join(
-    events: DataFrame,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    horizon: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream–stream INNER interval join: match every ``left_type``
-    event to the ``right_type`` events of the same user that follow it
-    within ``horizon`` (click → purchase attribution, the canonical
-    stream-stream shape).
+def _click_purchase_join(events: DataFrame, how: str) -> DataFrame:
+    """Each click joined to the same user's purchases that follow it
+    within one hour (click → purchase attribution, the canonical
+    stream-stream shape); both sides watermarked at 2 hours.
 
-    Both sides carry watermarks and the join condition bounds event
-    time on BOTH columns, so Spark derives a state-eviction horizon:
-    a click older than (watermark + horizon) can never match a future
-    purchase and its state is dropped. Without the time-range
-    condition the state store would grow with the full stream — the
-    difference between bounded state and an OOM at 100 TB/day.
+    The join condition bounds event time on BOTH columns, so Spark
+    derives a state-eviction horizon: a click older than (watermark +
+    1 hour) can never match a future purchase and its state is
+    dropped. Without the time-range condition the state store would
+    grow with the full stream — the difference between bounded state
+    and an OOM at 100 TB/day.
 
     Self-joining one source stream is fine: each side filters its own
-    event type, and the join shuffles both on user_id.
-    """
+    event type, and the join shuffles both on user_id."""
     left = (
-        events.where(F.col("event_type") == left_type)
+        events.where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("l_user"),
             F.col("ts").alias("l_ts"),
             F.col("event_id").alias("left_id"),
         )
-        .withWatermark("l_ts", watermark)
+        .withWatermark("l_ts", "2 hours")
     )
     right = (
-        events.where(F.col("event_type") == right_type)
+        events.where(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("user_id"),
             F.col("ts").alias("r_ts"),
             F.col("event_id").alias("right_id"),
         )
-        .withWatermark("r_ts", watermark)
+        .withWatermark("r_ts", "2 hours")
     )
     return left.join(
         right,
         (F.col("l_user") == F.col("user_id"))
-        & (F.col("l_ts") >= F.col("r_ts") - F.expr(f"INTERVAL {horizon}"))
+        & (F.col("l_ts") >= F.col("r_ts") - F.expr("INTERVAL 1 hour"))
         & (F.col("l_ts") < F.col("r_ts")),
-        "inner",
-    ).select("left_id", "right_id", "user_id")
+        how,
+    )
 
 
-def stage_ordered_batches(
-    events: DataFrame,
-    stage_dir: str,
-    straggler_mod: int = 10,
-    fresh_hours: int = 6,
-) -> str:
+def stream_stream_interval_join(events: DataFrame) -> DataFrame:
+    """Stream–stream INNER interval join (``_click_purchase_join``)."""
+    return _click_purchase_join(events, "inner").select("left_id", "right_id", "user_id")
+
+
+def stage_ordered_batches(events: DataFrame, stage_dir: str) -> str:
     """Stage a bounded events DataFrame as a THREE-file streaming
-    source with controlled arrival order. With C = max(ts) − fresh_hours:
+    source with controlled arrival order. With C = max(ts) − 6 hours:
 
-      file 0 — bulk on-time history   (ts <= C, event_id % mod != 0);
+      file 0 — bulk on-time history   (ts <= C, event_id % 10 != 0);
       file 1 — the freshest slice     (ts >  C, all ids) — arriving
                second, it advances the watermark past the history;
-      file 2 — the stragglers         (ts <= C, event_id % mod == 0),
+      file 2 — the stragglers         (ts <= C, event_id % 10 == 0),
                spread over the whole historical range, so they arrive
                far below the watermark file 0 established.
 
@@ -258,7 +230,7 @@ def stage_ordered_batches(
     (SPARK-42376): the late-event filter of micro-batch N runs one
     watermark value BEHIND eviction, so a two-batch run can never
     observe lateness. The fresh slice also guarantees the final
-    watermark W2 = max(ts) − delay sits ``fresh_hours`` ABOVE the
+    watermark W2 = max(ts) − delay sits 6 hours ABOVE the
     first-batch watermark Wa = max(file-0 ts) − delay, making the
     deterministic gate band (Wa, W2] non-empty (see
     tumbling_counts_append's determinism caveat). FileStreamSource
@@ -278,9 +250,9 @@ def stage_ordered_batches(
     shutil.rmtree(stage_dir, ignore_errors=True)
     os.makedirs(src)
     cutoff = events.agg(
-        (F.max("ts") - F.expr(f"INTERVAL {fresh_hours} HOURS")).alias("c")
+        (F.max("ts") - F.expr("INTERVAL 6 HOURS")).alias("c")
     ).first()["c"]
-    m = F.col("event_id") % straggler_mod
+    m = F.col("event_id") % 10
     parts = (
         events.where((F.col("ts") <= F.lit(cutoff)) & (m != 0)),
         events.where(F.col("ts") > F.lit(cutoff)),
@@ -298,12 +270,7 @@ def stage_ordered_batches(
     return src
 
 
-def tumbling_counts_append(
-    spark: SparkSession,
-    src_dir: str,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def tumbling_counts_append(spark: SparkSession, src_dir: str) -> DataFrame:
     """Tumbling-window aggregation over the staged multi-batch source
     in APPEND mode — the mode where watermarks have observable
     semantics: earlier batches advance the watermark, a later batch's
@@ -331,8 +298,8 @@ def tumbling_counts_append(
         .parquet(src_dir)
     )
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        stream.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(12,2)"))
@@ -349,17 +316,11 @@ def tumbling_counts_append(
     return run_to_memory(agg, "qs09_sink", output_mode="append")
 
 
-def stream_stream_left_outer_join(
-    events: DataFrame,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    horizon: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def stream_stream_left_outer_join(events: DataFrame) -> DataFrame:
     """Stream–stream LEFT OUTER interval join: like
     stream_stream_interval_join but unmatched left rows ARE part of
     the result — emitted null-padded only once the watermark passes
-    l_ts + horizon and no future right row can possibly match. That
+    l_ts + 1 hour and no future right row can possibly match. That
     deferred emission is the semantics that makes outer results
     correct under unbounded input (emit too early and a late match
     contradicts the null row), and it is why outer rows appear only
@@ -367,31 +328,9 @@ def stream_stream_left_outer_join(
 
     State bound is identical to the inner case: both sides
     watermarked, join condition bounds event time on both columns."""
-    left = (
-        events.where(F.col("event_type") == left_type)
-        .select(
-            F.col("user_id").alias("l_user"),
-            F.col("ts").alias("l_ts"),
-            F.col("event_id").alias("left_id"),
-        )
-        .withWatermark("l_ts", watermark)
+    return _click_purchase_join(events, "leftOuter").select(
+        "left_id", "right_id", F.col("l_user").alias("user_id"), "l_ts"
     )
-    right = (
-        events.where(F.col("event_type") == right_type)
-        .select(
-            F.col("user_id").alias("user_id"),
-            F.col("ts").alias("r_ts"),
-            F.col("event_id").alias("right_id"),
-        )
-        .withWatermark("r_ts", watermark)
-    )
-    return left.join(
-        right,
-        (F.col("l_user") == F.col("user_id"))
-        & (F.col("l_ts") >= F.col("r_ts") - F.expr(f"INTERVAL {horizon}"))
-        & (F.col("l_ts") < F.col("r_ts")),
-        "leftOuter",
-    ).select("left_id", "right_id", F.col("l_user").alias("user_id"), "l_ts")
 
 
 def foreach_batch_merge_state(

@@ -1,4 +1,4 @@
-"""Round-7's parallelism fixes must DEACTIVATE in the wide regime —
+"""Round-7's parallelism fix must DEACTIVATE in the wide regime —
 asserted on REAL multi-split scale data, not just unit fixtures
 (round-7 verdict item 2).
 
@@ -7,16 +7,10 @@ The step-up tier (.scale/docs16x, scripts/make_scale_data.py 16
 embeddings as 16-file directories, so their scans arrive ≥ cores wide
 (Spark bin-packs the files to ``bytesPerCore``; a forced-small
 ``maxPartitionBytes`` makes them strictly exceed the cores — the
-100 TB shape). In that regime:
-
-  * ``ensure_parallelism`` must be a no-op on the scans (the same
-    helper that widens a 1-split sf0.1 scan — an unconditional
-    repartition here would COALESCE the multi-split scan and pay an
-    extra full shuffle);
-  * the adaptive join salt (sizing skew.salted_join's n_salts=None
-    path) must collapse to 1 on the tier's real key cardinalities —
-    b-side replication must vanish exactly when natural keys
-    oversubscribe the cores 3×.
+100 TB shape). In that regime ``ensure_parallelism`` must be a no-op
+on the scans (the same helper that widens a 1-split sf0.1 scan — an
+unconditional repartition here would COALESCE the multi-split scan and
+pay an extra full shuffle).
 
 Skips when the step-up tier hasn't been generated (it is
 .gitignore'd build output, ~17 MB)."""
@@ -26,8 +20,6 @@ from __future__ import annotations
 import os
 
 import pytest
-
-from pyspark.sql import functions as F
 
 DOCS16X = "/root/repo/.scale/docs16x"
 
@@ -83,69 +75,3 @@ def test_ensure_parallelism_noops_on_multisplit_scan(scale_spark):
         assert ensure_parallelism(df) is df
     finally:
         scale_spark.conf.set("spark.sql.files.maxPartitionBytes", before)
-
-
-def test_adaptive_salt_contract():
-    """ceil(3P/keys) floored at 1: few keys get heavy salt, the salt
-    shrinks as keys grow, and it collapses to EXACTLY 1 — replication
-    vanishing — once natural keys oversubscribe cores 3× (the hash-
-    balance margin: n keys into n partitions leave ~1/e empty and
-    stack quadratic keys; measured 16×: qv06's 16 keys at salt 1
-    occupied 5-9 of 16 partitions, max task 3.2× the mean)."""
-    from ml_data_wrangler_spark.operators._partition import adaptive_salt
-
-    assert adaptive_salt(16, 1) == 48      # one hot key: full fan-out
-    assert adaptive_salt(16, 6) == 8       # the 6× tier regime
-    assert adaptive_salt(16, 16) == 3      # keys == cores still salts
-    assert adaptive_salt(16, 47) == 2
-    assert adaptive_salt(16, 48) == 1      # 3× oversubscribed → off
-    assert adaptive_salt(16, 1_000_000) == 1  # cluster scale → off
-    assert adaptive_salt(10_000, 40_000) == 1
-
-
-def test_salted_join_adaptive_sizing_deactivates_on_real_counts(scale_spark):
-    """skew.salted_join(n_salts=None) sizes its salt with
-    adaptive_salt from the REAL join-key cardinality. At the step-up
-    tier's id-block cardinality (ceil(32000/2000) = 16 keys) the salt
-    must vanish once natural keys oversubscribe the cores 3×, and the
-    sf0.1 regime (1 key) must salt harder — asserted on the actual
-    table counts, both directions. (qv04/qv06's similarity scoring
-    moved off salted self-joins entirely in round 8 — one GEMM per
-    id-block via applyInPandas needs no shuffle-balance machinery —
-    so the salt's production call site is the general skew join.)"""
-    from ml_data_wrangler_spark.operators._partition import adaptive_salt
-    from ml_data_wrangler_spark.sources.readers import read_table
-
-    emb = read_table(scale_spark, DOCS16X, "embeddings")
-    par = scale_spark.sparkContext.defaultParallelism
-    n_subs = max(1, -(-emb.count() // 2000))
-    assert n_subs >= par, f"tier invariant broken: {n_subs} subs < {par} cores"
-    # at 3×-oversubscribed core counts the salt is off on this data
-    assert adaptive_salt(n_subs // 3, n_subs) == 1
-    # at this box's core count the 16 keys still get balance salt ≥ 1
-    assert adaptive_salt(par, n_subs) >= 1
-    # and the sf0.1 regime salts harder (the other direction, real data)
-    emb_small = read_table(scale_spark, "/root/testdata/sf0.1", "embeddings")
-    n_small = max(1, -(-emb_small.count() // 2000))
-    assert adaptive_salt(par, n_small) > adaptive_salt(par, n_subs)
-
-
-def test_salted_join_adaptive_default_matches_explicit(scale_spark):
-    """salted_join(n_salts=None) must produce the same ROWS as the
-    unsalted join on real scale data (the salt is distribution-only),
-    wiring adaptive_salt's sizing into the production call site."""
-    from ml_data_wrangler_spark.operators.skew import salted_join
-    from ml_data_wrangler_spark.sources.readers import read_table
-
-    emb = read_table(scale_spark, DOCS16X, "embeddings").select(
-        "vec_id", (F.col("vec_id") % 16).alias("k")
-    )
-    dim = (
-        read_table(scale_spark, DOCS16X, "embeddings")
-        .select((F.col("vec_id") % 16).alias("k"))
-        .distinct()
-        .select("k", (F.col("k") * 10).alias("v"))
-    )
-    got = salted_join(emb, dim, ["k"], n_salts=None).groupBy().sum("v").collect()
-    want = emb.join(dim, "k").groupBy().sum("v").collect()
-    assert got == want

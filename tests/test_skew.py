@@ -1,11 +1,11 @@
-"""Salting utilities: salted results must be IDENTICAL to the unsalted
-duals (the salt may only change physical distribution)."""
+"""Salted aggregation: results must be IDENTICAL to the unsalted dual
+(the salt may only change physical distribution)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ml_data_wrangler_spark.operators.skew import salted_aggregate, salted_join
+from ml_data_wrangler_spark.operators.skew import salted_aggregate
 
 
 def _skewed(spark):
@@ -17,22 +17,6 @@ def _skewed(spark):
         (F.col("id") + 2).alias("k"), F.col("id").cast("double").alias("v")
     )
     return hot.unionByName(tail)
-
-
-def test_salted_join_equals_plain(spark):
-    left = _skewed(spark)
-    right = spark.range(500).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("w")
-    )
-    plain = left.join(right, ["k"], "inner")
-    salted = salted_join(left, right, ["k"], "inner", n_salts=8)
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-    # left join keeps unmatched left rows exactly once
-    plain_l = left.join(right.where("k < 3"), ["k"], "left")
-    salted_l = salted_join(left, right.where("k < 3"), ["k"], "left", n_salts=8)
-    assert sorted(
-        map(tuple, salted_l.fillna(-1).collect())
-    ) == sorted(map(tuple, plain_l.fillna(-1).collect()))
 
 
 def test_salted_aggregate_equals_plain(spark):

@@ -1,5 +1,5 @@
-"""Generic source/sink round-trips: partitioned parquet layout control
-and schema-first JSONL/CSV scans with corrupt-record capture."""
+"""Source/sink round-trips: read_table's events timestamp layouts and
+the corpus-shard sink's manifest."""
 
 from __future__ import annotations
 
@@ -7,111 +7,7 @@ import glob
 import os
 
 import pytest
-from pyspark.sql import Row
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ml_data_wrangler_spark.sources.readers import read_csv, read_jsonl
-from ml_data_wrangler_spark.sources.sinks import write_partitioned_parquet
-
-
-def test_partitioned_parquet_layout_and_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame(
-        [Row(k="a" if i % 2 == 0 else "b", v=i) for i in range(100)]
-    ).repartition(16)  # deliberately over-parallel input
-    out = str(tmp_path / "out")
-    write_partitioned_parquet(df, out, ["k"], files_per_partition=1)
-    # exactly one data file per partition value, hive-style dirs
-    for k in ("a", "b"):
-        files = [
-            f for f in glob.glob(os.path.join(out, f"k={k}", "*"))
-            if f.endswith(".parquet")
-        ]
-        assert len(files) == 1, files
-    back = spark.read.parquet(out)
-    assert back.count() == 100
-    assert {tuple(sorted(r.asDict().items())) for r in back.collect()} == {
-        tuple(sorted(r.asDict().items())) for r in df.collect()
-    }
-
-
-def test_partitioned_parquet_multi_file(spark, tmp_path):
-    df = spark.createDataFrame([Row(k="a", v=i) for i in range(1000)])
-    out = str(tmp_path / "out")
-    write_partitioned_parquet(df, out, ["k"], files_per_partition=4)
-    files = [
-        f for f in glob.glob(os.path.join(out, "k=a", "*"))
-        if f.endswith(".parquet")
-    ]
-    assert 2 <= len(files) <= 4  # salted across up to 4 writers
-    assert spark.read.parquet(out).count() == 1000
-    with pytest.raises(ValueError):
-        write_partitioned_parquet(df, out, ["k"], files_per_partition=0)
-
-
-SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("name", T.StringType()),
-    ]
-)
-
-
-def test_read_jsonl_captures_corrupt_lines(spark, tmp_path):
-    p = tmp_path / "feed.jsonl"
-    p.write_text('{"id": 1, "name": "ok"}\n{{{not json\n{"id": 2, "name": "also"}\n')
-    df = read_jsonl(spark, str(p), SCHEMA).cache()  # see reader docstring
-    good = df.where(F.col("_corrupt_record").isNull())
-    bad = df.where(F.col("_corrupt_record").isNotNull())
-    assert {r["id"] for r in good.collect()} == {1, 2}
-    assert bad.count() == 1
-
-
-def test_read_csv_captures_corrupt_rows(spark, tmp_path):
-    p = tmp_path / "feed.csv"
-    p.write_text("id,name\n1,ok\nnot_a_number,x\n2,also\n")
-    df = read_csv(spark, str(p), SCHEMA).cache()  # see reader docstring
-    good = df.where(F.col("_corrupt_record").isNull())
-    bad = df.where(F.col("_corrupt_record").isNotNull())
-    assert {r["id"] for r in good.collect()} == {1, 2}
-    assert bad.count() == 1
-
-
-def test_read_csv_delimiter_and_headerless(spark, tmp_path):
-    p = tmp_path / "feed.tsv"
-    p.write_text("5\tfive\n6\tsix\n")
-    df = read_csv(spark, str(p), SCHEMA, header=False, delimiter="\t")
-    assert {(r["id"], r["name"]) for r in df.collect()} == {(5, "five"), (6, "six")}
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    from ml_data_wrangler_spark.sources.readers import read_orc
-    from ml_data_wrangler_spark.sources.sinks import write_orc
-
-    df = spark.createDataFrame(
-        [Row(k="a" if i % 2 == 0 else "b", v=i, s=f"x{i}") for i in range(100)]
-    )
-    out = str(tmp_path / "orc")
-    write_orc(df, out, partition_by=["k"])
-    back = read_orc(spark, out)
-    assert back.count() == 100
-    got = back.where((F.col("k") == "a") & (F.col("v") < 10)).select("v")
-    assert sorted(r["v"] for r in got.collect()) == [0, 2, 4, 6, 8]
-    # partition pruning: only the k=a directory is scanned
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(k" in plan, plan
-
-
-def test_text_lines_reader(spark, tmp_path):
-    from ml_data_wrangler_spark.sources.readers import read_text_lines
-
-    p = tmp_path / "corpus.txt"
-    p.write_text("alpha\nbeta\ngamma\n")
-    df = read_text_lines(spark, str(p))
-    assert [r["value"] for r in df.orderBy("value").collect()] == [
-        "alpha", "beta", "gamma",
-    ]
-    assert all(r["file"].endswith("corpus.txt") for r in df.collect())
 
 
 def test_read_table_normalizes_both_events_ts_layouts(spark, tmp_path):
@@ -158,24 +54,6 @@ def test_read_table_normalizes_both_events_ts_layouts(spark, tmp_path):
             [r["ts"] for r in df.orderBy("event_id").select("ts").collect()]
         )
     assert results[0] == results[1] == ts_vals
-
-
-def test_read_parquet_evolving_merges_schema_generations(spark, tmp_path):
-    from ml_data_wrangler_spark.sources.readers import read_parquet_evolving
-
-    gen1 = spark.createDataFrame(
-        [Row(doc_id=1, text="old row")],
-    )
-    gen2 = spark.createDataFrame(
-        [Row(doc_id=2, text="new row", quality=0.9)],
-    )
-    gen1.write.parquet(str(tmp_path / "d" / "gen=1"))
-    gen2.write.parquet(str(tmp_path / "d" / "gen=2"))
-    df = read_parquet_evolving(spark, str(tmp_path / "d"))
-    assert "quality" in df.columns
-    rows = {r["doc_id"]: r for r in df.collect()}
-    assert rows[1]["quality"] is None  # pre-evolution rows NULL-fill
-    assert rows[2]["quality"] == 0.9
 
 
 def test_corpus_shards_manifest_matches_written_data(spark, tmp_path):

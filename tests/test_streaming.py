@@ -12,7 +12,6 @@ from ml_data_wrangler_spark.streaming.windows import (
     read_events_stream,
     run_to_memory,
     session_counts,
-    sliding_counts,
     tumbling_counts,
 )
 
@@ -26,14 +25,6 @@ def test_tumbling_equals_batch(spark, sf_dir):
     out = run_to_memory(tumbling_counts(stream), "t_tumble", "complete")
     batch = queries()["qe01_hourly_by_type"](spark, sf_dir)
     cols = ["win_start", "event_type", "n_events", "total_value"]
-    assert _rows(out, cols) == _rows(batch, cols)
-
-
-def test_sliding_equals_batch(spark, sf_dir):
-    stream = read_events_stream(spark, sf_dir)
-    out = run_to_memory(sliding_counts(stream), "t_slide", "complete")
-    batch = queries()["qe05_sliding_window"](spark, sf_dir)
-    cols = ["win_start", "n_events", "total_value"]
     assert _rows(out, cols) == _rows(batch, cols)
 
 

@@ -238,7 +238,9 @@ def test_lda_sweep_jobs_keep_caller_job_group(spark, documents, jobs_in):
     _, jobs = jobs_in(lambda: lda_sweep(bow, toks, model.vocabulary, range(2, 5),
                                         max_iter=3, seed=1))
     assert jobs > 0
-    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    # no NEW ungrouped job; old ones may drop out of the tracker, which
+    # keeps only the last spark.ui.retainedJobs jobs of the session
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
 def test_validate_lda_params_bounds():

@@ -15,7 +15,6 @@ from ml_data_wrangler_spark.operators.wrangle import (
     create_corpus,
     data_quality_summary,
     reshape_tickets,
-    tickets_without_comments,
     wrangle,
 )
 from ml_data_wrangler_spark.sources.readers import read_comment_files, read_tickets
@@ -127,14 +126,6 @@ def test_bind_comments_all_tickets(wrangled):
     assert len(by_id[202]["comments"]) == 2
     # 303: no comment file → only the synthetic first comment
     assert len(by_id[303]["comments"]) == 1
-
-
-def test_left_anti_warning_path(spark, fixture_paths):
-    tickets_path, comments_dir = fixture_paths
-    tickets = reshape_tickets(read_tickets(spark, tickets_path))
-    comments = read_comment_files(spark, comments_dir)
-    missing = tickets_without_comments(tickets, comments).collect()
-    assert [r["id"] for r in missing] == [303]
 
 
 def test_data_quality_summary_counts(spark, fixture_paths):
