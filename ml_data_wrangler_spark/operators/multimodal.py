@@ -24,27 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.LongType(), True),
-                    T.StructField("format", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes long, content_hash string, "
     "feature array<float>"

@@ -11,6 +11,7 @@ from ml_data_wrangler_spark.operators.lda import fit_lda, lda_sweep, topics_df
 from ml_data_wrangler_spark.functions.text import tokenize
 from ml_data_wrangler_spark.operators.nlp import lemmatized_tokens
 from ml_data_wrangler_spark.operators.vectorize import (
+    tfidf,
     tokens_df,
     vectorize,
     vocabulary_df,
@@ -37,9 +38,9 @@ LIMIT 5000
 def qm01(spark, sf_dir):
     """A2 — document-frequency vocabulary pruning (gensim
     filter_extremes semantics: no_below=5, no_above=0.5, keep_n=5000)
-    as a declarative job; tests assert CountVectorizer keeps the same
-    set."""
-    return vocabulary_df(t(spark, sf_dir, "documents"))
+    as a declarative job; the LDA vectorizer (fit_vectorizer) is built
+    from this same vocabulary, in this order."""
+    return vocabulary_df(tokens_df(t(spark, sf_dir, "documents")))
 
 
 @query(
@@ -55,9 +56,9 @@ GROUP BY doc_id, token
 def qm02(spark, sf_dir):
     """A3 — bag-of-words (doc2bow analog) in relational form:
     (doc_id, token, count) restricted to the pruned vocabulary."""
-    docs = t(spark, sf_dir, "documents")
-    vocab = vocabulary_df(docs).select("token")
-    dt = tokens_df(docs).select("doc_id", F.explode("tokens").alias("token"))
+    toks = tokens_df(t(spark, sf_dir, "documents"))
+    vocab = vocabulary_df(toks).select("token")
+    dt = toks.select("doc_id", F.explode("tokens").alias("token"))
     return (
         dt.join(F.broadcast(vocab), "token", "left_semi")
         .groupBy("doc_id", "token")
@@ -72,9 +73,7 @@ def qm03(spark, sf_dir):
     # fixture-suited pruning: the synthetic corpus has ~31 tokens, 30
     # with df>50% — reference defaults would leave a 1-term vocabulary
     # (SURVEY defaults remain the API defaults; see tests)
-    model, bow = vectorize(
-        t(spark, sf_dir, "documents"), min_df=2.0, max_df=1 << 30
-    )
+    model, bow = vectorize(t(spark, sf_dir, "documents"), min_df=2.0, max_df=1.0)
     lda_model = fit_lda(bow, k=5, max_iter=10, seed=42)
     return topics_df(lda_model, model.vocabulary, n_terms=5)
 
@@ -84,7 +83,7 @@ def qm04(spark, sf_dir):
     """M3 — coherence sweep k∈[2,5]: per k one distributed LDA fit +
     exact UMass coherence from corpus co-occurrence counts."""
     docs = t(spark, sf_dir, "documents")
-    model, bow = vectorize(docs, min_df=2.0, max_df=1 << 30)
+    model, bow = vectorize(docs, min_df=2.0, max_df=1.0)
     toks = tokens_df(docs)
     return lda_sweep(bow, toks, model.vocabulary, range(2, 6), max_iter=5, seed=42)
 
@@ -96,7 +95,7 @@ def qm07(spark, sf_dir):
     cosine, computed as a distributed window-co-occurrence job
     (operators/lda.cv_coherence)."""
     docs = t(spark, sf_dir, "documents")
-    model, bow = vectorize(docs, min_df=2.0, max_df=1 << 30)
+    model, bow = vectorize(docs, min_df=2.0, max_df=1.0)
     toks = tokens_df(docs)
     return lda_sweep(
         bow, toks, model.vocabulary, range(2, 5), max_iter=5, seed=42,
@@ -230,9 +229,9 @@ def qm08(spark, sf_dir):
     frequencies from the same counts, ln(N/df) weighting, top-3 terms
     per doc under a (rounded weight, token) total order. The
     vocabulary-sized df table broadcasts; nothing re-tokenizes."""
-    from ml_data_wrangler_spark.operators.vectorize import tfidf
-
-    return tfidf(t(spark, sf_dir, "documents"), top_n=3)
+    return tfidf(t(spark, sf_dir, "documents"), top_n=3).select(
+        "doc_id", "token", "tf", "weight", "rank"
+    )
 
 
 # qm09 physical-strategy knobs (module-level so tests can monkeypatch
@@ -552,14 +551,6 @@ def qm09(spark, sf_dir):
         allpairs_cosine_topk_dense,
     )
 
-    tok = t(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(tokenize(F.col("text"))).alias("token")
-    )
-    tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    dfc = tf.groupBy("token").agg(F.count("*").alias("df"))
-    n = t(spark, sf_dir, "documents").agg(
-        F.countDistinct("doc_id").alias("n_docs")
-    )
     # integer microunit weights: wt = round(tf·ln(N/df), 6) is a 1e-6
     # multiple, so wu = round(wt·1e6) is an exact int64 — every
     # downstream Σ wu·wu (norms) and Σ wu_a·wu_b (dots) is then
@@ -568,27 +559,12 @@ def qm09(spark, sf_dir):
     # dim · max_wu² must stay « 2^53 for the GEMM path's float64
     # products to be exact — pinned at the fixture tiers by
     # tests/test_qm09_dense.py::test_microunit_exactness_bound.
-    w = (
-        tf.crossJoin(F.broadcast(n))
-        .join(F.broadcast(dfc), "token")
-        .select(
-            "doc_id",
-            "token",
-            "df",
-            F.round(
-                F.round(
-                    F.col("tf")
-                    * F.log(F.col("n_docs").cast("double") / F.col("df")),
-                    6,
-                )
-                * 1e6
-            )
-            .cast("long")
-            .alias("wu"),
-        )
+    docs = t(spark, sf_dir, "documents")
+    w = tfidf(docs).select(
+        "doc_id", "token", "df", F.round(F.col("weight") * 1e6).cast("long").alias("wu")
     )
     # dispatch scalar: the pruned vocab width (one model-sized
-    # aggregate job at plan-construction time). The cell cap no
+    # aggregate query at plan-construction time). The cell cap no
     # longer gates the dispatch — the GEMM operator block-partitions
     # itself above it (per-block broadcast ≤ QM09_DENSE_CELL_CAP), so
     # the dense regime never falls back to the postings self-join
@@ -600,9 +576,15 @@ def qm09(spark, sf_dir):
     # engages. session.bounded_collect pulls ≤ cap+1 rows for ANY
     # vocab size; within the cap the probe IS the whole vocabulary,
     # sorted here on the driver (UTF-8 order, nulls first, as
-    # orderBy("token") sorts), so it is pulled only once.
+    # orderBy("token") sorts), so it is pulled only once. The df ≥ 2
+    # terms are vocabulary_df's rule with min_df=2 and no max cap: the
+    # same document frequency as w's, without the weight joins (4 jobs
+    # where a distinct over w takes 7).
     probe = bounded_collect(
-        dfc.where(F.col("df") >= 2).select("token"), QM09_DENSE_VOCAB_CAP
+        vocabulary_df(
+            tokens_df(docs), min_df=2, max_df=1.0, vocab_size=QM09_DENSE_VOCAB_CAP + 1
+        ),
+        QM09_DENSE_VOCAB_CAP,
     )
     if probe is not None and len(probe) > 0:
         vocab = sorted(
@@ -961,24 +943,10 @@ def qm12(spark, sf_dir):
     well-defined subspace, mirrored verbatim by the oracle — the
     fixture's measured ~108s uncapped sf0.1 cost collapses to ~9s
     (cold session, local[32]) under the cap."""
-    tok = t(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(tokenize(F.col("text"))).alias("token")
-    )
-    tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    dfc = tf.groupBy("token").agg(F.count("*").alias("df"))
-    n = t(spark, sf_dir, "documents").agg(F.countDistinct("doc_id").alias("n_docs"))
     w = (
-        tf.crossJoin(F.broadcast(n))
-        .join(F.broadcast(dfc), "token")
+        tfidf(t(spark, sf_dir, "documents"))
         .where(F.col("df") <= 0.1 * F.col("n_docs"))
-        .select(
-            "doc_id",
-            "token",
-            "df",
-            F.round(
-                F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df")), 6
-            ).alias("wt"),
-        )
+        .select("doc_id", "token", "df", F.col("weight").alias("wt"))
     )
     from pyspark.sql import Window as W
 

@@ -23,7 +23,8 @@ from ml_data_wrangler_spark.plans.registry import query
 
 
 def synth_media(spark, sf_dir):
-    """documents → MEDIA_SCHEMA-shaped frame: utf-8 blob + metadata."""
+    """documents → a media frame (media_id, kind, content binary, meta
+    struct): the text as a utf-8 blob plus metadata."""
     return t(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("media_id"),
         F.when(F.col("doc_id") % 3 == 0, "image")

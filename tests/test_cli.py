@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
-
 from ml_data_wrangler_spark.__main__ import main
 
 

@@ -145,8 +145,6 @@ def test_stratified_hash_sample_validates(spark):
 
 
 def test_decontamination_broadcast_path_matches_shuffled(spark):
-    from pyspark.sql import functions as F
-
     from ml_data_wrangler_spark.operators.curation import benchmark_ngram_filter
 
     train = spark.createDataFrame(

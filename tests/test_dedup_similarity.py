@@ -332,7 +332,6 @@ def test_ivf_recall_on_clustered_corpus(spark):
     build (random init, 5 KMeans iterations) is enough. On the
     unclusterable uniform fixture recall is bounded by data, not by
     the index, so this is the test that would catch a broken build."""
-    import math
     import random
 
     rng = random.Random(7)

@@ -134,8 +134,6 @@ def test_round_long_np_divergent_ties_are_real():
     the bare binary shortcut must DISAGREE with Spark semantics on the
     named tie values (if float semantics ever made them agree, the
     red-ability of the test above would silently evaporate)."""
-    import numpy as np
-
     for v in DIVERGENT_TIES:
         shortcut = math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
         assert shortcut != round_long(v), v

@@ -8,10 +8,16 @@ import pytest
 from pyspark.sql import Row
 
 from ml_data_wrangler_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
     extract_features,
     resize_images,
     sample_video_frames,
+)
+
+# media frames: an opaque binary blob with a typed metadata struct
+MEDIA_SCHEMA = (
+    "media_id long NOT NULL, kind string NOT NULL, content binary, "
+    "meta struct<width: int, height: int, sample_rate: int, duration_ms: bigint, "
+    "format: string>"
 )
 
 MEDIA = [

@@ -16,7 +16,7 @@ def fitted(spark, sf_dir):
     # fixture-suited pruning: the synthetic corpus has ~31 distinct
     # tokens, 30 with df > 50% — reference-default maxDF would leave a
     # 1-term vocabulary
-    model, bow = vectorize(documents, min_df=2.0, max_df=float(1 << 30))
+    model, bow = vectorize(documents, min_df=2.0, max_df=1.0)
     lda = fit_lda(bow, k=3, max_iter=3, seed=7)
     return documents, model, bow, lda
 

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row

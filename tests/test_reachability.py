@@ -3,7 +3,8 @@ entry point, not only from tests.
 
 An AST pass with name-level resolution: a reference to ``foo`` (as a
 bare name or as ``x.foo``) reaches every top-level package definition
-called ``foo``. The roots are
+called ``foo``. Definitions are functions, classes and module-level
+assignments to plain names (constants). The roots are
 
   * every ``@query``-registered function (the registry loads them all);
   * module-level code of every package module, outside imports and
@@ -49,9 +50,33 @@ ALLOWED = {
     "ml_data_wrangler_spark.operators.lda.top_5_topics": (
         "the paper's report stage: top-5 topics per model (SURVEY M4)"
     ),
+    "ml_data_wrangler_spark.__version__": (
+        "package metadata: the version callers read off the package"
+    ),
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _defined(stmt: ast.stmt) -> list[str]:
+    """The names a top-level statement defines: a def or class, or an
+    assignment whose every target is a plain name (or a tuple of
+    them). Other statements define nothing and run as module code."""
+    if isinstance(stmt, _DEFS):
+        return [stmt.name]
+    if isinstance(stmt, ast.AnnAssign):
+        targets = [stmt.target]
+    elif isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    else:
+        return []
+    names = []
+    for target in targets:
+        elts = target.elts if isinstance(target, (ast.Tuple, ast.List)) else [target]
+        if not all(isinstance(e, ast.Name) for e in elts):
+            return []
+        names += [e.id for e in elts]
+    return names
 
 
 def _module_name(path: pathlib.Path) -> str:
@@ -97,13 +122,17 @@ def _package():
         module = _module_name(path)
         tree = ast.parse(path.read_text(), str(path))
         for stmt in tree.body:
-            if isinstance(stmt, _DEFS):
-                qual = f"{module}.{stmt.name}"
-                uses[qual] = _names(stmt)
-                by_name.setdefault(stmt.name, []).append(qual)
+            defined = _defined(stmt)
+            for name in defined:
+                qual = f"{module}.{name}"
+                if qual not in uses:
+                    by_name.setdefault(name, []).append(qual)
+                uses.setdefault(qual, set()).update(_names(stmt))
                 if _is_query(stmt):
-                    roots.add(stmt.name)
-            elif not isinstance(stmt, ast.Import) and (
+                    roots.add(name)
+            if defined:
+                continue
+            if not isinstance(stmt, ast.Import) and (
                 path.name == "__init__.py" or not isinstance(stmt, ast.ImportFrom)
             ):
                 roots |= _names(stmt)

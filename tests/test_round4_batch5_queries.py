@@ -438,10 +438,7 @@ def test_qx06_ahash_hamming_semantics(spark):
     half-dark/half-bright base sets exactly the high 32 bits, a blob
     with cells 0-1 brightened sets exactly hash_lo's two low bits, and
     non-image rows are excluded."""
-    from ml_data_wrangler_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        image_ahash,
-    )
+    from ml_data_wrangler_spark.operators.multimodal import image_ahash
 
     base = bytes([0] * 64 + [255] * 64)  # cells 0-31 dark, 32-63 bright
     two_flipped = bytes([255] * 4 + [0] * 60 + [255] * 60 + [0] * 4)
@@ -455,7 +452,9 @@ def test_qx06_ahash_hamming_semantics(spark):
             (4, "image", inverted, meta),
             (5, "audio", base, meta),  # non-image: excluded
         ],
-        MEDIA_SCHEMA,
+        "media_id long NOT NULL, kind string NOT NULL, content binary, "
+        "meta struct<width: int, height: int, sample_rate: int, duration_ms: bigint, "
+        "format: string>",
     )
     hashes = image_ahash(media)
     rows = {r.media_id: r for r in hashes.collect()}

@@ -7,8 +7,6 @@ structural properties the oracle parity harness can't express
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from ml_data_wrangler_spark.plans import registry
@@ -155,8 +153,6 @@ def test_qx07_scene_cuts_invariants(spark, sf_dir, queries):
 def test_qe39_backtest_scores_bounded(spark, sf_dir, queries):
     rows = queries["qe39_seasonal_backtest"](spark, sf_dir).collect()
     assert rows
-    import datetime as dt
-
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     from pyspark.sql import functions as F
 

@@ -21,11 +21,13 @@ import os
 
 import pytest
 
-DOCS16X = "/root/repo/.scale/docs16x"
+DOCS16X = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale", "docs16x"
+)
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(os.path.join(DOCS16X, "documents.parquet")),
-    reason="step-up scale tier not generated (scripts/make_scale_data.py)",
+    reason=f"step-up scale tier not generated at {DOCS16X} (scripts/make_scale_data.py)",
 )
 
 

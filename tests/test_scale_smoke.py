@@ -27,11 +27,13 @@ import os
 
 import pytest
 
-SCALE_DIR = "/root/repo/.scale/sf0.6"
+SCALE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale", "sf0.6"
+)
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(SCALE_DIR),
-    reason="scale tier not generated (python scripts/make_scale_data.py 6)",
+    reason=f"scale tier not generated at {SCALE_DIR} (python scripts/make_scale_data.py 6)",
 )
 
 

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from ml_data_wrangler_spark.streaming.stateful import user_activity_profile
 

@@ -39,8 +39,6 @@ def test_session_windows_run(spark, sf_dir):
         assert r["n_events"] >= 1
     # total events preserved across sessions
     total = sum(r["n_events"] for r in rows)
-    import pyspark.sql.functions as F2
-
     expected = (
         spark.read.parquet(f"{sf_dir}/events.parquet").count()
     )
@@ -201,8 +199,6 @@ def test_foreach_batch_merge_state_generations(spark, tmp_path):
     import datetime as dt
     import glob
     import os
-
-    from pyspark.sql import functions as F
 
     from ml_data_wrangler_spark.streaming.windows import (
         foreach_batch_merge_state,

@@ -1,6 +1,7 @@
-"""Vectorize (A2/A3) + LDA (M1-M5) tests: CountVectorizer agrees with
-the declarative vocabulary job; LDA outputs are structurally sound and
-seed-stable; UMass coherence matches a hand-computed value."""
+"""Vectorize (A2/A3) + LDA (M1-M5) tests: the vectorizer's vocabulary
+is the declarative vocabulary job's, term for term and in order; LDA
+outputs are structurally sound and seed-stable; UMass coherence matches
+a hand-computed value."""
 
 from __future__ import annotations
 
@@ -20,6 +21,7 @@ from ml_data_wrangler_spark.operators.lda import (
     validate_lda_params,
 )
 from ml_data_wrangler_spark.operators.vectorize import (
+    fit_vectorizer,
     tokens_df,
     vectorize,
     vocabulary_df,
@@ -32,11 +34,54 @@ def documents(spark, sf_dir):
 
 
 def test_vectorizer_vocab_matches_declarative(documents):
-    """CountVectorizer(minDF=5, maxDF=0.5, vocabSize=5000) must keep
-    exactly the token set of the declarative DF-pruning job."""
-    model, bow = vectorize(documents)
-    declared = {r["token"] for r in vocabulary_df(documents).collect()}
-    assert set(model.vocabulary) == declared
+    """The vectorizer keeps exactly the declarative DF-pruning job's
+    terms, in its (df DESC, token ASC) order — under the reference
+    defaults and under the fixture-suited pruning the LDA queries use."""
+    toks = tokens_df(documents)
+    for params in ({}, {"min_df": 2.0, "max_df": 1.0}):
+        model, bow = vectorize(documents, **params)
+        declared = [r.token for r in vocabulary_df(toks, **params).collect()]
+        assert declared and model.vocabulary == declared
+
+
+def test_vectorizer_truncates_by_document_frequency(spark):
+    """When ``vocab_size`` binds, terms are kept by document frequency,
+    not by total count: "a" is the most frequent term (7 occurrences)
+    but sits in the fewest documents, so it is cut; "b" and "c" tie on
+    df and keep token order. ``min_df`` counts documents and ``max_df``
+    is a fraction of them."""
+    toks = spark.createDataFrame(
+        [
+            (1, ["a", "a", "a", "a", "b"]),
+            (2, ["a", "a", "a", "c", "b"]),
+            (3, ["c", "b"]),
+            (4, ["c"]),
+        ],
+        "doc_id long, tokens array<string>",
+    )
+    assert fit_vectorizer(toks, min_df=1, max_df=1.0, vocab_size=2).vocabulary == ["b", "c"]
+    assert fit_vectorizer(toks, min_df=1, max_df=1.0, vocab_size=5).vocabulary == ["b", "c", "a"]
+    assert fit_vectorizer(toks, min_df=3, max_df=1.0, vocab_size=5).vocabulary == ["b", "c"]
+    assert fit_vectorizer(toks, min_df=1, max_df=0.5, vocab_size=5).vocabulary == ["a"]
+
+
+def test_vectorizer_and_lda_sweep_are_deterministic(spark, sf_dir, documents):
+    """Same input, same vocabulary list — so the same term indices, and
+    the seeded LDA sweep of qm04 returns the same rows run after run."""
+    from ml_data_wrangler_spark.plans.ml_queries import qm04
+
+    toks = tokens_df(documents)
+    first = fit_vectorizer(toks, min_df=2.0, max_df=1.0).vocabulary
+    assert first == fit_vectorizer(toks, min_df=2.0, max_df=1.0).vocabulary
+    assert sorted(qm04(spark, sf_dir).collect()) == sorted(qm04(spark, sf_dir).collect())
+
+
+def test_fit_vectorizer_job_count(documents, jobs_in):
+    """The fit is one vocabulary query collected to the driver; pinned
+    so a re-tokenizing or re-scanning fit shows up as extra jobs."""
+    toks = tokens_df(documents)
+    _, jobs = jobs_in(lambda: fit_vectorizer(toks, min_df=2.0, max_df=1.0))
+    assert jobs == 4
 
 
 def test_bow_counts_sample_doc(spark, documents):
@@ -55,7 +100,7 @@ def test_lda_shapes_and_determinism(documents):
     # Reference-default pruning (minDF=5, maxDF=0.5) leaves a 1-term
     # vocabulary on the synthetic fixture (30 of its 31 tokens appear
     # in >50% of docs) → fixture-suited params for a meaningful model.
-    model, bow = vectorize(documents, min_df=2.0, max_df=1 << 30)
+    model, bow = vectorize(documents, min_df=2.0, max_df=1.0)
     m1 = fit_lda(bow, k=4, max_iter=5, seed=11)
     m2 = fit_lda(bow, k=4, max_iter=5, seed=11)
     t1 = topics_df(m1, model.vocabulary, n_terms=5)
@@ -75,7 +120,7 @@ def test_lda_shapes_and_determinism(documents):
 def test_lda_topic_matrix_rows_sum_to_one(documents):
     # online-LDA topicsMatrix is unnormalized lambda; the engine's
     # topic_term_distribution is the normalized view.
-    model, bow = vectorize(documents, min_df=2.0, max_df=1 << 30)
+    model, bow = vectorize(documents, min_df=2.0, max_df=1.0)
     m = fit_lda(bow, k=3, max_iter=5, seed=3)
     dists = topic_term_distribution(m)
     assert len(dists) == 3

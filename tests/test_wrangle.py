@@ -8,10 +8,8 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from ml_data_wrangler_spark.operators.wrangle import (
-    bind_comments,
     create_corpus,
     data_quality_summary,
     reshape_tickets,
