@@ -367,7 +367,7 @@ def qs09(spark, sf_dir):
     ).hexdigest()[:10]
     stage = os.path.join(tempfile.gettempdir(), f"mdw_qs09_{tag}")
     src = stage_ordered_batches(events, stage)
-    sink = tumbling_counts_append(spark, src)
+    sink = tumbling_counts_append(spark, src, events.schema)
     m = F.col("event_id") % 10
     agg_in = events.crossJoin(
         F.broadcast(
@@ -523,7 +523,7 @@ def qs11(spark, sf_dir):
     stage = os.path.join(tempfile.gettempdir(), f"mdw_qs11_{tag}")
     src = stage_ordered_batches(events, stage)
     state = foreach_batch_merge_state(
-        spark, src, os.path.join(stage, "state")
+        spark, src, events.schema, os.path.join(stage, "state")
     )
     return (
         state.select(

@@ -3,7 +3,8 @@
 Ticket/comment shapes are reconstructed from the reference's
 field-access patterns (SURVEY.md §1.3; /root/reference/src/wrangler.py:415-429
 for tickets, wrangler.py:216-221,375-376 for comment files).
-Testdata schemas mirror FIXTURES.md §2 (driver-generated parquet).
+Testdata schemas mirror FIXTURES.md §2 (driver-generated parquet) and
+are the schemas those tables are read with.
 """
 
 from __future__ import annotations
@@ -46,8 +47,10 @@ COMMENT_SCHEMA = T.StructType(
 )
 COMMENT_FILE_SCHEMA = T.MapType(T.StringType(), T.ArrayType(COMMENT_SCHEMA))
 
-# Driver-generated testdata tables (FIXTURES.md §2) — parquet carries its
-# own schema; these are the authoritative expected shapes for validation.
+# Driver-generated testdata tables (FIXTURES.md §2). The read contract:
+# sources.readers.scan_declared scans each table with this schema after
+# checking it against the file's footer. Order and ship dates are stored
+# zone-less; events.ts is ``timestamp`` whatever its storage layout.
 TESTDATA_SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -95,7 +98,7 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
             T.StructField("o_custkey", T.LongType()),
             T.StructField("o_orderstatus", T.StringType()),
             T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
+            T.StructField("o_orderdate", T.TimestampNTZType()),
             T.StructField("o_orderpriority", T.StringType()),
         ]
     ),
@@ -111,7 +114,7 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
             T.StructField("l_tax", T.DoubleType()),
             T.StructField("l_returnflag", T.StringType()),
             T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
+            T.StructField("l_shipdate", T.TimestampNTZType()),
         ]
     ),
     "events": T.StructType(

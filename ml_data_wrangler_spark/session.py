@@ -66,11 +66,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # every committed events.ts is µs TIMESTAMP; this is kept for
-        # the TIMESTAMP(NANOS) layout of older testdata, read as long
-        # and converted to micros by readers.read_table (pinned by
-        # test_read_table_normalizes_both_events_ts_layouts)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.worker.reuse", "true")
         # long-lived sessions (parity sweeps, notebook-style use, a
         # multi-tenant driver) accumulate shuffle files until the

@@ -9,6 +9,7 @@ between a single listing + distributed read and an unrunnable loop.
 
 from __future__ import annotations
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -20,34 +21,46 @@ from ml_data_wrangler_spark.schemas import (
 )
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one driver-generated parquet table.
+# INT96 (Spark's default timestamp encoding) reads as µs, as Spark
+# reads it; only a true TIMESTAMP(NANOS) column reports unit "ns".
+_FOOTER = ds.ParquetFileFormat(
+    read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+)
 
-    Parquet scan → Tungsten vectorized reader; predicate pushdown and
-    column pruning happen automatically for anything layered on top.
 
-    The events table's ``ts`` physical type has varied across driver
-    generations: parquet TIMESTAMP(NANOS) (readable only as raw nanos
-    via the legacy conf) vs plain microsecond TIMESTAMP (read as
-    TIMESTAMP_NTZ). Normalize both to session-tz TimestampType so every
-    downstream operator/oracle sees identical µs semantics — integer
-    ``div`` for the nanos branch because ns-since-epoch exceeds
-    double's exact-int range, and a plain cast for the NTZ branch
-    (value-identical under the engine's pinned UTC session).
+def scan_declared(reader, sf_dir: str, name: str, suffix: str = "") -> DataFrame:
+    """Scan table ``name`` of ``sf_dir`` with ``reader`` (batch or
+    stream) under its declared schema, from ``<name>.parquet`` +
+    ``suffix``. The footer (one file or a directory of part files) is
+    read on the driver with pyarrow, not by a Spark job. A declared
+    column it lacks raises ``ValueError``, since a declared read would
+    return it as nulls. This is the one place that decides the events
+    ``ts`` layout: µs TIMESTAMP is read as declared; TIMESTAMP(NANOS),
+    from older testdata, Spark reads only as a ``bigint`` of ns, so it
+    is scanned so and divided down to µs (integer ``div``: ns since
+    epoch exceed a double's exact-integer range).
     """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    footer = ds.dataset(path, format=_FOOTER).schema
+    declared = TESTDATA_SCHEMAS[name]
+    for field in declared.fields:
+        if footer.get_field_index(field.name) < 0:
+            raise ValueError(f"table {name!r} at {path} has no column {field.name!r}")
+    if name != "events" or getattr(footer.field("ts").type, "unit", None) != "ns":
+        return reader.schema(declared).parquet(path + suffix)
+    as_nanos = T.StructType(
+        [T.StructField("ts", T.LongType()) if f.name == "ts" else f for f in declared.fields]
+    )
+    df = reader.schema(as_nanos).parquet(path + suffix)
+    return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
-def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    if not names:
-        names = tuple(TESTDATA_SCHEMAS)
-    return {n: read_table(spark, sf_dir, n) for n in names}
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one driver-generated parquet table with its declared schema
+    (``scan_declared``), so no job infers it. Parquet scan → Tungsten
+    vectorized reader; predicate pushdown and column pruning happen
+    automatically for anything layered on top."""
+    return scan_declared(spark.read, sf_dir, name)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> list[str]:

@@ -17,44 +17,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ml_data_wrangler_spark.schemas import TESTDATA_SCHEMAS
+from ml_data_wrangler_spark.sources.readers import scan_declared
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (for tests/smoke; a
-    production deployment points this at Kafka with the same schema)."""
-    # Two fixture quirks: (1) the fixture is a single parquet FILE —
-    # FileStreamSource force-sets basePath to the literal path unless
-    # it's a glob, and a file basePath is rejected, so read via a glob
-    # with basePath pinned to the containing directory; (2) ``ts``'s
-    # physical type varies by driver generation — TIMESTAMP(NANOS)
-    # (readable only as long via the legacy conf) vs plain µs
-    # TIMESTAMP. Streams need the schema up front, so probe it with a
-    # driver-side batch read of the same footer, then normalize to
-    # session-tz TimestampType either way.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_is_nanos = isinstance(
-        spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType,
-        T.LongType,
+    production deployment points this at Kafka with the same schema).
+
+    Same declared schema and the same ``ts`` layout rule as the batch
+    ``read_table`` (``sources.readers.scan_declared``). The fixture is
+    a single parquet FILE, and FileStreamSource force-sets basePath to
+    the literal path unless it is a glob, rejecting a file basePath;
+    so the stream reads a glob with basePath pinned to ``sf_dir``."""
+    return scan_declared(
+        spark.readStream.option("basePath", sf_dir), sf_dir, "events", "*"
     )
-    schema = T.StructType(
-        [
-            f
-            if f.name != "ts"
-            else T.StructField(
-                "ts", T.LongType() if ts_is_nanos else T.TimestampNTZType()
-            )
-            for f in TESTDATA_SCHEMAS["events"].fields
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("basePath", sf_dir)
-        .parquet(f"{sf_dir}/events.parquet*")
-    )
-    if ts_is_nanos:
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def tumbling_counts(
@@ -270,12 +247,15 @@ def stage_ordered_batches(events: DataFrame, stage_dir: str) -> str:
     return src
 
 
-def tumbling_counts_append(spark: SparkSession, src_dir: str) -> DataFrame:
+def tumbling_counts_append(
+    spark: SparkSession, src_dir: str, schema: T.StructType
+) -> DataFrame:
     """Tumbling-window aggregation over the staged multi-batch source
-    in APPEND mode — the mode where watermarks have observable
-    semantics: earlier batches advance the watermark, a later batch's
-    too-late stragglers are dropped by the late-event filter, and only
-    windows the final watermark has passed are ever emitted.
+    (``schema``: that of the frame staged there) in APPEND mode — the
+    mode where watermarks have observable semantics: earlier batches
+    advance the watermark, a later batch's too-late stragglers are
+    dropped by the late-event filter, and only windows the final
+    watermark has passed are ever emitted.
 
     DETERMINISM CAVEAT (measured, not theorized): Spark's watermark
     propagation gives each micro-batch TWO watermark values — a lagged
@@ -289,9 +269,6 @@ def tumbling_counts_append(spark: SparkSession, src_dir: str) -> DataFrame:
     and the availableNow no-data batches flush it before termination.
     Gate queries must therefore restrict comparison to windows ending
     after the first-batch watermark — see qs09."""
-    import glob
-
-    schema = spark.read.parquet(*glob.glob(f"{src_dir}/*.parquet")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -334,14 +311,19 @@ def stream_stream_left_outer_join(events: DataFrame) -> DataFrame:
 
 
 def foreach_batch_merge_state(
-    spark: SparkSession, src_dir: str, state_root: str, retain: int = 2
+    spark: SparkSession,
+    src_dir: str,
+    schema: T.StructType,
+    state_root: str,
+    retain: int = 2,
 ) -> DataFrame:
-    """Incremental materialized view via ``foreachBatch`` — the
-    production idiom for maintaining an upsert table from a stream
-    when the sink has no native streaming writer: each micro-batch is
-    pre-aggregated per user, MERGEd (full-outer + coalesce) into the
-    previous state GENERATION, and written as a NEW parquet
-    generation — never overwriting the input of the read that
+    """Incremental materialized view over the staged source at
+    ``src_dir`` (``schema``: that of the frame staged there) via
+    ``foreachBatch`` — the production idiom for maintaining an upsert
+    table from a stream when the sink has no native streaming writer:
+    each micro-batch is pre-aggregated per user, MERGEd (full-outer +
+    coalesce) into the previous state GENERATION, and written as a NEW
+    parquet generation — never overwriting the input of the read that
     produced it, so a failed batch leaves the previous generation
     intact and a replayed batch just rewrites its own generation
     (idempotent by batch_id: the merge input is always the newest
@@ -388,7 +370,6 @@ def foreach_batch_merge_state(
         # input and retention for very long streams
         return int(os.path.basename(path).split("_", 1)[1])
 
-    schema = spark.read.parquet(*_glob.glob(f"{src_dir}/*.parquet")).schema
     shutil.rmtree(state_root, ignore_errors=True)
     os.makedirs(state_root)
 

@@ -43,6 +43,7 @@ import sys
 import duckdb
 
 SRC = "/root/testdata/sf0.1"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # key space sizes in sf0.1 (dense 0..max; see TESTDATA.md)
 SPANS = {
@@ -105,7 +106,7 @@ def main() -> None:
         scale_tables = set(argv[i + 1].split(","))
         del argv[i : i + 2]
     r = int(argv[0]) if argv else 6
-    out = argv[1] if len(argv) > 1 else f"/root/repo/.scale/sf0.{r}"
+    out = argv[1] if len(argv) > 1 else os.path.join(REPO, ".scale", f"sf0.{r}")
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",

@@ -11,8 +11,10 @@ py-oracle (SCALE_SWEEP_r11_64x_qv01_qm09.log), so grid == default
 transitively re-verifies grid against the oracle.
 
 Usage:
-    SPARK_GRAFT_CPUS=16 SPARK_DRIVER_MEMORY=24g PYTHONPATH=/root/repo \
-        python scripts/run_fold_grid_scale.py /root/repo/.scale/docs64x
+    SPARK_GRAFT_CPUS=16 SPARK_DRIVER_MEMORY=24g PYTHONPATH=. \
+        python scripts/run_fold_grid_scale.py [sf_dir]
+
+from the repo root; ``sf_dir`` defaults to the repo's .scale/docs64x.
 
 Prints one `ok/FAIL` line per branch plus the run_parity-style
 parallelism verdicts from the event log.
@@ -25,6 +27,10 @@ import os
 import sys
 import time
 
+DOCS64X = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale", "docs64x"
+)
+
 
 def _value_hash(rows) -> str:
     h = hashlib.sha256()
@@ -34,7 +40,7 @@ def _value_hash(rows) -> str:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/docs64x"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DOCS64X
 
     from pyspark.sql import functions as F
 

@@ -42,6 +42,7 @@ def test_bm25_kernel_chunking_is_boundary_exact(spark, tmp_path, monkeypatch):
                 "delta epsilon",
             ],
             "lang": ["en"] * 5,
+            "source": ["web"] * 5,
             "n_chars": [16, 10, 10, 10, 13],
         }
     )
@@ -77,6 +78,7 @@ def test_bm25_kernel_empty_query_side(spark, tmp_path):
             "doc_id": [1, 2, 3],
             "text": ["alpha beta", "alpha", "beta"],
             "lang": ["en"] * 3,
+            "source": ["web"] * 3,
             "n_chars": [10, 5, 4],
         }
     )

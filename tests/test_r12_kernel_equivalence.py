@@ -111,13 +111,13 @@ def test_bm25_carried_dl_equals_rederived(spark, tmp_path):
 
     docs = spark.createDataFrame(
         [
-            (0, "alpha beta alpha gamma alpha"),
-            (1, "beta beta"),
-            (2, ""),
-            (3, None),
-            (20, "gamma delta gamma"),
+            (0, "alpha beta alpha gamma alpha", "en", "web", 28),
+            (1, "beta beta", "en", "web", 9),
+            (2, "", "en", "web", 0),
+            (3, None, "en", "web", 0),
+            (20, "gamma delta gamma", "en", "web", 17),
         ],
-        "doc_id long, text string",
+        "doc_id long, text string, lang string, source string, n_chars long",
     )
     sf_dir = str(tmp_path / "sfbm")
     os.makedirs(sf_dir, exist_ok=True)

@@ -56,6 +56,90 @@ def test_read_table_normalizes_both_events_ts_layouts(spark, tmp_path):
     assert results[0] == results[1] == ts_vals
 
 
+def _write_events(path, unit, ts_vals):
+    """An events table whose ``ts`` is stored in parquet unit ``unit``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = len(ts_vals)
+    tbl = pa.table(
+        {
+            "event_id": pa.array(range(1, n + 1), pa.int64()),
+            "ts": pa.array(ts_vals, pa.timestamp(unit)),
+            "user_id": pa.array([10] * n, pa.int64()),
+            "event_type": pa.array(["view"] * n, pa.string()),
+            "value": pa.array([1.5] * n, pa.float64()),
+            "props": pa.array(["{}"] * n, pa.string()),
+        }
+    )
+    pq.write_table(tbl, str(path))
+
+
+def test_read_events_stream_normalizes_both_events_ts_layouts(spark, tmp_path):
+    """The events stream takes the same layout rule as read_table: the
+    TIMESTAMP(NANOS) and µs layouts stream the same ``ts`` values."""
+    import datetime
+
+    from ml_data_wrangler_spark.streaming.windows import (
+        read_events_stream,
+        run_to_memory,
+    )
+
+    ts_vals = [
+        datetime.datetime(2026, 1, 1, 12, 0, 0, 123456),
+        datetime.datetime(2026, 1, 2, 3, 4, 5, 654321),
+    ]
+    results = []
+    for unit in ("ns", "us"):
+        d = tmp_path / unit
+        d.mkdir()
+        _write_events(d / "events.parquet", unit, ts_vals)
+        stream = read_events_stream(spark, str(d))
+        assert stream.schema["ts"].dataType.simpleString() == "timestamp"
+        sink = run_to_memory(stream, f"events_stream_{unit}", output_mode="append")
+        results.append([r["ts"] for r in sink.orderBy("event_id").collect()])
+    assert results[0] == results[1] == ts_vals
+
+
+def test_read_table_rejects_a_file_missing_a_declared_column(spark, tmp_path):
+    """A declared read of a file without a declared column would return
+    that column as nulls; read_table raises instead, naming both."""
+    import pyarrow.parquet as pq
+
+    from ml_data_wrangler_spark.sources.readers import read_table
+
+    _write_events(tmp_path / "full.parquet", "us", [])
+    tbl = pq.read_table(str(tmp_path / "full.parquet")).drop_columns(["props"])
+    pq.write_table(tbl, str(tmp_path / "events.parquet"))
+    with pytest.raises(ValueError, match=r"'events'.*'props'"):
+        read_table(spark, str(tmp_path), "events")
+
+
+def test_read_table_multi_file_directory_matches_single_file(
+    spark, sf_dir, tmp_path, jobs_in
+):
+    """The ``<name>.parquet/part-*.parquet`` directory layout (written
+    by scripts/make_scale_data.py --multi-file) is read with the same
+    declared schema, builds with 0 jobs, and gives the single file's
+    rows."""
+    import pyarrow.parquet as pq
+
+    from ml_data_wrangler_spark.sources.readers import read_table
+
+    tbl = pq.read_table(f"{sf_dir}/orders.parquet")
+    d = tmp_path / "orders.parquet"
+    d.mkdir()
+    half = tbl.num_rows // 2
+    pq.write_table(tbl.slice(0, half), str(d / "part-00000.parquet"))
+    pq.write_table(tbl.slice(half), str(d / "part-00001.parquet"))
+
+    multi, n_jobs = jobs_in(lambda: read_table(spark, str(tmp_path), "orders"))
+    assert n_jobs == 0
+    single = read_table(spark, sf_dir, "orders")
+    assert multi.schema == single.schema
+    assert sorted(multi.collect()) == sorted(single.collect())
+
+
 def test_corpus_shards_manifest_matches_written_data(spark, tmp_path):
     from ml_data_wrangler_spark.sources.sinks import write_corpus_shards_with_manifest
 

@@ -175,7 +175,7 @@ def test_late_data_band_contract(spark, tmp_path):
     ]
     events = spark.createDataFrame(rows)
     src = stage_ordered_batches(events, str(tmp_path / "qs09_stage"))
-    sink = tumbling_counts_append(spark, src)
+    sink = tumbling_counts_append(spark, src, events.schema)
     wa, w2 = D(2024, 1, 1, 11, 30), D(2024, 1, 1, 19, 30)
     band = {
         (r.win_start, r.n_events)
@@ -223,7 +223,9 @@ def test_foreach_batch_merge_state_generations(spark, tmp_path):
         os.rename(f, dst)
         os.utime(dst, (1_000_000_000 + i * 100,) * 2)
 
-    state = foreach_batch_merge_state(spark, src, str(tmp_path / "state"))
+    state = foreach_batch_merge_state(
+        spark, src, b0.schema, str(tmp_path / "state")
+    )
     rows = {
         r["user_id"]: (
             r["n_events"],
@@ -293,7 +295,7 @@ def test_foreach_batch_merge_state_bounded_across_many_generations(
         os.utime(dst, (1_000_000_000 + i * 100,) * 2)
 
     state_root = str(tmp_path / "state")
-    state = foreach_batch_merge_state(spark, src, state_root)
+    state = foreach_batch_merge_state(spark, src, b.schema, state_root)
 
     # plateau: exactly the newest `retain`=2 generations survive
     gens = sorted(
@@ -345,5 +347,5 @@ def test_foreach_batch_merge_state_rejects_retain_below_two(spark, tmp_path):
 
     with pytest.raises(ValueError, match="retain must be >= 2"):
         foreach_batch_merge_state(
-            spark, str(tmp_path / "src"), str(tmp_path / "state"), retain=1
+            spark, str(tmp_path / "src"), None, str(tmp_path / "state"), retain=1
         )
