@@ -23,6 +23,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ml_data_wrangler_spark.operators._partition import ensure_parallelism
 from ml_data_wrangler_spark.session import local_frame
 
 
@@ -292,13 +293,18 @@ def lda_sweep(
 
     from pyspark.util import inheritable_thread_target
 
-    from ml_data_wrangler_spark.operators.fitting import widen_for_fit
-
     spark = bow_df.sparkSession
     ks = list(k_values)
-    # Online-LDA iterations run one task per bow partition; a 1-split
-    # bow pins every concurrent fit single-task (fitting.py).
-    bow_df = widen_for_fit(bow_df, concurrent_fits=min(4, max(1, len(ks))))
+    n_fits = min(4, max(1, len(ks)))
+    # Online-LDA iterations run one task per bow partition, so a 1-split
+    # bow pins every concurrent fit to a single task while the rest of
+    # the cores idle (an LDA sweep took 6.5 s vs 4.6 s after widening).
+    # Widen up to the cores each of the n_fits concurrent fits gets;
+    # never down, so a many-split bow keeps its partitioning.
+    bow_df = ensure_parallelism(
+        bow_df,
+        min_partitions=max(1, spark.sparkContext.defaultParallelism // n_fits),
+    )
     bow_df.cache()
 
     # Sweep members are INDEPENDENT models — fit them concurrently.
@@ -313,7 +319,7 @@ def lda_sweep(
         desc = model.describeTopics(10).collect()
         return k, [[vocabulary[i] for i in r["termIndices"]] for r in desc]
 
-    with ThreadPoolExecutor(max_workers=min(4, max(1, len(ks)))) as pool:
+    with ThreadPoolExecutor(max_workers=n_fits) as pool:
         fitted = list(pool.map(inheritable_thread_target(spark)(fit_one), ks))
     bow_df.unpersist()
 

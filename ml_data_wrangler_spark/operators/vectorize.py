@@ -41,10 +41,13 @@ def vocabulary_df(tokens: DataFrame, min_df: float = 5, max_df: float = 0.5,
         .groupBy("token")
         .agg(F.count("*").alias("df"))
     )
-    total = tokens.select(F.count("*").alias("n_docs"))
+    keep = F.col("df") >= min_df
+    if max_df < 1:  # df ≤ N always holds, so only a fraction < 1 needs N
+        total = tokens.select(F.count("*").alias("n_docs"))
+        dfreq = dfreq.crossJoin(F.broadcast(total))
+        keep = keep & (F.col("df") <= max_df * F.col("n_docs"))
     return (
-        dfreq.crossJoin(F.broadcast(total))
-        .where((F.col("df") >= min_df) & (F.col("df") <= max_df * F.col("n_docs")))
+        dfreq.where(keep)
         .select("token", "df")
         .orderBy(F.desc("df"), "token")
         .limit(vocab_size)

@@ -19,6 +19,14 @@ registry.py docstring):
     (Spark) / `+ 0` (SQL) after the round — IEEE (±0.0)+0.0 = +0.0 on
     both engines. Integer-derived aggregates (counts, decimal money)
     are exact and don't need it.
+
+SQL twins: every DuckDB fragment that mirrors an engine rule lives in
+this module, once, and the oracles are composed from them (the way
+SQL_DISC_PRICE mirrors disc_price()). A twin is text only: it uses no
+engine code, only constants the oracles already shared
+(LANG_STOPWORDS), so an oracle stays independent of the rule it
+checks. tests/test_oracle_twins.py fails when two SQL literals in
+plans/ share a run of 4 or more lines.
 """
 
 from __future__ import annotations
@@ -26,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ml_data_wrangler_spark.functions.textstats import LANG_STOPWORDS
 from ml_data_wrangler_spark.sources.readers import read_table
 
 
@@ -160,3 +169,493 @@ def global_row_number(
 SQL_DISC_PRICE = (
     "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))"
 )
+
+
+# --- text twins ---
+
+# functions.text.tokenize
+SQL_TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z]+'), x -> x <> '')"
+
+
+def _sql_stopwords(code: str) -> str:
+    return "[" + ", ".join(f"'{w}'" for w in LANG_STOPWORDS[code]) + "]"
+
+
+_SQL_EN_SET = _sql_stopwords("en")
+
+
+def _sql_hits(code: str) -> str:
+    return f"len(list_filter({SQL_TOKS}, x -> list_contains({_sql_stopwords(code)}, x)))"
+
+
+# functions.textstats.detect_language: stopword hits per language,
+# then the argmax over them (ties resolved in the struct-max code order)
+SQL_LANG_HITS = f"""{_sql_hits('en')} AS h_en, {_sql_hits('de')} AS h_de,
+         {_sql_hits('fr')} AS h_fr, {_sql_hits('es')} AS h_es"""
+SQL_DETECTED_LANG = """CASE WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'und'
+            WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr'
+            WHEN h_es = greatest(h_en, h_de, h_fr, h_es) THEN 'es'
+            WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
+            ELSE 'de' END"""
+
+# functions.textstats.doc_fingerprint
+SQL_FINGERPRINT = "md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))"
+
+# functions.textstats.quality_score: its three features as SELECT
+# items over `text`, then the score over those columns
+SQL_QUALITY_FEATURES = f"""CAST(len({SQL_TOKS}) AS BIGINT) AS tok_cnt,
+         CASE WHEN len(text) > 0
+              THEN CAST(len(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / len(text)
+              ELSE 0.0 END AS a_ratio,
+         CASE WHEN len({SQL_TOKS}) > 0
+              THEN CAST(len(list_filter({SQL_TOKS}, x -> list_contains({_SQL_EN_SET}, x))) AS DOUBLE)
+                     / len({SQL_TOKS})
+              ELSE 0.0 END AS s_ratio"""
+SQL_QUALITY = "ROUND(0.4 * least(tok_cnt / 50.0, 1.0) + 0.4 * a_ratio + 0.2 * s_ratio, 6)"
+
+# unigram counts `uni` and the corpus total `tot` over token lists
+# `toks.l`, then adjacent-pair counts `bg`
+SQL_UNIGRAMS = """uni AS (
+  SELECT tok, CAST(COUNT(*) AS BIGINT) AS n1
+  FROM (SELECT unnest(l) AS tok FROM toks)
+  GROUP BY tok
+),
+tot AS (SELECT CAST(SUM(n1) AS BIGINT) AS n_tokens FROM uni)"""
+SQL_BIGRAMS = """bg AS (
+  SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS nb
+  FROM (
+    SELECT l[i] AS w1, l[i + 1] AS w2
+    FROM toks, unnest(generate_series(1, len(l) - 1)) AS g(i)
+    WHERE len(l) >= 2
+  )
+  GROUP BY w1, w2
+)"""
+
+# operators.vectorize.tfidf's counts (token rows `tok`, term counts
+# `tf`, document frequencies `dfc`, corpus size `n`), then its weight
+SQL_TF_DF = f"""tok AS (
+  SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents
+), tf AS (
+  SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
+  FROM tok GROUP BY doc_id, token
+), dfc AS (
+  SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY token
+), n AS (
+  SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs FROM documents
+)"""
+SQL_TFIDF = "ROUND(tf * ln(CAST(n_docs AS DOUBLE) / df), 6)"
+
+
+def sql_top_cosine_pairs(wt: str) -> str:
+    """The 20 most cosine-similar doc pairs over weights `w` (doc_id,
+    token, df, `wt`): norms over every token, dot products over the
+    tokens with df >= 2."""
+    return f"""norms AS (
+  SELECT doc_id, sqrt(CAST(SUM({wt} * {wt}) AS DOUBLE)) AS nrm
+  FROM w GROUP BY doc_id
+), dots AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         CAST(COUNT(*) AS BIGINT) AS shared,
+         CAST(SUM(a.{wt} * b.{wt}) AS DOUBLE) AS dot
+  FROM w a JOIN w b ON a.token = b.token AND a.doc_id < b.doc_id
+  WHERE a.df >= 2
+  GROUP BY a.doc_id, b.doc_id
+)
+SELECT doc_a, doc_b, shared,
+       ROUND(dot / (na.nrm * nb.nrm), 6) AS cosine
+FROM dots
+JOIN norms na ON doc_a = na.doc_id
+JOIN norms nb ON doc_b = nb.doc_id
+ORDER BY cosine DESC, doc_a, doc_b
+LIMIT 20"""
+
+
+def sql_nb_model(src: str) -> str:
+    """The multinomial naive-Bayes language model trained on `src`
+    (doc_id, lang, text): token lists `toks`, per-doc token counts
+    `dt`, class sizes `langs`, `n`, vocabulary size `v`, per-class
+    token counts `cc` and class totals `ct`."""
+    return f"""toks AS (
+  SELECT doc_id, lang, {SQL_TOKS} AS l FROM {src}
+),
+dt AS (
+  SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS occ
+  FROM (SELECT doc_id, unnest(l) AS tok FROM toks)
+  GROUP BY doc_id, tok
+),
+langs AS (
+  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs FROM {src} GROUP BY lang
+),
+n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM {src}),
+v AS (SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS vsize FROM dt),
+cc AS (
+  SELECT t.lang, d.tok, CAST(SUM(d.occ) AS BIGINT) AS c
+  FROM dt d JOIN toks t USING (doc_id)
+  GROUP BY t.lang, d.tok
+),
+ct AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS t_lang FROM cc GROUP BY lang)"""
+
+
+def sql_nb_confusion(counts: str, docs: str) -> str:
+    """The NB model's confusion matrix over `docs`, from their per-doc
+    token counts `counts`: integer micro-log-likelihoods per class,
+    argmax with a class-name tiebreak, then (actual, predicted)
+    counts."""
+    return f"""tok_scores AS (
+  SELECT d.doc_id, langs.lang,
+         CAST(SUM(d.occ * CAST(ROUND(ln((COALESCE(cc.c, 0) + 1.0)
+                                        / (ct.t_lang + v.vsize)) * 1e6)
+                               AS BIGINT)) AS BIGINT) AS ts
+  FROM {counts} d
+  CROSS JOIN langs
+  CROSS JOIN v
+  JOIN ct ON ct.lang = langs.lang
+  LEFT JOIN cc ON cc.lang = langs.lang AND cc.tok = d.tok
+  GROUP BY d.doc_id, langs.lang
+),
+scored AS (
+  SELECT doc.doc_id, doc.lang AS actual_lang, langs.lang AS cand,
+         CAST(ROUND(ln(CAST(langs.n_docs AS DOUBLE) / n.n_total) * 1e6)
+              AS BIGINT) + COALESCE(ts.ts, 0) AS score
+  FROM {docs} doc
+  CROSS JOIN langs CROSS JOIN n
+  LEFT JOIN tok_scores ts ON ts.doc_id = doc.doc_id AND ts.lang = langs.lang
+),
+pred AS (
+  SELECT doc_id, actual_lang, cand AS pred_lang,
+         ROW_NUMBER() OVER (PARTITION BY doc_id
+                            ORDER BY score DESC, cand) AS rn
+  FROM scored
+)
+SELECT actual_lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
+FROM pred WHERE rn = 1
+GROUP BY actual_lang, pred_lang
+"""
+
+
+# BM25's linear term-frequency prologue (tokens → per-(doc, token)
+# tf), shared verbatim between the SQL oracle CTE and the Python
+# scale-oracle kernel so the two can never drift on the input
+# definition — only the query×posting fan-out differs between them.
+SQL_BM25_TF = f"""bdt AS (
+  SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents
+),
+btf AS (
+  SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
+  FROM bdt GROUP BY doc_id, token
+)"""
+
+
+def sql_bm25_top(top: int) -> str:
+    """WITH-body fragment (no leading WITH) ending in relation
+    ``btop(query_id, cand_id, rnk, s)``: BM25 (k1 = 1.2, b = 0.75)
+    top-``top`` candidates per query doc (doc_id % 20 == 0), ranked on
+    the EXACT micro-quantized integer score. Shared by qt19's oracle
+    and qv20's hybrid-fusion oracle."""
+    return f"""{SQL_BM25_TF},
+bdl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM btf GROUP BY doc_id),
+bdf AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM btf GROUP BY token),
+bcorp AS (
+  SELECT CAST((SELECT COUNT(*) FROM documents) AS BIGINT) AS n_docs,
+         CAST((SELECT SUM(dl) FROM bdl) AS DOUBLE)
+           / (SELECT COUNT(*) FROM documents) AS avgdl
+),
+bidf AS (
+  SELECT token,
+         ROUND(ln(1 + (bcorp.n_docs - df + 0.5) / (df + 0.5)), 6) + 0 AS idf
+  FROM bdf, bcorp
+),
+bq AS (
+  SELECT doc_id AS query_id, token FROM btf WHERE doc_id % 20 = 0
+),
+bscore AS (
+  SELECT bq.query_id, c.doc_id AS cand_id,
+         SUM(CAST(ROUND(bidf.idf
+               * ((c.tf * 2.2)
+                  / (c.tf + 1.2 * (0.25 + 0.75 * (cd.dl / bcorp.avgdl))))
+               * 1e6) AS BIGINT)) AS s
+  FROM bq
+  JOIN btf c ON c.token = bq.token AND c.doc_id <> bq.query_id
+  JOIN bidf ON bidf.token = bq.token
+  JOIN bdl cd ON cd.doc_id = c.doc_id
+  CROSS JOIN bcorp
+  GROUP BY bq.query_id, c.doc_id
+),
+btop AS (
+  SELECT query_id, cand_id, rnk, s FROM (
+    SELECT query_id, cand_id, s,
+           ROW_NUMBER() OVER (PARTITION BY query_id
+                              ORDER BY s DESC, cand_id) AS rnk
+    FROM bscore
+  ) WHERE rnk <= {top}
+)"""
+
+
+# --- curation twins ---
+
+# operators.curation.hash_bucket: the 60-bit md5 value of doc_id
+# (Spark conv(hex, 16, 10) == DuckDB CAST('0x' || hex AS BIGINT),
+# verified bit-identical), its default 256 buckets, and hash_split's
+# 80/10/10 train/val/test assignment over them
+SQL_ID_HASH = "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)"
+SQL_HASH_BUCKET = f"{SQL_ID_HASH} % 256"
+SQL_HASH_SPLIT = f"""CASE WHEN {SQL_HASH_BUCKET} < 205 THEN 'train'
+              WHEN {SQL_HASH_BUCKET} < 230 THEN 'val'
+              ELSE 'test' END"""
+
+# operators.curation.pack_sequences: per-source token counts `tk` and
+# the tokens before each doc in doc_id order `c.cum_before`
+SQL_PACKING = f"""tk AS (
+  SELECT doc_id, source, CAST(len({SQL_TOKS}) AS BIGINT) AS nt
+  FROM documents
+), c AS (
+  SELECT *, COALESCE(SUM(nt) OVER (PARTITION BY source ORDER BY doc_id
+                                   ROWS BETWEEN UNBOUNDED PRECEDING
+                                   AND 1 PRECEDING), 0) AS cum_before
+  FROM tk
+)"""
+
+
+def sql_token_budget(src: str) -> str:
+    """operators.curation.fill_token_budget over `src` (doc_id,
+    source, text): each source's documents in quality order while the
+    running token count stays within 1500."""
+    return f"""feat AS (
+  SELECT doc_id, source,
+         {SQL_QUALITY_FEATURES}
+  FROM {src}
+), scored AS (
+  SELECT doc_id, source, tok_cnt AS n_tokens,
+         {SQL_QUALITY}
+           AS quality
+  FROM feat
+), walked AS (
+  SELECT doc_id, source, quality,
+         SUM(n_tokens) OVER (PARTITION BY source
+                             ORDER BY quality DESC, doc_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS cum_tokens
+  FROM scored
+)
+SELECT doc_id, source, quality, CAST(cum_tokens AS BIGINT) AS cum_tokens
+FROM walked WHERE cum_tokens <= 1500"""
+
+
+# the corpus-build CLI's output over quality features `feat`: the 0.3
+# quality floor and the 4-way md5 shard
+SQL_CORPUS_SHARDS = f"""scored AS (
+  SELECT doc_id, tok_cnt,
+         {SQL_QUALITY}
+           AS quality
+  FROM feat
+)
+SELECT doc_id,
+       CAST({SQL_ID_HASH} % 4
+            AS BIGINT) AS shard,
+       quality,
+       tok_cnt AS n_tokens
+FROM scored
+WHERE quality >= 0.3"""
+
+
+# --- vector twins ---
+
+# cosine of two DuckDB float lists (a .format template over {a}, {b})
+SQL_COS = (
+    "list_dot_product({a}, {b}) / "
+    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
+)
+
+
+# --- dedup twins ---
+
+
+def sql_shingles(src: str = "documents") -> str:
+    """operators.dedup's 3-gram shingles over `src` (doc_id, text):
+    token lists `toks` and distinct shingles per doc `sh`."""
+    return f"""toks AS (
+  SELECT doc_id, {SQL_TOKS} AS l FROM {src}
+), sh AS (
+  SELECT DISTINCT doc_id,
+         unnest(list_transform(generate_series(1, len(l) - 2),
+                               i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])) AS shingle
+  FROM toks WHERE len(l) >= 3
+)"""
+
+
+def sql_shingle_pairs(src: str = "documents", pred: str = "") -> str:
+    """sql_shingles, then set sizes `sizes` and shared-shingle counts
+    per doc pair a < b `pairs` (`pred` is ANDed into the posting
+    self-join)."""
+    return f"""{sql_shingles(src)}, sizes AS (
+  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
+), pairs AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS shared
+  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id {pred}
+  GROUP BY a.doc_id, b.doc_id
+)"""
+
+
+# ngram_jaccard_pairs' threshold (Jaccard >= 0.6) over `pairs` and `sizes`
+SQL_JACCARD_PAIRS = """FROM pairs
+JOIN sizes sa ON doc_a = sa.doc_id
+JOIN sizes sb ON doc_b = sb.doc_id
+WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.6"""
+
+# operators.dedup.dedup_pipeline's two tiers: the exact-fingerprint
+# verdict `exact` (min doc_id keeper) with its survivors `surv`, then
+# the near-dup `losers` among the survivors
+SQL_DEDUP_TIERS = f"""fp AS (
+  SELECT doc_id, {SQL_FINGERPRINT} AS fp
+  FROM documents
+), keepers AS (
+  SELECT fp, MIN(doc_id) AS keeper FROM fp GROUP BY fp
+), exact AS (
+  SELECT f.doc_id, f.doc_id = k.keeper AS exact_kept
+  FROM fp f JOIN keepers k ON f.fp = k.fp
+), surv AS (
+  SELECT d.doc_id, d.text FROM documents d
+  JOIN exact e ON d.doc_id = e.doc_id WHERE e.exact_kept
+), {sql_shingle_pairs("surv")}, losers AS (
+  SELECT DISTINCT doc_b AS doc_id
+  {SQL_JACCARD_PAIRS}
+)"""
+
+# operators.dedup.duplicate_spans(k=5, min_docs=2): token lists `toks`,
+# then the island id of every duplicated 5-gram position `isl`
+SQL_DUPLICATE_SPANS = f"""toks AS (
+  SELECT doc_id, {SQL_TOKS} AS l FROM documents
+), g AS (
+  SELECT doc_id, i AS pos, array_to_string(l[i:i+4], ' ') AS gram
+  FROM toks, unnest(generate_series(1, len(l) - 4)) AS t(i)
+  WHERE len(l) >= 5
+), dupg AS (
+  SELECT gram FROM g GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2
+), d AS (
+  SELECT doc_id, pos FROM g WHERE gram IN (SELECT gram FROM dupg)
+), brks AS (
+  SELECT doc_id, pos,
+         CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 5
+              THEN 1 ELSE 0 END AS brk
+  FROM d
+), isl AS (
+  SELECT doc_id, pos,
+         SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
+                        ROWS UNBOUNDED PRECEDING) AS island
+  FROM brks
+)"""
+
+
+# --- events twins ---
+
+# hourly tumbling counts and value per event type (F.window's batch
+# twin and the streaming tumbling_counts' complete output)
+SQL_HOURLY_BY_TYPE = """
+SELECT date_trunc('hour', ts) AS win_start, event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
+FROM events
+GROUP BY 1, 2
+"""
+
+# the 10-minute debounce: an event is kept when the same (user, type)
+# did not fire in the 600 s before it
+SQL_DEBOUNCE = """
+WITH seq AS (
+  SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts,
+         LAG(CAST(ts AS TIMESTAMP)) OVER (
+             PARTITION BY user_id, event_type
+             ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_ts
+  FROM events
+)
+SELECT event_id, user_id, event_type, ts
+FROM seq
+WHERE prev_ts IS NULL
+   OR date_diff('microsecond', prev_ts, ts) >= 600000000
+"""
+
+
+def sql_daily_counts(col: str) -> str:
+    """`daily`: events per (event_type, calendar day), as `col`."""
+    return f"""daily AS (
+  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
+         CAST(COUNT(*) AS BIGINT) AS {col}
+  FROM events GROUP BY 1, 2
+)"""
+
+
+# exact population moments of `daily.n_events` per event type
+SQL_DAILY_STATS = """stats AS (
+  SELECT event_type,
+         CAST(COUNT(*) AS DECIMAL(38,0)) AS cnt,
+         CAST(SUM(n_events) AS DECIMAL(38,0)) AS s,
+         CAST(SUM(n_events * n_events) AS DECIMAL(38,0)) AS q
+  FROM daily GROUP BY event_type
+)"""
+
+
+def sql_sessions(gap_test: str) -> str:
+    """Per-user sessions of `events`: `sessions.session_id` starts a
+    new session where `ts - previous ts {gap_test}`. ts is cast to µs
+    TIMESTAMP: parquet ts may read as TIMESTAMP_NS in DuckDB while
+    Spark compares at µs, and a sub-µs residue straddling the gap
+    boundary would flip the split."""
+    return f"""e AS (
+  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events
+), flagged AS (
+  SELECT user_id, ts,
+         CASE WHEN lag(ts) OVER w IS NULL
+                OR ts - lag(ts) OVER w {gap_test}
+              THEN 1 ELSE 0 END AS new_session
+  FROM e
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+), sessions AS (
+  SELECT user_id, ts,
+         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
+                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS session_id
+  FROM flagged
+)"""
+
+
+# the as-of inputs: purchases `p`, and clicks `c` deduped on (user, ts)
+# by max event_id
+SQL_PURCHASES = """p AS (
+  SELECT user_id, ts AS purchase_ts, event_id AS purchase_id
+  FROM events WHERE event_type = 'purchase'
+)"""
+SQL_CLICKS = """c AS (
+  SELECT user_id, ts AS click_ts, CAST(MAX(event_id) AS BIGINT) AS click_id
+  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
+)"""
+
+
+# --- ml twins ---
+
+# the logistic-regression features and its 3 batch-GD steps (η = 0.1,
+# zero init), ending in weights `w_3`
+_SQL_LOGREG_STEP = """{out} AS (
+  SELECT
+    ROUND(w0 - 0.1 * CAST(CAST(SUM(CAST(ROUND((p - y) * 1e6) AS BIGINT)) AS BIGINT) AS DOUBLE) / n / 1e6, 6) + 0 AS w0,
+    ROUND(w1 - 0.1 * CAST(CAST(SUM(CAST(ROUND((p - y) * x1 * 1e6) AS BIGINT)) AS BIGINT) AS DOUBLE) / n / 1e6, 6) + 0 AS w1,
+    ROUND(w2 - 0.1 * CAST(CAST(SUM(CAST(ROUND((p - y) * x2 * 1e6) AS BIGINT)) AS BIGINT) AS DOUBLE) / n / 1e6, 6) + 0 AS w2,
+    ROUND(w3 - 0.1 * CAST(CAST(SUM(CAST(ROUND((p - y) * x3 * 1e6) AS BIGINT)) AS BIGINT) AS DOUBLE) / n / 1e6, 6) + 0 AS w3
+  FROM (
+    SELECT f.*, w.*, cnt.n,
+           1.0 / (1.0 + exp(-(w0 + w1 * x1 + w2 * x2 + w3 * x3))) AS p
+    FROM feats f CROSS JOIN {w} w CROSS JOIN cnt
+  )
+  GROUP BY w0, w1, w2, w3, n
+)"""
+SQL_LOGREG_GD = f"""feats AS (
+  SELECT CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
+         ROUND(n_chars / 1000.0, 6) + 0 AS x1,
+         ROUND(len({SQL_TOKS}) / 100.0, 6) + 0 AS x2,
+         ROUND(n_chars / (len({SQL_TOKS}) + 1) / 10.0, 6) + 0 AS x3
+  FROM documents
+),
+cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM feats),
+winit AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3),
+{_SQL_LOGREG_STEP.format(w="winit", out="w_1")},
+{_SQL_LOGREG_STEP.format(w="w_1", out="w_2")},
+{_SQL_LOGREG_STEP.format(w="w_2", out="w_3")}"""

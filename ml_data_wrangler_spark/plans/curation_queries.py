@@ -16,14 +16,23 @@ from ml_data_wrangler_spark.operators.curation import (
     pack_sequences,
     top_quality_per_group,
 )
-from ml_data_wrangler_spark.plans._util import t
+from ml_data_wrangler_spark.plans._util import (
+    SQL_CORPUS_SHARDS,
+    SQL_DEDUP_TIERS,
+    SQL_FINGERPRINT,
+    SQL_HASH_BUCKET,
+    SQL_HASH_SPLIT,
+    SQL_ID_HASH,
+    SQL_JACCARD_PAIRS,
+    SQL_PACKING,
+    SQL_QUALITY,
+    SQL_QUALITY_FEATURES,
+    SQL_TOKS,
+    sql_shingle_pairs,
+    sql_token_budget,
+    t,
+)
 from ml_data_wrangler_spark.plans.registry import query
-from ml_data_wrangler_spark.plans.text_queries import _SQL_EN_SET, SQL_TOKS
-
-# DuckDB mirror of curation.hash_bucket (Spark conv(hex,16,10) ==
-# DuckDB CAST('0x'||hex AS BIGINT) — verified bit-identical; 15 hex
-# chars = 60 bits, same as the Spark side)
-_SQL_BUCKET = "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 256"
 
 
 @query(
@@ -31,9 +40,7 @@ _SQL_BUCKET = "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIG
     oracle=f"""
 WITH assigned AS (
   SELECT lang,
-         CASE WHEN {_SQL_BUCKET} < 205 THEN 'train'
-              WHEN {_SQL_BUCKET} < 230 THEN 'val'
-              ELSE 'test' END AS split
+         {SQL_HASH_SPLIT} AS split
   FROM documents
 )
 SELECT split, lang, CAST(COUNT(*) AS BIGINT) AS n_docs
@@ -60,18 +67,11 @@ def qc01(spark, sf_dir):
     oracle=f"""
 WITH feat AS (
   SELECT doc_id, source,
-         CAST(len({SQL_TOKS}) AS BIGINT) AS tok_cnt,
-         CASE WHEN len(text) > 0
-              THEN CAST(len(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / len(text)
-              ELSE 0.0 END AS a_ratio,
-         CASE WHEN len({SQL_TOKS}) > 0
-              THEN CAST(len(list_filter({SQL_TOKS}, x -> list_contains({_SQL_EN_SET}, x))) AS DOUBLE)
-                     / len({SQL_TOKS})
-              ELSE 0.0 END AS s_ratio
+         {SQL_QUALITY_FEATURES}
   FROM documents
 ), scored AS (
   SELECT doc_id, source,
-         ROUND(0.4 * least(tok_cnt / 50.0, 1.0) + 0.4 * a_ratio + 0.2 * s_ratio, 6)
+         {SQL_QUALITY}
            AS quality
   FROM feat
 ), ranked AS (
@@ -100,33 +100,7 @@ def qc02(spark, sf_dir):
 @query(
     "qc03_token_budget_fill",
     oracle=f"""
-WITH feat AS (
-  SELECT doc_id, source,
-         CAST(len({SQL_TOKS}) AS BIGINT) AS n_tokens,
-         CAST(len({SQL_TOKS}) AS BIGINT) AS tok_cnt,
-         CASE WHEN len(text) > 0
-              THEN CAST(len(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / len(text)
-              ELSE 0.0 END AS a_ratio,
-         CASE WHEN len({SQL_TOKS}) > 0
-              THEN CAST(len(list_filter({SQL_TOKS}, x -> list_contains({_SQL_EN_SET}, x))) AS DOUBLE)
-                     / len({SQL_TOKS})
-              ELSE 0.0 END AS s_ratio
-  FROM documents
-), scored AS (
-  SELECT doc_id, source, n_tokens,
-         ROUND(0.4 * least(tok_cnt / 50.0, 1.0) + 0.4 * a_ratio + 0.2 * s_ratio, 6)
-           AS quality
-  FROM feat
-), walked AS (
-  SELECT doc_id, source, quality,
-         SUM(n_tokens) OVER (PARTITION BY source
-                             ORDER BY quality DESC, doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cum_tokens
-  FROM scored
-)
-SELECT doc_id, source, quality, CAST(cum_tokens AS BIGINT) AS cum_tokens
-FROM walked WHERE cum_tokens <= 1500
+WITH {sql_token_budget("documents")}
 """,
 )
 def qc03(spark, sf_dir):
@@ -154,9 +128,7 @@ def qc03(spark, sf_dir):
     ).select("doc_id", "source", "quality", "cum_tokens")
 
 
-_SQL_BUCKET_4096 = (
-    "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 4096"
-)
+_SQL_BUCKET_4096 = f"{SQL_ID_HASH} % 4096"
 
 
 @query(
@@ -196,7 +168,7 @@ def qc04(spark, sf_dir):
     "qc05_decontamination",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, source, {SQL_TOKS} AS l, {_SQL_BUCKET} AS b
+  SELECT doc_id, source, {SQL_TOKS} AS l, {SQL_HASH_BUCKET} AS b
   FROM documents
 ), train_g AS (
   SELECT DISTINCT doc_id,
@@ -245,15 +217,7 @@ def qc05(spark, sf_dir):
 @query(
     "qc06_sequence_packing",
     oracle=f"""
-WITH tk AS (
-  SELECT doc_id, source, CAST(len({SQL_TOKS}) AS BIGINT) AS nt
-  FROM documents
-), c AS (
-  SELECT *, COALESCE(SUM(nt) OVER (PARTITION BY source ORDER BY doc_id
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND 1 PRECEDING), 0) AS cum_before
-  FROM tk
-)
+WITH {SQL_PACKING}
 SELECT source, CAST(floor(cum_before / 512.0) AS BIGINT) AS seq_idx,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(nt) AS BIGINT) AS n_tokens
@@ -355,39 +319,13 @@ def qc07(spark, sf_dir):
     oracle=f"""
 WITH fp AS (
   SELECT doc_id, source, text,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
+         {SQL_FINGERPRINT} AS fingerprint
   FROM documents
 ), keepers AS (
   SELECT MIN(doc_id) AS doc_id FROM fp GROUP BY fingerprint
 ), survivors AS (
   SELECT f.doc_id, f.source, f.text FROM fp f JOIN keepers k ON f.doc_id = k.doc_id
-), feat AS (
-  SELECT doc_id, source,
-         CAST(len({SQL_TOKS}) AS BIGINT) AS n_tokens,
-         CAST(len({SQL_TOKS}) AS BIGINT) AS tok_cnt,
-         CASE WHEN len(text) > 0
-              THEN CAST(len(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / len(text)
-              ELSE 0.0 END AS a_ratio,
-         CASE WHEN len({SQL_TOKS}) > 0
-              THEN CAST(len(list_filter({SQL_TOKS}, x -> list_contains({_SQL_EN_SET}, x))) AS DOUBLE)
-                     / len({SQL_TOKS})
-              ELSE 0.0 END AS s_ratio
-  FROM survivors
-), scored AS (
-  SELECT doc_id, source, n_tokens,
-         ROUND(0.4 * least(tok_cnt / 50.0, 1.0) + 0.4 * a_ratio + 0.2 * s_ratio, 6)
-           AS quality
-  FROM feat
-), walked AS (
-  SELECT doc_id, source, quality,
-         SUM(n_tokens) OVER (PARTITION BY source
-                             ORDER BY quality DESC, doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cum_tokens
-  FROM scored
-)
-SELECT doc_id, source, quality, CAST(cum_tokens AS BIGINT) AS cum_tokens
-FROM walked WHERE cum_tokens <= 1500
+), {sql_token_budget("survivors")}
 """,
 )
 def qc08(spark, sf_dir):
@@ -501,15 +439,7 @@ def qc10(spark, sf_dir):
 @query(
     "qc12_packing_utilization",
     oracle=f"""
-WITH tk AS (
-  SELECT doc_id, source, CAST(len({SQL_TOKS}) AS BIGINT) AS nt
-  FROM documents
-), c AS (
-  SELECT *, COALESCE(SUM(nt) OVER (PARTITION BY source ORDER BY doc_id
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND 1 PRECEDING), 0) AS cum_before
-  FROM tk
-)
+WITH {SQL_PACKING}
 SELECT source,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(MAX(floor(cum_before / 512.0)) + 1 AS BIGINT) AS n_seqs,
@@ -559,7 +489,7 @@ def qc12(spark, sf_dir):
     oracle=f"""
 WITH fp AS (
   SELECT doc_id, text,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
+         {SQL_FINGERPRINT} AS fingerprint
   FROM documents
 ), keepers AS (
   SELECT fingerprint, MIN(doc_id) AS doc_id FROM fp GROUP BY fingerprint
@@ -567,28 +497,9 @@ WITH fp AS (
   SELECT f.doc_id, f.text FROM fp f JOIN keepers k ON f.doc_id = k.doc_id
 ), feat AS (
   SELECT doc_id, text,
-         CAST(len({SQL_TOKS}) AS BIGINT) AS tok_cnt,
-         CASE WHEN len(text) > 0
-              THEN CAST(len(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / len(text)
-              ELSE 0.0 END AS a_ratio,
-         CASE WHEN len({SQL_TOKS}) > 0
-              THEN CAST(len(list_filter({SQL_TOKS}, x -> list_contains({_SQL_EN_SET}, x))) AS DOUBLE)
-                     / len({SQL_TOKS})
-              ELSE 0.0 END AS s_ratio
+         {SQL_QUALITY_FEATURES}
   FROM unique_docs
-), scored AS (
-  SELECT doc_id, tok_cnt,
-         ROUND(0.4 * least(tok_cnt / 50.0, 1.0) + 0.4 * a_ratio + 0.2 * s_ratio, 6)
-           AS quality
-  FROM feat
-)
-SELECT doc_id,
-       CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 4
-            AS BIGINT) AS shard,
-       quality,
-       tok_cnt AS n_tokens
-FROM scored
-WHERE quality >= 0.3
+), {SQL_CORPUS_SHARDS}
 """,
 )
 def qc13(spark, sf_dir):
@@ -627,37 +538,7 @@ def qc13(spark, sf_dir):
 @query(
     "qc14_corpus_build_tiered",
     oracle=f"""
-WITH fp AS (
-  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-  FROM documents
-), keepers AS (
-  SELECT fp, MIN(doc_id) AS keeper FROM fp GROUP BY fp
-), exact AS (
-  SELECT f.doc_id, f.doc_id = k.keeper AS exact_kept
-  FROM fp f JOIN keepers k ON f.fp = k.fp
-), surv AS (
-  SELECT d.doc_id, d.text FROM documents d
-  JOIN exact e ON d.doc_id = e.doc_id WHERE e.exact_kept
-), toksj AS (
-  SELECT doc_id, {SQL_TOKS} AS l FROM surv
-), sh AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(generate_series(1, len(l) - 2),
-                               i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])) AS shingle
-  FROM toksj WHERE len(l) >= 3
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-), losers AS (
-  SELECT DISTINCT doc_b AS doc_id
-  FROM pairs
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.6
-), kept AS (
+WITH {SQL_DEDUP_TIERS}, kept AS (
   SELECT d.doc_id, d.text
   FROM documents d
   JOIN exact e ON d.doc_id = e.doc_id
@@ -665,28 +546,9 @@ WITH fp AS (
   WHERE e.exact_kept AND l.doc_id IS NULL
 ), feat AS (
   SELECT doc_id,
-         CAST(len({SQL_TOKS}) AS BIGINT) AS tok_cnt,
-         CASE WHEN len(text) > 0
-              THEN CAST(len(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / len(text)
-              ELSE 0.0 END AS a_ratio,
-         CASE WHEN len({SQL_TOKS}) > 0
-              THEN CAST(len(list_filter({SQL_TOKS}, x -> list_contains({_SQL_EN_SET}, x))) AS DOUBLE)
-                     / len({SQL_TOKS})
-              ELSE 0.0 END AS s_ratio
+         {SQL_QUALITY_FEATURES}
   FROM kept
-), scored AS (
-  SELECT doc_id, tok_cnt,
-         ROUND(0.4 * least(tok_cnt / 50.0, 1.0) + 0.4 * a_ratio + 0.2 * s_ratio, 6)
-           AS quality
-  FROM feat
-)
-SELECT doc_id,
-       CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 4
-            AS BIGINT) AS shard,
-       quality,
-       tok_cnt AS n_tokens
-FROM scored
-WHERE quality >= 0.3
+), {SQL_CORPUS_SHARDS}
 """,
 )
 def qc14(spark, sf_dir):
@@ -726,22 +588,15 @@ def qc14(spark, sf_dir):
     oracle=f"""
 WITH feat AS (
   SELECT doc_id, source,
-         CAST(len({SQL_TOKS}) AS BIGINT) AS tok_cnt,
-         CASE WHEN len(text) > 0
-              THEN CAST(len(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / len(text)
-              ELSE 0.0 END AS a_ratio,
-         CASE WHEN len({SQL_TOKS}) > 0
-              THEN CAST(len(list_filter({SQL_TOKS}, x -> list_contains({_SQL_EN_SET}, x))) AS DOUBLE)
-                     / len({SQL_TOKS})
-              ELSE 0.0 END AS s_ratio
+         {SQL_QUALITY_FEATURES}
   FROM documents
 ), scored AS (
   SELECT doc_id, source,
          greatest(
-           ROUND(0.4 * least(tok_cnt / 50.0, 1.0) + 0.4 * a_ratio + 0.2 * s_ratio, 6),
+           {SQL_QUALITY},
            0.05) AS w,
          greatest(
-           CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+           CAST({SQL_ID_HASH}
                 AS DOUBLE) / POWER(2.0, 60),
            POWER(2.0, -60)) AS u
   FROM documents JOIN feat USING (doc_id, source)
@@ -805,29 +660,11 @@ def qc15(spark, sf_dir):
 @query(
     "qc16_split_leakage",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {SQL_TOKS} AS l FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(generate_series(1, len(l) - 2),
-                               i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])) AS shingle
-  FROM toks WHERE len(l) >= 3
-), sizes AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS shared
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-), neardups AS (
-  SELECT doc_a, doc_b FROM pairs
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.6
+WITH {sql_shingle_pairs()}, neardups AS (
+  SELECT doc_a, doc_b {SQL_JACCARD_PAIRS}
 ), assigned AS (
   SELECT doc_id,
-         CASE WHEN {_SQL_BUCKET} < 205 THEN 'train'
-              WHEN {_SQL_BUCKET} < 230 THEN 'val'
-              ELSE 'test' END AS split
+         {SQL_HASH_SPLIT} AS split
   FROM documents
 )
 SELECT least(sa.split, sb.split) AS split_a,
@@ -895,18 +732,11 @@ def qc16(spark, sf_dir):
     oracle=f"""
 WITH feat AS (
   SELECT doc_id,
-         CAST(len({SQL_TOKS}) AS BIGINT) AS tok_cnt,
-         CASE WHEN len(text) > 0
-              THEN CAST(len(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / len(text)
-              ELSE 0.0 END AS a_ratio,
-         CASE WHEN len({SQL_TOKS}) > 0
-              THEN CAST(len(list_filter({SQL_TOKS}, x -> list_contains({_SQL_EN_SET}, x))) AS DOUBLE)
-                     / len({SQL_TOKS})
-              ELSE 0.0 END AS s_ratio
+         {SQL_QUALITY_FEATURES}
   FROM documents
 ), scored AS (
   SELECT doc_id, tok_cnt,
-         ROUND(0.4 * least(tok_cnt / 50.0, 1.0) + 0.4 * a_ratio + 0.2 * s_ratio, 6)
+         {SQL_QUALITY}
            AS quality
   FROM feat
 ), tot AS (
@@ -1328,7 +1158,7 @@ def qc20(spark, sf_dir):
     "qc21_snapshot_diff",
     oracle=f"""
 WITH b AS (
-  SELECT doc_id, source, text, {_SQL_BUCKET} AS bucket FROM documents
+  SELECT doc_id, source, text, {SQL_HASH_BUCKET} AS bucket FROM documents
 ),
 v1 AS (
   SELECT doc_id, source, md5(text) AS h FROM b WHERE bucket < 240

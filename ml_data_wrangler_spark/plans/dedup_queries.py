@@ -27,18 +27,27 @@ from ml_data_wrangler_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_signatures,
 )
-from ml_data_wrangler_spark.plans._util import t
+from ml_data_wrangler_spark.plans._util import (
+    SQL_DEDUP_TIERS,
+    SQL_DUPLICATE_SPANS,
+    SQL_FINGERPRINT,
+    SQL_HASH_BUCKET,
+    SQL_JACCARD_PAIRS,
+    SQL_TOKS,
+    sql_shingle_pairs,
+    sql_shingles,
+    t,
+)
 from ml_data_wrangler_spark.plans.registry import query
-from ml_data_wrangler_spark.plans.text_queries import SQL_TOKS
 
 
 @query(
     "qd01_exact_dedup",
-    oracle="""
+    oracle=f"""
 SELECT fp AS fingerprint,
        CAST(MIN(doc_id) AS BIGINT) AS keeper_doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_copies
-FROM (SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+FROM (SELECT doc_id, {SQL_FINGERPRINT} AS fp
       FROM documents)
 GROUP BY fp
 """,
@@ -57,8 +66,8 @@ def qd01(spark, sf_dir):
     )
 
 
-# The exact 3-gram-Jaccard pair SQL shared by qd02/qd06 (verbatim)
-# and qd03 (with the recall-gate projection). `pred` injects a slice
+# The exact 3-gram-Jaccard pair SQL shared by qd02/qd06 (verbatim),
+# qd03 (with the recall-gate projection), qd10 and qd13. `pred` injects a slice
 # predicate into the posting self-join — the output is partitioned by
 # doc_a, so a complete residue set's concatenation IS the plain
 # result (the _qd12_scale_oracle pattern, generalized per the r09
@@ -69,29 +78,13 @@ _PAIR_SLICES = 16
 
 def _jaccard_pairs_oracle_sql(pred: str = "", head: str = "") -> str:
     return f"""
-WITH toks AS (
-  SELECT doc_id, {SQL_TOKS} AS l FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(generate_series(1, len(l) - 2),
-                               i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])) AS shingle
-  FROM toks WHERE len(l) >= 3
-), sizes AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS shared
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id {pred}
-  GROUP BY a.doc_id, b.doc_id
-){head}"""
+WITH {sql_shingle_pairs(pred=pred)}{head}"""
 
 
-_QD02_SELECT = """
+_QD02_SELECT = f"""
 SELECT doc_a, doc_b,
        ROUND(CAST(shared AS DOUBLE) / (sa.n + sb.n - shared), 6) AS jaccard
-FROM pairs
-JOIN sizes sa ON doc_a = sa.doc_id
-JOIN sizes sb ON doc_b = sb.doc_id
-WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.6
+{SQL_JACCARD_PAIRS}
 """
 
 
@@ -163,24 +156,8 @@ def qd06(spark, sf_dir):
 # Python scale-oracle so the two can never drift on the GRAPH — only
 # the transitive-closure kernel differs (recursive SQL vs union-find).
 _QD07_JAC_SQL = f"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id, {SQL_TOKS} AS l FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(generate_series(1, len(l) - 2),
-                               i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])) AS shingle
-  FROM toks WHERE len(l) >= 3
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-), shared AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-), jac AS (
-  SELECT doc_a, doc_b FROM shared
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.6
+WITH RECURSIVE {sql_shingle_pairs()}, jac AS (
+  SELECT doc_a, doc_b {SQL_JACCARD_PAIRS}
 )"""
 
 
@@ -257,14 +234,11 @@ def qd07(spark, sf_dir):
     )
 
 
-_QD03_SELECT = """
+_QD03_SELECT = f"""
 SELECT doc_a, doc_b,
        ROUND(CAST(shared AS DOUBLE) / (sa.n + sb.n - shared), 6) AS jaccard,
        TRUE AS minhash_recall_ok
-FROM pairs
-JOIN sizes sa ON doc_a = sa.doc_id
-JOIN sizes sb ON doc_b = sb.doc_id
-WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.6
+{SQL_JACCARD_PAIRS}
 """
 
 
@@ -372,37 +346,7 @@ def qd08(spark, sf_dir):
 @query(
     "qd05_dedup_pipeline",
     oracle=f"""
-WITH fp AS (
-  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-  FROM documents
-), keepers AS (
-  SELECT fp, MIN(doc_id) AS keeper FROM fp GROUP BY fp
-), exact AS (
-  SELECT f.doc_id, f.doc_id = k.keeper AS exact_kept
-  FROM fp f JOIN keepers k ON f.fp = k.fp
-), surv AS (
-  SELECT d.doc_id, d.text FROM documents d
-  JOIN exact e ON d.doc_id = e.doc_id WHERE e.exact_kept
-), toks AS (
-  SELECT doc_id, {SQL_TOKS} AS l FROM surv
-), sh AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(generate_series(1, len(l) - 2),
-                               i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])) AS shingle
-  FROM toks WHERE len(l) >= 3
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-), losers AS (
-  SELECT DISTINCT doc_b AS doc_id
-  FROM pairs
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.6
-)
+WITH {SQL_DEDUP_TIERS}
 SELECT e.doc_id,
        (e.exact_kept AND l.doc_id IS NULL) AS keep,
        CASE WHEN NOT e.exact_kept THEN 'exact_duplicate'
@@ -423,29 +367,12 @@ def qd05(spark, sf_dir):
 
 @query(
     "qd10_minhash_accuracy",
-    oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {SQL_TOKS} AS l FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(generate_series(1, len(l) - 2),
-                               i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])) AS shingle
-  FROM toks WHERE len(l) >= 3
-), sizes AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS shared
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
+    oracle=_jaccard_pairs_oracle_sql(head=f"""
 SELECT doc_a, doc_b,
        ROUND(CAST(shared AS DOUBLE) / (sa.n + sb.n - shared), 6) AS jaccard,
        TRUE AS within_bound
-FROM pairs
-JOIN sizes sa ON doc_a = sa.doc_id
-JOIN sizes sb ON doc_b = sb.doc_id
-WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.6
-""",
+{SQL_JACCARD_PAIRS}
+"""),
 )
 def qd10(spark, sf_dir):
     """MinHash sketch ACCURACY, oracle-pinned: for every exact
@@ -560,14 +487,7 @@ def _qd12_oracle_sql(slice_pred: str = "") -> str:
     exactly one src), so the union over a complete set of slice
     predicates is the unsliced result row-for-row."""
     return f"""
-WITH toks AS (
-  SELECT doc_id, {SQL_TOKS} AS l FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(generate_series(1, len(l) - 2),
-                               i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])) AS shingle
-  FROM toks WHERE len(l) >= 3
-), sizes AS (
+WITH {sql_shingles()}, sizes AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
 ), pairs AS (
   SELECT a.doc_id AS src, b.doc_id AS dst, CAST(COUNT(*) AS BIGINT) AS shared
@@ -635,26 +555,9 @@ def qd12(spark, sf_dir):
 
 @query(
     "qd13_editdist_verify",
-    oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {SQL_TOKS} AS l FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(generate_series(1, len(l) - 2),
-                               i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])) AS shingle
-  FROM toks WHERE len(l) >= 3
-), sizes AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS shared
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-), cand AS (
+    oracle=_jaccard_pairs_oracle_sql(head=f""", cand AS (
   SELECT doc_a, doc_b
-  FROM pairs
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.6
+  {SQL_JACCARD_PAIRS}
 )
 SELECT doc_a, doc_b,
        CAST(levenshtein(ta.text, tb.text) AS BIGINT) AS edit_dist,
@@ -663,7 +566,7 @@ SELECT doc_a, doc_b,
 FROM cand
 JOIN documents ta ON doc_a = ta.doc_id
 JOIN documents tb ON doc_b = tb.doc_id
-""",
+"""),
 )
 def qd13(spark, sf_dir):
     """Character-level verification tier: exact Levenshtein distance +
@@ -701,27 +604,7 @@ def qd13(spark, sf_dir):
 @query(
     "qd14_duplicate_spans",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {SQL_TOKS} AS l FROM documents
-), g AS (
-  SELECT doc_id, i AS pos, array_to_string(l[i:i+4], ' ') AS gram
-  FROM toks, unnest(generate_series(1, len(l) - 4)) AS t(i)
-  WHERE len(l) >= 5
-), dupg AS (
-  SELECT gram FROM g GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2
-), d AS (
-  SELECT doc_id, pos FROM g WHERE gram IN (SELECT gram FROM dupg)
-), brks AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 5
-              THEN 1 ELSE 0 END AS brk
-  FROM d
-), isl AS (
-  SELECT doc_id, pos,
-         SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS UNBOUNDED PRECEDING) AS island
-  FROM brks
-)
+WITH {SQL_DUPLICATE_SPANS}
 SELECT doc_id,
        CAST(MIN(pos) AS BIGINT) AS span_start,
        CAST(MAX(pos) + 4 AS BIGINT) AS span_end,
@@ -749,24 +632,8 @@ def qd14(spark, sf_dir):
 @query(
     "qd15_lsh_band_sweep",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {SQL_TOKS} AS l FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(generate_series(1, len(l) - 2),
-                               i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])) AS shingle
-  FROM toks WHERE len(l) >= 3
-), sizes AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS shared
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-), exact AS (
-  SELECT doc_a, doc_b FROM pairs
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.6
+WITH {sql_shingle_pairs()}, exact AS (
+  SELECT doc_a, doc_b {SQL_JACCARD_PAIRS}
 ), n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs FROM exact)
 SELECT bands, rows_per_band, n.n_exact_pairs,
        TRUE AS refinement_ok, TRUE AS recall_ok
@@ -896,27 +763,7 @@ def qd15(spark, sf_dir):
 @query(
     "qd16_remove_duplicate_spans",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {SQL_TOKS} AS l FROM documents
-), g AS (
-  SELECT doc_id, i AS pos, array_to_string(l[i:i+4], ' ') AS gram
-  FROM toks, unnest(generate_series(1, len(l) - 4)) AS t(i)
-  WHERE len(l) >= 5
-), dupg AS (
-  SELECT gram FROM g GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2
-), d AS (
-  SELECT doc_id, pos FROM g WHERE gram IN (SELECT gram FROM dupg)
-), brks AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 5
-              THEN 1 ELSE 0 END AS brk
-  FROM d
-), isl AS (
-  SELECT doc_id, pos,
-         SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS UNBOUNDED PRECEDING) AS island
-  FROM brks
-), spans AS (
+WITH {SQL_DUPLICATE_SPANS}, spans AS (
   SELECT doc_id, MIN(pos) AS s, MAX(pos) + 4 AS e
   FROM isl GROUP BY doc_id, island
 ), pos AS (
@@ -1022,14 +869,7 @@ def qd16(spark, sf_dir):
 # the graph definition — only the super-linear wedge/triangle kernel
 # differs between them.
 _QD17_E_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, {SQL_TOKS} AS l FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(generate_series(1, len(l) - 2),
-                               i -> l[i] || ' ' || l[i + 1] || ' ' || l[i + 2])) AS shingle
-  FROM toks WHERE len(l) >= 3
-), e AS (
+WITH {sql_shingles()}, e AS (
   SELECT a.doc_id AS na, b.doc_id AS nb
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id
@@ -1642,12 +1482,11 @@ def qd17(spark, sf_dir):
 
 @query(
     "qd18_incremental_dedup",
-    oracle="""
+    oracle=f"""
 WITH b AS (
   SELECT doc_id, source,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
-         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-           % 256 AS bucket
+         {SQL_FINGERPRINT} AS fp,
+         {SQL_HASH_BUCKET} AS bucket
   FROM documents
 ),
 corpus_fp AS (SELECT DISTINCT fp FROM b WHERE bucket < 240),

@@ -17,7 +17,13 @@ from ml_data_wrangler_spark.functions.driver_exact import (
     round_half_up,
     round_long,
 )
-from ml_data_wrangler_spark.plans._util import money, t
+from ml_data_wrangler_spark.operators._partition import ensure_parallelism
+from ml_data_wrangler_spark.plans._util import (
+    SQL_DAILY_STATS,
+    money,
+    sql_daily_counts,
+    t,
+)
 from ml_data_wrangler_spark.plans.registry import query
 from ml_data_wrangler_spark.session import bounded_collect, local_frame
 
@@ -252,12 +258,8 @@ def qe33(spark, sf_dir):
 
 @query(
     "qe34_ewma_trending",
-    oracle="""
-WITH daily AS (
-  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-         CAST(COUNT(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1, 2
-),
+    oracle=f"""
+WITH {sql_daily_counts("n_events")},
 decayed AS (
   SELECT a.event_type, a.day, a.n_events,
          SUM(CAST(ROUND(b.n_events * power(0.5, a.day - b.day) * 1e6)
@@ -348,19 +350,9 @@ def qe34(spark, sf_dir):
 
 @query(
     "qe35_cusum_changepoints",
-    oracle="""
-WITH daily AS (
-  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-         CAST(COUNT(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1, 2
-),
-stats AS (
-  SELECT event_type,
-         CAST(COUNT(*) AS DECIMAL(38,0)) AS cnt,
-         CAST(SUM(n_events) AS DECIMAL(38,0)) AS s,
-         CAST(SUM(n_events * n_events) AS DECIMAL(38,0)) AS q
-  FROM daily GROUP BY event_type
-),
+    oracle=f"""
+WITH {sql_daily_counts("n_events")},
+{SQL_DAILY_STATS},
 dev AS (
   SELECT d.event_type, d.day, d.n_events,
          st.cnt * d.n_events - st.s AS e,
@@ -478,12 +470,8 @@ def qe35(spark, sf_dir):
 
 @query(
     "qe36_variance_decomposition",
-    oracle="""
-WITH daily AS (
-  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-         CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1, 2
-),
+    oracle=f"""
+WITH {sql_daily_counts("y")},
 mm AS (SELECT event_type, MIN(day) AS d0 FROM daily GROUP BY 1),
 idx AS (
   SELECT d.event_type, d.day, d.y,
@@ -785,7 +773,12 @@ def qe37(spark, sf_dir):
     grouped k-vector per row to avoid it), one aggregation to
     (type, replica), then bounded windows over 32-row groups."""
     ev = t(spark, sf_dir, "events")
-    reps = ev.select(
+    # the ×32 fan-out and its md5 draws are the query's whole cost; a
+    # one-file events scan would run them in one task. The draws are
+    # content-addressed, so spreading them changes no value.
+    reps = ensure_parallelism(
+        ev.select("event_type", "value", "event_id")
+    ).select(
         "event_type",
         "value",
         F.col("event_id"),

@@ -12,19 +12,19 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ml_data_wrangler_spark.plans._util import dbl, money, t
+from ml_data_wrangler_spark.plans._util import (
+    SQL_DEBOUNCE,
+    SQL_HOURLY_BY_TYPE,
+    dbl,
+    money,
+    t,
+)
 from ml_data_wrangler_spark.plans.registry import query
 
 
 @query(
     "qe01_hourly_by_type",
-    oracle="""
-SELECT date_trunc('hour', ts) AS win_start, event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
-FROM events
-GROUP BY 1, 2
-""",
+    oracle=SQL_HOURLY_BY_TYPE,
 )
 def qe01(spark, sf_dir):
     """Tumbling 1-hour window per event type — F.window() (the same
@@ -956,20 +956,7 @@ def qe19(spark, sf_dir):
 
 @query(
     "qe20_event_debounce",
-    oracle="""
-WITH seq AS (
-  SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts,
-         LAG(CAST(ts AS TIMESTAMP)) OVER (
-             PARTITION BY user_id, event_type
-             ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_ts
-  FROM events
-)
-SELECT event_id, user_id, event_type, ts
-FROM seq
-WHERE prev_ts IS NULL
-   OR date_diff('microsecond', prev_ts, ts) >= 600000000
-ORDER BY event_id
-""",
+    oracle=SQL_DEBOUNCE + "ORDER BY event_id\n",
 )
 def qe20(spark, sf_dir):
     """Event debounce: suppress an event when the SAME (user, type)

@@ -13,7 +13,13 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ml_data_wrangler_spark.plans._util import dbl, money, t
+from ml_data_wrangler_spark.plans._util import (
+    SQL_DAILY_STATS,
+    dbl,
+    money,
+    sql_daily_counts,
+    t,
+)
 from ml_data_wrangler_spark.plans.registry import query
 
 
@@ -184,19 +190,9 @@ def qe22(spark, sf_dir):
 
 @query(
     "qe24_global_volume_outliers",
-    oracle="""
-WITH daily AS (
-  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-         CAST(COUNT(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1, 2
-),
-stats AS (
-  SELECT event_type,
-         CAST(COUNT(*) AS DECIMAL(38,0)) AS cnt,
-         CAST(SUM(n_events) AS DECIMAL(38,0)) AS s,
-         CAST(SUM(n_events * n_events) AS DECIMAL(38,0)) AS q
-  FROM daily GROUP BY event_type
-)
+    oracle=f"""
+WITH {sql_daily_counts("n_events")},
+{SQL_DAILY_STATS}
 SELECT d.event_type, d.day, d.n_events,
        CASE WHEN st.cnt * st.q - st.s * st.s = 0 THEN 0.0
             ELSE ROUND(CAST(st.cnt * d.n_events - st.s AS DOUBLE)

@@ -16,21 +16,20 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ml_data_wrangler_spark.operators.asof import asof_join_backward
-from ml_data_wrangler_spark.plans._util import t
+from ml_data_wrangler_spark.plans._util import (
+    SQL_CLICKS,
+    SQL_PURCHASES,
+    sql_sessions,
+    t,
+)
 from ml_data_wrangler_spark.plans.registry import query
 from ml_data_wrangler_spark.session import local_frame
 
 
 @query(
     "qj01_asof_purchase_click",
-    oracle="""
-WITH p AS (
-  SELECT user_id, ts AS purchase_ts, event_id AS purchase_id
-  FROM events WHERE event_type = 'purchase'
-), c AS (
-  SELECT user_id, ts AS click_ts, CAST(MAX(event_id) AS BIGINT) AS click_id
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-)
+    oracle=f"""
+WITH {SQL_PURCHASES}, {SQL_CLICKS}
 SELECT p.purchase_id, p.user_id, p.purchase_ts,
        c.click_id, c.click_ts AS matched_ts,
        CAST(date_diff('microsecond', c.click_ts, p.purchase_ts) AS BIGINT) AS gap_us
@@ -116,28 +115,11 @@ def qj02(spark, sf_dir):
 
 @query(
     "qj03_session_overlap_pairs",
-    oracle="""
-WITH e AS (
-  -- CAST to µs TIMESTAMP: parquet ts may read as TIMESTAMP_NS in
-  -- DuckDB while Spark compares at µs; a sub-µs residue straddling
-  -- the 30-min boundary would flip sessionization (qs03 pattern).
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events
-), flagged AS (
-  SELECT user_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS new_session
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), sess AS (
-  SELECT user_id, ts,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS sid
-  FROM flagged
-), ivl AS (
-  SELECT user_id, sid,
+    oracle=f"""
+WITH {sql_sessions("> INTERVAL 30 MINUTE")}, ivl AS (
+  SELECT user_id, session_id AS sid,
          CAST(MIN(ts) AS TIMESTAMP) AS s, CAST(MAX(ts) AS TIMESTAMP) AS e
-  FROM sess GROUP BY user_id, sid
+  FROM sessions GROUP BY user_id, session_id
 )
 SELECT a.user_id AS user_a, b.user_id AS user_b,
        CAST(COUNT(*) AS BIGINT) AS n_overlaps
@@ -201,14 +183,8 @@ def qj03(spark, sf_dir):
 
 @query(
     "qj04_asof_with_tolerance",
-    oracle="""
-WITH p AS (
-  SELECT user_id, ts AS purchase_ts, event_id AS purchase_id
-  FROM events WHERE event_type = 'purchase'
-), c AS (
-  SELECT user_id, ts AS click_ts, CAST(MAX(event_id) AS BIGINT) AS click_id
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-), m AS (
+    oracle=f"""
+WITH {SQL_PURCHASES}, {SQL_CLICKS}, m AS (
   SELECT p.purchase_id, p.user_id, p.purchase_ts, c.click_id, c.click_ts,
          date_diff('microsecond', c.click_ts, p.purchase_ts) <= 3600000000
            AS fresh
@@ -253,14 +229,11 @@ def qj04(spark, sf_dir):
 
 @query(
     "qj05_asof_forward_view_click",
-    oracle="""
+    oracle=f"""
 WITH v AS (
   SELECT user_id, ts AS view_ts, event_id AS view_id
   FROM events WHERE event_type = 'view'
-), c AS (
-  SELECT user_id, ts AS click_ts, CAST(MAX(event_id) AS BIGINT) AS click_id
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-)
+), {SQL_CLICKS}
 SELECT v.view_id, v.user_id, v.view_ts,
        c.click_id, c.click_ts AS matched_ts,
        CAST(date_diff('microsecond', v.view_ts, c.click_ts) AS BIGINT) AS gap_us

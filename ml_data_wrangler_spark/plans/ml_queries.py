@@ -16,9 +16,21 @@ from ml_data_wrangler_spark.operators.vectorize import (
     vectorize,
     vocabulary_df,
 )
-from ml_data_wrangler_spark.plans._util import t
+from ml_data_wrangler_spark.plans._util import (
+    SQL_BIGRAMS,
+    SQL_HASH_BUCKET,
+    SQL_LOGREG_GD,
+    SQL_TFIDF,
+    SQL_TF_DF,
+    SQL_TOKS,
+    SQL_UNIGRAMS,
+    sql_daily_counts,
+    sql_nb_confusion,
+    sql_nb_model,
+    sql_top_cosine_pairs,
+    t,
+)
 from ml_data_wrangler_spark.plans.registry import query
-from ml_data_wrangler_spark.plans.text_queries import SQL_TOKS
 from ml_data_wrangler_spark.session import bounded_collect, local_frame
 
 _SQL_VOCAB = f"""
@@ -201,18 +213,9 @@ def qm06(spark, sf_dir):
 @query(
     "qm08_tfidf_top_terms",
     oracle=f"""
-WITH tok AS (
-  SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents
-), tf AS (
-  SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM tok GROUP BY doc_id, token
-), dfc AS (
-  SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY token
-), n AS (
-  SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs FROM documents
-), weighted AS (
+WITH {SQL_TF_DF}, weighted AS (
   SELECT doc_id, tf.token, tf,
-         ROUND(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS weight
+         {SQL_TFIDF} AS weight
   FROM tf, n JOIN dfc ON tf.token = dfc.token
 ), ranked AS (
   SELECT doc_id, token, tf, weight,
@@ -261,18 +264,9 @@ QM09_DENSE_CELL_CAP = 200_000_000
 # sf0.1, over ALL pairs): round-6 ADVICE, made exact rather than
 # documented-as-lucky.
 _QM09_W_SQL = f"""
-WITH tok AS (
-  SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents
-), tf AS (
-  SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM tok GROUP BY doc_id, token
-), dfc AS (
-  SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY token
-), n AS (
-  SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs FROM documents
-), w AS (
+WITH {SQL_TF_DF}, w AS (
   SELECT doc_id, tf.token, df,
-         CAST(ROUND(ROUND(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) * 1e6)
+         CAST(ROUND({SQL_TFIDF} * 1e6)
               AS BIGINT) AS wu
   FROM tf CROSS JOIN n JOIN dfc ON tf.token = dfc.token
 )"""
@@ -472,24 +466,7 @@ def _qm09_scale_oracle(con):
 @query(
     "qm09_tfidf_doc_pairs",
     oracle=_QM09_W_SQL
-    + """, norms AS (
-  SELECT doc_id, sqrt(CAST(SUM(wu * wu) AS DOUBLE)) AS nrm
-  FROM w GROUP BY doc_id
-), dots AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(COUNT(*) AS BIGINT) AS shared,
-         CAST(SUM(a.wu * b.wu) AS DOUBLE) AS dot
-  FROM w a JOIN w b ON a.token = b.token AND a.doc_id < b.doc_id
-  WHERE a.df >= 2
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b, shared,
-       ROUND(dot / (na.nrm * nb.nrm), 6) AS cosine
-FROM dots
-JOIN norms na ON doc_a = na.doc_id
-JOIN norms nb ON doc_b = nb.doc_id
-ORDER BY cosine DESC, doc_a, doc_b
-LIMIT 20
+    + f""", {sql_top_cosine_pairs("wu")}
 """,
     scale_oracle=_qm09_scale_oracle,
     # the SQL pair kernel's GROUP BY keyspace is Θ(n²) over the
@@ -780,20 +757,7 @@ def qm10(spark, sf_dir):
     oracle=f"""
 WITH toks AS (
   SELECT doc_id, {SQL_TOKS} AS l FROM documents
-), uni AS (
-  SELECT tok, CAST(COUNT(*) AS BIGINT) AS n1
-  FROM (SELECT unnest(l) AS tok FROM toks) GROUP BY tok
-), tot AS (
-  SELECT CAST(SUM(n1) AS BIGINT) AS n_tokens FROM uni
-), bg AS (
-  SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS nb
-  FROM (
-    SELECT l[i] AS w1, l[i + 1] AS w2
-    FROM toks, unnest(generate_series(1, len(l) - 1)) AS g(i)
-    WHERE len(l) >= 2
-  )
-  GROUP BY w1, w2
-), pos AS (
+), {SQL_UNIGRAMS}, {SQL_BIGRAMS}, pos AS (
   SELECT doc_id, l[i] AS w, CASE WHEN i > 1 THEN l[i - 1] END AS prev
   FROM toks, unnest(generate_series(1, len(l))) AS g(i)
   WHERE len(l) > 0
@@ -899,37 +863,12 @@ def qm11(spark, sf_dir):
 @query(
     "qm12_tfidf_pairs_capped",
     oracle=f"""
-WITH tok AS (
-  SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents
-), tf AS (
-  SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM tok GROUP BY doc_id, token
-), dfc AS (
-  SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY token
-), n AS (
-  SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs FROM documents
-), w AS (
+WITH {SQL_TF_DF}, w AS (
   SELECT doc_id, tf.token, df,
-         ROUND(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS wt
+         {SQL_TFIDF} AS wt
   FROM tf CROSS JOIN n JOIN dfc ON tf.token = dfc.token
   WHERE df <= 0.1 * n_docs
-), norms AS (
-  SELECT doc_id, sqrt(SUM(wt * wt)) AS nrm FROM w GROUP BY doc_id
-), dots AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(COUNT(*) AS BIGINT) AS shared,
-         SUM(a.wt * b.wt) AS dot
-  FROM w a JOIN w b ON a.token = b.token AND a.doc_id < b.doc_id
-  WHERE a.df >= 2
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b, shared,
-       ROUND(dot / (na.nrm * nb.nrm), 6) AS cosine
-FROM dots
-JOIN norms na ON doc_a = na.doc_id
-JOIN norms nb ON doc_b = nb.doc_id
-ORDER BY cosine DESC, doc_a, doc_b
-LIMIT 20
+), {sql_top_cosine_pairs("wt")}
 """,
 )
 def qm12(spark, sf_dir):
@@ -985,12 +924,7 @@ def qm12(spark, sf_dir):
     "qm13_ppmi_cooccurrence",
     oracle=f"""
 WITH toks AS (SELECT {SQL_TOKS} AS l FROM documents),
-uni AS (
-  SELECT tok, CAST(COUNT(*) AS BIGINT) AS n1
-  FROM (SELECT unnest(l) AS tok FROM toks)
-  GROUP BY tok
-),
-tot AS (SELECT CAST(SUM(n1) AS BIGINT) AS n_tokens FROM uni),
+{SQL_UNIGRAMS},
 pr AS (
   SELECT least(l[i], l[i + 1]) AS w1, greatest(l[i], l[i + 1]) AS w2
   FROM toks, unnest(generate_series(1, len(l) - 1)) AS g(i)
@@ -1195,54 +1129,8 @@ def _nb_language_confusion(model_docs, eval_docs):
 @query(
     "qm14_nb_language_classifier",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, lang, {SQL_TOKS} AS l FROM documents
-),
-dt AS (
-  SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS occ
-  FROM (SELECT doc_id, unnest(l) AS tok FROM toks)
-  GROUP BY doc_id, tok
-),
-langs AS (
-  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents GROUP BY lang
-),
-n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM documents),
-v AS (SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS vsize FROM dt),
-cc AS (
-  SELECT t.lang, d.tok, CAST(SUM(d.occ) AS BIGINT) AS c
-  FROM dt d JOIN toks t USING (doc_id)
-  GROUP BY t.lang, d.tok
-),
-ct AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS t_lang FROM cc GROUP BY lang),
-tok_scores AS (
-  SELECT d.doc_id, langs.lang,
-         CAST(SUM(d.occ * CAST(ROUND(ln((COALESCE(cc.c, 0) + 1.0)
-                                        / (ct.t_lang + v.vsize)) * 1e6)
-                               AS BIGINT)) AS BIGINT) AS ts
-  FROM dt d
-  CROSS JOIN langs
-  CROSS JOIN v
-  JOIN ct ON ct.lang = langs.lang
-  LEFT JOIN cc ON cc.lang = langs.lang AND cc.tok = d.tok
-  GROUP BY d.doc_id, langs.lang
-),
-scored AS (
-  SELECT doc.doc_id, doc.lang AS actual_lang, langs.lang AS cand,
-         CAST(ROUND(ln(CAST(langs.n_docs AS DOUBLE) / n.n_total) * 1e6)
-              AS BIGINT) + COALESCE(ts.ts, 0) AS score
-  FROM documents doc
-  CROSS JOIN langs CROSS JOIN n
-  LEFT JOIN tok_scores ts ON ts.doc_id = doc.doc_id AND ts.lang = langs.lang
-),
-pred AS (
-  SELECT doc_id, actual_lang, cand AS pred_lang,
-         ROW_NUMBER() OVER (PARTITION BY doc_id
-                            ORDER BY score DESC, cand) AS rn
-  FROM scored
-)
-SELECT actual_lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
-FROM pred WHERE rn = 1
-GROUP BY actual_lang, pred_lang
+WITH {sql_nb_model("documents")},
+{sql_nb_confusion("dt", "documents")}
 """,
 )
 def qm14(spark, sf_dir):
@@ -1331,40 +1219,10 @@ def _logreg_weights(spark, feats, steps=3):
     return w, cnt
 
 
-_QM16_FEATS_SQL = f"""
-  SELECT CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
-         ROUND(n_chars / 1000.0, 6) + 0 AS x1,
-         ROUND(len({SQL_TOKS}) / 100.0, 6) + 0 AS x2,
-         ROUND(n_chars / (len({SQL_TOKS}) + 1) / 10.0, 6) + 0 AS x3
-  FROM documents
-"""
-
-# one GD step in SQL: given weight CTE {w}, emit updated weights {out}
-_QM16_STEP_SQL = """
-{out} AS (
-  SELECT
-    ROUND(w0 - 0.1 * CAST(CAST(SUM(CAST(ROUND((p - y) * 1e6) AS BIGINT)) AS BIGINT) AS DOUBLE) / n / 1e6, 6) + 0 AS w0,
-    ROUND(w1 - 0.1 * CAST(CAST(SUM(CAST(ROUND((p - y) * x1 * 1e6) AS BIGINT)) AS BIGINT) AS DOUBLE) / n / 1e6, 6) + 0 AS w1,
-    ROUND(w2 - 0.1 * CAST(CAST(SUM(CAST(ROUND((p - y) * x2 * 1e6) AS BIGINT)) AS BIGINT) AS DOUBLE) / n / 1e6, 6) + 0 AS w2,
-    ROUND(w3 - 0.1 * CAST(CAST(SUM(CAST(ROUND((p - y) * x3 * 1e6) AS BIGINT)) AS BIGINT) AS DOUBLE) / n / 1e6, 6) + 0 AS w3
-  FROM (
-    SELECT f.*, w.*, cnt.n,
-           1.0 / (1.0 + exp(-(w0 + w1 * x1 + w2 * x2 + w3 * x3))) AS p
-    FROM feats f CROSS JOIN {w} w CROSS JOIN cnt
-  )
-  GROUP BY w0, w1, w2, w3, n
-)"""
-
-
 @query(
     "qm16_logreg_gd",
     oracle=f"""
-WITH feats AS ({_QM16_FEATS_SQL}),
-cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM feats),
-winit AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3),
-{_QM16_STEP_SQL.format(w="winit", out="w_1")},
-{_QM16_STEP_SQL.format(w="w_1", out="w_2")},
-{_QM16_STEP_SQL.format(w="w_2", out="w_3")}
+WITH {SQL_LOGREG_GD}
 SELECT cnt.n AS n_docs, w0, w1, w2, w3,
        CAST(SUM(CAST(ROUND(
          (CASE WHEN y = 1.0 THEN -ln(p) ELSE -ln(1.0 - p) END) * 1e6)
@@ -1411,74 +1269,23 @@ def qm16(spark, sf_dir):
     ).agg(F.sum(micro(loss)).alias("loss_micronats"))
 
 
-_SQL_NB_HOLDOUT_BUCKET = (
-    "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 256"
-)
-
-
 @query(
     "qm17_nb_holdout_eval",
     oracle=f"""
 WITH tr AS (
-  SELECT * FROM documents WHERE {_SQL_NB_HOLDOUT_BUCKET} < 205
+  SELECT * FROM documents WHERE {SQL_HASH_BUCKET} < 205
 ),
 ev AS (
   SELECT * FROM documents
-  WHERE {_SQL_NB_HOLDOUT_BUCKET} >= 205 AND {_SQL_NB_HOLDOUT_BUCKET} < 230
+  WHERE {SQL_HASH_BUCKET} >= 205 AND {SQL_HASH_BUCKET} < 230
 ),
-toks AS (
-  SELECT doc_id, lang, {SQL_TOKS} AS l FROM tr
-),
-dt AS (
-  SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS occ
-  FROM (SELECT doc_id, unnest(l) AS tok FROM toks)
-  GROUP BY doc_id, tok
-),
-langs AS (
-  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs FROM tr GROUP BY lang
-),
-n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM tr),
-v AS (SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS vsize FROM dt),
-cc AS (
-  SELECT t.lang, d.tok, CAST(SUM(d.occ) AS BIGINT) AS c
-  FROM dt d JOIN toks t USING (doc_id)
-  GROUP BY t.lang, d.tok
-),
-ct AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS t_lang FROM cc GROUP BY lang),
+{sql_nb_model("tr")},
 dte AS (
   SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS occ
   FROM (SELECT doc_id, unnest({SQL_TOKS}) AS tok FROM ev)
   GROUP BY doc_id, tok
 ),
-tok_scores AS (
-  SELECT d.doc_id, langs.lang,
-         CAST(SUM(d.occ * CAST(ROUND(ln((COALESCE(cc.c, 0) + 1.0)
-                                        / (ct.t_lang + v.vsize)) * 1e6)
-                               AS BIGINT)) AS BIGINT) AS ts
-  FROM dte d
-  CROSS JOIN langs
-  CROSS JOIN v
-  JOIN ct ON ct.lang = langs.lang
-  LEFT JOIN cc ON cc.lang = langs.lang AND cc.tok = d.tok
-  GROUP BY d.doc_id, langs.lang
-),
-scored AS (
-  SELECT doc.doc_id, doc.lang AS actual_lang, langs.lang AS cand,
-         CAST(ROUND(ln(CAST(langs.n_docs AS DOUBLE) / n.n_total) * 1e6)
-              AS BIGINT) + COALESCE(ts.ts, 0) AS score
-  FROM ev doc
-  CROSS JOIN langs CROSS JOIN n
-  LEFT JOIN tok_scores ts ON ts.doc_id = doc.doc_id AND ts.lang = langs.lang
-),
-pred AS (
-  SELECT doc_id, actual_lang, cand AS pred_lang,
-         ROW_NUMBER() OVER (PARTITION BY doc_id
-                            ORDER BY score DESC, cand) AS rn
-  FROM scored
-)
-SELECT actual_lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
-FROM pred WHERE rn = 1
-GROUP BY actual_lang, pred_lang
+{sql_nb_confusion("dte", "ev")}
 """,
 )
 def qm17(spark, sf_dir):
@@ -1511,12 +1318,7 @@ def qm17(spark, sf_dir):
 @query(
     "qm18_logreg_calibration",
     oracle=f"""
-WITH feats AS ({_QM16_FEATS_SQL}),
-cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM feats),
-winit AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3),
-{_QM16_STEP_SQL.format(w="winit", out="w_1")},
-{_QM16_STEP_SQL.format(w="w_1", out="w_2")},
-{_QM16_STEP_SQL.format(w="w_2", out="w_3")},
+WITH {SQL_LOGREG_GD},
 scored AS (
   SELECT f.y,
          ROUND(1.0 / (1.0 + exp(-(w0 + w1 * x1 + w2 * x2 + w3 * x3))), 6) + 0
@@ -1597,12 +1399,8 @@ def qm18(spark, sf_dir):
 
 @query(
     "qm19_ols_daily_trend",
-    oracle="""
-WITH daily AS (
-  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-         CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1, 2
-),
+    oracle=f"""
+WITH {sql_daily_counts("y")},
 idx AS (
   SELECT event_type, CAST(day - MIN(day) OVER (PARTITION BY event_type)
                           AS BIGINT) AS x, y

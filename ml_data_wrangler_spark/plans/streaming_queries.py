@@ -9,6 +9,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ml_data_wrangler_spark.plans._util import (
+    SQL_DEBOUNCE,
+    SQL_HOURLY_BY_TYPE,
+    sql_sessions,
+)
 from ml_data_wrangler_spark.plans.registry import query
 from ml_data_wrangler_spark.streaming.windows import (
     read_events_stream,
@@ -20,13 +25,7 @@ from ml_data_wrangler_spark.streaming.windows import (
 
 @query(
     "qs01_stream_tumbling_hourly",
-    oracle="""
-SELECT date_trunc('hour', ts) AS win_start, event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
-FROM events
-GROUP BY 1, 2
-""",
+    oracle=SQL_HOURLY_BY_TYPE,
 )
 def qs01(spark, sf_dir):
     """Structured Streaming tumbling-window aggregation, checked
@@ -39,23 +38,8 @@ def qs01(spark, sf_dir):
 
 @query(
     "qs03_stream_session_windows",
-    oracle="""
-WITH e AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events
-), flagged AS (
-  SELECT user_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS new_session
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), sessions AS (
-  SELECT user_id, ts,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_id
-  FROM flagged
-)
+    oracle=f"""
+WITH {sql_sessions(">= INTERVAL 30 MINUTE")}
 SELECT MIN(ts) AS session_start,
        MAX(ts) + INTERVAL 30 MINUTE AS session_end,
        user_id,
@@ -263,19 +247,7 @@ def qs07(spark, sf_dir):
 
 @query(
     "qs08_stream_debounce",
-    oracle="""
-WITH seq AS (
-  SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts,
-         LAG(CAST(ts AS TIMESTAMP)) OVER (
-             PARTITION BY user_id, event_type
-             ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_ts
-  FROM events
-)
-SELECT event_id, user_id, event_type, ts
-FROM seq
-WHERE prev_ts IS NULL
-   OR date_diff('microsecond', prev_ts, ts) >= 600000000
-""",
+    oracle=SQL_DEBOUNCE,
 )
 def qs08(spark, sf_dir):
     """Streaming stateful debounce (applyInPandasWithState — ONE

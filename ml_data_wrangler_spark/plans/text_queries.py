@@ -23,7 +23,6 @@ from ml_data_wrangler_spark.functions.text import (
     tokenize,
 )
 from ml_data_wrangler_spark.functions.textstats import (
-    LANG_STOPWORDS,
     SUBWORD_PATTERN,
     detect_language,
     doc_fingerprint,
@@ -33,12 +32,21 @@ from ml_data_wrangler_spark.functions.textstats import (
     token_count,
 )
 from ml_data_wrangler_spark.operators._partition import ensure_parallelism
-from ml_data_wrangler_spark.plans._util import t
+from ml_data_wrangler_spark.plans._util import (
+    SQL_BIGRAMS,
+    SQL_BM25_TF,
+    SQL_DETECTED_LANG,
+    SQL_FINGERPRINT,
+    SQL_LANG_HITS,
+    SQL_QUALITY,
+    SQL_QUALITY_FEATURES,
+    SQL_TOKS,
+    SQL_UNIGRAMS,
+    sql_bm25_top,
+    t,
+)
 from ml_data_wrangler_spark.plans.registry import query
 from ml_data_wrangler_spark.session import bounded_collect, local_frame
-
-# DuckDB fragment mirroring functions.text.tokenize().
-SQL_TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z]+'), x -> x <> '')"
 
 
 @query(
@@ -131,25 +139,16 @@ def qt03(spark, sf_dir):
     )
 
 
-_SQL_EN_SET = "[" + ", ".join(f"'{w}'" for w in LANG_STOPWORDS["en"]) + "]"
-
 @query(
     "qt04_quality_scores",
     oracle=f"""
 WITH feat AS (
   SELECT doc_id,
-         CAST(len({SQL_TOKS}) AS BIGINT) AS tok_cnt,
-         CASE WHEN len(text) > 0
-              THEN CAST(len(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / len(text)
-              ELSE 0.0 END AS a_ratio,
-         CASE WHEN len({SQL_TOKS}) > 0
-              THEN CAST(len(list_filter({SQL_TOKS}, x -> list_contains({_SQL_EN_SET}, x))) AS DOUBLE)
-                     / len({SQL_TOKS})
-              ELSE 0.0 END AS s_ratio
+         {SQL_QUALITY_FEATURES}
   FROM documents
 )
 SELECT doc_id,
-       ROUND(0.4 * least(tok_cnt / 50.0, 1.0) + 0.4 * a_ratio + 0.2 * s_ratio, 6)
+       {SQL_QUALITY}
          AS quality
 FROM feat
 """,
@@ -162,26 +161,16 @@ def qt04(spark, sf_dir):
     )
 
 
-def _sql_hits(code: str) -> str:
-    words = "[" + ", ".join(f"'{w}'" for w in LANG_STOPWORDS[code]) + "]"
-    return f"len(list_filter({SQL_TOKS}, x -> list_contains({words}, x)))"
-
-
 @query(
     "qt05_language_id",
     oracle=f"""
 WITH hits AS (
   SELECT doc_id, lang AS labeled_lang,
-         {_sql_hits('en')} AS h_en, {_sql_hits('de')} AS h_de,
-         {_sql_hits('fr')} AS h_fr, {_sql_hits('es')} AS h_es
+         {SQL_LANG_HITS}
   FROM documents
 )
 SELECT doc_id, labeled_lang,
-       CASE WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'und'
-            WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr'
-            WHEN h_es = greatest(h_en, h_de, h_fr, h_es) THEN 'es'
-            WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
-            ELSE 'de' END AS detected_lang
+       {SQL_DETECTED_LANG} AS detected_lang
 FROM hits
 """,
 )
@@ -224,9 +213,9 @@ def qt06(spark, sf_dir):
 
 @query(
     "qt07_fingerprints",
-    oracle="""
+    oracle=f"""
 SELECT doc_id,
-       md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
+       {SQL_FINGERPRINT} AS fingerprint
 FROM documents
 """,
 )
@@ -282,21 +271,8 @@ def qt08(spark, sf_dir):
     "qt09_bigram_pmi",
     oracle=f"""
 WITH toks AS (SELECT {SQL_TOKS} AS l FROM documents),
-uni AS (
-  SELECT tok, CAST(COUNT(*) AS BIGINT) AS n1
-  FROM (SELECT unnest(l) AS tok FROM toks)
-  GROUP BY tok
-),
-tot AS (SELECT CAST(SUM(n1) AS BIGINT) AS n_tokens FROM uni),
-bg AS (
-  SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS nb
-  FROM (
-    SELECT l[i] AS w1, l[i + 1] AS w2
-    FROM toks, unnest(generate_series(1, len(l) - 1)) AS g(i)
-    WHERE len(l) >= 2
-  )
-  GROUP BY w1, w2
-),
+{SQL_UNIGRAMS},
+{SQL_BIGRAMS},
 btot AS (SELECT CAST(SUM(nb) AS BIGINT) AS n_bigrams FROM bg)
 SELECT w1, w2, nb,
        ROUND(ln(CAST(nb AS DOUBLE) * n_tokens * n_tokens
@@ -440,19 +416,14 @@ WITH feat AS (
               THEN CAST(len(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / len(text)
               ELSE 0.0 END AS a_ratio,
          lang AS labeled_lang,
-         {_sql_hits('en')} AS h_en, {_sql_hits('de')} AS h_de,
-         {_sql_hits('fr')} AS h_fr, {_sql_hits('es')} AS h_es
+         {SQL_LANG_HITS}
   FROM documents
 ), flags AS (
   SELECT source,
          (nt = 0) AS empty_doc,
          (nt > 0 AND nt < 10) AS too_short,
          (a_ratio < 0.5) AS low_alpha,
-         (CASE WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'und'
-               WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr'
-               WHEN h_es = greatest(h_en, h_de, h_fr, h_es) THEN 'es'
-               WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
-               ELSE 'de' END) <> labeled_lang AS lang_mismatch
+         ({SQL_DETECTED_LANG}) <> labeled_lang AS lang_mismatch
   FROM feat
 )
 SELECT source,
@@ -629,16 +600,11 @@ def qt13(spark, sf_dir):
     oracle=f"""
 WITH hits AS (
   SELECT lang AS labeled_lang,
-         {_sql_hits('en')} AS h_en, {_sql_hits('de')} AS h_de,
-         {_sql_hits('fr')} AS h_fr, {_sql_hits('es')} AS h_es
+         {SQL_LANG_HITS}
   FROM documents
 ), det AS (
   SELECT labeled_lang,
-         CASE WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'und'
-              WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr'
-              WHEN h_es = greatest(h_en, h_de, h_fr, h_es) THEN 'es'
-              WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
-              ELSE 'de' END AS detected_lang
+         {SQL_DETECTED_LANG} AS detected_lang
   FROM hits
 ), m AS (
   SELECT labeled_lang, detected_lang, CAST(COUNT(*) AS BIGINT) AS n
@@ -974,69 +940,11 @@ def qt18(spark, sf_dir):
     )
 
 
-# BM25's linear term-frequency prologue (tokens → per-(doc, token)
-# tf), shared verbatim between the SQL oracle CTE and the Python
-# scale-oracle kernel so the two can never drift on the input
-# definition — only the query×posting fan-out differs between them.
-_BM25_BTF_CTES = f"""bdt AS (
-  SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents
-),
-btf AS (
-  SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM bdt GROUP BY doc_id, token
-)"""
-
-
-def bm25_sql_cte(top: int) -> str:
-    """WITH-body fragment (no leading WITH) ending in relation
-    ``btop(query_id, cand_id, rnk, s)``: BM25 (k1 = 1.2, b = 0.75)
-    top-``top`` candidates per query doc (doc_id % 20 == 0), ranked on
-    the EXACT micro-quantized integer score. Shared by qt19's oracle
-    and qv20's hybrid-fusion oracle."""
-    return f"""{_BM25_BTF_CTES},
-bdl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM btf GROUP BY doc_id),
-bdf AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM btf GROUP BY token),
-bcorp AS (
-  SELECT CAST((SELECT COUNT(*) FROM documents) AS BIGINT) AS n_docs,
-         CAST((SELECT SUM(dl) FROM bdl) AS DOUBLE)
-           / (SELECT COUNT(*) FROM documents) AS avgdl
-),
-bidf AS (
-  SELECT token,
-         ROUND(ln(1 + (bcorp.n_docs - df + 0.5) / (df + 0.5)), 6) + 0 AS idf
-  FROM bdf, bcorp
-),
-bq AS (
-  SELECT doc_id AS query_id, token FROM btf WHERE doc_id % 20 = 0
-),
-bscore AS (
-  SELECT bq.query_id, c.doc_id AS cand_id,
-         SUM(CAST(ROUND(bidf.idf
-               * ((c.tf * 2.2)
-                  / (c.tf + 1.2 * (0.25 + 0.75 * (cd.dl / bcorp.avgdl))))
-               * 1e6) AS BIGINT)) AS s
-  FROM bq
-  JOIN btf c ON c.token = bq.token AND c.doc_id <> bq.query_id
-  JOIN bidf ON bidf.token = bq.token
-  JOIN bdl cd ON cd.doc_id = c.doc_id
-  CROSS JOIN bcorp
-  GROUP BY bq.query_id, c.doc_id
-),
-btop AS (
-  SELECT query_id, cand_id, rnk, s FROM (
-    SELECT query_id, cand_id, s,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY s DESC, cand_id) AS rnk
-    FROM bscore
-  ) WHERE rnk <= {top}
-)"""
-
-
 def bm25_topk_py(con, top: int) -> list[tuple[int, int, int, int]]:
     """Scale-tier BM25 kernel shared by qt19's and qv20's Python
     scale-oracles: (query_id, cand_id, rnk, s) rows of the exact
     micro-quantized top-``top``, same value definition as
-    :func:`bm25_sql_cte`.
+    :func:`plans._util.sql_bm25_top`.
 
     Why this exists: the SQL CTE's scoring step fans every query
     token out to its posting list — on the fixture's dense ~31-token
@@ -1045,7 +953,7 @@ def bm25_topk_py(con, top: int) -> list[tuple[int, int, int, int]]:
     aggregate by spilling the partitioned input (measured: 40-80 GB
     of temp; two sweep deaths from transient disk headroom). The
     matrix formulation needs none of that: DuckDB computes the linear
-    tf prologue (the SQL oracle's own CTEs via _BM25_BTF_CTES), the
+    tf prologue (the SQL oracle's own CTEs via SQL_BM25_TF), the
     query-independent per-posting weight w_u = ROUND(idf·sat·1e6) is
     built per (doc, token) exactly as in SQL (idf rounded HALF-AWAY
     to 6 decimals first, float64 factor order preserved), and the
@@ -1057,7 +965,7 @@ def bm25_topk_py(con, top: int) -> list[tuple[int, int, int, int]]:
     import numpy as np
 
     pdf = con.execute(
-        "WITH " + _BM25_BTF_CTES + "\nSELECT doc_id, token, tf FROM btf"
+        "WITH " + SQL_BM25_TF + "\nSELECT doc_id, token, tf FROM btf"
     ).df()
     n_docs = con.execute("SELECT COUNT(*) FROM documents").fetchone()[0]
     if len(pdf) == 0:
@@ -1128,7 +1036,7 @@ BM25_KERNEL_CHUNK_CELLS = 4_000_000
 
 
 def bm25_rankings(spark, sf_dir, top: int):
-    """Spark dual of :func:`bm25_sql_cte` — DataFrame
+    """Spark dual of :func:`plans._util.sql_bm25_top` — DataFrame
     (query_id, cand_id, rnk, s) of the BM25 top-``top`` per query doc.
 
     Okapi BM25 (k1 = 1.2, b = 0.75, the Robertson idf in its
@@ -1406,7 +1314,7 @@ def bm25_rankings(spark, sf_dir, top: int):
 @query(
     "qt19_bm25_retrieval",
     oracle=f"""
-WITH {bm25_sql_cte(3)}
+WITH {sql_bm25_top(3)}
 SELECT query_id, CAST(rnk AS BIGINT) AS rnk, cand_id,
        ROUND(s / 1e6, 6) + 0 AS bm25
 FROM btop

@@ -27,10 +27,9 @@ from ml_data_wrangler_spark.operators.similarity import (
     ivf_index,
     ivf_search,
 )
-from ml_data_wrangler_spark.plans._util import t
+from ml_data_wrangler_spark.plans._util import SQL_COS, sql_bm25_top, t
 from ml_data_wrangler_spark.plans.registry import query
-from ml_data_wrangler_spark.plans.text_queries import bm25_rankings, bm25_sql_cte
-from ml_data_wrangler_spark.plans.vector_queries import _SQL_COS
+from ml_data_wrangler_spark.plans.text_queries import bm25_rankings
 from ml_data_wrangler_spark.session import bounded_collect, local_frame
 
 
@@ -238,7 +237,7 @@ dims AS (SELECT label, i, AVG(x) AS dv FROM e GROUP BY label, i),
 cent AS (SELECT label AS cand, list(dv ORDER BY i) AS cv FROM dims GROUP BY label),
 scored AS (
   SELECT c.vec_id, c.label, cent.cand,
-         CAST(ROUND((ROUND({_SQL_COS.format(a="c.v", b="cent.cv")}, 6) + 0) * 1e6)
+         CAST(ROUND((ROUND({SQL_COS.format(a="c.v", b="cent.cv")}, 6) + 0) * 1e6)
               AS BIGINT) AS sim_micro
   FROM c CROSS JOIN cent
 ),
@@ -698,7 +697,7 @@ def _qv19_topk_sql(d: int) -> str:
     # in the innermost subquery also keeps the window's sort input to
     # three scalar columns instead of two 64-dim vectors per row
     # (qv21's oracle trap — the unpinned form OOM-died at the 6× tier)
-    cos = _SQL_COS.format(a=f"qv[1:{d}]", b=f"c.v[1:{d}]")
+    cos = SQL_COS.format(a=f"qv[1:{d}]", b=f"c.v[1:{d}]")
     return f"""
 top{d} AS MATERIALIZED (
   SELECT query_id, neighbor_id FROM (
@@ -920,7 +919,7 @@ def _qv20_scale_oracle(con):
 @query(
     "qv20_hybrid_rrf_fusion",
     oracle=f"""
-WITH {bm25_sql_cte(20)},
+WITH {sql_bm25_top(20)},
 vc AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 vq AS (SELECT vec_id AS query_id, v AS qv FROM vc WHERE vec_id % 20 = 0),
 vtop AS (
@@ -928,7 +927,7 @@ vtop AS (
     SELECT vq.query_id, vc.vec_id AS cand_id,
            ROW_NUMBER() OVER (
              PARTITION BY vq.query_id
-             ORDER BY ROUND({_SQL_COS.format(a="vq.qv", b="vc.v")}, 6) DESC,
+             ORDER BY ROUND({SQL_COS.format(a="vq.qv", b="vc.v")}, 6) DESC,
                       vc.vec_id
            ) AS rnk
     FROM vq JOIN vc ON vc.vec_id <> vq.query_id
@@ -1067,7 +1066,7 @@ cand AS MATERIALIZED (
            ) AS rk
     FROM (
       SELECT query_id, c.vec_id AS neighbor_id,
-             ROUND({_SQL_COS.format(a="qv", b="c.v")}, 6) AS sim
+             ROUND({SQL_COS.format(a="qv", b="c.v")}, 6) AS sim
       FROM q JOIN c ON c.vec_id <> q.query_id
     )
   ) WHERE rk <= 10
@@ -1078,7 +1077,7 @@ cv AS MATERIALIZED (
 ),
 pair AS MATERIALIZED (
   SELECT a.query_id, a.neighbor_id, b.neighbor_id AS sel,
-         CAST(ROUND(ROUND({_SQL_COS.format(a="a.v", b="b.v")}, 6) * 1e6)
+         CAST(ROUND(ROUND({SQL_COS.format(a="a.v", b="b.v")}, 6) * 1e6)
               AS BIGINT) AS psim_u
   FROM cv a JOIN cv b
     ON a.query_id = b.query_id AND a.neighbor_id <> b.neighbor_id
@@ -1274,8 +1273,8 @@ q AS (
 ),
 scored AS (
   SELECT query_id, ql, c.vec_id AS neighbor_id, c.label AS nl,
-         ROUND({_SQL_COS.format(a="qv", b="c.v")}, 6) AS sim,
-         CAST(ROUND(ROUND({_SQL_COS.format(a="qv", b="c.v")}, 6) * 1e6)
+         ROUND({SQL_COS.format(a="qv", b="c.v")}, 6) AS sim,
+         CAST(ROUND(ROUND({SQL_COS.format(a="qv", b="c.v")}, 6) * 1e6)
               AS BIGINT) AS sim_u
   FROM q JOIN c ON c.vec_id <> q.query_id
 ),

@@ -26,14 +26,8 @@ from ml_data_wrangler_spark.operators.similarity import (
     ivf_index,
     ivf_search,
 )
-from ml_data_wrangler_spark.plans._util import t
+from ml_data_wrangler_spark.plans._util import SQL_COS, t
 from ml_data_wrangler_spark.plans.registry import query
-
-_SQL_COS = (
-    "list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-)
-
 
 _QV01_ORACLE_CHUNK = 4096
 
@@ -226,7 +220,7 @@ WITH e AS (
   SELECT label, list(dv ORDER BY i) AS c FROM dims GROUP BY label
 )
 SELECT a.label AS label_a, b.label AS label_b,
-       ROUND({_SQL_COS.format(a="a.c", b="b.c")}, 6) + 0 AS centroid_sim
+       ROUND({SQL_COS.format(a="a.c", b="b.c")}, 6) + 0 AS centroid_sim
 FROM cent a JOIN cent b ON a.label < b.label
 """,
 )
@@ -272,10 +266,10 @@ WITH c AS (
   FROM embeddings
 )
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       ROUND({_SQL_COS.format(a="a.v", b="b.v")}, 6) AS sim
+       ROUND({SQL_COS.format(a="a.v", b="b.v")}, 6) AS sim
 FROM c a JOIN c b ON a.label = b.label AND a.sub = b.sub
                   AND a.vec_id < b.vec_id
-WHERE ROUND({_SQL_COS.format(a="a.v", b="b.v")}, 6) >= 0.35
+WHERE ROUND({SQL_COS.format(a="a.v", b="b.v")}, 6) >= 0.35
 """,
 )
 def qv04(spark, sf_dir):
@@ -333,10 +327,10 @@ def qv05(spark, sf_dir):
 WITH c AS (SELECT vec_id, CAST(floor(vec_id / 2000) AS BIGINT) AS sub,
                   CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       ROUND({_SQL_COS.format(a="a.v", b="b.v")}, 6) AS sim,
+       ROUND({SQL_COS.format(a="a.v", b="b.v")}, 6) AS sim,
        TRUE AS lsh_recall_ok
 FROM c a JOIN c b ON a.sub = b.sub AND a.vec_id < b.vec_id
-WHERE ROUND({_SQL_COS.format(a="a.v", b="b.v")}, 6) >= 0.35
+WHERE ROUND({SQL_COS.format(a="a.v", b="b.v")}, 6) >= 0.35
 """,
 )
 def qv06(spark, sf_dir):
@@ -448,7 +442,7 @@ WITH RECURSIVE c AS (
 ), pairs AS (
   SELECT a.vec_id AS u, b.vec_id AS w
   FROM c a JOIN c b ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE ROUND({_SQL_COS.format(a="a.v", b="b.v")}, 6) >= 0.35
+  WHERE ROUND({SQL_COS.format(a="a.v", b="b.v")}, 6) >= 0.35
 ), edges AS (
   SELECT u, w FROM pairs UNION SELECT w, u FROM pairs
 ), reach(u, w) AS (

@@ -506,3 +506,14 @@ def test_ensure_parallelism_min_bytes_gate(spark):
         big, min_bytes=TOKENIZE_REPARTITION_MIN_BYTES
     )
     assert boosted.rdd.getNumPartitions() == par
+
+
+def test_bootstrap_fanout_runs_off_a_repartition(spark, sf_dir, q):
+    """qe37's ×32 replica fan-out (the Generate of its explode) and the
+    md5 draws above it must run on a round-robin repartition of the
+    projected events, not inside the one-split events scan."""
+    lines = _plan(q["qe37_bootstrap_ci"](spark, sf_dir)).splitlines()
+    gen = next(i for i, ln in enumerate(lines) if "- Generate " in ln)
+    rr = [i for i, ln in enumerate(lines) if "RoundRobinPartitioning" in ln]
+    depth = lambda ln: len(ln) - len(ln.lstrip(" :+-"))  # noqa: E731
+    assert any(i > gen and depth(lines[i]) > depth(lines[gen]) for i in rr), lines[gen:]

@@ -46,11 +46,11 @@ def test_gemm_path_is_active_on_fixture(spark, sf_dir, qname):
 def test_plan_build_pulls_the_vocabulary_once(spark, sf_dir, qname, jobs_in):
     """Within the cap the bounded vocabulary probe IS the vocabulary and
     is sorted on the driver, so plan build runs no second, ordered
-    collect of it: 21 jobs on this fixture, where that collect made
+    collect of it: 19 jobs on this fixture, where that collect made
     5 more."""
     build = registry.queries()[qname]
     _, n_jobs = jobs_in(lambda: build(spark, sf_dir))
-    assert n_jobs == 21
+    assert n_jobs == 19
 
 
 def test_scale_oracle_equals_sql_oracle(sf_dir, qname):

@@ -78,9 +78,18 @@ def test_vectorizer_and_lda_sweep_are_deterministic(spark, sf_dir, documents):
 
 def test_fit_vectorizer_job_count(documents, jobs_in):
     """The fit is one vocabulary query collected to the driver; pinned
-    so a re-tokenizing or re-scanning fit shows up as extra jobs."""
+    so a re-tokenizing or re-scanning fit shows up as extra jobs. With
+    max_df >= 1 the cap is vacuous and no document count N is built."""
     toks = tokens_df(documents)
     _, jobs = jobs_in(lambda: fit_vectorizer(toks, min_df=2.0, max_df=1.0))
+    assert jobs == 2
+
+
+def test_fit_vectorizer_job_count_with_a_max_df_cap(documents, jobs_in):
+    """A real cap (max_df < 1) needs N: its count(*) stage and the
+    broadcast of it are the 2 jobs over the uncapped fit."""
+    toks = tokens_df(documents)
+    _, jobs = jobs_in(lambda: fit_vectorizer(toks, min_df=2.0, max_df=0.5))
     assert jobs == 4
 
 
