@@ -99,11 +99,8 @@ def cmd_corpus_build(args) -> int:
     recompute)."""
     from pyspark.sql import functions as F
 
-    from ml_data_wrangler_spark.functions.textstats import (
-        doc_fingerprint,
-        quality_score,
-        token_count,
-    )
+    from ml_data_wrangler_spark.functions.textstats import quality_score, token_count
+    from ml_data_wrangler_spark.operators.dedup import dedup_pipeline, exact_dedup
     from ml_data_wrangler_spark.sources.readers import read_table
     from ml_data_wrangler_spark.sources.sinks import write_corpus_shards_with_manifest
 
@@ -113,8 +110,6 @@ def cmd_corpus_build(args) -> int:
 
     if args.near_dup_threshold is not None:
         # tiered dedup: exact fingerprints + n-gram Jaccard near-dups
-        from ml_data_wrangler_spark.operators.dedup import dedup_pipeline
-
         verdicts = dedup_pipeline(
             docs, jaccard_threshold=args.near_dup_threshold
         )
@@ -122,11 +117,7 @@ def cmd_corpus_build(args) -> int:
             verdicts.where(F.col("keep")).select("doc_id"), "doc_id", "left_semi"
         )
     else:
-        fp = docs.withColumn("fingerprint", doc_fingerprint(F.col("text")))
-        keepers = fp.groupBy("fingerprint").agg(F.min("doc_id").alias("doc_id"))
-        unique = fp.join(keepers.select("doc_id"), "doc_id", "left_semi").drop(
-            "fingerprint"
-        )
+        unique = exact_dedup(docs)
     curated = unique.withColumn("quality", quality_score(F.col("text"))).where(
         F.col("quality") >= args.min_quality
     )

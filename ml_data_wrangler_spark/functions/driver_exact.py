@@ -84,6 +84,16 @@ def ieee_div(a: float, b: float) -> float:
     return a / b
 
 
+def round_half_away_np(s):
+    """floor(s + 0.5) at or above zero, ceil(s - 0.5) below: Spark's and
+    DuckDB's ROUND to an integer, half away from zero, in binary
+    float64. Each step re-rounds, so an s within about an ulp of k.5
+    can land one off the decimal-domain ROUND (see round_long_np)."""
+    import numpy as np
+
+    return np.where(s >= 0, np.floor(s + 0.5), np.ceil(s - 0.5))
+
+
 def round_long_np(s):
     """Vectorized :func:`round_long` — ``CAST(round(x) AS BIGINT)``
     over a float64 ndarray, bit-exact against Spark's decimal-domain
@@ -118,7 +128,7 @@ def round_long_np(s):
     s = np.asarray(s, dtype=np.float64)
     finite = np.isfinite(s)
     with np.errstate(invalid="ignore"):  # inf - inf in the band calc
-        fast = np.where(s >= 0, np.floor(s + 0.5), np.ceil(s - 0.5))
+        fast = round_half_away_np(s)
         half_dist = np.abs(s - (np.floor(s) + 0.5))
         # over-int64 magnitudes also route through the scalar path
         # (numpy float→int64 astype is undefined there; callers'

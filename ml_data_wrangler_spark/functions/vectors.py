@@ -48,6 +48,15 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def pair_cosine() -> Column:
+    """The relational top-k kernel's rounded sim of a scored pair: its
+    query (qvec, qnorm) and candidate (cvec, cnorm) columns, the norms
+    precomputed per side with l2_norm."""
+    return F.round(
+        dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm")), 6
+    )
+
+
 def infer_dim(df: DataFrame, vec_col: str) -> int | None:
     """Array length of ``vec_col``'s first non-null value — one
     head(1) driver fetch, used to pick the unrolled kernels. None on

@@ -20,6 +20,78 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 
+def _asof_join(
+    left: DataFrame,
+    right: DataFrame,
+    key: str,
+    left_ts: str,
+    right_ts: str,
+    right_payload: dict[str, str] | None,
+    tolerance_seconds: float | None,
+    forward: bool,
+) -> DataFrame:
+    """The one as-of algorithm; ``forward`` reverses time. Both sides
+    are tagged and unioned; a (key, time)-ordered window carries the
+    nearest right payload to each left row: backward looks over
+    unboundedPreceding..currentRow with ``last``, forward over
+    currentRow..unboundedFollowing with ``first``. The side tag puts
+    the right row on the matching side of a left row at an equal
+    timestamp, so a right row at exactly t matches a left row at t in
+    both directions."""
+    right_payload = right_payload or {}
+    lcols = [c for c in left.columns]
+    # backward: right sorts before left at equal ts; forward: after
+    left_side, right_side = (0, 1) if forward else (1, 0)
+
+    l_tagged = left.select(
+        F.col(key).alias("_k"),
+        F.col(left_ts).alias("_t"),
+        F.lit(left_side).alias("_side"),
+        *[F.col(c).alias(f"_l_{c}") for c in lcols],
+        *[F.lit(None).cast(right.schema[rc].dataType).alias(f"_r_{rc}") for rc in right_payload],
+        F.lit(None).cast(right.schema[right_ts].dataType).alias("_r_ts"),
+    )
+    r_tagged = right.select(
+        F.col(key).alias("_k"),
+        F.col(right_ts).alias("_t"),
+        F.lit(right_side).alias("_side"),
+        *[F.lit(None).cast(left.schema[c].dataType).alias(f"_l_{c}") for c in lcols],
+        *[F.col(rc).alias(f"_r_{rc}") for rc in right_payload],
+        F.col(right_ts).alias("_r_ts"),
+    )
+    order = W.partitionBy("_k").orderBy("_t", "_side")
+    if forward:
+        w, carry = order.rowsBetween(W.currentRow, W.unboundedFollowing), F.first
+    else:
+        w, carry = order.rowsBetween(W.unboundedPreceding, W.currentRow), F.last
+    carried = l_tagged.unionByName(r_tagged).select(
+        "*",
+        *[
+            carry(f"_r_{rc}", ignorenulls=True).over(w).alias(f"_c_{rc}")
+            for rc in right_payload
+        ],
+        carry("_r_ts", ignorenulls=True).over(w).alias("_c_ts"),
+    )
+    if tolerance_seconds is None:
+        fresh = F.lit(True)
+    elif forward:
+        fresh = F.unix_micros(F.col("_c_ts")) <= F.unix_micros(F.col("_t")) + int(
+            tolerance_seconds * 1_000_000
+        )
+    else:
+        fresh = F.unix_micros(F.col("_c_ts")) >= F.unix_micros(F.col("_t")) - int(
+            tolerance_seconds * 1_000_000
+        )
+    return carried.where(F.col("_side") == left_side).select(
+        *[F.col(f"_l_{c}").alias(c) for c in lcols],
+        *[
+            F.when(fresh, F.col(f"_c_{rc}")).alias(alias)
+            for rc, alias in right_payload.items()
+        ],
+        F.when(fresh, F.col("_c_ts")).alias("matched_ts"),
+    )
+
+
 def asof_join_backward(
     left: DataFrame,
     right: DataFrame,
@@ -46,51 +118,9 @@ def asof_join_backward(
     Returns the left DataFrame's columns + aliased right payload +
     ``matched_ts`` (the right timestamp that matched).
     """
-    right_payload = right_payload or {}
-    lcols = [c for c in left.columns]
-
-    l_tagged = left.select(
-        F.col(key).alias("_k"),
-        F.col(left_ts).alias("_t"),
-        F.lit(1).alias("_side"),  # left sorts after right at equal ts
-        *[F.col(c).alias(f"_l_{c}") for c in lcols],
-        *[F.lit(None).cast(right.schema[rc].dataType).alias(f"_r_{rc}") for rc in right_payload],
-        F.lit(None).cast(right.schema[right_ts].dataType).alias("_r_ts"),
-    )
-    r_tagged = right.select(
-        F.col(key).alias("_k"),
-        F.col(right_ts).alias("_t"),
-        F.lit(0).alias("_side"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(f"_l_{c}") for c in lcols],
-        *[F.col(rc).alias(f"_r_{rc}") for rc in right_payload],
-        F.col(right_ts).alias("_r_ts"),
-    )
-    w = (
-        W.partitionBy("_k")
-        .orderBy("_t", "_side")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    carried = l_tagged.unionByName(r_tagged).select(
-        "*",
-        *[
-            F.last(f"_r_{rc}", ignorenulls=True).over(w).alias(f"_c_{rc}")
-            for rc in right_payload
-        ],
-        F.last("_r_ts", ignorenulls=True).over(w).alias("_c_ts"),
-    )
-    if tolerance_seconds is None:
-        fresh = F.lit(True)
-    else:
-        fresh = F.unix_micros(F.col("_c_ts")) >= F.unix_micros(F.col("_t")) - int(
-            tolerance_seconds * 1_000_000
-        )
-    return carried.where(F.col("_side") == 1).select(
-        *[F.col(f"_l_{c}").alias(c) for c in lcols],
-        *[
-            F.when(fresh, F.col(f"_c_{rc}")).alias(alias)
-            for rc, alias in right_payload.items()
-        ],
-        F.when(fresh, F.col("_c_ts")).alias("matched_ts"),
+    return _asof_join(
+        left, right, key, left_ts, right_ts, right_payload, tolerance_seconds,
+        forward=False,
     )
 
 
@@ -173,52 +203,7 @@ def asof_join_forward(
     tag). ``tolerance_seconds`` bounds look-ahead: matches later than
     ``left.ts + tolerance`` are nulled out.
     """
-    right_payload = right_payload or {}
-    lcols = [c for c in left.columns]
-
-    l_tagged = left.select(
-        F.col(key).alias("_k"),
-        F.col(left_ts).alias("_t"),
-        F.lit(0).alias("_side"),  # left sorts before right at equal ts
-        *[F.col(c).alias(f"_l_{c}") for c in lcols],
-        *[
-            F.lit(None).cast(right.schema[rc].dataType).alias(f"_r_{rc}")
-            for rc in right_payload
-        ],
-        F.lit(None).cast(right.schema[right_ts].dataType).alias("_r_ts"),
-    )
-    r_tagged = right.select(
-        F.col(key).alias("_k"),
-        F.col(right_ts).alias("_t"),
-        F.lit(1).alias("_side"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(f"_l_{c}") for c in lcols],
-        *[F.col(rc).alias(f"_r_{rc}") for rc in right_payload],
-        F.col(right_ts).alias("_r_ts"),
-    )
-    w = (
-        W.partitionBy("_k")
-        .orderBy("_t", "_side")
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    carried = l_tagged.unionByName(r_tagged).select(
-        "*",
-        *[
-            F.first(f"_r_{rc}", ignorenulls=True).over(w).alias(f"_c_{rc}")
-            for rc in right_payload
-        ],
-        F.first("_r_ts", ignorenulls=True).over(w).alias("_c_ts"),
-    )
-    if tolerance_seconds is None:
-        fresh = F.lit(True)
-    else:
-        fresh = F.unix_micros(F.col("_c_ts")) <= F.unix_micros(F.col("_t")) + int(
-            tolerance_seconds * 1_000_000
-        )
-    return carried.where(F.col("_side") == 0).select(
-        *[F.col(f"_l_{c}").alias(c) for c in lcols],
-        *[
-            F.when(fresh, F.col(f"_c_{rc}")).alias(alias)
-            for rc, alias in right_payload.items()
-        ],
-        F.when(fresh, F.col("_c_ts")).alias("matched_ts"),
+    return _asof_join(
+        left, right, key, left_ts, right_ts, right_payload, tolerance_seconds,
+        forward=True,
     )

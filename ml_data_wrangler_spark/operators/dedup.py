@@ -19,7 +19,7 @@ partitioning).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ml_data_wrangler_spark.functions.text import tokenize
@@ -31,6 +31,67 @@ def _shingles_from_tokens(toks, k: int):
         F.sequence(F.lit(1), F.size(toks) - (k - 1)),
         lambda i: F.array_join(F.slice(toks, i, k), " "),
     )
+
+
+def shingle_postings(documents: DataFrame, k: int, *cols: Column) -> DataFrame:
+    """plans/_util.sql_shingles' engine twin: one (doc_id, *cols,
+    shingle) posting row per distinct k-shingle of each document;
+    ``cols`` are evaluated over the document's shingle array ``sh``.
+
+    Optimizer barriers, each load-bearing:
+      * the raw text is repartitioned BEFORE tokenization: a one-split
+        parquet file would otherwise pin the whole
+        tokenize→shingle→explode stage to a single task (measured: 4s
+        of CPU on one core at sf0.1), and without the exchange
+        ProjectCollapse inlines the tokenize→shingle expression into
+        every downstream Filter/Generate, re-evaluating it up to 5× per
+        row;
+      * the coalesce makes the text column NON-NULLABLE, so the
+        join-constraint-inferred isnotnull(size(<shingle expr>)) filter
+        constant-folds away instead of being pushed into the scan
+        (where it would evaluate the whole tokenize→shingle expression
+        once more, single-task);
+      * a size guard instead of a WHERE filter: Catalyst pushes filters
+        through Repartition, and a filter referencing toks would drag
+        the tokenization below the exchange. Docs shorter than k
+        tokens yield an empty array;
+      * explode_outer + post-filter instead of plain explode: explode's
+        implicit `size(arr) > 0` filter is pushed below the exchange,
+        which would again inline the shingle pipeline into the
+        single-task scan stage (twice). The IsNotNull filter on the
+        GENERATED column cannot be pushed below the Generate.
+    """
+    toks = tokenize(F.col("text"))
+    shingles = F.when(
+        F.size("toks") >= k,
+        F.array_distinct(_shingles_from_tokens(F.col("toks"), k)),
+    ).otherwise(F.array().cast("array<string>"))
+    raw = ensure_parallelism(
+        documents.select(
+            "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text")
+        )
+    )
+    return (
+        raw.select("doc_id", toks.alias("toks"))
+        .select("doc_id", shingles.alias("sh"))
+        .select("doc_id", *cols, F.explode_outer("sh").alias("shingle"))
+        .where(F.col("shingle").isNotNull())
+    )
+
+
+def exact_dedup(documents: DataFrame) -> DataFrame:
+    """The exact tier: ``documents``' rows whose doc_id is the minimum
+    of its doc_fingerprint group, taken by a semi-join — one
+    fingerprint shuffle and a broadcastable keeper set. The SQL twin
+    is plans/_util.SQL_EXACT_SURVIVORS."""
+    from ml_data_wrangler_spark.functions.textstats import doc_fingerprint
+
+    keepers = (
+        documents.select("doc_id", doc_fingerprint(F.col("text")).alias("fp"))
+        .groupBy("fp")
+        .agg(F.min("doc_id").alias("doc_id"))
+    )
+    return documents.join(keepers.select("doc_id"), "doc_id", "left_semi")
 
 
 def ngram_jaccard_pairs(
@@ -78,13 +139,8 @@ def ngram_jaccard_pairs(
     real web corpus "prefix" is the one that survives. Both are exact.
 
     Scale notes baked into both paths:
-      * the raw text is repartitioned BEFORE tokenization — a single
-        parquet file otherwise pins the whole shingling stage to one
-        task (observed: sf0.1 documents.parquet is one 1-split file);
-      * the repartition doubles as an optimizer barrier: without it,
-        ProjectCollapse inlines the tokenize→shingle→sort expression
-        into every downstream Filter/Generate, re-evaluating it up to
-        5× per row;
+      * both read shingle_postings, whose repartition-before-tokenize
+        and explode_outer shapes are optimizer barriers (see there);
       * FP discipline: α = ceil(θ·n − 1e-9); ratio/positional prunes
         subtract the same epsilon — error can only widen a prefix or
         admit a borderline candidate, never drop a qualifying pair;
@@ -96,16 +152,6 @@ def ngram_jaccard_pairs(
     """
     if strategy not in ("count", "prefix"):
         raise ValueError(f"unknown strategy: {strategy!r}")
-    toks = tokenize(F.col("text"))
-    # Guard instead of a WHERE filter: Catalyst pushes filters through
-    # Repartition, and a filter referencing toks would drag the whole
-    # tokenization below the parallelizing exchange (back into the
-    # single-split scan task). Docs shorter than k tokens yield an
-    # empty array, which explode() then drops — same semantics.
-    shingles = F.when(
-        F.size("toks") >= k,
-        F.array_distinct(_shingles_from_tokens(F.col("toks"), k)),
-    ).otherwise(F.array().cast("array<string>"))
     ratio_ok = (
         F.least(F.col("a.n"), F.col("b.n"))
         >= F.lit(threshold) * F.greatest(F.col("a.n"), F.col("b.n")) - F.lit(1e-9)
@@ -114,37 +160,8 @@ def ngram_jaccard_pairs(
         F.col("n_a") + F.col("n_b") - F.col("shared")
     )
 
-    # Repartition the RAW text before anything touches it: a
-    # one-split parquet file would otherwise pin the entire
-    # tokenize→shingle→explode stage to a single task (measured: 4s of
-    # CPU on one core at sf0.1), and any filter referencing toks would
-    # force tokenization below the exchange. The coalesce makes the
-    # text column NON-NULLABLE, so the join-constraint-inferred
-    # isnotnull(size(<shingle expr>)) filter constant-folds away
-    # instead of being pushed into the scan (where it would evaluate
-    # the whole tokenize→shingle expression once more, single-task).
-    raw = ensure_parallelism(
-        documents.select(
-            "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text")
-        )
-    )
-
-    # explode_outer + post-filter instead of plain explode: explode's
-    # implicit `size(arr) > 0` filter is pushed below the exchange by
-    # Catalyst, which would again inline the shingle pipeline into the
-    # single-task scan stage (twice). The IsNotNull filter on the
-    # GENERATED column cannot be pushed below the Generate.
     if strategy == "count":
-        pre = (
-            raw.select("doc_id", toks.alias("toks"))
-            .select("doc_id", shingles.alias("sh"))
-            .select(
-                "doc_id",
-                F.size("sh").alias("n"),
-                F.explode_outer("sh").alias("shingle"),
-            )
-            .where(F.col("shingle").isNotNull())
-        )
+        pre = shingle_postings(documents, k, F.size("sh").alias("n"))
         # shuffle-hash: posting lists are short, sorting 2× the posting
         # stream for a merge join is pure overhead
         a, b = pre.alias("a"), pre.hint("shuffle_hash").alias("b")
@@ -168,13 +185,7 @@ def ngram_jaccard_pairs(
         )
 
     # strategy == "prefix"
-    sh = (
-        raw.select("doc_id", toks.alias("toks"))
-        .select("doc_id", shingles.alias("sh"))
-        .select("doc_id", F.explode_outer("sh").alias("shingle"))
-        .where(F.col("shingle").isNotNull())
-        .repartition("shingle")
-    )
+    sh = shingle_postings(documents, k).repartition("shingle")
     df_counts = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     # ONE groupBy(doc_id) builds both the df-ordered full array
     # (verification side) and implicitly the prefix: sort_array on
@@ -636,15 +647,9 @@ def dedup_pipeline(
     Returns (doc_id, keep boolean, reason string). Deterministic:
     min-id keeper policy at both tiers.
     """
-    from ml_data_wrangler_spark.functions.textstats import doc_fingerprint
-
-    fp = documents.select("doc_id", doc_fingerprint(F.col("text")).alias("fp"))
-    exact_keeper = fp.groupBy("fp").agg(F.min("doc_id").alias("keeper"))
-    exact = fp.join(exact_keeper, "fp").select(
-        "doc_id", (F.col("doc_id") == F.col("keeper")).alias("exact_kept")
-    )
-    survivors = documents.join(
-        exact.where(F.col("exact_kept")).select("doc_id"), "doc_id", "left_semi"
+    survivors = exact_dedup(documents)
+    exact = documents.select("doc_id").join(
+        survivors.select("doc_id", F.lit(True).alias("exact_kept")), "doc_id", "left"
     )
     pairs = ngram_jaccard_pairs(survivors, k=k, threshold=jaccard_threshold)
     # one resolution pass: doc_b loses to the (always lower) doc_a.
@@ -656,8 +661,8 @@ def dedup_pipeline(
         exact.join(losers.withColumn("near_dup", F.lit(True)), "doc_id", "left")
         .select(
             "doc_id",
-            (F.col("exact_kept") & F.col("near_dup").isNull()).alias("keep"),
-            F.when(~F.col("exact_kept"), "exact_duplicate")
+            (F.col("exact_kept").isNotNull() & F.col("near_dup").isNull()).alias("keep"),
+            F.when(F.col("exact_kept").isNull(), "exact_duplicate")
             .when(F.col("near_dup"), "near_duplicate")
             .otherwise("kept")
             .alias("reason"),
@@ -681,35 +686,15 @@ def containment_pairs(
     near-dups. Emits BOTH directions when both clear the threshold
     (a≈b duplicates appear as a→b and b→a).
 
-    Same physical shape and the same optimizer safeguards as the
-    "count" Jaccard strategy (see ngram_jaccard_pairs): repartition
-    raw text before the CPU-bound shingling, guard-not-filter,
-    explode_outer, one posting self-join (shuffle_hash — never
-    broadcast a posting stream), one pair aggregation. Cost is the
+    Same physical shape as the "count" Jaccard strategy: the
+    shingle_postings rows (and their optimizer safeguards), one
+    posting self-join (shuffle_hash — never broadcast a posting
+    stream), one pair aggregation. Cost is the
     same Σ df² posting join; the only delta is the denominator.
 
     Returns (src, dst, containment) with containment rounded to 6.
     """
-    toks = tokenize(F.col("text"))
-    shingles = F.when(
-        F.size("toks") >= k,
-        F.array_distinct(_shingles_from_tokens(F.col("toks"), k)),
-    ).otherwise(F.array().cast("array<string>"))
-    raw = ensure_parallelism(
-        documents.select(
-            "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text")
-        )
-    )
-    pre = (
-        raw.select("doc_id", toks.alias("toks"))
-        .select("doc_id", shingles.alias("sh"))
-        .select(
-            "doc_id",
-            F.size("sh").alias("n"),
-            F.explode_outer("sh").alias("shingle"),
-        )
-        .where(F.col("shingle").isNotNull())
-    )
+    pre = shingle_postings(documents, k, F.size("sh").alias("n"))
     a, b = pre.alias("a"), pre.hint("shuffle_hash").alias("b")
     pairs = (
         a.join(
@@ -774,7 +759,7 @@ def duplicate_spans(
 
     toks = tokenize(F.col("text"))
     # Positional shingles (guard-not-filter + explode_outer: the same
-    # Catalyst traps as ngram_jaccard_pairs — see that docstring).
+    # Catalyst traps as shingle_postings — see that docstring).
     grams = F.when(
         F.size("toks") >= k, _shingles_from_tokens(F.col("toks"), k)
     ).otherwise(F.array().cast("array<string>"))

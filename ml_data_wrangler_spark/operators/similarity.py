@@ -34,25 +34,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ml_data_wrangler_spark.functions.driver_exact import round_half_away_np
 from ml_data_wrangler_spark.functions.vectors import cosine_similarity
 from ml_data_wrangler_spark.session import local_frame
 
 # no score tile of the fold scorer holds more cells than this
 _TILE_CELLS = 4_000_000
-
-
-def _round6(sims: np.ndarray) -> np.ndarray:
-    """Half-away-from-zero rounding to 6 decimals (Spark's and
-    DuckDB's ROUND). floor(x·1e6+0.5) re-rounds at the multiply and
-    the add, so a sim whose scaled fraction sits within 1 ulp of .5
-    could in principle land 1e-6 off a decimal-path ROUND — an
-    ulp-edge risk that has never fired across the sf0.01/sf0.1/16×
-    gates, documented rather than claimed away."""
-    scaled = sims * 1e6
-    return (
-        np.where(scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5))
-        / 1e6
-    )
 
 
 def _fold_norms(v: np.ndarray) -> np.ndarray:
@@ -79,11 +66,18 @@ def _fold_cosine(
     row of b) pair as an (len(a), len(b)) array. Dots accumulate per
     dimension in ascending order — the ((0+t₀)+t₁)+… float64 fold the
     relational kernel and DuckDB's list_dot_product run per pair — so
-    a pair's sim is bit-identical whichever tile or chunk scores it."""
+    a pair's sim is bit-identical whichever tile or chunk scores it.
+
+    Sims are rounded half away from zero to 6 decimals (Spark's and
+    DuckDB's ROUND) in binary: the multiply by 1e6 and the +0.5
+    re-round, so a sim whose scaled fraction sits within 1 ulp of .5
+    could in principle land 1e-6 off a decimal-path ROUND — an
+    ulp-edge risk that has never fired across the sf0.01/sf0.1/16×
+    gates, documented rather than claimed away."""
     dots = np.zeros((a.shape[0], b.shape[0]))
     for i in range(a.shape[1]):
         dots += np.outer(a[:, i], b[:, i])
-    return _round6(dots / np.outer(nrm_a, nrm_b))
+    return round_half_away_np(dots / np.outer(nrm_a, nrm_b) * 1e6) / 1e6
 
 
 def _require_integral_id(df: DataFrame, col: str, caller: str) -> None:
@@ -118,7 +112,7 @@ def brute_force_topk(
     # arithmetic in the O(|q|×|c|) inner loop, bit-identical results
     # (each norm is the same fold either way). At 100 TB-scale ANN this
     # is the difference between 1× and 3× the scan cost.
-    from ml_data_wrangler_spark.functions.vectors import dot, l2_norm
+    from ml_data_wrangler_spark.functions.vectors import l2_norm, pair_cosine
 
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -143,11 +137,7 @@ def brute_force_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnorm") * F.col("cnorm")),
-                6,
-            ).alias("sim"),
+            pair_cosine().alias("sim"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
@@ -247,7 +237,7 @@ def ivf_search(
         .where(F.col("probe_rank") <= nprobe)
         .select("query_id", "qvec", "cluster_id")
     )
-    from ml_data_wrangler_spark.functions.vectors import dot, l2_norm
+    from ml_data_wrangler_spark.functions.vectors import l2_norm, pair_cosine
 
     # broadcast the routed query side: an equi-join on cluster_id
     # otherwise shuffles BOTH sides onto n_clusters hash keys, capping
@@ -264,13 +254,7 @@ def ivf_search(
         ),
         "cluster_id",
     ).where(F.col("query_id") != F.col("neighbor_id"))
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm")), 6
-        ).alias("sim"),
-    )
+    scored = cand.select("query_id", "neighbor_id", pair_cosine().alias("sim"))
     w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
     return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(
         F.col("rank") <= k

@@ -20,21 +20,36 @@ registry.py docstring):
     both engines. Integer-derived aggregates (counts, decimal money)
     are exact and don't need it.
 
-SQL twins: every DuckDB fragment that mirrors an engine rule lives in
-this module, once, and the oracles are composed from them (the way
-SQL_DISC_PRICE mirrors disc_price()). A twin is text only: it uses no
-engine code, only constants the oracles already shared
-(LANG_STOPWORDS), so an oracle stays independent of the rule it
-checks. tests/test_oracle_twins.py fails when two SQL literals in
-plans/ share a run of 4 or more lines.
+Twins: every rule an oracle mirrors is written twice and only twice —
+one SQL twin and one Spark builder — and every query on either side is
+composed from them (the way SQL_DISC_PRICE mirrors disc_price()). The
+SQL twin is text only: it uses no engine code, only constants the
+oracles already shared (LANG_STOPWORDS), so an oracle stays
+independent of the rule it checks. The Spark builder sits beside its
+SQL twin here, unless the rule belongs to an operators/ or functions/
+module (then the twin's comment names it).
+tests/test_oracle_twins.py fails when two SQL literals in plans/ share
+a run of 4 or more lines (CTE names made blind);
+tests/test_engine_twins.py fails when an expression of 40 or more AST
+nodes (local names made blind) is written at two places in the
+package.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import Window as W
 
-from ml_data_wrangler_spark.functions.textstats import LANG_STOPWORDS
+from ml_data_wrangler_spark.functions.text import tokenize
+from ml_data_wrangler_spark.functions.textstats import (
+    LANG_STOPWORDS,
+    quality_score,
+    token_count,
+)
+from ml_data_wrangler_spark.operators import _partition
+from ml_data_wrangler_spark.operators._partition import ensure_parallelism
+from ml_data_wrangler_spark.operators.curation import hash_bucket
 from ml_data_wrangler_spark.sources.readers import read_table
 
 
@@ -68,6 +83,16 @@ def charge() -> Column:
 
 def dbl(c: Column) -> Column:
     return c.cast("double")
+
+
+def recall_ok() -> Column:
+    """The recall gate over exact pairs left-joined to the candidates
+    (`_found` = 1 on a found pair): at least 70% of the exact pairs
+    were found; no exact pairs passes."""
+    return (
+        F.coalesce(F.sum("_found"), F.lit(0)) / F.greatest(F.count("*"), F.lit(1))
+        >= 0.7
+    )
 
 
 def _range_partitioned(df: DataFrame, *order: Column) -> DataFrame:
@@ -117,8 +142,6 @@ def global_row_number(
         job must survive executor loss; for this harness (single-JVM
         local mode) the local variant is strictly better.
     """
-    from pyspark.sql import Window as W
-
     parts = _range_partitioned(df, *order)
     local_w = W.partitionBy("_gr_pid").orderBy(*order)
     # localCheckpoint is REQUIRED for correctness, not just plan
@@ -213,6 +236,29 @@ SQL_QUALITY_FEATURES = f"""CAST(len({SQL_TOKS}) AS BIGINT) AS tok_cnt,
               ELSE 0.0 END AS s_ratio"""
 SQL_QUALITY = "ROUND(0.4 * least(tok_cnt / 50.0, 1.0) + 0.4 * a_ratio + 0.2 * s_ratio, 6)"
 
+# corpus-wide token counts, as `col` (token_counts)
+def sql_token_counts(col: str) -> str:
+    return f"""SELECT token, CAST(COUNT(*) AS BIGINT) AS {col}
+FROM (SELECT unnest({SQL_TOKS}) AS token FROM documents)
+GROUP BY token"""
+
+
+def token_counts(docs: DataFrame, col: str) -> DataFrame:
+    """sql_token_counts' engine twin: (token, `col`) over `docs`.text.
+    The raw text is repartitioned before the tokenize map only when
+    the under-split scan is also big enough for the serial stage to
+    matter (ensure_parallelism's min_bytes; the gate is read per call,
+    so a test can force it open)."""
+    return (
+        ensure_parallelism(
+            docs.select("text"), min_bytes=_partition.TOKENIZE_REPARTITION_MIN_BYTES
+        )
+        .select(F.explode(tokenize(F.col("text"))).alias("token"))
+        .groupBy("token")
+        .agg(F.count("*").alias(col))
+    )
+
+
 # unigram counts `uni` and the corpus total `tot` over token lists
 # `toks.l`, then adjacent-pair counts `bg`
 SQL_UNIGRAMS = """uni AS (
@@ -230,15 +276,64 @@ SQL_BIGRAMS = """bg AS (
   )
   GROUP BY w1, w2
 )"""
+# the adjacent pairs of `l` as "w1 w2" strings
+SQL_PAIR_STRINGS = """list_transform(generate_series(1, len(l) - 1),
+                               i -> l[i] || ' ' || l[i + 1])"""
 
-# operators.vectorize.tfidf's counts (token rows `tok`, term counts
-# `tf`, document frequencies `dfc`, corpus size `n`), then its weight
-SQL_TF_DF = f"""tok AS (
+
+def unigrams(toks: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """SQL_UNIGRAMS' engine twin over token lists `l`: (tok, n1) and
+    the one-row corpus total (n_tokens)."""
+    uni = (
+        toks.select(F.explode("l").alias("tok"))
+        .groupBy("tok")
+        .agg(F.count("*").alias("n1"))
+    )
+    return uni, uni.agg(F.sum("n1").alias("n_tokens"))
+
+
+def bigrams(toks: DataFrame) -> DataFrame:
+    """SQL_BIGRAMS' engine twin over token lists `l`: (w1, w2, nb)."""
+    return (
+        toks.where(F.size("l") >= 2)
+        .select(
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.size("l") - 1),
+                    lambda i: F.struct(
+                        F.element_at("l", i).alias("w1"),
+                        F.element_at("l", i + 1).alias("w2"),
+                    ),
+                )
+            ).alias("p")
+        )
+        .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        .agg(F.count("*").alias("nb"))
+    )
+
+
+def pair_strings() -> Column:
+    """SQL_PAIR_STRINGS' engine twin over the token list column `l`."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size("l") - 1),
+        lambda i: F.concat_ws(" ", F.element_at("l", i), F.element_at("l", i + 1)),
+    )
+
+
+# the term-frequency rule tfidf and BM25 share: token rows `tok`, then
+# per-(doc, token) counts `tf`. BM25's Python scale-oracle kernel
+# (bm25_topk_py) runs this same text as its prologue, so the SQL oracle
+# and the kernel cannot drift on the input definition.
+SQL_TF = f"""tok AS (
   SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents
 ), tf AS (
   SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
   FROM tok GROUP BY doc_id, token
-), dfc AS (
+)"""
+
+# operators.vectorize.tfidf's counts (SQL_TF, document frequencies
+# `dfc`, corpus size `n`), then its weight
+SQL_TF_DF = f"""{SQL_TF}, dfc AS (
   SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY token
 ), n AS (
   SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs FROM documents
@@ -268,6 +363,50 @@ JOIN norms na ON doc_a = na.doc_id
 JOIN norms nb ON doc_b = nb.doc_id
 ORDER BY cosine DESC, doc_a, doc_b
 LIMIT 20"""
+
+
+def top_cosine_pairs(w: DataFrame, wt: str) -> DataFrame:
+    """sql_top_cosine_pairs' engine twin over weights `w` (doc_id,
+    token, df, `wt`): the inverted-index plan. Each posting row
+    carries its doc's norm (a doc-keyed window), so the pair
+    aggregation takes it along with F.first instead of joining a norms
+    aggregate twice (which would re-derive the weight subtree twice
+    more); df = 1 terms count toward norms but cannot pair."""
+    w2 = w.withColumn(
+        "nrm",
+        F.sqrt(
+            F.sum(F.col(wt) * F.col(wt)).over(W.partitionBy("doc_id")).cast("double")
+        ),
+    ).where(F.col("df") >= 2)
+    a = w2.select(
+        "token", F.col("doc_id").alias("doc_a"), F.col(wt).alias("wa"),
+        F.col("nrm").alias("na"),
+    )
+    b = w2.select(
+        "token", F.col("doc_id").alias("doc_b"), F.col(wt).alias("wb"),
+        F.col("nrm").alias("nb"),
+    )
+    return (
+        a.join(b, "token")
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(
+            F.count("*").alias("shared"),
+            F.sum(F.col("wa") * F.col("wb")).alias("dot"),
+            F.first("na").alias("na"),
+            F.first("nb").alias("nb"),
+        )
+        .select(
+            "doc_a",
+            "doc_b",
+            "shared",
+            F.round(
+                F.col("dot").cast("double") / (F.col("na") * F.col("nb")), 6
+            ).alias("cosine"),
+        )
+        .orderBy(F.desc("cosine"), "doc_a", "doc_b")
+        .limit(20)
+    )
 
 
 def sql_nb_model(src: str) -> str:
@@ -333,28 +472,15 @@ GROUP BY actual_lang, pred_lang
 """
 
 
-# BM25's linear term-frequency prologue (tokens → per-(doc, token)
-# tf), shared verbatim between the SQL oracle CTE and the Python
-# scale-oracle kernel so the two can never drift on the input
-# definition — only the query×posting fan-out differs between them.
-SQL_BM25_TF = f"""bdt AS (
-  SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents
-),
-btf AS (
-  SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM bdt GROUP BY doc_id, token
-)"""
-
-
 def sql_bm25_top(top: int) -> str:
     """WITH-body fragment (no leading WITH) ending in relation
     ``btop(query_id, cand_id, rnk, s)``: BM25 (k1 = 1.2, b = 0.75)
     top-``top`` candidates per query doc (doc_id % 20 == 0), ranked on
     the EXACT micro-quantized integer score. Shared by qt19's oracle
     and qv20's hybrid-fusion oracle."""
-    return f"""{SQL_BM25_TF},
-bdl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM btf GROUP BY doc_id),
-bdf AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM btf GROUP BY token),
+    return f"""{SQL_TF},
+bdl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
+bdf AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY token),
 bcorp AS (
   SELECT CAST((SELECT COUNT(*) FROM documents) AS BIGINT) AS n_docs,
          CAST((SELECT SUM(dl) FROM bdl) AS DOUBLE)
@@ -366,7 +492,7 @@ bidf AS (
   FROM bdf, bcorp
 ),
 bq AS (
-  SELECT doc_id AS query_id, token FROM btf WHERE doc_id % 20 = 0
+  SELECT doc_id AS query_id, token FROM tf WHERE doc_id % 20 = 0
 ),
 bscore AS (
   SELECT bq.query_id, c.doc_id AS cand_id,
@@ -375,7 +501,7 @@ bscore AS (
                   / (c.tf + 1.2 * (0.25 + 0.75 * (cd.dl / bcorp.avgdl))))
                * 1e6) AS BIGINT)) AS s
   FROM bq
-  JOIN btf c ON c.token = bq.token AND c.doc_id <> bq.query_id
+  JOIN tf c ON c.token = bq.token AND c.doc_id <> bq.query_id
   JOIN bidf ON bidf.token = bq.token
   JOIN bdl cd ON cd.doc_id = c.doc_id
   CROSS JOIN bcorp
@@ -441,8 +567,8 @@ SELECT doc_id, source, quality, CAST(cum_tokens AS BIGINT) AS cum_tokens
 FROM walked WHERE cum_tokens <= 1500"""
 
 
-# the corpus-build CLI's output over quality features `feat`: the 0.3
-# quality floor and the 4-way md5 shard
+# the corpus-build CLI's rows at --min-quality 0.3 --shards 4 over
+# quality features `feat`: the 0.3 quality floor and the 4-way md5 shard
 SQL_CORPUS_SHARDS = f"""scored AS (
   SELECT doc_id, tok_cnt,
          {SQL_QUALITY}
@@ -456,6 +582,16 @@ SELECT doc_id,
        tok_cnt AS n_tokens
 FROM scored
 WHERE quality >= 0.3"""
+
+
+def corpus_shards(docs: DataFrame) -> DataFrame:
+    """SQL_CORPUS_SHARDS' engine twin over `docs` (doc_id, text)."""
+    return docs.select(
+        "doc_id",
+        hash_bucket(F.col("doc_id"), 4).cast("long").alias("shard"),
+        quality_score(F.col("text")).alias("quality"),
+        token_count(F.col("text")).alias("n_tokens"),
+    ).where(F.col("quality") >= 0.3)
 
 
 # --- vector twins ---
@@ -502,21 +638,21 @@ JOIN sizes sa ON doc_a = sa.doc_id
 JOIN sizes sb ON doc_b = sb.doc_id
 WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.6"""
 
-# operators.dedup.dedup_pipeline's two tiers: the exact-fingerprint
-# verdict `exact` (min doc_id keeper) with its survivors `surv`, then
-# the near-dup `losers` among the survivors
-SQL_DEDUP_TIERS = f"""fp AS (
-  SELECT doc_id, {SQL_FINGERPRINT} AS fp
+# operators.dedup.exact_dedup: the min doc_id per SQL_FINGERPRINT
+# `keepers`, and their rows of documents `survivors`
+SQL_EXACT_SURVIVORS = f"""keepers AS (
+  SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY {SQL_FINGERPRINT}
+), survivors AS (
+  SELECT * FROM documents WHERE doc_id IN (SELECT doc_id FROM keepers)
+)"""
+
+# operators.dedup.dedup_pipeline's two tiers: the exact verdict
+# `exact` over SQL_EXACT_SURVIVORS, then the near-dup `losers` among
+# the survivors
+SQL_DEDUP_TIERS = f"""{SQL_EXACT_SURVIVORS}, exact AS (
+  SELECT doc_id, doc_id IN (SELECT doc_id FROM keepers) AS exact_kept
   FROM documents
-), keepers AS (
-  SELECT fp, MIN(doc_id) AS keeper FROM fp GROUP BY fp
-), exact AS (
-  SELECT f.doc_id, f.doc_id = k.keeper AS exact_kept
-  FROM fp f JOIN keepers k ON f.fp = k.fp
-), surv AS (
-  SELECT d.doc_id, d.text FROM documents d
-  JOIN exact e ON d.doc_id = e.doc_id WHERE e.exact_kept
-), {sql_shingle_pairs("surv")}, losers AS (
+), {sql_shingle_pairs("survivors")}, losers AS (
   SELECT DISTINCT doc_b AS doc_id
   {SQL_JACCARD_PAIRS}
 )"""
@@ -584,6 +720,14 @@ def sql_daily_counts(col: str) -> str:
 )"""
 
 
+def daily_counts(events: DataFrame, col: str) -> DataFrame:
+    """sql_daily_counts' engine twin: (event_type, day, `col`)."""
+    return events.groupBy(
+        "event_type",
+        F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
+    ).agg(F.count("*").alias(col))
+
+
 # exact population moments of `daily.n_events` per event type
 SQL_DAILY_STATS = """stats AS (
   SELECT event_type,
@@ -592,6 +736,29 @@ SQL_DAILY_STATS = """stats AS (
          CAST(SUM(n_events * n_events) AS DECIMAL(38,0)) AS q
   FROM daily GROUP BY event_type
 )"""
+
+
+def daily_stats(daily: DataFrame) -> DataFrame:
+    """SQL_DAILY_STATS' engine twin: (event_type, cnt, s, q)."""
+    return daily.groupBy("event_type").agg(
+        F.count("*").cast("decimal(38,0)").alias("cnt"),
+        F.sum("n_events").cast("decimal(38,0)").alias("s"),
+        F.sum(F.col("n_events") * F.col("n_events")).cast("decimal(38,0)").alias("q"),
+    )
+
+
+# the distinct active (user_id, day) pairs `ud`
+SQL_ACTIVE_DAYS = """ud AS (
+  SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
+  FROM events
+)"""
+
+
+def active_days(events: DataFrame) -> DataFrame:
+    """SQL_ACTIVE_DAYS' engine twin: distinct (user_id, day)."""
+    return events.select(
+        "user_id", F.date_trunc("day", F.col("ts")).cast("date").alias("day")
+    ).distinct()
 
 
 def sql_sessions(gap_test: str) -> str:
@@ -618,6 +785,36 @@ def sql_sessions(gap_test: str) -> str:
 )"""
 
 
+def sessions(events: DataFrame) -> DataFrame:
+    """sql_sessions' engine twin with the 30-minute gap (`>`):
+    (user_id, ts, session_id). The event_id tiebreak fixes the row
+    order only; rows at one ts share a session either way."""
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    flagged = events.select(
+        "user_id",
+        "ts",
+        "event_id",
+        F.when(
+            F.lag("ts").over(w).isNull()
+            | (
+                # Microsecond-exact gap comparison: unix_timestamp()
+                # truncates to whole seconds, which would disagree with
+                # the oracle's full-precision `ts - lag(ts) > INTERVAL
+                # 30 MINUTE` for gaps in (1800, 1801)s.
+                F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
+                > 1800 * 1_000_000
+            ),
+            1,
+        )
+        .otherwise(0)
+        .alias("new_session"),
+    )
+    cum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    return flagged.select(
+        "user_id", "ts", F.sum("new_session").over(cum).alias("session_id")
+    )
+
+
 # the as-of inputs: purchases `p`, and clicks `c` deduped on (user, ts)
 # by max event_id
 SQL_PURCHASES = """p AS (
@@ -628,6 +825,24 @@ SQL_CLICKS = """c AS (
   SELECT user_id, ts AS click_ts, CAST(MAX(event_id) AS BIGINT) AS click_id
   FROM events WHERE event_type = 'click' GROUP BY user_id, ts
 )"""
+
+
+def purchases(events: DataFrame) -> DataFrame:
+    """SQL_PURCHASES' engine twin: (purchase_id, user_id, purchase_ts)."""
+    return events.where(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        "user_id",
+        F.col("ts").alias("purchase_ts"),
+    )
+
+
+def clicks(events: DataFrame) -> DataFrame:
+    """SQL_CLICKS' engine twin: (user_id, ts, click_id)."""
+    return (
+        events.where(F.col("event_type") == "click")
+        .groupBy("user_id", "ts")
+        .agg(F.max("event_id").alias("click_id"))
+    )
 
 
 # --- ml twins ---

@@ -19,7 +19,7 @@ from ml_data_wrangler_spark.operators.curation import (
 from ml_data_wrangler_spark.plans._util import (
     SQL_CORPUS_SHARDS,
     SQL_DEDUP_TIERS,
-    SQL_FINGERPRINT,
+    SQL_EXACT_SURVIVORS,
     SQL_HASH_BUCKET,
     SQL_HASH_SPLIT,
     SQL_ID_HASH,
@@ -29,6 +29,7 @@ from ml_data_wrangler_spark.plans._util import (
     SQL_QUALITY_FEATURES,
     SQL_TOKS,
     sql_shingle_pairs,
+    corpus_shards,
     sql_token_budget,
     t,
 )
@@ -317,15 +318,7 @@ def qc07(spark, sf_dir):
 @query(
     "qc08_dedup_budget_pipeline",
     oracle=f"""
-WITH fp AS (
-  SELECT doc_id, source, text,
-         {SQL_FINGERPRINT} AS fingerprint
-  FROM documents
-), keepers AS (
-  SELECT MIN(doc_id) AS doc_id FROM fp GROUP BY fingerprint
-), survivors AS (
-  SELECT f.doc_id, f.source, f.text FROM fp f JOIN keepers k ON f.doc_id = k.doc_id
-), {sql_token_budget("survivors")}
+WITH {SQL_EXACT_SURVIVORS}, {sql_token_budget("survivors")}
 """,
 )
 def qc08(spark, sf_dir):
@@ -340,15 +333,9 @@ def qc08(spark, sf_dir):
     keeper semi-join → source-keyed window). The oracle mirrors the
     full chain as one CTE pipeline — proving multi-stage curation
     flows, not just single operators, hash-match across engines."""
-    from ml_data_wrangler_spark.functions.textstats import doc_fingerprint
+    from ml_data_wrangler_spark.operators.dedup import exact_dedup
 
-    docs = t(spark, sf_dir, "documents")
-    fp = docs.select(
-        "doc_id", "source", "text", doc_fingerprint(F.col("text")).alias("fingerprint")
-    )
-    keepers = fp.groupBy("fingerprint").agg(F.min("doc_id").alias("doc_id"))
-    survivors = fp.join(keepers.select("doc_id"), "doc_id", "left_semi")
-    d = survivors.select(
+    d = exact_dedup(t(spark, sf_dir, "documents")).select(
         "doc_id",
         "source",
         quality_score(F.col("text")).alias("quality"),
@@ -487,52 +474,34 @@ def qc12(spark, sf_dir):
 @query(
     "qc13_corpus_build",
     oracle=f"""
-WITH fp AS (
-  SELECT doc_id, text,
-         {SQL_FINGERPRINT} AS fingerprint
-  FROM documents
-), keepers AS (
-  SELECT fingerprint, MIN(doc_id) AS doc_id FROM fp GROUP BY fingerprint
-), unique_docs AS (
-  SELECT f.doc_id, f.text FROM fp f JOIN keepers k ON f.doc_id = k.doc_id
-), feat AS (
+WITH {SQL_EXACT_SURVIVORS}, feat AS (
   SELECT doc_id, text,
          {SQL_QUALITY_FEATURES}
-  FROM unique_docs
+  FROM survivors
 ), {SQL_CORPUS_SHARDS}
 """,
 )
 def qc13(spark, sf_dir):
-    """The corpus-build CLI path (``python -m ml_data_wrangler_spark
-    corpus-build``, __main__.cmd_corpus_build's default exact-dedup
-    branch) promoted into the correctness gate: exact fingerprint
-    dedup (min-doc_id keeper) → quality floor 0.3 → 4-way
-    content-addressed shard routing, emitting exactly the survivor
-    rows the CLI would ship (doc_id, shard, quality, n_tokens). The
-    oracle recomputes every stage — fingerprint, keeper policy,
-    quality formula, md5 shard bucket — so a drift in ANY stage of the
-    composed pipeline (not just its operators in isolation)
-    hash-fails. The JSONL write + xxhash64 manifest stay exercised by
-    tests/test_sources_roundtrip.py (file-system side effects and
-    non-SQL hashes don't belong in the gate).
+    """The corpus-build CLI's default exact-dedup branch promoted into
+    the correctness gate: exact fingerprint dedup
+    (operators.dedup.exact_dedup, the min-doc_id keeper the CLI runs
+    too) → quality floor 0.3 → 4-way content-addressed shard routing.
+    Its rows are the (doc_id, shard, quality, n_tokens) columns of
+    what ``python -m ml_data_wrangler_spark corpus-build --min-quality
+    0.3 --shards 4`` writes (tests/test_cli.py checks it; the CLI's
+    default is 8 shards). The oracle recomputes every stage —
+    fingerprint, keeper policy, quality formula, md5 shard bucket — so
+    a drift in ANY stage of the composed pipeline (not just its
+    operators in isolation) hash-fails. The JSONL write + xxhash64
+    manifest stay exercised by tests/test_sources_roundtrip.py
+    (file-system side effects and non-SQL hashes don't belong in the
+    gate).
 
-    Scale shape: identical to the CLI — one fingerprint shuffle, one
-    broadcastable keeper semi-join, map-only scoring/routing."""
-    from ml_data_wrangler_spark.functions.textstats import doc_fingerprint
+    Scale shape: one fingerprint shuffle, one broadcastable keeper
+    semi-join, map-only scoring/routing."""
+    from ml_data_wrangler_spark.operators.dedup import exact_dedup
 
-    docs = t(spark, sf_dir, "documents")
-    fp = docs.select("doc_id", "text", doc_fingerprint(F.col("text")).alias("fp"))
-    keepers = fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    unique = fp.join(keepers.select("doc_id"), "doc_id", "left_semi")
-    return (
-        unique.select(
-            "doc_id",
-            hash_bucket(F.col("doc_id"), 4).cast("long").alias("shard"),
-            quality_score(F.col("text")).alias("quality"),
-            token_count(F.col("text")).alias("n_tokens"),
-        )
-        .where(F.col("quality") >= 0.3)
-    )
+    return corpus_shards(exact_dedup(t(spark, sf_dir, "documents")))
 
 
 @query(
@@ -552,14 +521,16 @@ WITH {SQL_DEDUP_TIERS}, kept AS (
 """,
 )
 def qc14(spark, sf_dir):
-    """qc13's sibling: the corpus-build CLI's TIERED branch
-    (``--near-dup-threshold 0.6`` → __main__.cmd_corpus_build via
-    operators.dedup.dedup_pipeline): exact fingerprint tier → n-gram
-    Jaccard near-dup resolution (min-id keeper) → quality floor 0.3 →
-    4-way content-addressed shards. The oracle replays the whole
-    composition — both dedup tiers, the keep/drop policy, the quality
-    formula, and the shard bucket — so the production corpus-build
-    path is gate-checked end-to-end in both its CLI configurations.
+    """qc13's sibling: the corpus-build CLI's TIERED branch, both
+    running operators.dedup.dedup_pipeline: exact fingerprint tier →
+    n-gram Jaccard near-dup resolution (min-id keeper) → quality floor
+    0.3 → 4-way content-addressed shards — the (doc_id, shard,
+    quality, n_tokens) rows of ``corpus-build --min-quality 0.3
+    --shards 4 --near-dup-threshold 0.6`` (tests/test_cli.py checks
+    it). The oracle replays the whole composition — both dedup tiers,
+    the keep/drop policy, the quality formula, and the shard bucket —
+    so the corpus-build code is gate-checked in both of its dedup
+    branches.
 
     Scale shape: the same tiers qd05 audits (fingerprint shuffle,
     shingle posting join over exact-survivors only, pair aggregation)
@@ -572,15 +543,7 @@ def qc14(spark, sf_dir):
     kept = docs.join(
         verdicts.where(F.col("keep")).select("doc_id"), "doc_id", "left_semi"
     )
-    return (
-        kept.select(
-            "doc_id",
-            hash_bucket(F.col("doc_id"), 4).cast("long").alias("shard"),
-            quality_score(F.col("text")).alias("quality"),
-            token_count(F.col("text")).alias("n_tokens"),
-        )
-        .where(F.col("quality") >= 0.3)
-    )
+    return corpus_shards(kept)
 
 
 @query(

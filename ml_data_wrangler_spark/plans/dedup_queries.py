@@ -19,12 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ml_data_wrangler_spark.functions.text import tokenize
 from ml_data_wrangler_spark.functions.textstats import doc_fingerprint
-from ml_data_wrangler_spark.operators._partition import ensure_parallelism
 from ml_data_wrangler_spark.operators.dedup import (
-    _shingles_from_tokens,
     ngram_jaccard_pairs,
+    shingle_postings,
     simhash_signatures,
 )
 from ml_data_wrangler_spark.plans._util import (
@@ -34,6 +32,7 @@ from ml_data_wrangler_spark.plans._util import (
     SQL_HASH_BUCKET,
     SQL_JACCARD_PAIRS,
     SQL_TOKS,
+    recall_ok,
     sql_shingle_pairs,
     sql_shingles,
     t,
@@ -279,13 +278,7 @@ def qd03(spark, sf_dir):
         .withColumn("_found", F.lit(1))
     )
     j = exact.join(cand, ["doc_a", "doc_b"], "left")
-    stats = j.agg(
-        (
-            F.coalesce(F.sum("_found"), F.lit(0))
-            / F.greatest(F.count("*"), F.lit(1))
-            >= 0.7
-        ).alias("minhash_recall_ok")
-    )
+    stats = j.agg(recall_ok().alias("minhash_recall_ok"))
     return j.crossJoin(F.broadcast(stats)).select(
         "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"), "minhash_recall_ok"
     )
@@ -1238,23 +1231,7 @@ def _qd17_edges(spark, sf_dir):
     explain THIS plan: qd17's own final plan truncates at the
     localCheckpoint's ExistingRDD leaf, hiding the single tokenize
     subtree + ShuffledHashJoin this function exists to prove."""
-    raw = ensure_parallelism(
-        t(spark, sf_dir, "documents").select(
-            "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text")
-        ),
-        spark.sparkContext.defaultParallelism,
-    )
-    toks = tokenize(F.col("text"))
-    shingles = F.when(
-        F.size("toks") >= 3,
-        F.array_distinct(_shingles_from_tokens(F.col("toks"), 3)),
-    ).otherwise(F.array().cast("array<string>"))
-    sh = (
-        raw.select("doc_id", toks.alias("toks"))
-        .select("doc_id", shingles.alias("sh"))
-        .select("doc_id", F.explode_outer("sh").alias("shingle"))
-        .where(F.col("shingle").isNotNull())
-    )
+    sh = shingle_postings(t(spark, sf_dir, "documents"), 3)
     a = sh.alias("a")
     b = sh.hint("shuffle_hash").alias("b")
     return (

@@ -20,6 +20,8 @@ from ml_data_wrangler_spark.functions.driver_exact import (
 from ml_data_wrangler_spark.operators._partition import ensure_parallelism
 from ml_data_wrangler_spark.plans._util import (
     SQL_DAILY_STATS,
+    daily_counts,
+    daily_stats,
     money,
     sql_daily_counts,
     t,
@@ -297,14 +299,7 @@ def qe34(spark, sf_dir):
     is an equi-join on event_type over that days-bounded grid with a
     14-day band predicate — at 100 TB the grid is |types|x|days|
     rows, so this never touches raw events twice."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
-        )
-        .agg(F.count("*").alias("n_events"))
-    )
+    daily = daily_counts(t(spark, sf_dir, "events"), "n_events")
     a = daily.alias("a")
     b = daily.alias("b")
     age = F.datediff(F.col("a.day"), F.col("b.day"))
@@ -407,21 +402,8 @@ def qe35(spark, sf_dir):
     per-type moments broadcast back, then two type-partitioned
     windows over the days-bounded grid. Nothing scales with raw
     event volume past the first aggregation."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
-        )
-        .agg(F.count("*").alias("n_events"))
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    stats = daily.groupBy("event_type").agg(
-        dec(F.count("*")).alias("cnt"),
-        dec(F.sum("n_events")).alias("s"),
-        dec(F.sum(F.col("n_events") * F.col("n_events"))).alias("q"),
-    )
-    dev = daily.join(F.broadcast(stats), "event_type").select(
+    daily = daily_counts(t(spark, sf_dir, "events"), "n_events")
+    dev = daily.join(F.broadcast(daily_stats(daily)), "event_type").select(
         "event_type",
         "day",
         "n_events",
@@ -557,14 +539,7 @@ def qe36(spark, sf_dir):
     quantization. Shape at scale: raw events collapse to the
     (type, day) grid first; everything after is bounded-grid joins
     and aggregations, broadcast-sized."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
-        )
-        .agg(F.count("*").alias("y"))
-    )
+    daily = daily_counts(t(spark, sf_dir, "events"), "y")
     mm = daily.groupBy("event_type").agg(F.min("day").alias("d0"))
     idx = daily.join(F.broadcast(mm), "event_type").select(
         "event_type",
@@ -933,16 +908,12 @@ def qe38(spark, sf_dir):
 
 @query(
     "qe39_seasonal_backtest",
-    oracle="""
-WITH d AS (
-  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-         CAST(COUNT(*) AS BIGINT) AS vol
-  FROM events GROUP BY event_type, day
-),
+    oracle=f"""
+WITH {sql_daily_counts("vol")},
 scored AS (
   SELECT cur.event_type, cur.vol AS actual, prev.vol AS forecast,
          ABS(cur.vol - prev.vol) AS abs_err
-  FROM d cur JOIN d prev
+  FROM daily cur JOIN daily prev
     ON cur.event_type = prev.event_type AND cur.day = prev.day + 7
 )
 SELECT event_type,
@@ -974,10 +945,7 @@ def qe39(spark, sf_dir):
     |types| rows. Numerators are exact integer |error| sums; the two
     divisions are round-6 with the signed-zero guard, and actual > 0
     by construction (a scored day has >= 1 event)."""
-    ev = t(spark, sf_dir, "events")
-    d = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(F.count("*").alias("vol"))
+    d = daily_counts(t(spark, sf_dir, "events"), "vol")
     cur = d.select(
         "event_type", "day", F.col("vol").alias("actual")
     )

@@ -17,6 +17,8 @@ from ml_data_wrangler_spark.plans._util import (
     SQL_HOURLY_BY_TYPE,
     dbl,
     money,
+    sessions,
+    sql_sessions,
     t,
 )
 from ml_data_wrangler_spark.plans.registry import query
@@ -94,25 +96,8 @@ def qe03(spark, sf_dir):
 
 @query(
     "qe04_sessionize",
-    oracle="""
-WITH e AS (
-  -- µs TIMESTAMP, matching the Spark side's unix_micros comparison
-  -- (parquet ts may read as TIMESTAMP_NS in DuckDB).
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id FROM events
-), flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS new_session
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessions AS (
-  SELECT user_id,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_id
-  FROM flagged
-)
+    oracle=f"""
+WITH {sql_sessions("> INTERVAL 30 MINUTE")}
 SELECT user_id, CAST(COUNT(DISTINCT session_id) AS BIGINT) AS n_sessions,
        CAST(COUNT(*) AS BIGINT) AS n_events
 FROM sessions GROUP BY user_id
@@ -122,31 +107,7 @@ def qe04(spark, sf_dir):
     """Batch sessionization (30-min inactivity gap): lag + gap-flag +
     prefix-sum session ids — the classic one-shuffle formulation. The
     streaming dual is session_window() (streaming/windows.py)."""
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    cum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    flagged = t(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                # Microsecond-exact gap comparison: unix_timestamp()
-                # truncates to whole seconds, which would disagree with
-                # the oracle's full-precision `ts - lag(ts) > INTERVAL
-                # 30 MINUTE` for gaps in (1800, 1801)s.
-                F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-                > 1800 * 1_000_000
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_session"),
-    )
-    sessions = flagged.select(
-        "user_id", F.sum("new_session").over(cum).alias("session_id")
-    )
-    return sessions.groupBy("user_id").agg(
+    return sessions(t(spark, sf_dir, "events")).groupBy("user_id").agg(
         F.countDistinct("session_id").alias("n_sessions"),
         F.count("*").alias("n_events"),
     )

@@ -14,7 +14,11 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ml_data_wrangler_spark.plans._util import (
+    SQL_ACTIVE_DAYS,
     SQL_DAILY_STATS,
+    active_days,
+    daily_counts,
+    daily_stats,
     dbl,
     money,
     sql_daily_counts,
@@ -224,20 +228,8 @@ def qe24(spark, sf_dir):
     then per-type moment aggregation over a days-bounded relation
     that BROADCASTS back onto the grid. Nothing scales with raw event
     volume past the first aggregation."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
-        )
-        .agg(F.count("*").alias("n_events"))
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    stats = daily.groupBy("event_type").agg(
-        dec(F.count("*")).alias("cnt"),
-        dec(F.sum("n_events")).alias("s"),
-        dec(F.sum(F.col("n_events") * F.col("n_events"))).alias("q"),
-    )
+    daily = daily_counts(t(spark, sf_dir, "events"), "n_events")
+    stats = daily_stats(daily)
     dev = F.col("cnt") * F.col("n_events") - F.col("s")
     var_n2 = F.col("cnt") * F.col("q") - F.col("s") * F.col("s")
     return (
@@ -335,11 +327,8 @@ def qe25(spark, sf_dir):
 
 @query(
     "qe27_growth_accounting",
-    oracle="""
-WITH ud AS (
-  SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
-  FROM events
-),
+    oracle=f"""
+WITH {SQL_ACTIVE_DAYS},
 seq AS (
   SELECT user_id, day,
          LAG(day) OVER (PARTITION BY user_id ORDER BY day) AS prev_day
@@ -369,14 +358,7 @@ def qe27(spark, sf_dir):
     on the user partitioning and a re-key onto the days-bounded
     grid. All classification is integer date arithmetic; no floats
     anywhere."""
-    ud = (
-        t(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
-        )
-        .distinct()
-    )
+    ud = active_days(t(spark, sf_dir, "events"))
     seq = ud.select(
         "user_id",
         "day",
@@ -579,12 +561,8 @@ def qe29(spark, sf_dir):
 
 @query(
     "qe30_daily_autocorrelation",
-    oracle="""
-WITH daily AS (
-  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-         CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY 1, 2
-),
+    oracle=f"""
+WITH {sql_daily_counts("x")},
 stats AS (
   SELECT event_type,
          CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
@@ -630,14 +608,7 @@ def qe30(spark, sf_dir):
     the ACF is ONE final IEEE division. Shape at scale: everything
     after the (type, day) aggregation operates on the days-bounded
     grid; the lag join is an equi-join on (type, day+k)."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
-        )
-        .agg(F.count("*").alias("x"))
-    )
+    daily = daily_counts(t(spark, sf_dir, "events"), "x")
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     stats = daily.groupBy("event_type").agg(
         dec(F.count("*")).alias("n"), dec(F.sum("x")).alias("s")
@@ -768,11 +739,8 @@ def qe31(spark, sf_dir):
 
 @query(
     "qe32_activity_streaks",
-    oracle="""
-WITH ud AS (
-  SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
-  FROM events
-),
+    oracle=f"""
+WITH {SQL_ACTIVE_DAYS},
 grp AS (
   SELECT user_id, day,
          day - CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day)
@@ -812,14 +780,7 @@ def qe32(spark, sf_dir):
     Shape at scale: distinct user-days first (collapses raw volume),
     then ONE user-partitioned window and two bounded aggregations;
     the corpus-max scalar broadcasts."""
-    ud = (
-        t(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
-        )
-        .distinct()
-    )
+    ud = active_days(t(spark, sf_dir, "events"))
     w = W.partitionBy("user_id").orderBy("day")
     grp = ud.select(
         "user_id",

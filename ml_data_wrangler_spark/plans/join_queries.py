@@ -19,6 +19,9 @@ from ml_data_wrangler_spark.operators.asof import asof_join_backward
 from ml_data_wrangler_spark.plans._util import (
     SQL_CLICKS,
     SQL_PURCHASES,
+    clicks,
+    purchases,
+    sessions,
     sql_sessions,
     t,
 )
@@ -41,19 +44,9 @@ def qj01(spark, sf_dir):
     click at-or-before it (left outer; right side deduped on
     (user, ts) with max event_id for determinism)."""
     ev = t(spark, sf_dir, "events")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    clicks = (
-        ev.where(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("click_id"))
-    )
     joined = asof_join_backward(
-        purchases,
-        clicks,
+        purchases(ev),
+        clicks(ev),
         key="user_id",
         left_ts="purchase_ts",
         right_ts="ts",
@@ -142,34 +135,14 @@ def qj03(spark, sf_dir):
     binning makes it Σ per-bin² with bins sized near the typical
     session length (plan-audited in tests/test_plan_quality.py)."""
     from ml_data_wrangler_spark.operators.asof import interval_overlap_pairs
-    from pyspark.sql import Window as W
 
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    cum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    flagged = t(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-                > 1800 * 1_000_000
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_session"),
-    )
     ivl = (
-        flagged.select(
-            "user_id", "ts", F.sum("new_session").over(cum).alias("sid")
-        )
-        .groupBy("user_id", "sid")
+        sessions(t(spark, sf_dir, "events"))
+        .groupBy("user_id", "session_id")
         .agg(F.min("ts").alias("s"), F.max("ts").alias("e"))
     )
     pairs = interval_overlap_pairs(
-        ivl, id_cols=["user_id", "sid"], start_col="s", end_col="e",
+        ivl, id_cols=["user_id", "session_id"], start_col="s", end_col="e",
         bin_seconds=3600,
     )
     return (
@@ -206,19 +179,9 @@ def qj04(spark, sf_dir):
     tolerance costs nothing. The oracle reproduces it with DuckDB's
     native ASOF JOIN plus the identical freshness CASE."""
     ev = t(spark, sf_dir, "events")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    clicks = (
-        ev.where(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("click_id"))
-    )
     return asof_join_backward(
-        purchases,
-        clicks,
+        purchases(ev),
+        clicks(ev),
         key="user_id",
         left_ts="purchase_ts",
         right_ts="ts",
@@ -256,14 +219,9 @@ def qj05(spark, sf_dir):
         "user_id",
         F.col("ts").alias("view_ts"),
     )
-    clicks = (
-        ev.where(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("click_id"))
-    )
     joined = asof_join_forward(
         views,
-        clicks,
+        clicks(ev),
         key="user_id",
         left_ts="view_ts",
         right_ts="ts",

@@ -27,8 +27,12 @@ from ml_data_wrangler_spark.plans._util import (
     sql_daily_counts,
     sql_nb_confusion,
     sql_nb_model,
+    bigrams,
+    daily_counts,
     sql_top_cosine_pairs,
     t,
+    top_cosine_pairs,
+    unigrams,
 )
 from ml_data_wrangler_spark.plans.registry import query
 from ml_data_wrangler_spark.session import bounded_collect, local_frame
@@ -599,53 +603,10 @@ def qm09(spark, sf_dir):
             k=20,
             max_broadcast_cells=QM09_DENSE_CELL_CAP,
         )
-    # sparse/Zipfian regime: inverted-index pair join. Norm attached
-    # to every posting row via a doc-keyed window, so the pair
-    # aggregation carries it along (F.first) — this avoids a separate
-    # norms aggregate + two joins, which would re-derive the whole
-    # weight subtree twice more (self-joins already duplicate lineage
-    # once; don't quadruple it)
-    from pyspark.sql import Window as W
-
-    w2 = w.withColumn(
-        "nrm",
-        F.sqrt(
-            F.sum(F.col("wu") * F.col("wu"))
-            .over(W.partitionBy("doc_id"))
-            .cast("double")
-        ),
-    ).where(F.col("df") >= 2)
-    a = w2.select(
-        "token", F.col("doc_id").alias("doc_a"), F.col("wu").alias("wa"),
-        F.col("nrm").alias("na"),
-    )
-    b = w2.select(
-        "token", F.col("doc_id").alias("doc_b"), F.col("wu").alias("wb"),
-        F.col("nrm").alias("nb"),
-    )
-    return (
-        a.join(b, "token")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count("*").alias("shared"),
-            # exact int64 sum of microunit products (≤ dim · max_wu²
-            # « int64 range at the dispatch caps) — order-independent
-            F.sum(F.col("wa") * F.col("wb")).alias("dotu"),
-            F.first("na").alias("na"),
-            F.first("nb").alias("nb"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "shared",
-            F.round(
-                F.col("dotu").cast("double") / (F.col("na") * F.col("nb")), 6
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "doc_a", "doc_b")
-        .limit(20)
-    )
+    # sparse/Zipfian regime: the inverted-index pair join; the sums of
+    # microunit products are exact int64 (≤ dim · max_wu² « int64
+    # range at the dispatch caps), so order-independent
+    return top_cosine_pairs(w, "wu")
 
 
 @query(
@@ -798,28 +759,8 @@ def qm11(spark, sf_dir):
     toks = t(spark, sf_dir, "documents").select(
         "doc_id", tokenize(F.col("text")).alias("l")
     )
-    uni = (
-        toks.select(F.explode("l").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("n1"))
-    )
-    tot = uni.agg(F.sum("n1").alias("n_tokens"))
-    bg = (
-        toks.where(F.size("l") >= 2)
-        .select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("l") - 1),
-                    lambda i: F.struct(
-                        F.element_at("l", i).alias("w1"),
-                        F.element_at("l", i + 1).alias("w2"),
-                    ),
-                )
-            ).alias("p")
-        )
-        .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .agg(F.count("*").alias("nb"))
-    )
+    uni, tot = unigrams(toks)
+    bg = bigrams(toks)
     pos = (
         toks.where(F.size("l") > 0)
         .select(
@@ -887,37 +828,7 @@ def qm12(spark, sf_dir):
         .where(F.col("df") <= 0.1 * F.col("n_docs"))
         .select("doc_id", "token", "df", F.col("weight").alias("wt"))
     )
-    from pyspark.sql import Window as W
-
-    w2 = w.withColumn(
-        "nrm",
-        F.sqrt(F.sum(F.col("wt") * F.col("wt")).over(W.partitionBy("doc_id"))),
-    ).where(F.col("df") >= 2)
-    a = w2.select(
-        "token", F.col("doc_id").alias("doc_a"), F.col("wt").alias("wa"),
-        F.col("nrm").alias("na"),
-    )
-    b = w2.select(
-        "token", F.col("doc_id").alias("doc_b"), F.col("wt").alias("wb"),
-        F.col("nrm").alias("nb"),
-    )
-    return (
-        a.join(b, "token")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count("*").alias("shared"),
-            F.sum(F.col("wa") * F.col("wb")).alias("dot"),
-            F.first("na").alias("na"),
-            F.first("nb").alias("nb"),
-        )
-        .select(
-            "doc_a", "doc_b", "shared",
-            F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "doc_a", "doc_b")
-        .limit(20)
-    )
+    return top_cosine_pairs(w, "wt")
 
 
 @query(
@@ -994,12 +905,7 @@ def qm13(spark, sf_dir):
         .select("p.w1", "p.w2")
     )
     pc = pairs.groupBy("w1", "w2").agg(F.count("*").alias("np"))
-    uni = (
-        toks.select(F.explode("l").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("n1"))
-    )
-    tot = uni.agg(F.sum("n1").alias("n_tokens"))
+    uni, tot = unigrams(toks)
     ptot = pc.agg(F.sum("np").alias("n_pairs"))
     ppmi = F.greatest(
         F.lit(0.0),
@@ -1462,14 +1368,7 @@ def qm19(spark, sf_dir):
     bounded grid, partitioned by type."""
     from pyspark.sql import Window as W
 
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
-        )
-        .agg(F.count("*").alias("y"))
-    )
+    daily = daily_counts(t(spark, sf_dir, "events"), "y")
     idx = daily.select(
         "event_type",
         F.datediff(

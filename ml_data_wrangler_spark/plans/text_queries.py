@@ -34,16 +34,22 @@ from ml_data_wrangler_spark.functions.textstats import (
 from ml_data_wrangler_spark.operators._partition import ensure_parallelism
 from ml_data_wrangler_spark.plans._util import (
     SQL_BIGRAMS,
-    SQL_BM25_TF,
     SQL_DETECTED_LANG,
     SQL_FINGERPRINT,
     SQL_LANG_HITS,
     SQL_QUALITY,
+    SQL_PAIR_STRINGS,
     SQL_QUALITY_FEATURES,
+    SQL_TF,
     SQL_TOKS,
     SQL_UNIGRAMS,
+    bigrams,
+    pair_strings,
     sql_bm25_top,
+    sql_token_counts,
     t,
+    token_counts,
+    unigrams,
 )
 from ml_data_wrangler_spark.plans.registry import query
 from ml_data_wrangler_spark.session import bounded_collect, local_frame
@@ -52,9 +58,7 @@ from ml_data_wrangler_spark.session import bounded_collect, local_frame
 @query(
     "qt01_top_tokens",
     oracle=f"""
-SELECT token, CAST(COUNT(*) AS BIGINT) AS n
-FROM (SELECT unnest({SQL_TOKS}) AS token FROM documents)
-GROUP BY token
+{sql_token_counts("n")}
 ORDER BY n DESC, token
 LIMIT 20
 """,
@@ -70,18 +74,8 @@ def qt01(spark, sf_dir):
     under the repartition's own shuffle cost — while a big
     unsplittable input still gets the parallel map. No-op on any
     multi-split scan either way."""
-    from ml_data_wrangler_spark.operators._partition import (
-        TOKENIZE_REPARTITION_MIN_BYTES,
-    )
-
     return (
-        ensure_parallelism(
-            t(spark, sf_dir, "documents").select("text"),
-            min_bytes=TOKENIZE_REPARTITION_MIN_BYTES,
-        )
-        .select(F.explode(tokenize(F.col("text"))).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("n"))
+        token_counts(t(spark, sf_dir, "documents"), "n")
         .orderBy(F.desc("n"), "token")
         .limit(20)
     )
@@ -233,8 +227,7 @@ def qt07(spark, sf_dir):
 WITH toks AS (SELECT {SQL_TOKS} AS l FROM documents)
 SELECT bigram, CAST(COUNT(*) AS BIGINT) AS n
 FROM (
-  SELECT unnest(list_transform(generate_series(1, len(l) - 1),
-                               i -> l[i] || ' ' || l[i + 1])) AS bigram
+  SELECT unnest({SQL_PAIR_STRINGS}) AS bigram
   FROM toks WHERE len(l) >= 2
 )
 GROUP BY bigram
@@ -246,21 +239,10 @@ def qt08(spark, sf_dir):
     """Top-20 bigrams — n-gram construction as array expressions
     (sequence → slice → join), no UDF."""
     toks = t(spark, sf_dir, "documents").select(tokenize(F.col("text")).alias("l"))
-    bigrams = (
-        toks.where(F.size("l") >= 2)
-        .select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("l") - 1),
-                    lambda i: F.concat_ws(
-                        " ", F.element_at("l", i), F.element_at("l", i + 1)
-                    ),
-                )
-            ).alias("bigram")
-        )
-    )
     return (
-        bigrams.groupBy("bigram")
+        toks.where(F.size("l") >= 2)
+        .select(F.explode(pair_strings()).alias("bigram"))
+        .groupBy("bigram")
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), "bigram")
         .limit(20)
@@ -300,28 +282,8 @@ def qt09(spark, sf_dir):
     # column — at 100 TB two columnar scans beat materializing the
     # tokenized corpus
     toks = t(spark, sf_dir, "documents").select(tokenize(F.col("text")).alias("l"))
-    uni = (
-        toks.select(F.explode("l").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("n1"))
-    )
-    bg = (
-        toks.where(F.size("l") >= 2)
-        .select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("l") - 1),
-                    lambda i: F.struct(
-                        F.element_at("l", i).alias("w1"),
-                        F.element_at("l", i + 1).alias("w2"),
-                    ),
-                )
-            ).alias("p")
-        )
-        .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .agg(F.count("*").alias("nb"))
-    )
-    tot = uni.agg(F.sum("n1").alias("n_tokens"))
+    uni, tot = unigrams(toks)
+    bg = bigrams(toks)
     btot = bg.agg(F.sum("nb").alias("n_bigrams"))
     a = uni.select(F.col("tok").alias("w1"), F.col("n1").alias("na"))
     b = uni.select(F.col("tok").alias("w2"), F.col("n1").alias("nb1"))
@@ -360,8 +322,7 @@ big AS (
   SELECT doc_id, MAX(c) AS top_bi, CAST(SUM(c) AS BIGINT) AS n_bi
   FROM (SELECT doc_id, bg, COUNT(*) AS c
         FROM (SELECT doc_id,
-                     unnest(list_transform(generate_series(1, len(l) - 1),
-                                           i -> l[i] || ' ' || l[i + 1])) AS bg
+                     unnest({SQL_PAIR_STRINGS}) AS bg
               FROM base)
         GROUP BY doc_id, bg)
   GROUP BY doc_id
@@ -390,13 +351,9 @@ def qt10(spark, sf_dir):
         .select("doc_id", tokenize(F.col("text")).alias("l"))
         .where(F.size("l") >= 2)
     )
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size("l") - 1),
-        lambda i: F.concat_ws(" ", F.element_at("l", i), F.element_at("l", i + 1)),
-    )
     n = F.size("l").cast("bigint")
     uni_frac = max_multiplicity(F.col("l")).cast("double") / n
-    bi_frac = max_multiplicity(bigrams).cast("double") / (n - F.lit(1))
+    bi_frac = max_multiplicity(pair_strings()).cast("double") / (n - F.lit(1))
     return docs.select(
         "doc_id",
         n.alias("n_toks"),
@@ -953,7 +910,7 @@ def bm25_topk_py(con, top: int) -> list[tuple[int, int, int, int]]:
     aggregate by spilling the partitioned input (measured: 40-80 GB
     of temp; two sweep deaths from transient disk headroom). The
     matrix formulation needs none of that: DuckDB computes the linear
-    tf prologue (the SQL oracle's own CTEs via SQL_BM25_TF), the
+    tf prologue (the SQL oracle's own CTEs via SQL_TF), the
     query-independent per-posting weight w_u = ROUND(idf·sat·1e6) is
     built per (doc, token) exactly as in SQL (idf rounded HALF-AWAY
     to 6 decimals first, float64 factor order preserved), and the
@@ -965,7 +922,7 @@ def bm25_topk_py(con, top: int) -> list[tuple[int, int, int, int]]:
     import numpy as np
 
     pdf = con.execute(
-        "WITH " + SQL_BM25_TF + "\nSELECT doc_id, token, tf FROM btf"
+        "WITH " + SQL_TF + "\nSELECT doc_id, token, tf FROM tf"
     ).df()
     n_docs = con.execute("SELECT COUNT(*) FROM documents").fetchone()[0]
     if len(pdf) == 0:
@@ -1395,9 +1352,7 @@ v{k} AS (
     "qt20_bpe_merges",
     oracle=f"""
 WITH freq AS (
-  SELECT tok AS token, CAST(COUNT(*) AS BIGINT) AS f
-  FROM (SELECT unnest({SQL_TOKS}) AS tok FROM documents)
-  GROUP BY tok
+{sql_token_counts("f")}
 ),
 w0 AS (
   SELECT token, f,
@@ -1455,21 +1410,8 @@ def qt20(spark, sf_dir):
     recomputes the k-step replace chain from that one leaf: an
     interleaved A/B of re-checkpointing after every merge measured
     1.554 s against 1.444 s for this form (OPTIMIZATION_r13.md)."""
-    from ml_data_wrangler_spark.operators._partition import (
-        TOKENIZE_REPARTITION_MIN_BYTES,
-    )
-
     wt = (
-        # repartition raw text before the tokenize map (trap #1,
-        # round 12; bytes-conditioned round 13 — same plain-tokenize
-        # break-even as qt01, see ensure_parallelism.min_bytes)
-        ensure_parallelism(
-            t(spark, sf_dir, "documents").select("text"),
-            min_bytes=TOKENIZE_REPARTITION_MIN_BYTES,
-        )
-        .select(F.explode(tokenize(F.col("text"))).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("f"))
+        token_counts(t(spark, sf_dir, "documents"), "f")
         .select(
             "token",
             "f",

@@ -1215,15 +1215,19 @@ def qv21(spark, sf_dir):
         )
     )
     score_u = 7 * F.col("sim_u") - 3 * F.col("ms_u")
-    s2 = argmax(
-        rem1.withColumn("score_u", score_u),
-        [F.desc(score_u), F.col("neighbor_id")],
-    ).select(
-        "qid",
-        F.col("neighbor_id").alias("sel"),
-        F.col("sim").alias("rel"),
-        "score_u",
-    )
+
+    def pick(rem):
+        return argmax(
+            rem.withColumn("score_u", score_u),
+            [F.desc(score_u), F.col("neighbor_id")],
+        ).select(
+            "qid",
+            F.col("neighbor_id").alias("sel"),
+            F.col("sim").alias("rel"),
+            "score_u",
+        )
+
+    s2 = pick(rem1)
     rem2 = (
         rem1.withColumnRenamed("ms_u", "ms_prev")
         .join(s2.select("qid", "sel"), "qid")
@@ -1237,15 +1241,7 @@ def qv21(spark, sf_dir):
             F.greatest(F.col("ms_prev"), F.col("psim_u")).alias("ms_u"),
         )
     )
-    s3 = argmax(
-        rem2.withColumn("score_u", score_u),
-        [F.desc(score_u), F.col("neighbor_id")],
-    ).select(
-        "qid",
-        F.col("neighbor_id").alias("sel"),
-        F.col("sim").alias("rel"),
-        "score_u",
-    )
+    s3 = pick(rem2)
 
     def out(df, rank):
         return df.select(
@@ -1315,7 +1311,7 @@ def qv22(spark, sf_dir):
     windows partitioned by query_id over the scored rows and a
     broadcast join of the |Q|-row positives. Nothing beyond
     O(|Q|·k) rows moves after scoring."""
-    from ml_data_wrangler_spark.functions.vectors import dot, l2_norm
+    from ml_data_wrangler_spark.functions.vectors import l2_norm, pair_cosine
 
     emb = t(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") % 20 == 0).select(
@@ -1330,10 +1326,7 @@ def qv22(spark, sf_dir):
         F.col("embedding").alias("cvec"),
         l2_norm(F.col("embedding")).alias("cnorm"),
     )
-    sim = F.round(
-        dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm")),
-        6,
-    )
+    sim = pair_cosine()
     # repartition the corpus BEFORE the broadcast fan-out (trap #10):
     # the |Q|×|C| scoring otherwise pipelines on the 1-split scan
     # partitioning (measured at 6×: one 70.2 s task)

@@ -26,7 +26,7 @@ from ml_data_wrangler_spark.operators.similarity import (
     ivf_index,
     ivf_search,
 )
-from ml_data_wrangler_spark.plans._util import SQL_COS, t
+from ml_data_wrangler_spark.plans._util import SQL_COS, recall_ok, t
 from ml_data_wrangler_spark.plans.registry import query
 
 _QV01_ORACLE_CHUNK = 4096
@@ -408,13 +408,7 @@ def qv06(spark, sf_dir):
         .withColumn("_found", F.lit(1))
     )
     j = exact.join(cand_hit, ["vec_a", "vec_b"], "left")
-    stats = j.agg(
-        (
-            F.coalesce(F.sum("_found"), F.lit(0))
-            / F.greatest(F.count("*"), F.lit(1))
-            >= 0.7
-        ).alias("lsh_recall_ok")
-    )
+    stats = j.agg(recall_ok().alias("lsh_recall_ok"))
     return j.crossJoin(F.broadcast(stats)).select(
         "vec_a", "vec_b", "sim", "lsh_recall_ok"
     )

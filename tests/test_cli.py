@@ -113,6 +113,32 @@ def test_cli_corpus_build_near_dup_tier(spark, sf_dir, tmp_path, capsys):
     assert 0 < n_near <= n_exact
 
 
+def _shard_rows(df):
+    return sorted(
+        tuple(r)
+        for r in df.select("doc_id", "shard", "quality", "n_tokens").collect()
+    )
+
+
+def test_cli_corpus_build_writes_the_gated_rows(spark, sf_dir, tmp_path):
+    """qc13 and qc14 are the corpus-build CLI's two configurations
+    under the oracle gate: the rows the CLI writes, as (doc_id, shard,
+    quality, n_tokens), are exactly the gated queries' rows."""
+    from ml_data_wrangler_spark.plans import registry
+
+    queries = registry.queries()
+    for name, extra in (
+        ("qc13_corpus_build", []),
+        ("qc14_corpus_build_tiered", ["--near-dup-threshold", "0.6"]),
+    ):
+        out = str(tmp_path / name)
+        assert main(["corpus-build", "--sf-dir", sf_dir, "--out", out,
+                     "--min-quality", "0.3", "--shards", "4", *extra]) == 0
+        written = _shard_rows(spark.read.json(out))
+        assert written, name
+        assert written == _shard_rows(queries[name](spark, sf_dir)), name
+
+
 def test_cli_explain_audit(spark, sf_dir, capsys):
     """`explain` prints the formatted plan plus the scale audit; q01
     must show exactly one hash shuffle and nothing on the ban lists."""

@@ -3,10 +3,14 @@
 The oracles in ``plans/`` are composed from the SQL twins in
 ``plans/_util.py``. This guard reads every string literal in
 ``plans/*.py`` (f-string placeholders kept as ``{expr}``, docstrings
-skipped), normalizes whitespace, drops blank lines, and fails when two
-literals share a run of 4 or more consecutive lines that adds up to at
-least 120 characters: such a run is a rule written out twice, which
-then has to be edited in step. Fold it into a twin instead.
+skipped), makes its CTE names blind (each name a literal defines with
+``name AS (`` becomes a positional placeholder, in order of first
+definition, wherever it occurs in that literal, so a copy with renamed
+CTEs still matches), normalizes whitespace, drops blank lines, and
+fails when two literals share a run of 4 or more consecutive lines
+that adds up to at least 120 characters: such a run is a rule written
+out twice, which then has to be edited in step. Fold it into a twin
+instead.
 """
 
 from __future__ import annotations
@@ -14,10 +18,13 @@ from __future__ import annotations
 import ast
 import itertools
 import pathlib
+import re
 
 PLANS = pathlib.Path(__file__).resolve().parents[1] / "ml_data_wrangler_spark" / "plans"
 MIN_LINES = 4
 MIN_CHARS = 120
+# a CTE definition: `name AS (` or `name(col, ...) AS (`
+CTE_DEF = re.compile(r"\b(\w+)\s*(?:\([\w\s,]*\))?\s+AS\s*\(", re.IGNORECASE)
 
 # literal name -> why its copy is kept
 ALLOWED = {
@@ -37,6 +44,18 @@ def _text(node: ast.Constant | ast.JoinedStr) -> str:
     )
 
 
+def cte_blind(text: str) -> str:
+    """`text` with each CTE name it defines replaced by `_cte<k>`, k
+    the order of first definition."""
+    names: dict[str, str] = {}
+    for m in CTE_DEF.finditer(text):
+        names.setdefault(m.group(1), f"_cte{len(names) + 1}")
+    if not names:
+        return text
+    pattern = re.compile(r"\b(" + "|".join(map(re.escape, names)) + r")\b")
+    return pattern.sub(lambda m: names[m.group(1)], text)
+
+
 def _docstrings(tree: ast.AST) -> set[int]:
     out = set()
     for n in ast.walk(tree):
@@ -54,7 +73,9 @@ def literals() -> dict[str, list[str]]:
     found: dict[str, list[str]] = {}
 
     def add(name: str, text: str) -> None:
-        lines = [ln for ln in (" ".join(x.split()) for x in text.splitlines()) if ln]
+        lines = [
+            ln for ln in (" ".join(x.split()) for x in cte_blind(text).splitlines()) if ln
+        ]
         if len(lines) < MIN_LINES:
             return
         key, k = name, 1
