@@ -59,6 +59,24 @@ def _tile_rows(row_chunk: int, n_cols: int) -> int:
     return max(1, min(row_chunk, _TILE_CELLS // max(n_cols, 1)))
 
 
+def chunk_topk(scores: np.ndarray, row_ids: np.ndarray, col_ids: np.ndarray, k: int):
+    """Chunk-local top-``k`` rows per column of one score tile, under
+    the final total order (score DESC, row id ASC): ``(col ids, row
+    ids, scores)`` of the picks, or None if no pick is finite.
+
+    ``row_ids`` must be ASC, so the stable sort on the negated scores
+    breaks ties by row id; -inf marks a (row, column) that is no
+    candidate and is never picked. Any global top-k row is within its
+    chunk's top-k, so a rank window over the picks is exact."""
+    kk = min(k, scores.shape[0])
+    top = np.argsort(-scores, axis=0, kind="stable")[:kk]  # (kk, cols)
+    sel = np.take_along_axis(scores, top, axis=0)
+    keep = np.isfinite(sel)
+    if not keep.any():
+        return None
+    return np.tile(col_ids, (kk, 1))[keep], row_ids[top][keep], sel[keep]
+
+
 def _fold_cosine(
     a: np.ndarray, b: np.ndarray, nrm_a: np.ndarray, nrm_b: np.ndarray
 ) -> np.ndarray:
@@ -742,27 +760,17 @@ def brute_force_topk_fold(
                     f"embeddings (corpus dim {c.shape[1]} != "
                     f"query dim {qm_b.shape[1]})"
                 )
-            # pre-sort by neighbor id: the stable sim sort below
-            # then inherits the ASC id tie-break of the total order
+            # pre-sort by neighbor id, as chunk_topk requires
             o = np.argsort(nids, kind="stable")
             nids, c, cn = nids[o], c[o], cn[o]
             sims = _fold_cosine(c, qm_b, cn, qn_b)
             # self-matches can never be neighbors
             sims[nids[:, None] == ids_b[None, :]] = -np.inf
-            kk = min(k, sims.shape[0])
-            # stable sort on rounded sims: ties keep id order
-            top = np.argsort(-sims, axis=0, kind="stable")[:kk]  # (kk, Q)
-            sim_sel = np.take_along_axis(sims, top, axis=0)
-            keep = np.isfinite(sim_sel)
-            if not keep.any():
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(ids_b, (kk, 1))[keep],
-                    "neighbor_id": nids[top][keep],
-                    "sim": sim_sel[keep],
-                }
-            )
+            picks = chunk_topk(sims, nids, ids_b, k)
+            if picks is not None:
+                yield pd.DataFrame(
+                    dict(zip(("query_id", "neighbor_id", "sim"), picks))
+                )
 
     from ml_data_wrangler_spark.operators._partition import ensure_parallelism
 

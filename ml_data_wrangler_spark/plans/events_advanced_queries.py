@@ -29,11 +29,9 @@ from ml_data_wrangler_spark.plans._util import (
 from ml_data_wrangler_spark.plans.registry import query
 from ml_data_wrangler_spark.session import bounded_collect, local_frame
 
-# qe33 driver-loop dispatch bounds (round 12): the PageRank loop runs
-# on the driver when the transition graph is model-sized — probed with
-# session.bounded_collect, so the probe itself transfers at most cap+1
-# rows for ANY keyspace. Above either cap the pre-round-12 distributed
-# loop runs unchanged.
+# qe33's model-size contract: the PageRank loop runs on the driver
+# over the collected transition graph. session.bounded_collect moves
+# at most cap+1 rows for ANY keyspace; past either cap qe33 raises.
 QE33_DRIVER_NODE_CAP = 4096
 QE33_DRIVER_EDGE_CAP = 65536
 
@@ -42,10 +40,10 @@ def _qe33_driver_loop(spark, nodes, edges):
     """Driver-side replica of qe33's 3-round damped PageRank over the
     model-sized transition matrix (``nodes`` a list of node names,
     ``edges`` a list of (src, dst, pij) tuples) — bit-exact vs the
-    DataFrame loop: pico-quantized terms are summed as Python ints
-    (order-free), the damping expression keeps the Column expression's
-    operation order, and Spark's ROUND is replicated in the decimal
-    domain (functions/driver_exact.py)."""
+    DuckDB oracle: pico-quantized terms are summed as Python ints
+    (order-free), the damping expression keeps the SQL's operation
+    order, and Spark's ROUND is replicated in the decimal domain
+    (functions/driver_exact.py)."""
     out_schema = "event_type string, pagerank double"
     n = len(nodes)
     if n == 0:
@@ -154,16 +152,12 @@ def qe33(spark, sf_dir):
     window + pair count (same shuffle as qe15); the graph itself
     collapses to |types|² edges — MODEL-sized (event types are a
     bounded enum), so the fixed-point loop runs on the DRIVER over
-    the collected transition matrix (round 12, guide §5): the old
-    DataFrame loop paid ~12 broadcast-build + localCheckpoint jobs
-    per query for arithmetic on ≤|types|² rows, a pure barrier tax at
-    every scale. The dispatch is probe-bounded (session.bounded_collect
-    — the probe transfers ≤ cap+1 rows for ANY keyspace); above the
-    caps the pre-round-12 distributed loop runs unchanged, which is
-    also the path a billion-node user-user graph would take (shuffling
-    on dst instead of broadcasting). Both paths quantize sums to exact
-    integers, so they are bit-equal by construction (pinned by
-    tests/test_dispatch_branches.py)."""
+    the collected transition matrix: a DataFrame loop pays ~12
+    broadcast-build and checkpoint jobs per query for arithmetic on
+    ≤|types|² rows. The collects are probe-bounded
+    (session.bounded_collect moves ≤ cap+1 rows for ANY keyspace);
+    past QE33_DRIVER_NODE_CAP types or QE33_DRIVER_EDGE_CAP edges the
+    query raises ``ValueError``."""
     ev = t(spark, sf_dir, "events")
     nodes_df = ev.select(F.col("event_type").alias("node")).distinct()
     seq = ev.select(
@@ -187,75 +181,24 @@ def qe33(spark, sf_dir):
         ).alias("pij"),
     )
     node_pdf = bounded_collect(nodes_df, QE33_DRIVER_NODE_CAP)
-    p_pdf = None
-    if node_pdf is not None:
-        p_pdf = bounded_collect(p_df, QE33_DRIVER_EDGE_CAP)
-    if p_pdf is not None:
-        # Python scalars, not numpy ones: driver_exact rounds through
-        # Decimal(repr(x))
-        return _qe33_driver_loop(
-            spark,
-            node_pdf["node"].tolist(),
-            list(zip(*(p_pdf[c].tolist() for c in ("src", "dst", "pij")))),
+    if node_pdf is None:
+        raise ValueError(
+            f"qe33: the events hold more than {QE33_DRIVER_NODE_CAP} event "
+            f"types, past QE33_DRIVER_NODE_CAP = {QE33_DRIVER_NODE_CAP}"
         )
-    # distributed fallback: the pre-round-12 loop, unchanged
-    nodes = nodes_df.localCheckpoint()
-    nn = nodes.agg(F.count("*").alias("n"))
-    p = p_df.localCheckpoint()
-    r = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", (F.round(F.lit(1.0) / F.col("n"), 9) + F.lit(0.0)).alias("r")
+    p_pdf = bounded_collect(p_df, QE33_DRIVER_EDGE_CAP)
+    if p_pdf is None:
+        raise ValueError(
+            f"qe33: the transition graph has more than {QE33_DRIVER_EDGE_CAP} "
+            f"edges, past QE33_DRIVER_EDGE_CAP = {QE33_DRIVER_EDGE_CAP}"
+        )
+    # Python scalars, not numpy ones: driver_exact rounds through
+    # Decimal(repr(x))
+    return _qe33_driver_loop(
+        spark,
+        node_pdf["node"].tolist(),
+        list(zip(*(p_pdf[c].tolist() for c in ("src", "dst", "pij")))),
     )
-    srcs = p.select(F.col("src").alias("node")).distinct()
-    for _ in range(3):
-        dang = (
-            r.join(F.broadcast(srcs), "node", "left_anti")
-            .agg(
-                F.coalesce(
-                    F.sum(F.round(F.col("r") * 1e12).cast("long")), F.lit(0)
-                ).alias("dm")
-            )
-        )
-        inflow = (
-            p.join(
-                F.broadcast(r.select(F.col("node").alias("src"), "r")), "src"
-            )
-            .select(
-                F.col("dst").alias("node"),
-                F.round(F.col("r") * F.col("pij") * 1e12)
-                .cast("long")
-                .alias("tq"),
-            )
-            .groupBy("node")
-            .agg(F.sum("tq").alias("s"))
-        )
-        r = (
-            nodes.join(F.broadcast(inflow), "node", "left")
-            .crossJoin(F.broadcast(dang))
-            .crossJoin(F.broadcast(nn))
-            .select(
-                "node",
-                (
-                    F.round(
-                        F.lit(0.15) / F.col("n")
-                        + F.lit(0.85)
-                        * (
-                            F.coalesce(F.col("s"), F.lit(0)) / F.lit(1e12)
-                            + F.col("dm") / F.lit(1e12) / F.col("n")
-                        ),
-                        9,
-                    )
-                    + F.lit(0.0)
-                ).alias("r"),
-            )
-            # per-round checkpoint of the |types|-row rank vector —
-            # dang + inflow both reference r, so without it the plan
-            # branches ~3× per iteration (qd07's per-round rule)
-            .localCheckpoint()
-        )
-    return r.select(
-        F.col("node").alias("event_type"),
-        (F.round(F.col("r"), 6) + F.lit(0.0)).alias("pagerank"),
-    ).orderBy("event_type")
 
 
 @query(

@@ -983,10 +983,10 @@ def _qt19_scale_oracle(con):
     return cols, out
 
 
-# bm25_rankings' scoring-kernel bounds (round 13): the Arrow GEMM
-# kernel runs while the query side fits ROW_CAP (query, token) rows
-# and CELL_CAP tokens×queries presence cells; above either the
-# broadcast-join path runs. CHUNK_CELLS bounds each dense score tile.
+# bm25_rankings' model-size contract: the query side is collected to
+# the driver only up to ROW_CAP (query, token) rows and densified only
+# up to CELL_CAP tokens×queries presence cells; past either the query
+# raises. CHUNK_CELLS bounds each dense score tile.
 BM25_KERNEL_ROW_CAP = 2_000_000
 BM25_KERNEL_CELL_CAP = 32_000_000
 BM25_KERNEL_CHUNK_CELLS = 4_000_000
@@ -1007,19 +1007,14 @@ def bm25_rankings(spark, sf_dir, top: int):
     bounded aggregations. The key algebraic fact: the per-term
     contribution idf_t · sat(tf_ct, dl_c) is QUERY-INDEPENDENT, so it
     is precomputed (and micro-quantized) once per (token, candidate)
-    posting on the small tf relation — idf (broadcast), dl
-    (posting-grain equi-join), and avgdl (broadcast) attach BEFORE
-    the fan-out. Scoring is then a single
-    posting-list equi-join on token (query terms × weighted postings)
-    feeding one sum aggregation and a query-partitioned top-k window;
-    nothing but the sum runs at fan-out cardinality. (The previous
-    formulation joined idf and dl AFTER the fan-out — two extra
-    joins at |queries|×|postings| size; measured 17.2s → this form
-    cuts the join work at identical integer scores, so the oracle is
-    unchanged.) At 100 TB you'd additionally cap the hot-token
-    fan-out with qm01's df pruning before the join (this fixture's
-    vocabulary is ~31 near-stopword tokens, so no cut is applied
-    here)."""
+    posting on the small tf relation — idf (broadcast), dl (carried
+    on the posting), and avgdl (broadcast) attach BEFORE scoring.
+    Scoring is then one Arrow kernel over the weighted postings
+    against the collected query side, feeding a query-partitioned
+    top-k window. The query side must fit BM25_KERNEL_ROW_CAP rows
+    and BM25_KERNEL_CELL_CAP presence cells, or the query raises
+    ``ValueError``; past them the plan to build is an equi-join on a
+    df-pruned vocabulary (qm01's pruning), not a wider broadcast."""
     from ml_data_wrangler_spark.operators._partition import (
         TOKENIZE_REPARTITION_MIN_BYTES,
     )
@@ -1102,12 +1097,11 @@ def bm25_rankings(spark, sf_dir, top: int):
     # query×posting fan-out: idf (vocab-sized) and corp (1 row)
     # broadcast; dl is already ON the posting row (carried through
     # tf's checkpoint), so the old doc-grain dl equi-join is gone
-    # repartition the weighted postings BEFORE the broadcast fan-out:
-    # AQE coalesces the small (~|postings|-row) aggregate to very few
-    # partitions, but the join below EXPLODES each posting row by the
-    # matching query terms — partition count must follow the
-    # POST-fan-out size, not the input size, or the whole scoring
-    # stage runs on one task (measured 13.8s → 3.3s at sf0.1)
+    # repartition the weighted postings on cand_id: the scoring
+    # kernel needs every posting of a candidate in one partition, and
+    # AQE would otherwise coalesce the small (~|postings|-row)
+    # aggregate to very few partitions, so the scoring stage would
+    # run on one task
     parallelism = spark.sparkContext.defaultParallelism
     wgt = (
         tf.join(F.broadcast(idf), "token")
@@ -1135,23 +1129,21 @@ def bm25_rankings(spark, sf_dir, top: int):
     # (query, cand) stream. Exactness: every per-posting weight tq is
     # an integer ≤ ~idf_max·2.2·1e6 (≈6e7 at n=1e12 docs) and a score
     # sums ≤ |query terms| of them — far under 2^53, so the float64
-    # GEMM sums are bit-exactly the old LongType sums; candidacy is
+    # GEMM sums are bit-exactly the SQL BIGINT sums; candidacy is
     # presence (shares ≥ 1 token, zero-weight matches still rank),
-    # NOT s > 0, exactly the SQL/scale-oracle semantics; chunk-local
-    # top-k under the final order makes the global merge exact (any
-    # global top-k row is within its chunk's top-k).
-    #
-    # Dispatch: the query term set is collected by
-    # session.bounded_collect — never more than BM25_KERNEL_ROW_CAP+1
-    # rows cross the driver for ANY corpus. If the query side
-    # outgrows the broadcast budget (rows, or tokens×queries presence
-    # cells), the old broadcast-join path below runs unchanged (same
-    # values — pinned bit-identical by tests/test_dispatch_branches.py);
-    # at that tier a df-pruned vocabulary equi-join is the right next
-    # shape, as before.
+    # NOT s > 0, exactly the SQL/scale-oracle semantics; the global
+    # merge of chunk-local top-k is exact (similarity.chunk_topk).
     q_pdf = bounded_collect(bq, BM25_KERNEL_ROW_CAP)
-    dense_ok = q_pdf is not None
-    if dense_ok and len(q_pdf) > 0:
+    if q_pdf is None:
+        raise ValueError(
+            "bm25_rankings: the query side has more than "
+            f"{BM25_KERNEL_ROW_CAP} (query, token) rows, past "
+            f"BM25_KERNEL_ROW_CAP = {BM25_KERNEL_ROW_CAP}"
+        )
+    if len(q_pdf) == 0:
+        # no query docs: an empty ranking with the full schema
+        scored = local_frame(spark, [], "query_id long, cand_id long, s long")
+    else:
         import numpy as np
 
         tok_u, q_tok_idx = np.unique(
@@ -1161,13 +1153,13 @@ def bm25_rankings(spark, sf_dir, top: int):
             q_pdf["query_id"].to_numpy().astype("int64"),
             return_inverse=True,
         )
-        dense_ok = len(tok_u) * len(qid_u) <= BM25_KERNEL_CELL_CAP
-    if dense_ok and len(q_pdf) == 0:
-        # no query docs: identical to the old join-with-empty result
-        scored = local_frame(spark, [], "query_id long, cand_id long, s long")
-    elif dense_ok:
-        import numpy as np
-
+        cells = len(tok_u) * len(qid_u)
+        if cells > BM25_KERNEL_CELL_CAP:
+            raise ValueError(
+                f"bm25_rankings: the query side's {len(tok_u)} tokens × "
+                f"{len(qid_u)} queries = {cells} presence cells, past "
+                f"BM25_KERNEL_CELL_CAP = {BM25_KERNEL_CELL_CAP}"
+            )
         qp = np.zeros((len(tok_u), len(qid_u)))
         qp[q_tok_idx, q_qid_idx] = 1.0
         tok2row = {t: i for i, t in enumerate(tok_u.tolist())}
@@ -1177,6 +1169,8 @@ def bm25_rankings(spark, sf_dir, top: int):
         def _score(batches):
             import numpy as np
             import pandas as pd
+
+            from ml_data_wrangler_spark.operators.similarity import chunk_topk
 
             tok2row_b, qids, qp_b = bqb.value
             nt = qp_b.shape[0]
@@ -1222,43 +1216,19 @@ def bm25_rankings(spark, sf_dir, top: int):
                 cand_ok = (pres @ qp_b) > 0.0  # shares ≥ 1 token
                 # c.doc_id <> query_id, as in the SQL
                 cand_ok[ucands[lo:hi][:, None] == qids[None, :]] = False
-                if not cand_ok.any():
-                    continue
-                sm = np.where(cand_ok, s_mat, -np.inf)
-                kk = min(top, nc)
-                # stable argsort on -s: candidate rows are ASC by
-                # construction, so ties inherit the cand_id ASC
-                # tie-break of the final total order
-                topi = np.argsort(-sm, axis=0, kind="stable")[:kk]
-                ssel = np.take_along_axis(sm, topi, axis=0)
-                keep = np.isfinite(ssel)
-                if not keep.any():
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.tile(qids, (kk, 1))[keep],
-                        "cand_id": ucands[lo:hi][topi][keep],
-                        "s": ssel[keep].astype("int64"),
-                    }
+                # candidate rows are ASC by construction, as
+                # chunk_topk requires
+                picks = chunk_topk(
+                    np.where(cand_ok, s_mat, -np.inf), ucands[lo:hi], qids, top
                 )
+                if picks is not None:
+                    q, c_ids, s = picks
+                    yield pd.DataFrame(
+                        {"query_id": q, "cand_id": c_ids, "s": s.astype("int64")}
+                    )
 
         scored = wgt.mapInPandas(
             _score, schema="query_id long, cand_id long, s long"
-        )
-    else:
-        # broadcast-join fallback (the pre-round-13 shape, verbatim):
-        # the token join key has vocab-sized cardinality, so a shuffle
-        # join on token caps parallelism at |vocab| and skews on hot
-        # tokens; broadcasting bq keeps the fan-out map-side over the
-        # postings' partitioning with map-side partial aggregation,
-        # shuffling only the aggregated (query, cand) rows. For a
-        # query set past even this, flip to an equi-join against a
-        # df-pruned vocabulary.
-        scored = (
-            wgt.join(F.broadcast(bq), "token")
-            .where(F.col("cand_id") != F.col("query_id"))
-            .groupBy("query_id", "cand_id")
-            .agg(F.sum("tq").alias("s"))
         )
     w = W.partitionBy("query_id").orderBy(F.desc("s"), "cand_id")
     return (

@@ -12,8 +12,11 @@ checks that
 
 A second test shrinks each ``session.bounded_collect`` probe's cap and
 checks that no collect or toPandas during plan build moves more than
-cap + 1 rows to the driver, and an AST guard keeps hand-written
-``limit(cap + 1)`` probes out of the package.
+cap + 1 rows to the driver. The probes that bound a model size (qe33's
+graph, BM25's query side, qv18's moments) have one path, so above
+their caps they raise ``ValueError`` naming the query and the cap. An
+AST guard keeps hand-written ``limit(cap + 1)`` probes out of the
+package.
 """
 
 from __future__ import annotations
@@ -61,8 +64,6 @@ def _bm25(top):
 # plan markers: (substrings the plan must hold, substrings it must not)
 KERNEL = (["MapInPandas"], ["FlatMapCoGroupsInPandas"])
 NO_KERNEL = ([], ["MapInPandas"])
-DRIVER_LOOP = (["LocalRelation"], ["LogicalRDD"])
-DISTRIBUTED_LOOP = (["LogicalRDD"], [])
 QE33 = _query("qe33_event_type_pagerank")
 QM09 = _query("qm09_tfidf_doc_pairs")
 QV18 = _query("qv18_pca_power_iteration")
@@ -75,23 +76,6 @@ SITES = {
     "fold-broadcast-vs-grid": (
         _fold_knn, KERNEL, (["FlatMapCoGroupsInPandas"], []),
         (THIS, "FOLD_BROADCAST_CELLS", 64), None,
-    ),
-    "bm25-kernel-vs-join-by-rows-top3": (
-        _bm25(3), KERNEL, NO_KERNEL, (tq, "BM25_KERNEL_ROW_CAP", 0), None,
-    ),
-    "bm25-kernel-vs-join-by-rows-top20": (
-        _bm25(20), KERNEL, NO_KERNEL, (tq, "BM25_KERNEL_ROW_CAP", 0), None,
-    ),
-    # a tall-but-narrow query set can pass the row cap and still blow
-    # the dense tokens×queries presence matrix
-    "bm25-kernel-vs-join-by-cells": (
-        _bm25(3), KERNEL, NO_KERNEL, (tq, "BM25_KERNEL_CELL_CAP", 1), None,
-    ),
-    "qe33-driver-vs-distributed-by-nodes": (
-        QE33, DRIVER_LOOP, DISTRIBUTED_LOOP, (ea, "QE33_DRIVER_NODE_CAP", 0), None,
-    ),
-    "qe33-driver-vs-distributed-by-edges": (
-        QE33, DRIVER_LOOP, DISTRIBUTED_LOOP, (ea, "QE33_DRIVER_EDGE_CAP", 0), None,
     ),
     "qm09-dense-vs-sparse": (
         QM09, KERNEL, NO_KERNEL, (mq, "QM09_DENSE_VOCAB_CAP", 0), None,
@@ -147,18 +131,29 @@ def test_forced_branch_equals_default(spark, sf_dir, monkeypatch, name):
         assert compare(oracle, got[0], got[1], o_cols, o_rows) == []
 
 
-# probe → (build function, the probe's shrunk cap, other caps in force). The
-# node cap stays above the fixture's 5 event types so the edge probe
-# runs; qv18's mean probe keeps its 64 so the covariance probe runs.
+# probe → (build function, the probe's shrunk cap, other caps in force,
+# the ValueError it raises above its cap, or None where the probe picks
+# a branch instead). The node cap stays above the fixture's 5 event
+# types so the edge probe runs; qv18's mean probe keeps its 64 so the
+# covariance probe runs.
 PROBES = {
-    "qe33-nodes": (QE33, (ea, "QE33_DRIVER_NODE_CAP", 2), ()),
-    "qe33-edges": (
-        QE33, (ea, "QE33_DRIVER_EDGE_CAP", 3), ((ea, "QE33_DRIVER_NODE_CAP", 8),)
+    "qe33-nodes": (
+        QE33, (ea, "QE33_DRIVER_NODE_CAP", 2), (), "qe33: .*QE33_DRIVER_NODE_CAP"
     ),
-    "qm09-vocab": (QM09, (mq, "QM09_DENSE_VOCAB_CAP", 4), ()),
-    "bm25-query-terms": (_bm25(3), (tq, "BM25_KERNEL_ROW_CAP", 5), ()),
-    "qv18-means": (QV18, (vq, "QV18_MU_CAP", 8), ()),
-    "qv18-covariance": (QV18, (vq, "QV18_COV_CAP", 10), ((vq, "QV18_MU_CAP", 64),)),
+    "qe33-edges": (
+        QE33,
+        (ea, "QE33_DRIVER_EDGE_CAP", 3),
+        ((ea, "QE33_DRIVER_NODE_CAP", 8),),
+        "qe33: .*QE33_DRIVER_EDGE_CAP",
+    ),
+    "qm09-vocab": (QM09, (mq, "QM09_DENSE_VOCAB_CAP", 4), (), None),
+    "bm25-query-terms": (
+        _bm25(3), (tq, "BM25_KERNEL_ROW_CAP", 5), (), "bm25_rankings: .*BM25_KERNEL_ROW_CAP"
+    ),
+    "qv18-means": (QV18, (vq, "QV18_MU_CAP", 8), (), "qv18"),
+    "qv18-covariance": (
+        QV18, (vq, "QV18_COV_CAP", 10), ((vq, "QV18_MU_CAP", 64),), "qv18"
+    ),
 }
 
 
@@ -166,10 +161,11 @@ PROBES = {
 def test_probe_moves_at_most_cap_plus_one_rows(spark, sf_dir, monkeypatch, name):
     """With the cap shrunk below the fixture's size, every collect or
     toPandas during plan build moves at most (largest cap in force) + 1
-    rows, and the shrunk probe itself stops at exactly cap + 1."""
+    rows, the shrunk probe itself stops at exactly cap + 1, and a probe
+    that bounds a model size raises naming its query and cap."""
     from pyspark.sql.classic.dataframe import DataFrame
 
-    build, probe, others = PROBES[name]
+    build, probe, others, raises = PROBES[name]
     for module, constant, value in (probe, *others):
         monkeypatch.setattr(module, constant, value)
     seen: list[int] = []
@@ -181,14 +177,22 @@ def test_probe_moves_at_most_cap_plus_one_rows(spark, sf_dir, monkeypatch, name)
             return out
 
         monkeypatch.setattr(DataFrame, method, spy)
-    if build is QV18:  # qv18's model-size invariant raises above its caps
-        with pytest.raises(ValueError, match="qv18"):
+    if raises:
+        with pytest.raises(ValueError, match=raises):
             build(spark, sf_dir)
     else:
         build(spark, sf_dir)
     bound = max(value for _, _, value in (probe, *others)) + 1
     assert seen and max(seen) <= bound, seen
     assert probe[2] + 1 in seen, seen
+
+
+def test_bm25_presence_cells_over_cap_raise(spark, sf_dir, monkeypatch):
+    """A tall-but-narrow query side can pass the row cap and still blow
+    the dense tokens×queries presence matrix: that raises too."""
+    monkeypatch.setattr(tq, "BM25_KERNEL_CELL_CAP", 1)
+    with pytest.raises(ValueError, match="bm25_rankings: .*BM25_KERNEL_CELL_CAP = 1"):
+        tq.bm25_rankings(spark, sf_dir, 3)
 
 
 def _is_plus_one(node) -> bool:

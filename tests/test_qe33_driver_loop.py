@@ -1,8 +1,9 @@
-"""qe33's driver-loop path: the model-sized PageRank iteration runs on
-the driver and returns a local relation that collects with zero jobs,
-sorted as the old orderBy("event_type") would. Its bit-equality with
-the distributed fallback, and the bounded dispatch probes, are pinned
-in tests/test_dispatch_branches.py."""
+"""qe33's one path: the model-sized PageRank iteration runs on the
+driver and returns a local relation that collects with zero jobs,
+sorted as an orderBy("event_type") would. Its values are checked
+against the DuckDB oracle by the parity tests; the bounded probes, and
+the ValueError above their caps, are pinned in
+tests/test_dispatch_branches.py."""
 
 from __future__ import annotations
 
