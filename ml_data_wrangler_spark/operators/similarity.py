@@ -36,7 +36,7 @@ from pyspark.sql import Window as W
 
 from ml_data_wrangler_spark.functions.driver_exact import round_half_away_np
 from ml_data_wrangler_spark.functions.vectors import cosine_similarity
-from ml_data_wrangler_spark.session import local_frame
+from ml_data_wrangler_spark.session import bounded_collect, local_frame
 
 # no score tile of the fold scorer holds more cells than this
 _TILE_CELLS = 4_000_000
@@ -656,16 +656,16 @@ def brute_force_topk_fold(
     same (sim DESC, neighbor_id ASC) total order) — so a query pinned
     to a SQL oracle hash can swap kernels without moving a value.
 
-    Why it exists (round 9, measured): ``brute_force_topk`` shuffles
-    the FULL |C|×|Q| scored stream into the rank window — at the 32×
-    tier that is 2.05e8 rows through a sort whose spill compounds the
-    per-pair JVM fold, measured 346.8 s = 10.05× over 16× on 4.1×
-    pair growth (SCALE_SWEEP_r09_32x_batch2.log; the stage audit says
-    parallel-ok — it is pure work growth, not imbalance). Here each
-    corpus chunk scores a (B, Q) tile with the shared fold tile scorer
-    (:func:`_fold_cosine`, also ``block_allpairs_cosine``'s) and
-    emits only its chunk-local top-k per query; the window then
-    merges O(chunks × Q × k) rows, never the score matrix.
+    Why it exists: ``brute_force_topk`` shuffles the FULL |C|×|Q|
+    scored stream into the rank window — at the 32× tier 2.05e8 rows
+    through a sort whose spill compounds the per-pair JVM fold, 346.8 s
+    or 10× its 16× time on 4.1× the pairs
+    (SCALE_SWEEP_r09_32x_batch2.log), all of it work growth, not
+    imbalance. Here each corpus chunk scores a (B, Q) tile with the
+    shared fold tile scorer (:func:`_fold_cosine`, also
+    ``block_allpairs_cosine``'s) and emits only its chunk-local top-k
+    per query; the window then merges O(chunks × Q × k) rows, never
+    the score matrix.
 
     Chunk-local selection is done under the FINAL total order, so the
     global merge is exact even with the duplicate-heavy tiers' wide
@@ -674,17 +674,19 @@ def brute_force_topk_fold(
     top-k row is within its chunk's top-k by the same order.
 
     Two dispatch tiers by query-side size, both running the same
-    ``_tile_topk``: up to ``max_broadcast_cells`` float64 cells
-    (default 256 MB) the query side is collected and broadcast whole
-    (it is the ANN ground-truth SAMPLE — 5% at every tier). Above the
-    cap a (query-slice × corpus-chunk) grid cogroup (round 11) shuffles
+    ``_tile_topk``. One query row gives the dimension, and one bounded
+    pull brings back the query side if it fits ``max_broadcast_cells``
+    float64 cells (default 256 MB); it is then broadcast whole (it is
+    the ANN ground-truth SAMPLE — 5% at every tier). The pull moves at
+    most that many cells plus one row, whichever tier it picks. Above
+    the cap a (query-slice × corpus-chunk) grid cogroup shuffles
     O(Q·Nc + C·Nq) rows through one exchange with nothing pinned in
     executor storage and nothing collected through the driver, and
     feeds the same global rank window — exact by the same
     chunk-local-top-k argument, bit-identical values because both
     tiers share the kernel.
 
-    Input contract (fails LOUDLY, r09 ADVICE): embeddings must be
+    Input contract (fails LOUDLY): embeddings must be
     non-null, rectangular, and finite with nonzero norm on BOTH
     sides — a zero-norm or NaN vector raises instead of silently
     diverging from the relational kernel's NaN-ranks-first ordering.
@@ -781,15 +783,16 @@ def brute_force_topk_fold(
         )
     )
 
-    # one small job on the query side decides the dispatch
-    probe = qsel.agg(
-        F.count("*").alias("n"), F.max(F.size("v")).alias("d")
-    ).first()
-    n_q_total, dim = probe["n"], probe["d"] or 0
-    if n_q_total == 0:
+    # One row gives the dimension; the query side is then pulled only
+    # up to max_broadcast_cells float64 cells, and a side past that
+    # takes the grid tier.
+    first = qsel.select(F.size("v").alias("d")).first()
+    if first is None:
         return local_frame(spark, [], out_schema + ", rank long")
-    if n_q_total * dim <= max_broadcast_cells:
-        bq = sc.broadcast(_query_side(qsel.toPandas()))
+    dim = max(first["d"] or 0, 1)
+    q_pdf = bounded_collect(qsel, max_broadcast_cells // dim)
+    if q_pdf is not None:
+        bq = sc.broadcast(_query_side(q_pdf))
 
         def score(batches):
             ids_b, qm_b, qn_b = bq.value
@@ -806,15 +809,15 @@ def brute_force_topk_fold(
 
         scored = prepped.mapInPandas(score, schema=out_schema)
     else:
-        # GRID COGROUP (round 11): shuffle instead of broadcasting.
-        # Queries hash into Nq slices of at most a quarter of the
-        # broadcast budget (absorbing hash imbalance), the corpus into
-        # Nc chunks sized to the scan's own parallelism, and both
-        # sides replicate to the (slice, chunk) grid cells that need
-        # them — O(Q·Nc + C·Nq) shuffled rows, nothing resident. Each
-        # cell cogroup runs the SAME _tile_topk kernel, so chunk-local
-        # top-k rows feed the unchanged global rank window and the
-        # result is bit-identical to the broadcast tier (pinned by
+        # GRID COGROUP: shuffle instead of broadcasting. Queries hash
+        # into Nq slices of at most a quarter of the broadcast budget
+        # (absorbing hash imbalance), the corpus into Nc chunks sized
+        # to the scan's own parallelism, and both sides replicate to
+        # the (slice, chunk) grid cells that need them — O(Q·Nc +
+        # C·Nq) shuffled rows, nothing resident. Each cell cogroup
+        # runs the SAME _tile_topk kernel, so chunk-local top-k rows
+        # feed the unchanged global rank window and the result is
+        # bit-identical to the broadcast tier (pinned by
         # tests/test_dispatch_branches.py).
         # Pin the query relation first: the probe above already read
         # it, and a retried map task of the replication would read it
@@ -823,6 +826,7 @@ def brute_force_topk_fold(
         # cells, and a query would miss some corpus chunks or meet
         # one twice.
         qsel = qsel.localCheckpoint()
+        n_q_total = qsel.count()
         budget = max(max_broadcast_cells // 4, dim)
         n_slices = min(max(-(-(n_q_total * dim) // budget), 2), n_q_total)
         n_chunks = max(prepped.rdd.getNumPartitions(), 1)

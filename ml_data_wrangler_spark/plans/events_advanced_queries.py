@@ -152,53 +152,56 @@ def qe33(spark, sf_dir):
     window + pair count (same shuffle as qe15); the graph itself
     collapses to |types|² edges — MODEL-sized (event types are a
     bounded enum), so the fixed-point loop runs on the DRIVER over
-    the collected transition matrix: a DataFrame loop pays ~12
-    broadcast-build and checkpoint jobs per query for arithmetic on
-    ≤|types|² rows. The collects are probe-bounded
-    (session.bounded_collect moves ≤ cap+1 rows for ANY keyspace);
-    past QE33_DRIVER_NODE_CAP types or QE33_DRIVER_EDGE_CAP edges the
-    query raises ``ValueError``."""
+    the collected transition counts, which one bounded probe brings
+    back: the (prev_type, event_type) counts over the lag window,
+    with each user's first event as a null-prev_type row. Every event
+    type is the event_type of one of those rows, so the nodes are
+    their distinct event types and the edges the rows whose prev_type
+    is not null; the row totals and edge probabilities are computed
+    on the driver with Spark's ROUND (functions/driver_exact.py). The
+    probe moves at most QE33_DRIVER_NODE_CAP + QE33_DRIVER_EDGE_CAP
+    + 1 rows for ANY keyspace; past either cap the query raises
+    ``ValueError``."""
     ev = t(spark, sf_dir, "events")
-    nodes_df = ev.select(F.col("event_type").alias("node")).distinct()
-    seq = ev.select(
-        "event_type",
-        F.lag("event_type")
-        .over(W.partitionBy("user_id").orderBy("ts", "event_id"))
-        .alias("prev_type"),
-    )
-    pairs = (
-        seq.where(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", "event_type")
-        .agg(F.count("*").alias("n"))
-    )
-    tot = pairs.groupBy("prev_type").agg(F.sum("n").alias("tn"))
-    p_df = pairs.join(F.broadcast(tot), "prev_type").select(
-        F.col("prev_type").alias("src"),
-        F.col("event_type").alias("dst"),
-        (
-            F.round(F.col("n").cast("double") / F.col("tn"), 9)
-            + F.lit(0.0)
-        ).alias("pij"),
-    )
-    node_pdf = bounded_collect(nodes_df, QE33_DRIVER_NODE_CAP)
-    if node_pdf is None:
-        raise ValueError(
-            f"qe33: the events hold more than {QE33_DRIVER_NODE_CAP} event "
-            f"types, past QE33_DRIVER_NODE_CAP = {QE33_DRIVER_NODE_CAP}"
+    counts = (
+        ev.select(
+            "event_type",
+            F.lag("event_type")
+            .over(W.partitionBy("user_id").orderBy("ts", "event_id"))
+            .alias("prev_type"),
         )
-    p_pdf = bounded_collect(p_df, QE33_DRIVER_EDGE_CAP)
-    if p_pdf is None:
+        .groupBy("prev_type", "event_type")
+        .count()
+    )
+    pdf = bounded_collect(counts, QE33_DRIVER_NODE_CAP + QE33_DRIVER_EDGE_CAP)
+    if pdf is None:
         raise ValueError(
-            f"qe33: the transition graph has more than {QE33_DRIVER_EDGE_CAP} "
-            f"edges, past QE33_DRIVER_EDGE_CAP = {QE33_DRIVER_EDGE_CAP}"
+            f"qe33: the transition counts hold more than "
+            f"QE33_DRIVER_NODE_CAP + QE33_DRIVER_EDGE_CAP = "
+            f"{QE33_DRIVER_NODE_CAP + QE33_DRIVER_EDGE_CAP} rows"
         )
     # Python scalars, not numpy ones: driver_exact rounds through
     # Decimal(repr(x))
-    return _qe33_driver_loop(
-        spark,
-        node_pdf["node"].tolist(),
-        list(zip(*(p_pdf[c].tolist() for c in ("src", "dst", "pij")))),
-    )
+    rows = list(zip(*(pdf[c].tolist() for c in ("prev_type", "event_type", "count"))))
+    nodes = list(dict.fromkeys(dst for _, dst, _ in rows))
+    if len(nodes) > QE33_DRIVER_NODE_CAP:
+        raise ValueError(
+            f"qe33: the events hold {len(nodes)} event types, past "
+            f"QE33_DRIVER_NODE_CAP = {QE33_DRIVER_NODE_CAP}"
+        )
+    pairs = [(src, dst, n) for src, dst, n in rows if src is not None]
+    if len(pairs) > QE33_DRIVER_EDGE_CAP:
+        raise ValueError(
+            f"qe33: the transition graph has {len(pairs)} edges, past "
+            f"QE33_DRIVER_EDGE_CAP = {QE33_DRIVER_EDGE_CAP}"
+        )
+    tn: dict = {}
+    for src, _, n in pairs:
+        tn[src] = tn.get(src, 0) + n
+    # n / tn: Python's int division rounds once, as Spark's double
+    # division of the two exactly-cast counts does
+    edges = [(src, dst, round_half_up(n / tn[src], 9) + 0.0) for src, dst, n in pairs]
+    return _qe33_driver_loop(spark, nodes, edges)
 
 
 @query(

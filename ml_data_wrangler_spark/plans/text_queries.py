@@ -53,6 +53,7 @@ from ml_data_wrangler_spark.plans._util import (
 )
 from ml_data_wrangler_spark.plans.registry import query
 from ml_data_wrangler_spark.session import bounded_collect, local_frame
+from ml_data_wrangler_spark.sources.readers import table_rows
 
 
 @query(
@@ -1003,37 +1004,32 @@ def bm25_rankings(spark, sf_dir, top: int):
     1e-6 straight after the ln so both engines feed identical doubles
     into the sum.
 
-    Shape at scale: tf/dl/df are one tokenize-explode pass plus three
-    bounded aggregations. The key algebraic fact: the per-term
-    contribution idf_t · sat(tf_ct, dl_c) is QUERY-INDEPENDENT, so it
-    is precomputed (and micro-quantized) once per (token, candidate)
-    posting on the small tf relation — idf (broadcast), dl (carried
-    on the posting), and avgdl (broadcast) attach BEFORE scoring.
-    Scoring is then one Arrow kernel over the weighted postings
-    against the collected query side, feeding a query-partitioned
-    top-k window. The query side must fit BM25_KERNEL_ROW_CAP rows
-    and BM25_KERNEL_CELL_CAP presence cells, or the query raises
-    ``ValueError``; past them the plan to build is an equi-join on a
-    df-pruned vocabulary (qm01's pruning), not a wider broadcast."""
+    Shape at scale: tf is one tokenize-explode-aggregate pass. The
+    query side (every doc_id % 20 == 0 posting) is probed first, and
+    only the postings of its tokens are kept: a posting of any other
+    token scores no pair. The per-term contribution idf_t ·
+    sat(tf_ct, dl_c) is QUERY-INDEPENDENT, so it is micro-quantized
+    once per kept posting — df is a count over the token's postings,
+    dl rides on the posting, n_docs comes from the documents footer
+    and avgdl from one sum of tf. Scoring is one Arrow kernel over
+    the weighted postings against the collected query side, feeding a
+    query-partitioned top-k window. The query side must fit
+    BM25_KERNEL_ROW_CAP rows and BM25_KERNEL_CELL_CAP presence cells,
+    or the query raises ``ValueError``; past them the plan to build is
+    an equi-join on a df-pruned vocabulary (qm01's pruning), not a
+    wider broadcast."""
     from ml_data_wrangler_spark.operators._partition import (
         TOKENIZE_REPARTITION_MIN_BYTES,
     )
 
     docs = t(spark, sf_dir, "documents")
-    # repartition raw text before the tokenize map (trap #1, round
-    # 12): the 1-split scan otherwise tokenizes the whole corpus in
-    # one task before tf's checkpoint; no-op on multi-split scans,
-    # and skipped below the plain-tokenize break-even (round 13 — the
-    # interleaved A/B won 5/6 pairs without it at sf0.1, median 3.59
-    # vs 3.75 s; the serial pass is ~1 s against a ~0.3-0.5 s shuffle).
-    # dl (per-doc token count) rides the SAME pass as a carried
-    # constant — size(toks) before the explode — instead of being
-    # re-aggregated from tf and equi-joined back at posting grain
-    # (round 12, guide §2.4: that was one groupBy exchange + one join
-    # exchange existing only to recompute a value the tokenize pass
-    # already held). Grouping by (doc_id, dl, token) == (doc_id,
-    # token) because dl is functionally dependent on doc_id, so tf is
-    # row-identical and every downstream value is unchanged.
+    # Raw text is repartitioned before the tokenize map once the scan
+    # passes the byte gate, so a one-split scan does not tokenize the
+    # corpus in one task; below the gate a serial tokenize is cheaper
+    # than the shuffle. dl (the doc's token count) rides the same pass
+    # as size(toks) before the explode; grouping by (doc_id, dl,
+    # token) equals grouping by (doc_id, token), since dl depends on
+    # doc_id alone.
     dt = (
         ensure_parallelism(
             docs.select("doc_id", "text"),
@@ -1046,93 +1042,16 @@ def bm25_rankings(spark, sf_dir, top: int):
             F.explode("toks").alias("token"),
         )
     )
-    # tf is consumed by FOUR branches (weights, doc lengths, document
-    # frequencies, the query side) — materialize the one
-    # tokenize-explode-aggregate pass instead of recomputing it per
-    # branch (the iterative-lineage rule; measured 18.8s → 14.4s for
-    # qt19 at sf0.1)
+    # tf feeds the query-side probe, the avgdl sum and the postings:
+    # it is materialized once rather than recomputed per branch
     tf = (
         dt.groupBy("doc_id", "dl", "token")
         .agg(F.count("*").alias("tf"))
         .localCheckpoint()
     )
-    dfr = tf.groupBy("token").agg(F.count("*").alias("df"))
-    # Σ_(doc,token) tf == Σ_doc dl — total_tokens aggregates straight
-    # off tf, retiring the dl relation the old corp read
-    corp = (
-        tf.agg(F.sum("tf").alias("total_tokens"))
-        .crossJoin(docs.agg(F.count("*").alias("n_docs")))
-        .select(
-            "n_docs",
-            (
-                F.col("total_tokens").cast("double") / F.col("n_docs")
-            ).alias("avgdl"),
-        )
-    )
-    idf = dfr.crossJoin(F.broadcast(corp)).select(
-        "token",
-        (
-            F.round(
-                F.log(
-                    1
-                    + (F.col("n_docs") - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                ),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("idf"),
-    )
     bq = tf.where(F.col("doc_id") % 20 == 0).select(
         F.col("doc_id").alias("query_id"), "token"
     )
-    term = F.col("idf") * (
-        (F.col("tf") * 2.2)
-        / (
-            F.col("tf")
-            + 1.2 * (0.25 + 0.75 * (F.col("dl") / F.col("avgdl")))
-        )
-    )
-    # query-independent per-posting weight, quantized BEFORE the
-    # query×posting fan-out: idf (vocab-sized) and corp (1 row)
-    # broadcast; dl is already ON the posting row (carried through
-    # tf's checkpoint), so the old doc-grain dl equi-join is gone
-    # repartition the weighted postings on cand_id: the scoring
-    # kernel needs every posting of a candidate in one partition, and
-    # AQE would otherwise coalesce the small (~|postings|-row)
-    # aggregate to very few partitions, so the scoring stage would
-    # run on one task
-    parallelism = spark.sparkContext.defaultParallelism
-    wgt = (
-        tf.join(F.broadcast(idf), "token")
-        .crossJoin(F.broadcast(corp))
-        .select(
-            F.col("doc_id").alias("cand_id"),
-            "token",
-            F.round(term * 1e6).cast("long").alias("tq"),
-        )
-        .repartition(parallelism, "cand_id")
-    )
-    # SCORING (round 13, guide §4.2 — the round-12 driver profile put
-    # 27-36 executor-CPU-SECONDS per run in the old scoring stage at
-    # sf0.1, ~80% of qv20's wall and the whole of its superlinear
-    # 8-core profile): the per-(query, candidate) score is a sparse
-    # matrix product S = W_postings @ Q_presence — ~39M FLOPs here,
-    # milliseconds of numpy — but the relational form computed it as
-    # a ~37M-row broadcast-join fan-out through a 1.25M-group hash
-    # aggregate at ~1 µs/row of JVM codegen. The Arrow kernel below
-    # (same discipline as brute_force_topk_fold / qv18's gram kernel)
-    # computes the identical integer scores per cand_id-partition and
-    # emits only chunk-local top-``top`` rows per query under the
-    # FINAL total order (s DESC, cand_id ASC), so the global rank
-    # window merges O(chunks × |Q| × top) rows instead of the full
-    # (query, cand) stream. Exactness: every per-posting weight tq is
-    # an integer ≤ ~idf_max·2.2·1e6 (≈6e7 at n=1e12 docs) and a score
-    # sums ≤ |query terms| of them — far under 2^53, so the float64
-    # GEMM sums are bit-exactly the SQL BIGINT sums; candidacy is
-    # presence (shares ≥ 1 token, zero-weight matches still rank),
-    # NOT s > 0, exactly the SQL/scale-oracle semantics; the global
-    # merge of chunk-local top-k is exact (similarity.chunk_topk).
     q_pdf = bounded_collect(bq, BM25_KERNEL_ROW_CAP)
     if q_pdf is None:
         raise ValueError(
@@ -1162,45 +1081,96 @@ def bm25_rankings(spark, sf_dir, top: int):
             )
         qp = np.zeros((len(tok_u), len(qid_u)))
         qp[q_tok_idx, q_qid_idx] = 1.0
-        tok2row = {t: i for i, t in enumerate(tok_u.tolist())}
-        bqb = spark.sparkContext.broadcast((tok2row, qid_u, qp))
+        bqb = spark.sparkContext.broadcast((qid_u, qp))
         chunk_cells = BM25_KERNEL_CHUNK_CELLS
+        n_docs = table_rows(sf_dir, "documents")
+        # Σ_(doc,token) tf == Σ_doc dl; Python's int division rounds
+        # once, as Spark's double division of the exact counts does
+        avgdl = tf.agg(F.sum("tf")).first()[0] / n_docs
+        # each kept posting carries its token's row in the presence
+        # matrix, joined from a local relation of the query tokens
+        q_toks = local_frame(
+            spark,
+            list(zip(tok_u.tolist(), range(len(tok_u)))),
+            "token string, trow int",
+        )
+        posting = tf.join(F.broadcast(q_toks), "token").withColumn(
+            "df", F.count("*").over(W.partitionBy("token"))
+        )
+        idf = (
+            F.round(
+                F.log(
+                    1
+                    + (F.lit(n_docs) - F.col("df") + 0.5)
+                    / (F.col("df") + 0.5)
+                ),
+                6,
+            )
+            + F.lit(0.0)
+        )
+        term = idf * (
+            (F.col("tf") * 2.2)
+            / (
+                F.col("tf")
+                + 1.2 * (0.25 + 0.75 * (F.col("dl") / F.lit(avgdl)))
+            )
+        )
+        # The scoring kernel needs every posting of a candidate in one
+        # partition, so the postings are hash-partitioned on cand_id,
+        # one partition per dense tile the kernel builds (n_docs rows
+        # × the query tokens, in tiles of BM25_KERNEL_CHUNK_CELLS),
+        # at most one per core: each partition costs a Python task,
+        # which a kernel that fits one tile does not repay.
+        n_parts = min(
+            spark.sparkContext.defaultParallelism,
+            -(-(n_docs * len(tok_u)) // chunk_cells),
+        )
+        wgt = posting.select(
+            F.col("doc_id").alias("cand_id"),
+            "trow",
+            F.round(term * 1e6).cast("long").alias("tq"),
+        ).repartition(n_parts, "cand_id")
 
+        # The per-(query, candidate) score is the sparse product
+        # S = W_postings @ Q_presence, computed per cand_id partition
+        # in dense tiles; only the chunk-local top-``top`` rows per
+        # query under the final order (s DESC, cand_id ASC) leave the
+        # kernel, so the rank window merges O(chunks × |Q| × top)
+        # rows, never the (query, cand) stream. Exact: each tq is an
+        # integer ≤ ~idf_max·2.2·1e6 (≈6e7 at 1e12 docs) and a score
+        # sums ≤ |query terms| of them, far under 2^53, so the float64
+        # sums equal the SQL BIGINT sums; a candidate is a doc that
+        # shares ≥ 1 token with the query (zero-weight matches still
+        # rank), not one with s > 0, as in the SQL; and the merge of
+        # chunk-local top-k is exact (similarity.chunk_topk).
         def _score(batches):
             import numpy as np
             import pandas as pd
 
             from ml_data_wrangler_spark.operators.similarity import chunk_topk
 
-            tok2row_b, qids, qp_b = bqb.value
+            qids, qp_b = bqb.value
             nt = qp_b.shape[0]
             cands, trows, tqs = [], [], []
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                rows = pdf["token"].map(tok2row_b)
-                m = rows.notna().to_numpy()
-                if not m.any():
-                    continue
-                cands.append(pdf["cand_id"].to_numpy()[m].astype("int64"))
-                trows.append(rows.to_numpy()[m].astype("int64"))
-                tqs.append(pdf["tq"].to_numpy()[m].astype("float64"))
+                cands.append(pdf["cand_id"].to_numpy().astype("int64"))
+                trows.append(pdf["trow"].to_numpy().astype("int64"))
+                tqs.append(pdf["tq"].to_numpy().astype("float64"))
             if not cands:
                 return
             c = np.concatenate(cands)
             tr = np.concatenate(trows)
             tv = np.concatenate(tqs)
-            # group this partition's postings by candidate: repartition
-            # on cand_id above guarantees every posting of a candidate
-            # is HERE, so each candidate's score is complete
+            # group this partition's postings by candidate: the
+            # cand_id partitioning puts every posting of a candidate
+            # HERE, so each candidate's score is complete
             o = np.argsort(c, kind="stable")
             c, tr, tv = c[o], tr[o], tv[o]
             ucands, starts = np.unique(c, return_index=True)  # ASC ids
             bounds = np.append(starts, len(c))
             # candidate chunks bound the dense W tile at ~chunk_cells
-            # whatever the partition holds (the _tile_topk budget); a
-            # chunk never splits a candidate, so chunk-local top-k
-            # stays exact
+            # whatever the partition holds; a chunk never splits a
+            # candidate, so chunk-local top-k stays exact
             chunk = max(1, chunk_cells // max(nt, 1))
             for lo in range(0, len(ucands), chunk):
                 hi = min(lo + chunk, len(ucands))

@@ -55,6 +55,14 @@ def scan_declared(reader, sf_dir: str, name: str, suffix: str = "") -> DataFrame
     return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
+def table_rows(sf_dir: str, name: str) -> int:
+    """Row count of table ``name`` of ``sf_dir``, summed from its
+    parquet footer on the driver as ``scan_declared`` reads it: no
+    Spark job, and every row counts, null or empty ones too (the
+    oracle's ``SELECT COUNT(*)``)."""
+    return ds.dataset(f"{sf_dir}/{name}.parquet", format=_FOOTER).count_rows()
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver-generated parquet table with its declared schema
     (``scan_declared``), so no job infers it. Parquet scan → Tungsten

@@ -1,5 +1,6 @@
 """Edge cases of bm25_rankings' GEMM scoring kernel: score ties
-across candidate-chunk boundaries and an empty query side.
+across candidate-chunk and partition boundaries and an empty query
+side.
 
 The kernel computes S = W_postings @ Q_presence in float64 — exact for
 integer micro-quantized weights under 2^53 — and emits chunk-local
@@ -21,9 +22,12 @@ def _rows(df):
 
 def test_bm25_kernel_chunking_is_boundary_exact(spark, tmp_path, monkeypatch):
     """Tie-heavy micro-corpus, scored with a chunk of one cell so every
-    candidate chunk holds ONE candidate — chunk-local top-k must still
-    merge to the identical global ranking (score ties broken by
-    cand_id ASC across chunk boundaries).
+    candidate chunk holds ONE candidate and the postings spread over
+    one partition per core (the scoring width is one partition per
+    BM25_KERNEL_CHUNK_CELLS of n_docs × query tokens, at most one per
+    core) — chunk-local top-k must still merge to the identical global
+    ranking (score ties broken by cand_id ASC across chunk and
+    partition boundaries).
 
     Construction: docs 0 and 40 are the queries (id % 20 == 0); docs
     1-19 and 21 repeat the same two tokens, so 20 candidates tie on s
@@ -33,6 +37,8 @@ def test_bm25_kernel_chunking_is_boundary_exact(spark, tmp_path, monkeypatch):
     reference is the DuckDB oracle over the same micro-corpus, its
     scores mapped as qt19 maps them, ROUND(s/1e6, 6).
     """
+    import re
+
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -66,9 +72,17 @@ SELECT query_id, cand_id, rnk, ROUND(s / 1e6, 6) + 0 AS bm25 FROM btop""",
     )
 
     default = _rows(tq.bm25_rankings(spark, SF_DIR, 3))
-    for cc in (1, 4_000_000):  # one-candidate chunks and one big chunk
+    cores = spark.sparkContext.defaultParallelism
+    assert cores >= 2
+    # one-candidate chunks over one partition per core, and one big
+    # chunk in one partition; 22 docs × 5 query tokens = 110 cells
+    for cc, parts in ((1, cores), (4_000_000, 1)):
         monkeypatch.setattr(tq, "BM25_KERNEL_CHUNK_CELLS", cc)
-        kernel = tq.bm25_rankings(spark, str(sf), 3).select(
+        ranked = tq.bm25_rankings(spark, str(sf), 3)
+        plan = ranked._jdf.queryExecution().optimizedPlan().toString()
+        width = re.findall(r"RepartitionByExpression \[cand_id#\d+L?\], (\d+)", plan)
+        assert width == [str(parts)]
+        kernel = ranked.select(
             "query_id",
             "cand_id",
             "rnk",

@@ -131,42 +131,48 @@ def test_forced_branch_equals_default(spark, sf_dir, monkeypatch, name):
         assert compare(oracle, got[0], got[1], o_cols, o_rows) == []
 
 
-# probe → (build function, the probe's shrunk cap, other caps in force,
-# the ValueError it raises above its cap, or None where the probe picks
-# a branch instead). The node cap stays above the fixture's 5 event
-# types so the edge probe runs; qv18's mean probe keeps its 64 so the
-# covariance probe runs.
+# probe → (build function, the caps it shrinks, the row caps of the
+# probes that then run — the probe under test first — and the
+# ValueError it raises above its cap, or None where the probe picks a
+# branch instead). qe33's one transitions probe collects up to the
+# sum of its two caps; qv18's mean probe keeps its 64 so the covariance
+# probe runs; the fold kernel's query side (25 queries × 64 dims) is
+# pulled up to FOLD_BROADCAST_CELLS // 64 rows, past which it takes
+# the grid tier.
 PROBES = {
-    "qe33-nodes": (
-        QE33, (ea, "QE33_DRIVER_NODE_CAP", 2), (), "qe33: .*QE33_DRIVER_NODE_CAP"
-    ),
-    "qe33-edges": (
+    "qe33-transitions": (
         QE33,
-        (ea, "QE33_DRIVER_EDGE_CAP", 3),
-        ((ea, "QE33_DRIVER_NODE_CAP", 8),),
-        "qe33: .*QE33_DRIVER_EDGE_CAP",
+        ((ea, "QE33_DRIVER_NODE_CAP", 2), (ea, "QE33_DRIVER_EDGE_CAP", 3)),
+        (5,),
+        "qe33: .*QE33_DRIVER_NODE_CAP \\+ QE33_DRIVER_EDGE_CAP",
     ),
-    "qm09-vocab": (QM09, (mq, "QM09_DENSE_VOCAB_CAP", 4), (), None),
+    "qm09-vocab": (QM09, ((mq, "QM09_DENSE_VOCAB_CAP", 4),), (4,), None),
     "bm25-query-terms": (
-        _bm25(3), (tq, "BM25_KERNEL_ROW_CAP", 5), (), "bm25_rankings: .*BM25_KERNEL_ROW_CAP"
+        _bm25(3),
+        ((tq, "BM25_KERNEL_ROW_CAP", 5),),
+        (5,),
+        "bm25_rankings: .*BM25_KERNEL_ROW_CAP",
     ),
-    "qv18-means": (QV18, (vq, "QV18_MU_CAP", 8), (), "qv18"),
+    "qv18-means": (QV18, ((vq, "QV18_MU_CAP", 8),), (8,), "qv18"),
     "qv18-covariance": (
-        QV18, (vq, "QV18_COV_CAP", 10), ((vq, "QV18_MU_CAP", 64),), "qv18"
+        QV18, ((vq, "QV18_COV_CAP", 10), (vq, "QV18_MU_CAP", 64)), (10, 64), "qv18"
+    ),
+    "fold-query-side": (
+        _fold_knn, ((THIS, "FOLD_BROADCAST_CELLS", 64 * 7),), (7,), None,
     ),
 }
 
 
 @pytest.mark.parametrize("name", list(PROBES))
 def test_probe_moves_at_most_cap_plus_one_rows(spark, sf_dir, monkeypatch, name):
-    """With the cap shrunk below the fixture's size, every collect or
+    """With the caps shrunk below the fixture's size, every collect or
     toPandas during plan build moves at most (largest cap in force) + 1
     rows, the shrunk probe itself stops at exactly cap + 1, and a probe
     that bounds a model size raises naming its query and cap."""
     from pyspark.sql.classic.dataframe import DataFrame
 
-    build, probe, others, raises = PROBES[name]
-    for module, constant, value in (probe, *others):
+    build, caps, moved, raises = PROBES[name]
+    for module, constant, value in caps:
         monkeypatch.setattr(module, constant, value)
     seen: list[int] = []
     for method in ("collect", "toPandas"):
@@ -182,9 +188,22 @@ def test_probe_moves_at_most_cap_plus_one_rows(spark, sf_dir, monkeypatch, name)
             build(spark, sf_dir)
     else:
         build(spark, sf_dir)
-    bound = max(value for _, _, value in (probe, *others)) + 1
-    assert seen and max(seen) <= bound, seen
-    assert probe[2] + 1 in seen, seen
+    assert seen and max(seen) <= max(moved) + 1, seen
+    assert moved[0] + 1 in seen, seen
+
+
+# each qe33 cap shrunk alone, below the fixture's 5 event types and 25
+# edges, while the transitions probe still fits their sum
+QE33_SHRUNK = {"QE33_DRIVER_NODE_CAP": 2, "QE33_DRIVER_EDGE_CAP": 3}
+
+
+@pytest.mark.parametrize("constant", list(QE33_SHRUNK))
+def test_qe33_cap_raises_naming_itself(spark, sf_dir, monkeypatch, constant):
+    """After the transitions probe each cap is checked on its own, and
+    the one that is passed raises naming itself."""
+    monkeypatch.setattr(ea, constant, QE33_SHRUNK[constant])
+    with pytest.raises(ValueError, match=f"qe33: .*past {constant} = "):
+        QE33(spark, sf_dir)
 
 
 def test_bm25_presence_cells_over_cap_raise(spark, sf_dir, monkeypatch):

@@ -2,7 +2,8 @@
 the query side is no longer broadcast — (query-slice × corpus-chunk)
 cells shuffle through one cogroup instead, run the same _tile_topk
 kernel per cell, and must therefore return EXACTLY the broadcast
-tier's rows."""
+tier's rows. Also the kernel's in-chunk tie-break, against qv01's
+DuckDB oracle."""
 
 from __future__ import annotations
 
@@ -62,3 +63,36 @@ def test_fold_knn_grid_rejects_degenerate_vectors(spark):
     )
     with pytest.raises(Exception, match="zero-norm or non-finite"):
         brute_force_topk_fold(zero, zero, k=1, max_broadcast_cells=2).collect()
+
+
+def test_fold_knn_ties_inside_one_chunk_match_oracle(spark, sf_dir, tmp_path):
+    """More than k exact-tie sims inside one corpus chunk: query 0 sees
+    20 copies of one vector (ids 1-19 and 21), so its top-5 is decided
+    by the neighbor_id ASC tie-break alone, which chunk_topk must apply
+    inside the chunk before the rank window merges. Checked against
+    qv01's DuckDB oracle over the same micro-corpus."""
+    import pandas as pd
+
+    from ml_data_wrangler_spark.plans import registry
+    from ml_data_wrangler_spark.schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
+    from tests.oracle_harness import compare, duckdb_connection, run_oracle
+
+    ids = [0, *range(1, 20), 21, 40]
+    vecs = [[1.0, 0.0, 0.0]] + [[1.0, 1.0, 0.0]] * 20 + [[0.0, 1.0, 1.0]]
+    emb = pd.DataFrame({"vec_id": ids, "embedding": vecs, "label": [0] * len(ids)})
+    sf = tmp_path / "fold_ties"
+    sf.mkdir()
+    spark.createDataFrame(emb, TESTDATA_SCHEMAS["embeddings"]).coalesce(1).write.parquet(
+        str(sf / "embeddings.parquet")
+    )
+    # the oracle connection views every table; only embeddings is read
+    for name in TESTDATA_TABLES:
+        if name != "embeddings":
+            (sf / f"{name}.parquet").symlink_to(f"{sf_dir}/{name}.parquet")
+    name = "qv01_knn_bruteforce"
+    df = registry.queries()[name](spark, str(sf))
+    rows = [tuple(r) for r in df.collect()]
+    o_cols, o_rows = run_oracle(duckdb_connection(str(sf)), registry.oracle_sql()[name])
+    assert compare(name, df.columns, rows, o_cols, o_rows) == []
+    by_rank = sorted((r for r in rows if r[0] == 0), key=lambda r: r[3])
+    assert [r[1] for r in by_rank] == [1, 2, 3, 4, 5]
