@@ -681,10 +681,11 @@ def brute_force_topk_fold(
     most that many cells plus one row, whichever tier it picks. Above
     the cap a (query-slice × corpus-chunk) grid cogroup shuffles
     O(Q·Nc + C·Nq) rows through one exchange with nothing pinned in
-    executor storage and nothing collected through the driver, and
-    feeds the same global rank window — exact by the same
-    chunk-local-top-k argument, bit-identical values because both
-    tiers share the kernel.
+    executor storage, and feeds the same global rank window — exact
+    by the same chunk-local-top-k argument, bit-identical values
+    because both tiers share the kernel. The grid tier is chosen only
+    after the dispatch pull has brought the cap plus one row to the
+    driver and dropped it; the grid itself collects nothing.
 
     Input contract (fails LOUDLY): embeddings must be
     non-null, rectangular, and finite with nonzero norm on BOTH
@@ -785,11 +786,15 @@ def brute_force_topk_fold(
 
     # One row gives the dimension; the query side is then pulled only
     # up to max_broadcast_cells float64 cells, and a side past that
-    # takes the grid tier.
-    first = qsel.select(F.size("v").alias("d")).first()
+    # takes the grid tier. That row is held to the input contract
+    # first: a null or empty vector gives no dimension to size the
+    # pull by, so it raises before anything else is collected.
+    first = qsel.first()
     if first is None:
         return local_frame(spark, [], out_schema + ", rank long")
-    dim = max(first["d"] or 0, 1)
+    one = np.empty(1, dtype=object)
+    one[0] = first["v"]
+    dim = _stack_checked(one, "query")[0].shape[1]
     q_pdf = bounded_collect(qsel, max_broadcast_cells // dim)
     if q_pdf is not None:
         bq = sc.broadcast(_query_side(q_pdf))

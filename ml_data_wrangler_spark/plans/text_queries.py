@@ -1116,14 +1116,16 @@ def bm25_rankings(spark, sf_dir, top: int):
             )
         )
         # The scoring kernel needs every posting of a candidate in one
-        # partition, so the postings are hash-partitioned on cand_id,
-        # one partition per dense tile the kernel builds (n_docs rows
-        # × the query tokens, in tiles of BM25_KERNEL_CHUNK_CELLS),
+        # partition, so the postings are hash-partitioned on cand_id.
+        # A task's work grows with the score cells it builds (the
+        # S and presence GEMMs, the mask and chunk_topk's argsort are
+        # all candidates × queries), so the width is one partition per
+        # BM25_KERNEL_CHUNK_CELLS of the n_docs × queries score matrix,
         # at most one per core: each partition costs a Python task,
-        # which a kernel that fits one tile does not repay.
+        # which a small score matrix does not repay.
         n_parts = min(
             spark.sparkContext.defaultParallelism,
-            -(-(n_docs * len(tok_u)) // chunk_cells),
+            -(-(n_docs * len(qid_u)) // chunk_cells),
         )
         wgt = posting.select(
             F.col("doc_id").alias("cand_id"),

@@ -24,10 +24,12 @@ def test_bm25_kernel_chunking_is_boundary_exact(spark, tmp_path, monkeypatch):
     """Tie-heavy micro-corpus, scored with a chunk of one cell so every
     candidate chunk holds ONE candidate and the postings spread over
     one partition per core (the scoring width is one partition per
-    BM25_KERNEL_CHUNK_CELLS of n_docs × query tokens, at most one per
+    BM25_KERNEL_CHUNK_CELLS of n_docs × queries, at most one per
     core) — chunk-local top-k must still merge to the identical global
     ranking (score ties broken by cand_id ASC across chunk and
-    partition boundaries).
+    partition boundaries). A one-core session runs both cases in one
+    partition, where the one-candidate chunks still cross chunk
+    boundaries.
 
     Construction: docs 0 and 40 are the queries (id % 20 == 0); docs
     1-19 and 21 repeat the same two tokens, so 20 candidates tie on s
@@ -73,10 +75,9 @@ SELECT query_id, cand_id, rnk, ROUND(s / 1e6, 6) + 0 AS bm25 FROM btop""",
 
     default = _rows(tq.bm25_rankings(spark, SF_DIR, 3))
     cores = spark.sparkContext.defaultParallelism
-    assert cores >= 2
     # one-candidate chunks over one partition per core, and one big
-    # chunk in one partition; 22 docs × 5 query tokens = 110 cells
-    for cc, parts in ((1, cores), (4_000_000, 1)):
+    # chunk in one partition; 22 docs × 2 queries = 44 score cells
+    for cc, parts in ((1, min(cores, 44)), (4_000_000, 1)):
         monkeypatch.setattr(tq, "BM25_KERNEL_CHUNK_CELLS", cc)
         ranked = tq.bm25_rankings(spark, str(sf), 3)
         plan = ranked._jdf.queryExecution().optimizedPlan().toString()

@@ -51,9 +51,14 @@ def test_fold_knn_grid_single_slice_and_chunk_degenerate(spark):
     assert grid == base and len(base) > 0
 
 
-def test_fold_knn_grid_rejects_degenerate_vectors(spark):
+def test_fold_knn_grid_rejects_degenerate_vectors(spark, monkeypatch):
     """The loud-failure input contract must hold on the grid tier too
-    (the checks run inside the cogroup kernel)."""
+    (the checks run inside the cogroup kernel), and on the query row
+    that sizes the dispatch pull: a null or empty first vector raises
+    before any bounded pull, which it would otherwise size at
+    max_broadcast_cells rows."""
+    from ml_data_wrangler_spark.operators import similarity
+
     zero = spark.createDataFrame(
         [
             Row(vec_id=1, embedding=[0.0, 0.0]),
@@ -63,6 +68,18 @@ def test_fold_knn_grid_rejects_degenerate_vectors(spark):
     )
     with pytest.raises(Exception, match="zero-norm or non-finite"):
         brute_force_topk_fold(zero, zero, k=1, max_broadcast_cells=2).collect()
+
+    def no_pull(df, cap):
+        raise AssertionError(f"query side pulled with cap {cap}")
+
+    monkeypatch.setattr(similarity, "bounded_collect", no_pull)
+    for first, match in (([], "zero-norm or non-finite"), (None, "null query")):
+        queries = spark.createDataFrame(
+            [(1, first), (2, [1.0, 0.0]), (3, [0.0, 1.0])],
+            "vec_id long, embedding array<double>",
+        ).coalesce(1)
+        with pytest.raises(ValueError, match=match):
+            brute_force_topk_fold(zero, queries, k=1)
 
 
 def test_fold_knn_ties_inside_one_chunk_match_oracle(spark, sf_dir, tmp_path):
